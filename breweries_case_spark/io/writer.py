@@ -16,6 +16,7 @@ take an optional ``target_file_partitions`` to coalesce small outputs
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_partition_overwrite(
@@ -45,10 +46,14 @@ def write_partition_overwrite(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
+def read_partitioned(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
     """Read back a partitioned parquet table (partition column recovered
-    from directory names)."""
-    return spark.read.parquet(path)
+    from directory names). A declared ``schema`` skips schema inference,
+    which otherwise runs a Spark job over the parquet footers."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def write_iceberg(

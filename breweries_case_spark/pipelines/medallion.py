@@ -33,7 +33,8 @@ import os
 import shutil
 from collections.abc import Iterable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from breweries_case_spark.functions import clean_text, digits_only
@@ -54,15 +55,22 @@ def ingest_to_bronze(
     records: Iterable[Mapping],
     extraction_date: _dt.date,
 ) -> DataFrame:
-    """Raw payload → bronze rows (raw_json, extraction_date).
+    """Raw payload → bronze rows (raw_json, extraction_date), with
+    ``raw_json`` = ``json.dumps(dict(record))``.
 
     Driver-side by design, exactly like the reference's API ingest
     (``breweries_bronze_processors.py:139-146``): the payload arrives on
-    the driver from a REST API. For bulk backfills use
-    ``spark.read.json`` over staged payload files instead — this path is
-    for the api-page-sized daily ingest."""
-    data = [(json.dumps(dict(r)), extraction_date) for r in records]
-    return spark.createDataFrame(data, BRONZE_SCHEMA)
+    the driver from a REST API. The rows reach the JVM as one Arrow table
+    (columnar batches, no per-row pickling), whatever the session's
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. For bulk backfills
+    use ``spark.read.json`` over staged payload files instead — this path
+    is for the api-page-sized daily ingest."""
+    raw = pa.array([json.dumps(dict(r)) for r in records], pa.string())
+    table = pa.table({
+        "raw_json": raw,
+        "extraction_date": pa.repeat(pa.scalar(extraction_date, pa.date32()), len(raw)),
+    })
+    return spark.createDataFrame(table, BRONZE_SCHEMA)
 
 
 def bronze_to_silver(bronze: DataFrame, extraction_date: _dt.date) -> DataFrame:
@@ -92,36 +100,28 @@ def bronze_to_silver(bronze: DataFrame, extraction_date: _dt.date) -> DataFrame:
 
 def _persist_layer(
     df: DataFrame, path: str, extraction_date: _dt.date
-) -> None:
-    """Replace the date's partition with ``df``. Dynamic overwrite only
-    rewrites partitions PRESENT in the written data — so an empty rerun
-    (e.g. every record failed the validity gate) would silently leave the
-    previous run's partition on disk. Deleting the partition directory
-    explicitly in that case keeps the rerun-replaces-the-date contract
-    unconditional. (The Iceberg writer gets this for free:
-    overwritePartitions of an empty frame is an explicit delete.)"""
-    if df.isEmpty():
+) -> int:
+    """Replace the date's partition with ``df`` and return the number of
+    rows written, observed on the write itself (no extra job). ``df``
+    holds only that date's rows, and dynamic overwrite replaces the whole
+    partition, so rows written = rows now in the partition.
+
+    Dynamic overwrite only rewrites partitions PRESENT in the written
+    data — so an empty rerun (e.g. every record failed the validity gate)
+    would silently leave the previous run's partition on disk. Deleting
+    the partition directory explicitly in that case keeps the
+    rerun-replaces-the-date contract unconditional. (The Iceberg writer
+    gets this for free: overwritePartitions of an empty frame is an
+    explicit delete.)"""
+    obs = Observation()
+    write_partition_overwrite(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
+    rows = obs.get["rows"]
+    if not rows:
         part_dir = os.path.join(
             path, f"extraction_date={extraction_date.isoformat()}"
         )
         shutil.rmtree(part_dir, ignore_errors=True)
-    else:
-        write_partition_overwrite(df, path)
-
-
-def _count_partition(
-    spark: SparkSession, path: str, extraction_date: _dt.date
-) -> int:
-    from pyspark.errors import AnalysisException
-
-    if not os.path.exists(path):
-        return 0
-    try:
-        table = read_partitioned(spark, path)
-    except AnalysisException:
-        # directory exists but holds no data files (every partition cleared)
-        return 0
-    return table.filter(F.col("extraction_date") == F.lit(extraction_date)).count()
+    return rows
 
 
 def run_medallion(
@@ -132,49 +132,44 @@ def run_medallion(
 ) -> dict[str, int]:
     """One daily run end-to-end: ingest → bronze → silver → gold, each
     layer PERSISTED with dynamic partition overwrite and the next layer
-    reading the committed files back — the reference's three Airflow tasks
-    (`dags/01..03`, sequenced by ExternalTaskSensor) as one idempotent
-    callable; rerunning a date replaces exactly that date's partitions in
-    all three layers, including replacing them with NOTHING when the rerun
-    yields no valid rows (see _persist_layer). Returns the per-layer row
-    counts the reference logs as its audit
-    (``breweries_bronze_processors.py:155`` — computed here from the
-    written data, not by re-running the plan).
+    reading the committed files back with its declared schema — the
+    reference's three Airflow tasks (`dags/01..03`, sequenced by
+    ExternalTaskSensor) as one idempotent callable; rerunning a date
+    replaces exactly that date's partitions in all three layers, including
+    replacing them with NOTHING when the rerun yields no valid rows (see
+    _persist_layer). Returns the per-layer row counts the reference logs
+    as its audit (``breweries_bronze_processors.py:155``), observed on
+    each layer's write: the day runs one write job per layer and no audit
+    or schema-inference jobs.
 
-    LOCAL-FILESYSTEM paths only: the empty-rerun partition cleanup and
-    the audit counts use driver-local file APIs. For object stores /
-    lakehouse catalogs use ``io.writer.write_iceberg`` per layer —
-    Iceberg's overwritePartitions gives the same contract
-    transactionally. Guarded loudly rather than silently no-opping."""
+    LOCAL-FILESYSTEM paths only: the empty-rerun partition cleanup uses
+    driver-local file APIs. For object stores / lakehouse catalogs use
+    ``io.writer.write_iceberg`` per layer — Iceberg's overwritePartitions
+    gives the same contract transactionally. Guarded loudly rather than
+    silently no-opping."""
     if "://" in base_path and not base_path.startswith("file://"):
         raise ValueError(
             "run_medallion writes via driver-local filesystem APIs; got "
             f"{base_path!r}. Use write_iceberg for object-store targets."
         )
     bronze = ingest_to_bronze(spark, records, extraction_date)
-    _persist_layer(bronze, f"{base_path}/bronze", extraction_date)
-    bronze_n = _count_partition(spark, f"{base_path}/bronze", extraction_date)
+    bronze_n = _persist_layer(bronze, f"{base_path}/bronze", extraction_date)
 
     if bronze_n:
-        bronze_t = read_partitioned(spark, f"{base_path}/bronze")
+        bronze_t = read_partitioned(spark, f"{base_path}/bronze", BRONZE_SCHEMA)
         silver = bronze_to_silver(bronze_t, extraction_date)
     else:
         silver = spark.createDataFrame([], SILVER_SCHEMA)
-    _persist_layer(silver, f"{base_path}/silver", extraction_date)
-    silver_n = _count_partition(spark, f"{base_path}/silver", extraction_date)
+    silver_n = _persist_layer(silver, f"{base_path}/silver", extraction_date)
 
     if silver_n:
-        silver_t = read_partitioned(spark, f"{base_path}/silver")
+        silver_t = read_partitioned(spark, f"{base_path}/silver", SILVER_SCHEMA)
         gold = silver_to_gold(silver_t, extraction_date)
     else:
         gold = spark.createDataFrame([], GOLD_SCHEMA)
-    _persist_layer(gold, f"{base_path}/gold", extraction_date)
+    gold_n = _persist_layer(gold, f"{base_path}/gold", extraction_date)
 
-    return {
-        "bronze": bronze_n,
-        "silver": silver_n,
-        "gold": _count_partition(spark, f"{base_path}/gold", extraction_date),
-    }
+    return {"bronze": bronze_n, "silver": silver_n, "gold": gold_n}
 
 
 def silver_to_gold(
@@ -227,59 +222,44 @@ def run_medallion_snapshotted(
 
     day = extraction_date.isoformat()
 
-    def persist(df: DataFrame, layer: str) -> str:
+    def persist(df: DataFrame, layer: str) -> int:
+        """Commit ``df`` as the day's partition of ``layer``; returns the
+        rows committed, observed on the commit's write."""
         tdir = f"{base_path}/{layer}"
+        # an overwrite commit of an empty frame would publish a no-op
+        # version, so an empty day is an explicit partition delete
         if df.isEmpty():
             if latest_version(tdir) is not None:
                 commit_delete_partitions(tdir, [day])
-        else:
-            commit_overwrite_partitions(df, tdir, "extraction_date")
-        return tdir
+            return 0
+        obs = Observation()
+        commit_overwrite_partitions(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")), tdir, "extraction_date"
+        )
+        return obs.get["rows"]
 
-    def read_layer(tdir: str) -> DataFrame | None:
-        if latest_version(tdir) is None:
-            return None
-        try:
-            snap = read_snapshot(spark, tdir)
-        except ValueError:  # snapshot exists but holds zero partitions
-            return None
+    def read_day(layer: str) -> DataFrame:
+        # manifest-level prune: only the day's own partition is ever
+        # listed or read — a read-all-then-filter would pay O(history)
+        # file I/O per layer per run, growing with table age
+        snap = read_snapshot(spark, f"{base_path}/{layer}", partitions=[day])
         return snap.withColumn(
             "extraction_date", F.col("extraction_date").cast("date")
         )
 
-    def count_day(tdir: str) -> int:
-        if latest_version(tdir) is None:
-            return 0
-        try:
-            # manifest-level prune: only the day's own partition is ever
-            # listed or read — a read-all-then-filter would pay O(history)
-            # file I/O per layer per run, growing with table age
-            day = read_snapshot(
-                spark, tdir, partitions=[str(extraction_date)]
-            )
-        except ValueError:  # day absent (or table holds zero partitions)
-            return 0
-        return day.count()
-
     bronze = ingest_to_bronze(spark, records, extraction_date)
-    bdir = persist(bronze, "bronze")
-    bronze_n = count_day(bdir)
+    bronze_n = persist(bronze, "bronze")
 
     if bronze_n:
-        silver = bronze_to_silver(read_layer(bdir), extraction_date)
+        silver = bronze_to_silver(read_day("bronze"), extraction_date)
     else:
         silver = spark.createDataFrame([], SILVER_SCHEMA)
-    sdir = persist(silver, "silver")
-    silver_n = count_day(sdir)
+    silver_n = persist(silver, "silver")
 
     if silver_n:
-        gold = silver_to_gold(read_layer(sdir), extraction_date)
+        gold = silver_to_gold(read_day("silver"), extraction_date)
     else:
         gold = spark.createDataFrame([], GOLD_SCHEMA)
-    gdir = persist(gold, "gold")
+    gold_n = persist(gold, "gold")
 
-    return {
-        "bronze": bronze_n,
-        "silver": silver_n,
-        "gold": count_day(gdir),
-    }
+    return {"bronze": bronze_n, "silver": silver_n, "gold": gold_n}

@@ -332,30 +332,122 @@ def test_run_medallion_end_to_end_idempotent(spark, tmp_path):
     assert gold.agg(F.sum("brewery_count")).first()[0] == 12
 
 
-def test_run_medallion_empty_rerun_clears_stale_partitions(spark, tmp_path):
-    """A rerun whose records all fail the validity gate (empty-string ids)
-    must CLEAR the date's silver/gold partitions, not leave the previous
-    run's data behind (dynamic overwrite alone would write nothing)."""
-    from breweries_case_spark.pipelines import run_medallion
-
-    good = [
+def _good_records(n):
+    return [
         {
             "id": f"b-{i}", "name": f"B{i}", "brewery_type": "micro",
             "city": "Portland", "state_province": "Oregon",
             "postal_code": "97201", "country": "US", "longitude": "-122.0",
             "latitude": "45.0", "phone": "5035550001", "website_url": None,
         }
-        for i in range(5)
+        for i in range(n)
     ]
+
+
+def _dates_in(spark, base, layer):
+    """Dates a medallion layer holds rows for, read back from its files."""
+    import os
+
+    from breweries_case_spark import schemas
+
+    path = f"{base}/{layer}"
+    if not os.path.isdir(path):
+        return set()
+    schema = getattr(schemas, f"{layer.upper()}_SCHEMA")
+    table = read_partitioned(spark, path, schema)
+    return {r.extraction_date for r in table.select("extraction_date").distinct().collect()}
+
+
+def test_run_medallion_empty_rerun_clears_stale_partitions(spark, tmp_path):
+    """A rerun whose records all fail the validity gate (empty-string ids)
+    must CLEAR the date's silver/gold partitions, not leave the previous
+    run's data behind (dynamic overwrite alone would write nothing). The
+    audit counts what was written, so the tables are read back here."""
+    from breweries_case_spark.pipelines import run_medallion
+
+    good = _good_records(5)
     bad = [dict(r, id="") for r in good]
+    other = TEST_DATE + datetime.timedelta(days=1)
 
     base = str(tmp_path / "lake")
+    assert run_medallion(spark, good, other, base) == {
+        "bronze": 5, "silver": 5, "gold": 1,
+    }
     assert run_medallion(spark, good, TEST_DATE, base) == {
         "bronze": 5, "silver": 5, "gold": 1,
     }
     assert run_medallion(spark, bad, TEST_DATE, base) == {
         "bronze": 5, "silver": 0, "gold": 0,
     }
+    assert _dates_in(spark, base, "bronze") == {TEST_DATE, other}
+    for layer in ("silver", "gold"):
+        assert _dates_in(spark, base, layer) == {other}, layer
+
+
+@pytest.mark.parametrize("fresh", [False, True], ids=["rerun", "first_run"])
+def test_run_medallion_no_records(spark, tmp_path, fresh):
+    """``records=[]`` gives all-zero counts and leaves no partition for
+    the date: a rerun over an existing base path clears the date in every
+    layer, and a first run on a fresh base path creates none."""
+    from breweries_case_spark.pipelines import run_medallion
+
+    base = str(tmp_path / "lake")
+    if not fresh:
+        run_medallion(spark, _good_records(3), TEST_DATE, base)
+    assert run_medallion(spark, [], TEST_DATE, base) == {
+        "bronze": 0, "silver": 0, "gold": 0,
+    }
+    for layer in ("bronze", "silver", "gold"):
+        assert _dates_in(spark, base, layer) == set(), layer
+
+
+def test_run_medallion_runs_only_the_layer_writes(spark, tmp_path):
+    """One day launches exactly one job per layer write: the audit counts
+    are observed on the writes and the read-backs use declared schemas,
+    so an extra count() or an inferred-schema read adds a job here."""
+    from breweries_case_spark.pipelines import run_medallion
+
+    sc = spark.sparkContext
+    group = f"medallion-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "run_medallion job count")
+    try:
+        audit = run_medallion(spark, _good_records(20), TEST_DATE, str(tmp_path / "lake"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert audit == {"bronze": 20, "silver": 20, "gold": 1}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    # test profile (AQE off): 1 bronze write (Arrow-built frame),
+    # 1 silver write (scan bronze, parse, filter), 1 gold write (scan
+    # silver, aggregate; its shuffle stage runs inside the same job)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
+def test_ingest_to_bronze_arrow_parity(spark):
+    """The Arrow ingest keeps ``raw_json`` byte-identical to
+    ``json.dumps(dict(record))`` and yields exactly BRONZE_SCHEMA, also on
+    a session with Arrow conversion switched off (the driver's vanilla
+    session); no records give no rows."""
+    import json
+
+    from breweries_case_spark.schemas import BRONZE_SCHEMA
+
+    records = [
+        {"id": "a", "name": None, "n": 3, "x": 2.5, "big": 2**53 + 1},
+        {"id": "ü", "name": "Bräu ☃ 日本", "nested": {"k": [1, None, {"z": -0.1}]}},
+        {"id": "c", "flag": True, "empty": {}, "list": []},
+    ]
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        bronze = ingest_to_bronze(spark, records, TEST_DATE)
+        assert bronze.schema == BRONZE_SCHEMA
+        got = [(r.raw_json, r.extraction_date) for r in bronze.collect()]
+        assert sorted(got) == sorted((json.dumps(dict(r)), TEST_DATE) for r in records)
+        assert ingest_to_bronze(spark, [], TEST_DATE).count() == 0
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_declared_schemas_match_loaded_tables(spark, sf_dir):
