@@ -1017,17 +1017,51 @@ def minhash_verified_pairs(
         cands = lsh_candidates(minhash_signatures(docs).localCheckpoint())
     a = docs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = docs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
     return (
         cands.join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter / union, 6).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", jaccard("sh_a", "sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
+
+
+def jaccard(sh_a: str, sh_b: str):
+    """Exact Jaccard of two shingle-array columns, ROUND(…, 6) before any
+    threshold — the one edge definition shared with
+    q_dedup_ngram_jaccard and the oracles' pair CTEs. An empty union
+    (SimHash can pair sub-3-token docs, whose shingle sets are empty)
+    scores 0.0 instead of dividing 0 by 0."""
+    inter = F.size(F.array_intersect(F.col(sh_a), F.col(sh_b)))
+    union = F.size(F.col(sh_a)) + F.size(F.col(sh_b)) - inter
+    return F.when(
+        union > 0, F.round(inter.cast("double") / union.cast("double"), 6)
+    ).otherwise(F.lit(0.0))
+
+
+def jaccard_verified(
+    cands: DataFrame, a_docs: DataFrame, b_docs: DataFrame
+) -> DataFrame:
+    """The verify step of every text near-dup tier: (doc_a, doc_b)
+    candidate pairs → the pairs whose docs share a language and clear
+    ``JACCARD_THRESHOLD``. ``a_docs``/``b_docs`` are the (doc_id, lang,
+    sh) shingle frames that ``doc_a``/``doc_b`` are looked up in; a
+    broadcast hint on either one carries through to its join."""
+
+    def side(docs: DataFrame, s: str) -> DataFrame:
+        return docs.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("lang").alias(f"lang_{s}"),
+            F.col("sh").alias(f"sh_{s}"),
+        )
+
+    return (
+        cands.join(side(a_docs, "a"), "doc_a")
+        .join(side(b_docs, "b"), "doc_b")
+        .filter(
+            (F.col("lang_a") == F.col("lang_b"))
+            & (jaccard("sh_a", "sh_b") >= F.lit(JACCARD_THRESHOLD))
+        )
+        .select("doc_a", "doc_b")
     )
 
 
@@ -1558,6 +1592,98 @@ def connected_components(
     )
 
 
+def maintain_clusters(
+    shard_ids: DataFrame, e_corpus: DataFrame, e_shard: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The contraction step every incremental cluster maintainer (text,
+    image, video) ends in: assign a new shard to the EXISTING clusters,
+    or mint new cluster ids, without recomputing the corpus fixpoint.
+
+    A stored corpus cluster is already connected, so it enters the
+    update as ONE node — its label. The update graph is
+
+        nodes = ``shard_ids`` (node) ∪ the stored labels the shard touches
+        edges = ``e_corpus`` (u = shard item, v = stored label it was
+                verified against) ∪ ``e_shard`` (u, v = verified pairs
+                of shard items)
+
+    and one min-label ``connected_components`` over it reproduces the
+    full-recompute fixpoint restricted to shard-touched components:
+    stored labels are their clusters' minima, and every combined-graph
+    path between corpus items crosses the shard only through verified
+    shard↔corpus edges (corpus↔corpus edges are already inside the
+    stored clusters). Work is O(shard + touched labels), never O(corpus).
+
+    Returns ``out`` = one row per shard item (node, cluster_id = its
+    post-update label, verdict 'new' — no stored cluster in its
+    component; 'attached' — exactly one; 'merged' — its arrival bridged
+    ≥ 2 formerly separate stored clusters), ``comps`` = the update
+    graph's (node, label) assignment, and ``lab_nodes`` = the touched
+    stored labels (node). ``comps`` + ``lab_nodes`` are what evolving the
+    stored state needs (``advance_state``)."""
+    lab_nodes = e_corpus.select(F.col("v").alias("node")).distinct()
+    nodes = shard_ids.union(e_corpus.select(F.col("v").alias("node"))).distinct()
+    comps = connected_components(e_corpus.unionByName(e_shard), nodes)
+    comp_corpus = (
+        comps.join(lab_nodes, "node")
+        .groupBy("label")
+        .agg(F.countDistinct("node").alias("n_corpus"))
+    )
+    out = (
+        shard_ids.join(comps, "node")
+        .join(comp_corpus, "label", "left")
+        .select(
+            "node",
+            F.col("label").alias("cluster_id"),
+            F.when(F.coalesce(F.col("n_corpus"), F.lit(0)) == 0, F.lit("new"))
+            .when(F.col("n_corpus") == 1, F.lit("attached"))
+            .otherwise(F.lit("merged"))
+            .alias("verdict"),
+        )
+    )
+    return out, comps, lab_nodes
+
+
+def touched_remap(comps: DataFrame, lab_nodes: DataFrame) -> DataFrame:
+    """(label0, newl): where the update graph moved each touched stored
+    label. Untouched labels have no row — by definition they have no
+    edge to the shard, so their clusters keep their label."""
+    return comps.join(lab_nodes, "node").select(
+        F.col("node").alias("label0"), F.col("label").alias("newl")
+    )
+
+
+def relabel(rows: DataFrame, remap: DataFrame) -> DataFrame:
+    """``rows``' ``label`` column mapped through a ``touched_remap``
+    (labels without a remap row stay), all other columns unchanged."""
+    return rows.join(remap, F.col("label") == F.col("label0"), "left").select(
+        *[
+            F.coalesce("newl", "label").alias("label") if c == "label" else c
+            for c in rows.columns
+        ]
+    )
+
+
+def advance_state(
+    state: DataFrame,
+    update: tuple[DataFrame, DataFrame, DataFrame],
+    key: str,
+) -> tuple[DataFrame, DataFrame]:
+    """One day's state-advance step of a maintainer chain: ``state`` is
+    the stored (key, label) assignment the day probed and ``update`` its
+    ``maintain_clusters`` result (``out`` keyed by ``key``). Returns
+    (remap, next state): the touched-label remap, materialized because
+    it relabels both this state and, on a later day, earlier days'
+    shard rows (``relabel``); and the lazy next state — stored rows with
+    touched labels remapped, plus the shard's rows. Cost is O(touched)
+    plus the shard append, never a corpus rewrite."""
+    out, comps, lab_nodes = update
+    remap = touched_remap(comps, lab_nodes).localCheckpoint()
+    return remap, relabel(state, remap).unionByName(
+        out.select(key, F.col("cluster_id").alias("label"))
+    )
+
+
 def connected_components_star(
     edges: DataFrame, vertices: DataFrame, max_iter: int = 30
 ) -> DataFrame:
@@ -1917,12 +2043,11 @@ def q_dedup_clusters_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log n) rounds. This is the composition that runs at 100 TB;
     q_dedup_clusters/_star are its exact-pair-source ground-truth twins.
 
-    The pre-collapse (r12, closes the r11 verdict's flagship scale gap):
-    docs are grouped by (lang, md5 of normalized text) — the q_dedup_exact
-    fingerprint — and only one representative per group enters the blocker
-    → verify → CC stages; members rejoin through their rep's component
-    label at the end (the video tier's set-collapse pattern,
-    multimodal.py). An exact-dup flood of m copies therefore contributes
+    The pre-collapse: docs are grouped by (lang, md5 of normalized
+    text) — the q_dedup_exact fingerprint — and only one representative
+    per group enters the blocker → verify → CC stages; members rejoin
+    through their rep's component label at the end (the video tier's
+    set-collapse pattern, multimodal.py). An exact-dup flood of m copies therefore contributes
     ONE doc to signatures, banding, verification, and the CC edge list —
     never C(m,2) edges. Output-identical by construction: within a group
     the shingle sets are identical and nonempty (short docs, < 3 tokens,
@@ -1938,11 +2063,9 @@ def q_dedup_clusters_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossless on the corpus (deterministic seeds make this a reproducible
     property, verified at sf0.001/0.01/0.1 in tests). A rows/hash mismatch
     here means a J ≥ 0.5 pair escaped BOTH blockers — a recall metric, not
-    a verify/CC bug (see q_dedup_levenshtein_bounded).
-
-    r13: the pre-collapse group key is a typed (lang, fp) struct and
-    NULL-lang docs stay singleton reps (ADVICE fix — the delimited-string
-    key merged identical NULL-lang docs the edge predicate never joins)."""
+    a verify/CC bug (see q_dedup_levenshtein_bounded). The pre-collapse
+    group key is a typed (lang, fp) struct and NULL-lang docs stay
+    singleton reps: the edge predicate never joins NULL langs."""
     d = spread(load_table(spark, sf_dir, "documents"))
     comps = bounded_component_assignment(d)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -1959,11 +2082,11 @@ def bounded_component_assignment(
     SimHash blockers over representatives → exact hashed-shingle
     Jaccard verify → alternating-star components → member expansion.
     Returns the TOTAL (node, label) assignment (label = component
-    minimum; singletons label themselves). Factored (r12) so the
-    incremental text-cluster maintainer can build its stored corpus
-    state with provably THE flagship pipeline's semantics.
+    minimum; singletons label themselves). The incremental text-cluster
+    maintainer builds its stored corpus state with it, so the state has
+    exactly the flagship pipeline's semantics.
 
-    ``feats`` (r13 optimization round): an optional pre-materialized
+    ``feats``: an optional pre-materialized
     per-doc feature table (doc_id, lang, fp, th64, sh) — fp/th64/sh
     built with exactly the expressions this function would build
     (md5(lower(trim(text))), xxhash64 per token,
@@ -1971,18 +2094,15 @@ def bounded_component_assignment(
     by construction. When provided, the corpus is NOT re-scanned or
     re-tokenized here: the lean rep-tagging projection and the
     representative shingle/token-hash tables are narrow selects off the
-    caller's one checkpoint (guide §1/§6 — the maintainer was paying
-    the tokenize+shingle scan ~3×: lean, reps, probe).
+    caller's one checkpoint.
 
-    ``sigs`` (r14 optimization round): an optional pre-materialized
+    ``sigs``: an optional pre-materialized
     MinHash signature table over (a superset of) ``d``'s docs, built
     with ``minhash_signatures`` off the same shingle sets — signatures
     are a pure per-doc function, so filtering the caller's one
     checkpointed table to the representatives is row-identical to
-    recomputing them here. Saves the representative explode+16-slot
-    aggregate pass (guide §1.3: the maintainer computed signatures
-    three times — corpus reps, full-corpus probe banding, shard
-    blocker — off one shingle table)."""
+    recomputing them here, and saves the representative explode+16-slot
+    aggregate pass."""
     # rep-tagging runs over a LEAN projection (doc_id, lang, fp, n_tok)
     # — the group-key window shuffles ~50-byte rows, never token-hash
     # arrays — and only the surviving representatives are tokenized and
@@ -2004,7 +2124,7 @@ def bounded_component_assignment(
     # group key: (lang, fingerprint) for docs with ≥ 3 tokens (nonempty
     # shingle set ⟹ within-group J = 1 ⟹ genuinely mergeable edges);
     # sub-3-token docs stay singletons (see docstring). Typed STRUCT, not
-    # a delimited string (r12 ADVICE): concat_ws skips NULLs, so two
+    # a delimited string: concat_ws skips NULLs, so two
     # identical NULL-lang docs would have shared a string key and merged
     # even though the verified edge predicate (lang_a == lang_b) never
     # joins NULL langs — NULL-lang docs therefore also take the singleton
@@ -2063,55 +2183,23 @@ def bounded_component_assignment(
             base.select("doc_id", "lang", "th64")
         )
     ).select("doc_a", "doc_b")
-    # r14: no global distinct on the candidate union — the only consumer
-    # is the verify join feeding star CC, whose entry canonicalizes +
+    # no global distinct on the candidate union — the only consumer is
+    # the verify join feeding star CC, whose entry canonicalizes +
     # distincts edges anyway; a duplicate candidate (a pair both
     # blockers surface) costs one extra verify row, where the distinct
-    # cost a full exchange of the candidate stream (guide §2.4)
+    # would cost a full exchange of the candidate stream
     cands = mh.union(sim)
-    # r13 (optimization round): the verify join attaches the shingle
-    # arrays to the candidate stream — size-gate a broadcast of the
-    # (already checkpointed) per-doc shingle table so the candidate
-    # stream is never shuffled twice just to pick up its payloads
-    # (guide §3.1/§8: move the heavy arrays zero times, decide on ids);
-    # above the row gate the hint is withheld and the shuffle plan runs,
-    # which is the correct shape when the corpus outgrows the executors.
-    # r14: both sides project the SAME table — gate on ONE count job
-    # instead of two (broadcast_if_small counted per side).
-    _hint = (
-        F.broadcast
-        if sh_docs.count() <= _NEEDS_BROADCAST_MAX
-        else (lambda df: df)
-    )
-    a = _hint(
-        sh_docs.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("lang").alias("lang_a"),
-            F.col("sh").alias("sh_a"),
-        )
-    )
-    b = _hint(
-        sh_docs.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("lang").alias("lang_b"),
-            F.col("sh").alias("sh_b"),
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    # ROUND(...,6) before thresholding — the single edge definition shared
-    # with q_dedup_ngram_jaccard and the cluster oracle's pair CTE; the
-    # when-guard keeps empty-shingle candidate pairs (SimHash can pair
-    # sub-3-token docs) away from a 0/0 division
-    jac = F.when(
-        union > 0,
-        F.round(inter.cast("double") / union.cast("double"), 6),
-    ).otherwise(F.lit(0.0))
-    pairs = (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .filter((F.col("lang_a") == F.col("lang_b")) & (jac >= F.lit(JACCARD_THRESHOLD)))
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    # the verify join attaches the shingle arrays to the candidate
+    # stream — size-gate a broadcast of the (already checkpointed)
+    # per-doc shingle table so the candidate stream is never shuffled
+    # twice just to pick up its payloads; above the row gate the hint is
+    # withheld and the shuffle plan runs, which is the correct shape when
+    # the corpus outgrows the executors. Both sides read the SAME table,
+    # so one count job gates both.
+    if sh_docs.count() <= _NEEDS_BROADCAST_MAX:
+        sh_docs = F.broadcast(sh_docs)
+    pairs = jaccard_verified(cands, sh_docs, sh_docs).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
     # components over REPRESENTATIVES only; members inherit their rep's
     # label (rep = group minimum, so min-label semantics are preserved
@@ -2139,16 +2227,17 @@ def incremental_near_candidates(banded, is_shard):
     - ``corpus_hits`` — corpus bucket rows that share a bucket with the
       shard (everything else is pruned BEFORE any pair forms, by a
       broadcast left-semi join on the shard's tiny bucket-key set), and
-    - ``cand`` — distinct (shard_id, corpus_id) candidate pairs.
+    - ``cand`` — distinct (doc_a = shard doc, doc_b = corpus doc)
+      candidate pairs, the shape ``jaccard_verified`` takes.
 
     Exposed separately so the unit test can pin the O(shard) property:
     |corpus_hits| is bounded by shard bucket collisions, not corpus size."""
     shard_banded = banded.filter(is_shard)
     shard_buckets = shard_banded.select("band_idx", "band_hash").distinct()
     corpus_hits = banded.filter(~is_shard).join(
-        # size-gated hint (r13): a daily shard's bucket-key set is tiny,
-        # but an explicit F.broadcast fails rather than degrades if it
-        # ever isn't — above the gate the semi-join runs as a shuffle
+        # size-gated hint: a daily shard's bucket-key set is tiny, but an
+        # explicit F.broadcast fails rather than degrades if it ever
+        # isn't — above the gate the semi-join runs as a shuffle
         broadcast_if_small(shard_buckets),
         ["band_idx", "band_hash"],
         "left_semi",
@@ -2160,9 +2249,7 @@ def incremental_near_candidates(banded, is_shard):
             (F.col("s.band_idx") == F.col("c.band_idx"))
             & (F.col("s.band_hash") == F.col("c.band_hash")),
         )
-        .select(
-            F.col("s.doc_id").alias("shard_id"), F.col("c.doc_id").alias("corpus_id")
-        )
+        .select(F.col("s.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b"))
         .distinct()
     )
     return corpus_hits, cand
@@ -2221,31 +2308,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- tier 2: near-dup via shard-driven bucket probe ---
     sh_docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
     banded = _lsh_banded(minhash_signatures(sh_docs)).localCheckpoint()
-    corpus_hits, cand = incremental_near_candidates(banded, is_shard)
-    a = sh_docs.select(
-        F.col("doc_id").alias("shard_id"),
-        F.col("lang").alias("lang_s"),
-        F.col("sh").alias("sh_s"),
-    )
-    b = sh_docs.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.col("lang").alias("lang_c"),
-        F.col("sh").alias("sh_c"),
-    )
-    inter = F.size(F.array_intersect(F.col("sh_s"), F.col("sh_c")))
-    union = F.size(F.col("sh_s")) + F.size(F.col("sh_c")) - inter
-    # same ROUND(...,6)-then-threshold edge definition as every other
-    # jaccard tier (and this id's oracle nr CTE)
-    jac = F.when(
-        union > 0,
-        F.round(inter.cast("double") / union.cast("double"), 6),
-    ).otherwise(F.lit(0.0))
+    _, cand = incremental_near_candidates(banded, is_shard)
     near = (
-        cand.join(a, "shard_id")
-        .join(b, "corpus_id")
-        .filter((F.col("lang_s") == F.col("lang_c")) & (jac >= F.lit(JACCARD_THRESHOLD)))
-        .groupBy(F.col("shard_id").alias("doc_id"))
-        .agg(F.min("corpus_id").alias("near_dup_of"))
+        jaccard_verified(cand, sh_docs, sh_docs)
+        .groupBy(F.col("doc_a").alias("doc_id"))
+        .agg(F.min("doc_b").alias("near_dup_of"))
     )
 
     return (
@@ -2266,57 +2333,39 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_cluster_update(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """The q_dedup_text_cluster_incremental body, factored (r13) so the
-    keeper election (q_dedup_text_keeper) can reuse the maintainer's
-    exact update pieces: returns (out = shard verdict rows, comps = the
-    contracted update graph's (node, label) assignment, lab_nodes = the
-    touched stored labels, corpus_assign = the stored corpus state).
-    Semantics and plan are the r12 maintainer's, unchanged — the
-    q_dedup_cluster_incremental contraction on the flagship text
-    surface: assign a new document shard (doc_id % 20 == 0) to the
-    EXISTING near-dup clusters or mint new ids WITHOUT recomputing the
-    corpus CC fixpoint. The stored state is the flagship pipeline's own
-    assignment over the corpus (``bounded_component_assignment`` — at
-    100 TB this table is loaded, not recomputed; here built once as the
-    baseline). The update graph contracts every stored cluster to its
-    label node:
+    """Incremental TEXT-cluster maintainer: assign a new document shard
+    (doc_id % 20 == 0) to the EXISTING near-dup clusters, or mint new
+    ids, without recomputing the corpus fixpoint (``maintain_clusters``
+    holds the contraction argument). The stored state is the flagship
+    pipeline's own assignment over the corpus
+    (``bounded_component_assignment`` — at 100 TB this table is loaded,
+    not recomputed; here it is built once as the baseline). Edges:
 
-        nodes = shard docs ∪ touched corpus labels
-        edges = verified shard↔corpus pairs (the q_dedup_incremental
-                LSH bucket probe — shard band keys broadcast-semi the
-                corpus bucket table, candidates verified with exact
-                same-lang hashed-shingle Jaccard ≥ 0.5 — mapped
-                doc → stored label) ∪ verified intra-shard pairs
-                (MinHash ∪ SimHash restricted to the shard, the
-                flagship blocker pair, then the same verify)
+    - shard↔corpus: the q_dedup_incremental LSH bucket probe (shard band
+      keys broadcast-semi-join the corpus bucket table), candidates
+      verified by ``jaccard_verified``, mapped doc → stored label;
+    - intra-shard: MinHash ∪ SimHash restricted to the shard (the
+      flagship blocker pair), then the same verify.
 
-    and one O(shard) min-label CC reproduces the full-recompute
-    fixpoint restricted to shard-touched components: corpus labels are
-    their clusters' minima, and every combined-graph path between
-    corpus docs crosses the shard only through probe-verified edges.
-    Identical-text arrivals need no separate exact tier — identical
+    Identical-text arrivals need no separate exact tier: identical
     shingle sets share every LSH band, so the probe already pairs them.
 
-    Output: one row per shard doc — (doc_id, cluster_id = the
-    post-update fixpoint label, verdict 'attached'/'merged'/'new').
-    Oracle: the exact 3-gram Jaccard pair CTEs + TWO recursive
-    fixpoints (corpus-only stored state, full corpus+shard ground
-    truth) — label equality proves the contraction loses nothing; a
-    driver red is blocker/probe recall loss (the flagship's
-    driver-red contract), not CC logic."""
+    Returns (out = shard verdict rows (doc_id, cluster_id, verdict),
+    comps, lab_nodes, corpus_assign = the stored corpus state) — the
+    keeper election (q_dedup_text_keeper) reuses the update pieces.
+    Oracle (q_dedup_text_cluster_incremental): the exact 3-gram Jaccard
+    pair CTEs + TWO recursive fixpoints (corpus-only stored state, full
+    corpus+shard ground truth) — label equality proves the contraction
+    loses nothing; a driver red is blocker/probe recall loss (the
+    flagship's driver-red contract), not CC logic."""
     is_shard = F.col("doc_id") % _SHARD_MOD == 0
     d = spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", "text"
     )
-    # r13 (optimization round): ONE feature checkpoint (doc_id, lang, fp,
-    # th64, sh) over corpus ∪ shard feeds the stored-state build, the
-    # probe signatures, the shard SimHash blocker and every verification
-    # join — before, the corpus was scanned+tokenized+shingled ~3× (the
-    # stored-state build's lean/rep passes, _docs_with_hashed_shingles,
-    # and _docs_with_token_hashes for the shard SimHash). fp/th64/sh are
-    # the exact expressions those paths built, so every downstream row
-    # is identical (guide §1.3/§6.2: compute shared features once, read
-    # them narrow).
+    # ONE feature checkpoint (doc_id, lang, fp, th64, sh) over corpus ∪
+    # shard feeds the stored-state build, the probe signatures, the shard
+    # SimHash blocker and every verification join; fp/th64/sh are the
+    # exact expressions those paths would build on their own
     feats = _hashed_shingles_from_token_hashes(
         d.select(
             "doc_id",
@@ -2328,14 +2377,10 @@ def _text_cluster_update(
         ),
         keep=("fp", "th64"),
     ).localCheckpoint()
-    # r14 (optimization round 2): ONE MinHash signature table over
-    # corpus ∪ shard feeds the stored-state build's rep blocker, the
-    # probe banding AND the intra-shard blocker — before, the same
-    # explode+16-slot-min aggregate ran three times (corpus reps, full
-    # corpus, shard) off the same checkpointed shingle sets. Signatures
-    # are a pure per-doc function, so the three consumers filter one
-    # checkpoint to their populations, row-identically (guide §1.3:
-    # two full signature passes removed — a real saving at ANY scale).
+    # ONE MinHash signature table over corpus ∪ shard feeds the
+    # stored-state build's rep blocker, the probe banding and the
+    # intra-shard blocker: signatures are a pure per-doc function, so
+    # each consumer filters it to its population
     sh_docs = feats.select("doc_id", "lang", "sh")
     sigs_full = minhash_signatures(sh_docs).localCheckpoint()
     corpus_assign = bounded_component_assignment(
@@ -2344,43 +2389,17 @@ def _text_cluster_update(
         sigs=sigs_full,
     ).localCheckpoint()
 
-    # probe signatures and verification joins ride the same checkpoints
     banded = _lsh_banded(sigs_full).localCheckpoint()
     _, cand = incremental_near_candidates(banded, is_shard)
-    a = sh_docs.select(
-        F.col("doc_id").alias("shard_id"),
-        F.col("lang").alias("lang_s"),
-        F.col("sh").alias("sh_s"),
-    )
-    b = sh_docs.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.col("lang").alias("lang_c"),
-        F.col("sh").alias("sh_c"),
-    )
-    inter_sc = F.size(F.array_intersect(F.col("sh_s"), F.col("sh_c")))
-    union_sc = F.size(F.col("sh_s")) + F.size(F.col("sh_c")) - inter_sc
-    jac_sc = F.when(
-        union_sc > 0,
-        F.round(inter_sc.cast("double") / union_sc.cast("double"), 6),
-    ).otherwise(F.lit(0.0))
     e_corpus = (
-        cand.join(a, "shard_id")
-        .join(b, "corpus_id")
-        .filter(
-            (F.col("lang_s") == F.col("lang_c"))
-            & (jac_sc >= F.lit(JACCARD_THRESHOLD))
-        )
-        .join(
-            corpus_assign.withColumnRenamed("node", "corpus_id"), "corpus_id"
-        )
-        .select(F.col("shard_id").alias("u"), F.col("label").alias("v"))
+        jaccard_verified(cand, sh_docs, sh_docs)
+        .join(corpus_assign.withColumnRenamed("node", "doc_b"), "doc_b")
+        .select(F.col("doc_a").alias("u"), F.col("label").alias("v"))
         .distinct()
         .localCheckpoint()
     )
-
-    # intra-shard verified pairs — the flagship blocker pair restricted
-    # to the shard (shard-sized work by construction); signatures come
-    # from the shared table (see sigs_full above)
+    # no distinct on the blocker union: edges feed the min-label CC,
+    # where duplicate edges are harmless (min over a multiset)
     shard_sh = sh_docs.filter(is_shard)
     mh = lsh_candidates(sigs_full.filter(is_shard))
     sim = simhash_pairs(
@@ -2388,95 +2407,30 @@ def _text_cluster_update(
             feats.filter(is_shard).select("doc_id", "lang", "th64")
         )
     ).select("doc_a", "doc_b")
-    sa = shard_sh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("sh").alias("sh_a"),
-    )
-    sb = shard_sh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("sh").alias("sh_b"),
-    )
-    inter_ss = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union_ss = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter_ss
-    jac_ss = F.when(
-        union_ss > 0,
-        F.round(inter_ss.cast("double") / union_ss.cast("double"), 6),
-    ).otherwise(F.lit(0.0))
-    # r14: no global distinct on the blocker union — edges feed the
-    # min-label CC, where duplicate edges are harmless (min over a
-    # multiset); the distinct cost an exchange of the candidate stream
-    e_shard = (
-        mh.union(sim)
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            (F.col("lang_a") == F.col("lang_b"))
-            & (jac_ss >= F.lit(JACCARD_THRESHOLD))
-        )
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    e_shard = jaccard_verified(mh.union(sim), shard_sh, shard_sh).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
 
-    edges = e_corpus.unionByName(e_shard)
-    shard_ids = d.filter(is_shard).select(F.col("doc_id").alias("node"))
-    nodes = shard_ids.union(e_corpus.select(F.col("v").alias("node"))).distinct()
-    comps = connected_components(edges, nodes).localCheckpoint()
-    lab_nodes = e_corpus.select(F.col("v").alias("node")).distinct()
-    comp_corpus = (
-        comps.join(lab_nodes, "node")
-        .groupBy("label")
-        .agg(F.countDistinct("node").alias("n_corpus"))
+    out, comps, lab_nodes = maintain_clusters(
+        shard_sh.select(F.col("doc_id").alias("node")), e_corpus, e_shard
     )
-    out = (
-        shard_ids.withColumnRenamed("node", "doc_id")
-        .join(comps.withColumnRenamed("node", "doc_id"), "doc_id")
-        .join(comp_corpus, "label", "left")
-        .select(
-            "doc_id",
-            F.col("label").alias("cluster_id"),
-            F.when(F.coalesce(F.col("n_corpus"), F.lit(0)) == 0, F.lit("new"))
-            .when(F.col("n_corpus") == 1, F.lit("attached"))
-            .otherwise(F.lit("merged"))
-            .alias("verdict"),
-        )
-    )
-    return out, comps, lab_nodes, corpus_assign
+    return out.withColumnRenamed("node", "doc_id"), comps, lab_nodes, corpus_assign
 
 
 def q_dedup_text_cluster_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Incremental TEXT-cluster maintainer (r12; body factored r13 as
-    ``_text_cluster_update`` for the keeper election, and the (lang, md5)
-    pre-collapse key typed per the r12 ADVICE fix) — the
-    q_dedup_cluster_incremental contraction on the flagship text
-    surface: assign a new document shard (doc_id % 20 == 0) to the
-    EXISTING near-dup clusters or mint new ids WITHOUT recomputing the
-    corpus CC fixpoint. The stored state is the flagship pipeline's own
-    assignment over the corpus (``bounded_component_assignment`` — at
-    100 TB this table is loaded, not recomputed; here built once as the
-    baseline); the update graph contracts every stored cluster to its
-    label node and one O(shard) min-label CC reproduces the
-    full-recompute fixpoint restricted to shard-touched components (the
-    full argument lives on ``_text_cluster_update``).
-
-    Output: one row per shard doc — (doc_id, cluster_id = the
-    post-update fixpoint label, verdict 'attached'/'merged'/'new').
-    Oracle: the exact 3-gram Jaccard pair CTEs + TWO recursive
-    fixpoints (corpus-only stored state, full corpus+shard ground
-    truth) — label equality proves the contraction loses nothing; a
-    driver red is blocker/probe recall loss (the flagship's
-    driver-red contract), not CC logic."""
+    """Incremental TEXT-cluster maintainer: one row per shard doc —
+    (doc_id, cluster_id = the post-update fixpoint label, verdict
+    'attached'/'merged'/'new'). See ``_text_cluster_update``."""
     out, _comps, _labs, _state = _text_cluster_update(spark, sf_dir)
     return out
 
 
 def q_dedup_text_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KEEPER election over the text maintainer's updated clusters
-    (VERDICT r12 item 6 — media clusters have keeper policies, text
-    clusters did not): after q_dedup_text_cluster_incremental assigns a
-    shard, which doc survives each shard-touched cluster? Election
+    """KEEPER election over the text maintainer's updated clusters:
+    after q_dedup_text_cluster_incremental assigns a shard, which doc
+    survives each shard-touched cluster? Election
     order: quality_bin DESC (the gate's bin — curation keeps the
     cleanest copy), n_chars DESC, md5(doc_id) ASC (the layout-free
     tiebreak discipline of q_curriculum_order's order_key). Members of
@@ -2499,9 +2453,7 @@ def q_dedup_text_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     out, comps, lab_nodes, corpus_assign = _text_cluster_update(
         spark, sf_dir
     )
-    remap = comps.join(lab_nodes, "node").select(
-        F.col("node").alias("label0"), F.col("label").alias("newl")
-    )
+    remap = touched_remap(comps, lab_nodes)
     corpus_members = (
         corpus_assign.join(remap, F.col("label") == F.col("label0"))
         .select(F.col("node").alias("doc_id"), F.col("newl").alias("cluster_id"))

@@ -68,17 +68,19 @@ def synth_media_table(
     bytes are assembled batch-wise Python-side and travel to the JVM as
     Arrow binary, never row objects.
 
-    ``modality`` (r14 optimization round): a doc's modality is a pure
-    function of doc_id (doc_id % 3), so single-modality consumers pass
-    it here and the row filter runs BEFORE the opaque generator —
-    Spark cannot push a filter on the generator's output through
-    mapInPandas, so every per-modality hash family was paying full
-    three-modality payload synthesis (incl. the 4-frame IVF containers)
-    and discarding two thirds of it (guide §4: pass only the rows the
-    function needs). Rows are identical to filtering the full table."""
+    ``modality``: a doc's modality is a pure function of doc_id (its
+    non-negative residue mod 3, Python's ``%``), so single-modality
+    consumers pass it here and the row filter runs BEFORE the opaque
+    generator — Spark cannot push a filter on the generator's output
+    through mapInPandas, so without it every per-modality hash family
+    would pay full three-modality payload synthesis (incl. the 4-frame
+    IVF containers) and discard two thirds of it. Rows are identical to
+    filtering the full table."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     if modality is not None:
-        d = d.filter(F.col("doc_id") % 3 == MODALITIES.index(modality))
+        # pmod, not %: Spark's % keeps the dividend's sign (-1 % 3 == -1)
+        m = MODALITIES.index(modality)
+        d = d.filter(F.pmod(F.col("doc_id"), F.lit(3)) == m)
 
     def run(batches):
         for pdf in batches:
@@ -793,6 +795,17 @@ def image_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(run, schema)
 
 
+def _ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(media_id, hash_hi, hash_lo): the image aHash in the shape the
+    hash-graph cores (``hamming_near_pairs``, ``hash_cluster_assignment``,
+    the maintainers) take."""
+    return image_hashes(spark, sf_dir).select(
+        "media_id",
+        F.col("ahash_hi").alias("hash_hi"),
+        F.col("ahash_lo").alias("hash_lo"),
+    )
+
+
 def q_multimodal_image_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered form of ``image_hashes`` — see its docstring. The
     oracle regenerates every pixel from the synth closed form
@@ -823,14 +836,7 @@ def q_dedup_image_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mod 256) (hamming-0 pairs appear at sf0.1: 768-periodic image
     cliques — all tier-1 now); crafted-BMP unit tests pin the 1-3-bit
     and beyond-threshold behavior."""
-    h = image_hashes(spark, sf_dir)
-    return hamming_near_pairs(
-        h.select(
-            "media_id",
-            F.col("ahash_hi").alias("hash_hi"),
-            F.col("ahash_lo").alias("hash_lo"),
-        )
-    )
+    return hamming_near_pairs(_ahash_table(spark, sf_dir))
 
 
 def _band_structs(n_bands: int) -> list:
@@ -858,6 +864,76 @@ def _band_structs(n_bands: int) -> list:
     return out
 
 
+def _bands(dist: DataFrame, n_bands: int = _HASH_BANDS) -> DataFrame:
+    """(hash_hi, hash_lo) → one (hash_hi, hash_lo, band_idx, band_val)
+    row per band of the ``_band_structs`` geometry."""
+    return dist.select(
+        "hash_hi",
+        "hash_lo",
+        F.explode(F.array(*_band_structs(n_bands))).alias("b"),
+    ).select(
+        "hash_hi",
+        "hash_lo",
+        F.col("b.band_idx").alias("band_idx"),
+        F.col("b.band_val").alias("band_val"),
+    )
+
+
+def _rare_bands(bands: DataFrame, cap: int) -> DataFrame:
+    """The band rows whose (band_idx, band_val) bucket holds ≤ ``cap``
+    rows — over distinct hashes, every surviving bucket pairs at most
+    cap² candidates."""
+    rare = (
+        bands.groupBy("band_idx", "band_val")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") <= cap)
+        .select("band_idx", "band_val")
+    )
+    return bands.join(rare, ["band_idx", "band_val"], "left_semi")
+
+
+def hamming_probe(sdist: DataFrame, cdist: DataFrame) -> DataFrame:
+    """The shard→corpus banded Hamming probe of the incremental image
+    maintainers: shard DISTINCT hashes ``sdist`` against corpus DISTINCT
+    hashes ``cdist`` (both (hash_hi, hash_lo)) → distinct near pairs
+    (hash_hi, hash_lo = the shard hash, c_hi, c_lo = the corpus hash) at
+    hamming 1..IMG_HAMMING_MAX. Corpus band postings are df-capped at
+    BAND_DF_CAP (the stored index is built capped), and the shard's band
+    keys semi-join them before any pair forms, so corpus-side candidate
+    work is proportional to the SHARD — the q_dedup_incremental probe
+    discipline. Lossless by pigeonhole where the cap does not bite."""
+    from breweries_case_spark.operators.dedup import broadcast_if_small
+
+    sbands = _bands(sdist).localCheckpoint()
+    probe = _rare_bands(_bands(cdist), BAND_DF_CAP).join(
+        # size-gated hint: shard band keys are tiny, but an unconditional
+        # F.broadcast fails rather than degrades if a large delivery's key
+        # set outgrows the driver
+        broadcast_if_small(sbands.select("band_idx", "band_val").distinct()),
+        ["band_idx", "band_val"],
+        "left_semi",
+    )
+    hamming = F.bit_count(
+        F.col("a.hash_hi").bitwiseXOR(F.col("b.hash_hi"))
+    ) + F.bit_count(F.col("a.hash_lo").bitwiseXOR(F.col("b.hash_lo")))
+    return (
+        sbands.alias("a")
+        .join(
+            probe.alias("b"),
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_val") == F.col("b.band_val")),
+        )
+        .filter(hamming.between(1, IMG_HAMMING_MAX))
+        .select(
+            F.col("a.hash_hi").alias("hash_hi"),
+            F.col("a.hash_lo").alias("hash_lo"),
+            F.col("b.hash_hi").alias("c_hi"),
+            F.col("b.hash_lo").alias("c_lo"),
+        )
+        .distinct()
+    )
+
+
 def hash_near_pairs(
     dist: DataFrame,
     band_df_cap: int | None = None,
@@ -871,21 +947,7 @@ def hash_near_pairs(
     connected components on the HASH graph directly — never
     materializing the media-pair expansion."""
     cap = BAND_DF_CAP if band_df_cap is None else band_df_cap
-    bands = dist.select(
-        "hash_hi",
-        "hash_lo",
-        F.explode(F.array(*_band_structs(n_bands))).alias("b"),
-    ).select(
-        "hash_hi",
-        "hash_lo",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_val").alias("band_val"),
-    )
-    bdf = bands.groupBy("band_idx", "band_val").agg(
-        F.count("*").alias("df")
-    )
-    rare = bdf.filter(F.col("df") <= cap).select("band_idx", "band_val")
-    rb = bands.join(rare, ["band_idx", "band_val"], "left_semi")
+    rb = _rare_bands(_bands(dist, n_bands), cap)
     a, b = rb.alias("a"), rb.alias("b")
     pair_lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
         F.col("b.hash_hi"), F.col("b.hash_lo")
@@ -1258,13 +1320,7 @@ def q_dedup_image_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint over MEDIA — the q_dedup_clusters oracle pattern, which
     also proves the hash-level factoring loses nothing."""
     return perceptual_cluster_output(
-        hash_cluster_assignment(
-            image_hashes(spark, sf_dir).select(
-                "media_id",
-                F.col("ahash_hi").alias("hash_hi"),
-                F.col("ahash_lo").alias("hash_lo"),
-            )
-        )
+        hash_cluster_assignment(_ahash_table(spark, sf_dir))
     )
 
 
@@ -1327,13 +1383,7 @@ def q_dedup_media_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses modalities (a cross-modal edge is semantically undefined
     for these fingerprints)."""
     img = perceptual_cluster_output(
-        hash_cluster_assignment(
-            image_hashes(spark, sf_dir).select(
-                "media_id",
-                F.col("ahash_hi").alias("hash_hi"),
-                F.col("ahash_lo").alias("hash_lo"),
-            )
-        )
+        hash_cluster_assignment(_ahash_table(spark, sf_dir))
     ).withColumn("modality", F.lit("image"))
     aud = perceptual_cluster_output(
         hash_cluster_assignment(
@@ -1510,13 +1560,10 @@ def q_dedup_media_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
        fingerprint = re-upload/re-encode of the same image); at scale
        the corpus side is the stored hash table, probed with O(shard)
        rows.
-    2. **near** — the shard's band keys (4×16-bit over shard DISTINCT
-       hashes, tiny) BROADCAST-semi-join the corpus band index before
-       any pair forms, so corpus-side candidate work is proportional
-       to the SHARD, not the corpus — q_dedup_incremental's probe
-       discipline; corpus postings are additionally df-capped at
-       BAND_DF_CAP (the stored index is built capped). Candidates
-       XOR-verify at hamming 1..IMG_HAMMING_MAX.
+    2. **near** — ``hamming_probe``: the shard's band keys prune the
+       df-capped corpus band index before any pair forms (corpus-side
+       work O(shard)), and candidates XOR-verify at hamming
+       1..IMG_HAMMING_MAX.
 
     Output: one row per shard image — verdict 'exact_dup' /
     'near_dup' / 'new' with dup_of = the smallest matching corpus
@@ -1526,15 +1573,7 @@ def q_dedup_media_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the corpus hash + band tables are the incremental state
     (pipelines/incremental.py discipline): built once, appended per
     shard, per-day cost O(shard)."""
-    h = (
-        image_hashes(spark, sf_dir)
-        .select(
-            "media_id",
-            F.col("ahash_hi").alias("hash_hi"),
-            F.col("ahash_lo").alias("hash_lo"),
-        )
-        .localCheckpoint()
-    )
+    h = _ahash_table(spark, sf_dir).localCheckpoint()
     is_shard = F.col("media_id") % _MEDIA_SHARD_MOD == 0
     shard, corpus = h.filter(is_shard), h.filter(~is_shard)
 
@@ -1551,69 +1590,21 @@ def q_dedup_media_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # tier 2: shard-driven band probe over the (capped) corpus index
-    def _bands(dist):
-        return dist.select(
-            "hash_hi",
-            "hash_lo",
-            F.explode(F.array(*_band_structs(_HASH_BANDS))).alias("b"),
-        ).select(
-            "hash_hi",
-            "hash_lo",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.band_val").alias("band_val"),
-        )
-
-    sbands = _bands(
-        shard.select("hash_hi", "hash_lo").distinct()
-    ).localCheckpoint()
-    cbands = _bands(corpus.select("hash_hi", "hash_lo").distinct())
-    rare = (
-        cbands.groupBy("band_idx", "band_val")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= BAND_DF_CAP)
-        .select("band_idx", "band_val")
-    )
-    from breweries_case_spark.operators.dedup import broadcast_if_small
-
-    probe = cbands.join(rare, ["band_idx", "band_val"], "left_semi").join(
-        # size-gated hint (r12 ADVICE, fixed r13): shard band keys are
-        # tiny, but an unconditional F.broadcast fails rather than
-        # degrades if a large delivery's key set outgrows the driver
-        broadcast_if_small(sbands.select("band_idx", "band_val").distinct()),
-        ["band_idx", "band_val"],
-        "left_semi",
-    )
-    hamming = F.bit_count(
-        F.col("a.hash_hi").bitwiseXOR(F.col("b.hash_hi"))
-    ) + F.bit_count(F.col("a.hash_lo").bitwiseXOR(F.col("b.hash_lo")))
-    near_hash = (
-        sbands.alias("a")
-        .join(
-            probe.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col("a.hash_hi").alias("hi_s"),
-            F.col("a.hash_lo").alias("lo_s"),
-            F.col("b.hash_hi").alias("hi_c"),
-            F.col("b.hash_lo").alias("lo_c"),
-            hamming.cast("long").alias("hamming"),
-        )
-        .filter(F.col("hamming").between(1, IMG_HAMMING_MAX))
-        .distinct()
+    near_hash = hamming_probe(
+        shard.select("hash_hi", "hash_lo").distinct(),
+        corpus.select("hash_hi", "hash_lo").distinct(),
     )
     nr = (
         shard.alias("s")
         .join(
-            near_hash,
-            (F.col("s.hash_hi") == F.col("hi_s"))
-            & (F.col("s.hash_lo") == F.col("lo_s")),
+            near_hash.alias("n"),
+            (F.col("s.hash_hi") == F.col("n.hash_hi"))
+            & (F.col("s.hash_lo") == F.col("n.hash_lo")),
         )
         .join(
             corpus.alias("c"),
-            (F.col("c.hash_hi") == F.col("hi_c"))
-            & (F.col("c.hash_lo") == F.col("lo_c")),
+            (F.col("c.hash_hi") == F.col("n.c_hi"))
+            & (F.col("c.hash_lo") == F.col("n.c_lo")),
         )
         .groupBy(F.col("s.media_id").alias("media_id"))
         .agg(F.min("c.media_id").alias("near_dup_of"))
@@ -1634,53 +1625,23 @@ def q_dedup_media_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental CLUSTER maintainer (r12 queue) — the missing step
-    between q_dedup_media_incremental's per-item verdicts and the
-    cluster table: assign a new image shard (media_id % 20 == 0) to the
-    EXISTING perceptual clusters, or mint new cluster ids, WITHOUT
-    recomputing the corpus CC fixpoint. The trick is contraction: a
-    stored corpus cluster is already connected, so it enters the update
-    as ONE node (its label); the update graph is
-
-        nodes  = shard media ∪ the corpus cluster labels the shard
-                 touches (O(shard) by the probe discipline)
-        edges  = shard→cluster probe hits (exact-hash tier + the
-                 BAND_DF_CAP banded probe, q_dedup_media_incremental's
-                 machinery, mapped hash→stored label) ∪ intra-shard
-                 near edges (the shard's own distinct-hash graph —
-                 same-hash members hook to a rep, reps connect via
-                 ``hash_near_pairs`` over the shard's distinct hashes)
-
-    and ONE min-label CC over that tiny graph yields exactly the
-    full-recompute fixpoint restricted to shard-touched components:
-    corpus labels are their clusters' minima, every combined-graph path
-    between corpus media crosses shard hashes only through probe-hit
-    labels, so min(component of contracted graph) = min(media of the
-    recomputed component). Per-day cost is O(shard); the corpus
-    assignment is the stored state (computed here once as the
-    baseline — at scale it is loaded, the pipelines/incremental.py
-    discipline).
+    """Incremental image-CLUSTER maintainer — the step between
+    q_dedup_media_incremental's per-item verdicts and the cluster table:
+    assign a new image shard (media_id % 20 == 0) to the EXISTING
+    perceptual clusters, or mint new cluster ids, without recomputing
+    the corpus fixpoint (``_hash_cluster_update``; the contraction
+    argument is on ``dedup.maintain_clusters``). The corpus assignment
+    is the stored state, computed here once as the baseline — at scale
+    it is loaded, the pipelines/incremental.py discipline.
 
     Output: one row per shard image — (media_id, cluster_id = the
-    post-update fixpoint label, verdict): 'attached' (joined exactly
-    one existing cluster), 'merged' (its arrival bridged ≥ 2 formerly
-    separate corpus clusters — the maintainer's hard case, handled
-    without touching corpus rows beyond the probed labels), or 'new'
-    (no corpus contact; label minted from the shard component's min
-    id). Oracle: brute-force closed-form aHash SQL with TWO recursive
+    post-update fixpoint label, verdict 'attached'/'merged'/'new').
+    Oracle: brute-force closed-form aHash SQL with TWO recursive
     fixpoints — corpus-only (the stored state) and corpus+shard (the
     ground truth) — so label equality proves the contraction loses
     nothing and the verdicts audit the corpus-cluster count per
     component. A driver red is probe/cap recall loss, not CC logic."""
-    h = (
-        image_hashes(spark, sf_dir)
-        .select(
-            "media_id",
-            F.col("ahash_hi").alias("hash_hi"),
-            F.col("ahash_lo").alias("hash_lo"),
-        )
-        .localCheckpoint()
-    )
+    h = _ahash_table(spark, sf_dir).localCheckpoint()
     is_shard = F.col("media_id") % _MEDIA_SHARD_MOD == 0
     shard = h.filter(is_shard).localCheckpoint()
     corpus = h.filter(~is_shard)
@@ -1692,13 +1653,15 @@ def q_dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hash_cluster_update(
     corpus: DataFrame, state: DataFrame, shard: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """ONE maintainer step (the q_dedup_cluster_incremental body,
-    factored r12 so the multi-day chain can iterate it): (corpus
-    media_id/hash frame, its (media_id, label) state, shard frame) →
-    (``out`` = shard verdict rows, ``comps`` = the contracted update
-    graph's (node, label) assignment, ``lab_nodes`` = the touched
-    stored labels) — comps + lab_nodes are what the caller needs to
-    EVOLVE the state (remap touched labels, append shard rows)."""
+    """ONE image-maintainer step: (corpus (media_id, hash_hi, hash_lo),
+    its stored (media_id, label) state, shard frame) → the
+    ``maintain_clusters`` result (out keyed by media_id, comps,
+    lab_nodes). Update-graph edges: shard→cluster probe hits (the exact
+    hash tier ∪ ``hamming_probe``, mapped hash → stored label) ∪
+    intra-shard edges (same-hash members hook to a rep, reps connect via
+    ``hash_near_pairs`` over the shard's distinct hashes)."""
+    from breweries_case_spark.operators.dedup import maintain_clusters
+
     # the stored index: one row per corpus DISTINCT hash with its
     # cluster label (all media sharing a hash share a cluster, so min
     # is just a deterministic pick)
@@ -1709,60 +1672,11 @@ def _hash_cluster_update(
         .localCheckpoint()
     )
     sdist = shard.select("hash_hi", "hash_lo").distinct().localCheckpoint()
-
-    # --- shard→corpus probe: exact tier + banded near tier ---
     exact = sdist.join(hash_label, ["hash_hi", "hash_lo"]).select(
         "hash_hi", "hash_lo", "clabel"
     )
-
-    def _bands(dist: DataFrame) -> DataFrame:
-        return dist.select(
-            "hash_hi",
-            "hash_lo",
-            F.explode(F.array(*_band_structs(_HASH_BANDS))).alias("b"),
-        ).select(
-            "hash_hi",
-            "hash_lo",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.band_val").alias("band_val"),
-        )
-
-    sbands = _bands(sdist).localCheckpoint()
-    cbands = _bands(hash_label.select("hash_hi", "hash_lo"))
-    rare = (
-        cbands.groupBy("band_idx", "band_val")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= BAND_DF_CAP)
-        .select("band_idx", "band_val")
-    )
-    from breweries_case_spark.operators.dedup import broadcast_if_small
-
-    probe = cbands.join(rare, ["band_idx", "band_val"], "left_semi").join(
-        # size-gated hint (r12 ADVICE, fixed r13): shard band keys are
-        # tiny, but an unconditional F.broadcast fails rather than
-        # degrades if a large delivery's key set outgrows the driver
-        broadcast_if_small(sbands.select("band_idx", "band_val").distinct()),
-        ["band_idx", "band_val"],
-        "left_semi",
-    )
-    hamming = F.bit_count(
-        F.col("a.hash_hi").bitwiseXOR(F.col("b.hash_hi"))
-    ) + F.bit_count(F.col("a.hash_lo").bitwiseXOR(F.col("b.hash_lo")))
     near = (
-        sbands.alias("a")
-        .join(
-            probe.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
-        .filter(hamming.between(1, IMG_HAMMING_MAX))
-        .select(
-            F.col("a.hash_hi").alias("hash_hi"),
-            F.col("a.hash_lo").alias("hash_lo"),
-            F.col("b.hash_hi").alias("c_hi"),
-            F.col("b.hash_lo").alias("c_lo"),
-        )
-        .distinct()
+        hamming_probe(sdist, hash_label.select("hash_hi", "hash_lo"))
         .join(
             hash_label.select(
                 F.col("hash_hi").alias("c_hi"),
@@ -1773,11 +1687,11 @@ def _hash_cluster_update(
         )
         .select("hash_hi", "hash_lo", "clabel")
     )
-    touched = exact.unionByName(near).distinct().localCheckpoint()
-
-    # --- the tiny update graph ---
-    e_corpus = shard.join(touched, ["hash_hi", "hash_lo"]).select(
-        F.col("media_id").alias("u"), F.col("clabel").alias("v")
+    touched = exact.unionByName(near).distinct()
+    e_corpus = (
+        shard.join(touched, ["hash_hi", "hash_lo"])
+        .select(F.col("media_id").alias("u"), F.col("clabel").alias("v"))
+        .localCheckpoint()
     )
     sreps = (
         shard.groupBy("hash_hi", "hash_lo")
@@ -1789,9 +1703,9 @@ def _hash_cluster_update(
         .filter(F.col("media_id") != F.col("rep"))
         .select(F.col("media_id").alias("u"), F.col("rep").alias("v"))
     )
-    near_ss = hash_near_pairs(sdist)
-    e_shard = (
-        near_ss.join(
+    e_near = (
+        hash_near_pairs(sdist)
+        .join(
             sreps.select(
                 F.col("hash_hi").alias("hi_a"),
                 F.col("hash_lo").alias("lo_a"),
@@ -1809,40 +1723,55 @@ def _hash_cluster_update(
         )
         .select("u", "v")
     )
-    from breweries_case_spark.operators.dedup import connected_components
+    # one row per shard image, so its media ids are already distinct
+    out, comps, lab_nodes = maintain_clusters(
+        shard.select(F.col("media_id").alias("node")),
+        e_corpus,
+        e_same.unionByName(e_near),
+    )
+    return out.withColumnRenamed("node", "media_id"), comps, lab_nodes
 
-    edges = e_corpus.unionByName(e_same).unionByName(e_shard)
-    nodes = (
-        shard.select(F.col("media_id").alias("node"))
-        .union(touched.select(F.col("clabel").alias("node")))
-        .distinct()
-    )
-    comps = connected_components(edges, nodes)
-    lab_nodes = touched.select(F.col("clabel").alias("node")).distinct()
-    comp_corpus = (
-        comps.join(lab_nodes, "node")
-        .groupBy("label")
-        .agg(F.countDistinct("node").alias("n_corpus"))
-    )
-    out = (
-        shard.select("media_id")
-        .distinct()
-        .join(comps.withColumnRenamed("node", "media_id"), "media_id")
-        .join(comp_corpus, "label", "left")
-        .select(
-            "media_id",
-            F.col("label").alias("cluster_id"),
-            F.when(F.coalesce(F.col("n_corpus"), F.lit(0)) == 0, F.lit("new"))
-            .when(F.col("n_corpus") == 1, F.lit("attached"))
-            .otherwise(F.lit("merged"))
-            .alias("verdict"),
+
+def _cluster_chain(spark: SparkSession, sf_dir: str, store) -> DataFrame:
+    """The two-day image-maintainer chain shared by
+    q_dedup_cluster_chain (state kept in memory) and
+    q_dedup_cluster_chain_persisted (state committed to and read back
+    from a snapshot table). ``store(state, delta)`` turns a day's lazy
+    (media_id, label) state into the state the next update probes;
+    ``delta`` is None for the initial corpus state and (remap, out) —
+    the day's touched-label remap and shard verdicts — after day 1."""
+    from breweries_case_spark.operators.dedup import advance_state, relabel
+
+    h = _ahash_table(spark, sf_dir).localCheckpoint()
+    s1 = h.filter(F.col("media_id") % 40 == 0).localCheckpoint()
+    s2 = h.filter(F.col("media_id") % 40 == 20).localCheckpoint()
+    corpus = h.filter(F.col("media_id") % _MEDIA_SHARD_MOD != 0)
+    state0 = store(hash_cluster_assignment(corpus), None)
+
+    out1, comps1, labs1 = _hash_cluster_update(corpus, state0, s1)
+    out1 = out1.localCheckpoint()
+    remap1, state1 = advance_state(state0, (out1, comps1, labs1), "media_id")
+    state1 = store(state1, (remap1, out1))
+
+    update2 = _hash_cluster_update(corpus.unionByName(s1), state1, s2)
+    # day 2's remap also relabels day 1's rows: two clusters can only
+    # merge later through a future shard, which then touches both
+    remap2, _ = advance_state(state1, update2, "media_id")
+    day1 = relabel(out1.withColumnRenamed("cluster_id", "label"), remap2)
+    return day1.select(
+        "media_id",
+        F.lit(1).cast("long").alias("day"),
+        F.col("label").alias("cluster_id"),
+        "verdict",
+    ).unionByName(
+        update2[0].select(
+            "media_id", F.lit(2).cast("long").alias("day"), "cluster_id", "verdict"
         )
     )
-    return out, comps, lab_nodes
 
 
 def q_dedup_cluster_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWO-DAY incremental maintainer chain (r12) — the state-EVOLUTION
+    """TWO-DAY incremental maintainer chain — the state-EVOLUTION
     property no single-shard id pins: day 1's update must leave behind
     a state that day 2 can update to the exact full-recompute fixpoint.
     Deterministic deliveries: day 1 = media_id % 40 == 0, day 2 =
@@ -1851,15 +1780,13 @@ def q_dedup_cluster_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         state0 = stored corpus clusters (``hash_cluster_assignment``)
         day 1:  ``_hash_cluster_update``(corpus, state0, shard1) →
-                verdicts1 + the contracted components; state1 = corpus
-                rows with TOUCHED labels remapped through the update
-                graph + shard1 rows (untouched clusters keep their
-                label — by definition they have no edge to the shard)
+                verdicts1; state1 = ``advance_state``: corpus rows with
+                TOUCHED labels remapped through the update graph +
+                shard1 rows (untouched clusters keep their label — by
+                definition they have no edge to the shard)
         day 2:  ``_hash_cluster_update``(corpus ∪ shard1, state1,
                 shard2) → verdicts2; shard1's FINAL labels remap once
-                more through day 2's touched map (two clusters can
-                only merge later through a future shard — which then
-                touches both, so the remap is always complete)
+                more through day 2's touched map
 
     Output: one row per shard media — (media_id, day, cluster_id =
     the FINAL post-day-2 label, verdict = that doc's own-day verdict
@@ -1870,61 +1797,8 @@ def q_dedup_cluster_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe → contract → remap → append cycle reds the driver. Per-day
     cost is O(shard_d); state maintenance is the touched-label remap
     (O(touched)) plus the shard append — never a corpus rewrite."""
-    h = (
-        image_hashes(spark, sf_dir)
-        .select(
-            "media_id",
-            F.col("ahash_hi").alias("hash_hi"),
-            F.col("ahash_lo").alias("hash_lo"),
-        )
-        .localCheckpoint()
-    )
-    s1 = h.filter(F.col("media_id") % 40 == 0).localCheckpoint()
-    s2 = h.filter(F.col("media_id") % 40 == 20).localCheckpoint()
-    corpus = h.filter(F.col("media_id") % _MEDIA_SHARD_MOD != 0)
-    state0 = hash_cluster_assignment(corpus).localCheckpoint()
-
-    out1, comps1, labs1 = _hash_cluster_update(corpus, state0, s1)
-    out1 = out1.localCheckpoint()
-    remap1 = (
-        comps1.join(labs1, "node")
-        .select(F.col("node").alias("label0"), F.col("label").alias("newl"))
-        .localCheckpoint()
-    )
-    state1 = (
-        state0.join(remap1, F.col("label") == F.col("label0"), "left")
-        .select("media_id", F.coalesce("newl", "label").alias("label"))
-        .unionByName(
-            out1.select("media_id", F.col("cluster_id").alias("label"))
-        )
-        .localCheckpoint()
-    )
-
-    out2, comps2, labs2 = _hash_cluster_update(
-        corpus.unionByName(s1), state1, s2
-    )
-    remap2 = (
-        comps2.join(labs2, "node")
-        .select(F.col("node").alias("label0"), F.col("label").alias("newl"))
-        .localCheckpoint()
-    )
-    s1_final = (
-        out1.withColumnRenamed("cluster_id", "label")
-        .join(remap2, F.col("label") == F.col("label0"), "left")
-        .select(
-            "media_id",
-            F.lit(1).cast("long").alias("day"),
-            F.coalesce("newl", "label").alias("cluster_id"),
-            "verdict",
-        )
-    )
-    return s1_final.unionByName(
-        out2.select(
-            "media_id",
-            F.lit(2).cast("long").alias("day"),
-            "cluster_id",
-            "verdict",
-        )
+    return _cluster_chain(
+        spark, sf_dir, lambda state, _delta: state.localCheckpoint()
     )
 
 
@@ -1963,35 +1837,29 @@ def _overwrite_changed_buckets(state, changed: set[str], tdir: str) -> None:
 def q_dedup_cluster_chain_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The two-day maintainer chain with its state PERSISTED through the
-    snapshot log (VERDICT r12 item 2) — q_dedup_cluster_chain's exact
-    semantics, but the 'stored state' is a real ACID table instead of an
-    in-memory frame, turning the O(shard) claim into the production
-    read/write contract:
+    """q_dedup_cluster_chain with its state PERSISTED through the
+    snapshot log — the same chain (``_cluster_chain``), but the 'stored
+    state' is a real ACID table instead of an in-memory frame, turning
+    the O(shard) claim into the production read/write contract:
 
-        v1: state0 (``hash_cluster_assignment`` over the corpus) is
-            COMMITTED to a snapshot table bucketed by
-            label % _STATE_BUCKETS (io/snapshots.py's manifest log).
-        day 1: the maintainer READS v1 back (``read_snapshot``), updates
-            against shard 1, and commits state1 as v2 by dynamically
-            overwriting ONLY the buckets the day touched — old and new
-            buckets of every remapped label plus the shard rows' buckets;
-            untouched buckets carry forward at the manifest level, zero
-            bytes rewritten (a bucket the remap EMPTIES is dropped with
-            ``commit_delete_partitions`` — the overwrite contract's
-            explicit-delete half). The v1→v2 ``snapshot_diff`` IS the
-            label-remap change feed (pinned in tests/test_round13_ops).
-        day 2: the maintainer reads the LATEST snapshot (provably the
-            persisted table — the in-memory state1 is never reused) and
-            updates against shard 2.
+        v1: state0 is COMMITTED to a snapshot table bucketed by
+            label % _STATE_BUCKETS (io/snapshots.py's manifest log), and
+            day 1 reads it back (``read_snapshot``).
+        day 1 → v2: state1 is committed by dynamically overwriting ONLY
+            the buckets the day touched — old and new buckets of every
+            remapped label plus the shard rows' buckets; untouched
+            buckets carry forward at the manifest level, zero bytes
+            rewritten (a bucket the remap EMPTIES is dropped with
+            ``commit_delete_partitions``). The v1→v2 ``snapshot_diff``
+            IS the label-remap change feed (pinned in
+            tests/test_round13_ops). Day 2 reads the LATEST snapshot, so
+            the in-memory state1 is never reused.
 
-    Output and oracle are exactly q_dedup_cluster_chain's (one row per
-    shard medium: media_id, day, final cluster_id, own-day verdict;
-    THREE recursive fixpoints) — a hash match proves the
-    write → carry-forward → read → update cycle loses nothing. Per-day
-    write cost is O(touched buckets), never a corpus rewrite; the
-    scratch table lives in a temp dir and is removed after the (tiny,
-    O(shard)) result materializes — the q_snapshot_changes discipline."""
+    Output and oracle are exactly q_dedup_cluster_chain's — a hash
+    match proves the write → carry-forward → read → update cycle loses
+    nothing. The scratch table lives in a temp dir and is removed after
+    the (tiny, O(shard)) result materializes — the q_snapshot_changes
+    discipline."""
     import shutil
     import tempfile
 
@@ -2000,101 +1868,35 @@ def q_dedup_cluster_chain_persisted(
         read_snapshot,
     )
 
-    h = (
-        image_hashes(spark, sf_dir)
-        .select(
-            "media_id",
-            F.col("ahash_hi").alias("hash_hi"),
-            F.col("ahash_lo").alias("hash_lo"),
-        )
-        .localCheckpoint()
-    )
-    s1 = h.filter(F.col("media_id") % 40 == 0).localCheckpoint()
-    s2 = h.filter(F.col("media_id") % 40 == 20).localCheckpoint()
-    corpus = h.filter(F.col("media_id") % _MEDIA_SHARD_MOD != 0)
-
     tdir = tempfile.mkdtemp(prefix="clchainp_")
+
+    def store(state: DataFrame, delta) -> DataFrame:
+        state = state.withColumn("sb", _state_bucket(F.col("label")))
+        if delta is None:
+            commit_overwrite_partitions(state, tdir, "sb")  # v1
+        else:
+            remap, out = delta
+            state = state.localCheckpoint()
+            # the day's write set: every bucket a remapped label leaves
+            # or enters, plus the shard rows' buckets — bounded by the
+            # touched set, never the corpus (≤ _STATE_BUCKETS values).
+            # Rows that leave a bucket rewrite it, so its surviving rows
+            # are restaged too: state filtered to the changed set covers
+            # both
+            moved = remap.filter(F.col("label0") != F.col("newl"))
+            changed = {
+                r.sb
+                for r in moved.select(_state_bucket(F.col("label0")).alias("sb"))
+                .union(moved.select(_state_bucket(F.col("newl")).alias("sb")))
+                .union(out.select(_state_bucket(F.col("cluster_id")).alias("sb")))
+                .distinct()
+                .collect()
+            }
+            _overwrite_changed_buckets(state, changed, tdir)  # v2 (+delete)
+        return read_snapshot(spark, tdir).select("media_id", "label").localCheckpoint()
+
     try:
-        state0 = hash_cluster_assignment(corpus)
-        commit_overwrite_partitions(
-            state0.withColumn("sb", _state_bucket(F.col("label"))),
-            tdir,
-            "sb",
-        )  # v1
-        state0_r = (
-            read_snapshot(spark, tdir, version=1)
-            .select("media_id", "label")
-            .localCheckpoint()
-        )
-
-        out1, comps1, labs1 = _hash_cluster_update(corpus, state0_r, s1)
-        out1 = out1.localCheckpoint()
-        remap1 = (
-            comps1.join(labs1, "node")
-            .select(F.col("node").alias("label0"), F.col("label").alias("newl"))
-            .localCheckpoint()
-        )
-        state1 = (
-            state0_r.join(remap1, F.col("label") == F.col("label0"), "left")
-            .select("media_id", F.coalesce("newl", "label").alias("label"))
-            .unionByName(
-                out1.select("media_id", F.col("cluster_id").alias("label"))
-            )
-            .withColumn("sb", _state_bucket(F.col("label")))
-            .localCheckpoint()
-        )
-        # the day's write set: every bucket a remapped label leaves or
-        # enters, plus the shard rows' buckets — bounded by the touched
-        # set, never the corpus (≤ _STATE_BUCKETS values, collected)
-        changed = {
-            r.sb
-            for r in remap1.filter(F.col("label0") != F.col("newl"))
-            .select(_state_bucket(F.col("label0")).alias("sb"))
-            .union(
-                remap1.filter(F.col("label0") != F.col("newl")).select(
-                    _state_bucket(F.col("newl")).alias("sb")
-                )
-            )
-            .union(out1.select(_state_bucket(F.col("cluster_id")).alias("sb")))
-            .distinct()
-            .collect()
-        }
-        # rows whose label was remapped also rewrite their OLD bucket
-        # (they leave it), so the old bucket's surviving rows must be
-        # restaged too — state1 filtered to the changed set covers both
-        _overwrite_changed_buckets(state1, changed, tdir)  # v2 (+delete)
-
-        state1_r = (
-            read_snapshot(spark, tdir)
-            .select("media_id", "label")
-            .localCheckpoint()
-        )
-        out2, comps2, labs2 = _hash_cluster_update(
-            corpus.unionByName(s1), state1_r, s2
-        )
-        remap2 = (
-            comps2.join(labs2, "node")
-            .select(F.col("node").alias("label0"), F.col("label").alias("newl"))
-            .localCheckpoint()
-        )
-        s1_final = (
-            out1.withColumnRenamed("cluster_id", "label")
-            .join(remap2, F.col("label") == F.col("label0"), "left")
-            .select(
-                "media_id",
-                F.lit(1).cast("long").alias("day"),
-                F.coalesce("newl", "label").alias("cluster_id"),
-                "verdict",
-            )
-        )
-        out = s1_final.unionByName(
-            out2.select(
-                "media_id",
-                F.lit(2).cast("long").alias("day"),
-                "cluster_id",
-                "verdict",
-            )
-        )
+        out = _cluster_chain(spark, sf_dir, store)
         rows = out.collect()  # O(shard); materialize before scratch removal
         return spark.createDataFrame(rows, out.schema)
     finally:
@@ -2104,40 +1906,35 @@ def q_dedup_cluster_chain_persisted(
 def q_dedup_video_cluster_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Incremental VIDEO-cluster maintainer (r12) — completes the
-    maintainer family (image: q_dedup_cluster_incremental, text:
+    """Incremental VIDEO-cluster maintainer — completes the maintainer
+    family (image: q_dedup_cluster_incremental, text:
     dedup.q_dedup_text_cluster_incremental) on the shared-frame
     relation: assign a new video shard (media_id % 20 == 0) to the
-    EXISTING video clusters or mint new ids WITHOUT recomputing the
-    corpus CC fixpoint. Stored state =
+    EXISTING video clusters or mint new ids without recomputing the
+    corpus fixpoint (``dedup.maintain_clusters``). Stored state =
     ``video_cluster_assignment_from`` over the corpus inventory (the
     registered cluster id's exact semantics; at scale a loaded table).
-    Update graph:
+    Update-graph edges:
 
-        nodes = fingerprinted shard videos ∪ touched corpus labels
-        edges = shard↔corpus pairs sharing ≥ VIDEO_SHARED_MIN
-                fingerprints — candidates from the shard's distinct
-                fingerprint keys BROADCAST-semi-pruning the
-                FP_DF_CAP-capped corpus postings (corpus work
-                O(shard), q_dedup_video_incremental's probe), verified
-                by recounting against the candidates' FULL inventories
-                — mapped video → stored label; ∪ intra-shard
-                ``video_shared_pairs`` (shard-sized)
+        shard↔corpus pairs sharing ≥ VIDEO_SHARED_MIN fingerprints —
+        candidates from the shard's distinct fingerprint keys
+        BROADCAST-semi-pruning the FP_DF_CAP-capped corpus postings
+        (corpus work O(shard), q_dedup_video_incremental's probe),
+        verified by recounting against the candidates' FULL
+        inventories — mapped video → stored label; ∪ intra-shard
+        ``video_shared_pairs`` (shard-sized)
 
-    then one O(shard) min-label CC. The contraction is exact for the
-    same reason as the image/text maintainers: corpus labels are their
-    clusters' minima and every combined-graph path between corpus
-    videos crosses the shard only through probe-verified edges (the
-    shared-frame predicate is a pairwise function of the two
+    The shared-frame predicate is a pairwise function of the two
     inventories, so corpus↔corpus edges are already inside the stored
-    clusters). Output one row per fingerprinted shard video —
-    (media_id, cluster_id, verdict 'attached'/'merged'/'new').
-    Oracle: the closed-form frame-hash CTEs + TWO recursive fixpoints
-    (corpus-only, corpus+shard) over the uncapped shared-count
-    relation; a driver red is probe/cap recall loss, not CC logic."""
+    clusters and the contraction is exact. Output one row per
+    fingerprinted shard video — (media_id, cluster_id, verdict
+    'attached'/'merged'/'new'). Oracle: the closed-form frame-hash CTEs
+    + TWO recursive fixpoints (corpus-only, corpus+shard) over the
+    uncapped shared-count relation; a driver red is probe/cap recall
+    loss, not CC logic."""
     from breweries_case_spark.operators.dedup import (
         broadcast_if_small,
-        connected_components,
+        maintain_clusters,
     )
 
     fp = video_fingerprints(spark, sf_dir).localCheckpoint()
@@ -2155,7 +1952,6 @@ def q_dedup_video_cluster_incremental(
         .select("hash_hi", "hash_lo")
     )
     probe = corpus_fp.join(rare, ["hash_hi", "hash_lo"], "left_semi").join(
-        # size-gated hint (r12 ADVICE, fixed r13) — see broadcast_if_small
         broadcast_if_small(shard_fp.select("hash_hi", "hash_lo").distinct()),
         ["hash_hi", "hash_lo"],
         "left_semi",
@@ -2195,29 +1991,12 @@ def q_dedup_video_cluster_incremental(
     e_shard = video_shared_pairs(shard_fp).select(
         F.col("media_id_a").alias("u"), F.col("media_id_b").alias("v")
     )
-    edges = e_corpus.unionByName(e_shard)
-    shard_ids = shard_fp.select(F.col("media_id").alias("node")).distinct()
-    nodes = shard_ids.union(e_corpus.select(F.col("v").alias("node"))).distinct()
-    comps = connected_components(edges, nodes)
-    lab_nodes = e_corpus.select(F.col("v").alias("node")).distinct()
-    comp_corpus = (
-        comps.join(lab_nodes, "node")
-        .groupBy("label")
-        .agg(F.countDistinct("node").alias("n_corpus"))
+    out, _, _ = maintain_clusters(
+        shard_fp.select(F.col("media_id").alias("node")).distinct(),
+        e_corpus,
+        e_shard,
     )
-    return (
-        shard_ids.withColumnRenamed("node", "media_id")
-        .join(comps.withColumnRenamed("node", "media_id"), "media_id")
-        .join(comp_corpus, "label", "left")
-        .select(
-            "media_id",
-            F.col("label").alias("cluster_id"),
-            F.when(F.coalesce(F.col("n_corpus"), F.lit(0)) == 0, F.lit("new"))
-            .when(F.col("n_corpus") == 1, F.lit("attached"))
-            .otherwise(F.lit("merged"))
-            .alias("verdict"),
-        )
-    )
+    return out.withColumnRenamed("node", "media_id")
 
 
 def q_dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2286,7 +2065,7 @@ def q_dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe_keys = shard_fp.select("hash_hi", "hash_lo").distinct()
     hits = rare_corp.join(
-        # size-gated hint (r12 ADVICE, fixed r13) — see broadcast_if_small
+        # size-gated hint — see broadcast_if_small
         broadcast_if_small(probe_keys), ["hash_hi", "hash_lo"], "left_semi"
     )
     cand = (
@@ -2452,14 +2231,7 @@ def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     for tag, hashes in (
-        (
-            "image",
-            image_hashes(spark, sf_dir).select(
-                "media_id",
-                F.col("ahash_hi").alias("hash_hi"),
-                F.col("ahash_lo").alias("hash_lo"),
-            ),
-        ),
+        ("image", _ahash_table(spark, sf_dir)),
         (
             "audio",
             audio_hashes(spark, sf_dir).select(
@@ -2631,14 +2403,7 @@ def q_dedup_mechanism_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.hash_hi"), F.col("b.hash_lo")
     )
     for tag, hashes in (
-        (
-            "image",
-            image_hashes(spark, sf_dir).select(
-                "media_id",
-                F.col("ahash_hi").alias("hash_hi"),
-                F.col("ahash_lo").alias("hash_lo"),
-            ),
-        ),
+        ("image", _ahash_table(spark, sf_dir)),
         (
             "audio",
             audio_hashes(spark, sf_dir).select(

@@ -124,41 +124,30 @@ def _near_dup_shard_ids(
     verify only the candidates, reading corpus TEXT only for candidate
     docs (semi-join on the docs table). Within-shard near-dups resolve
     keep-min-doc_id over the same verified pair set."""
-    from breweries_case_spark.operators.dedup import JACCARD_THRESHOLD
+    from breweries_case_spark.operators.dedup import jaccard_verified
 
     sh_shard = _shingles(fresh).localCheckpoint()
     shard_banded = _banded(sh_shard).localCheckpoint()
 
-    lsh_dir = os.path.join(corpus_dir, LSH_TABLE)
-    docs_dir = os.path.join(corpus_dir, DOCS_TABLE)
-    pairs = []
-
-    def _verified(cands, sh_a, sh_b):
-        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-        # same ROUND(...,6)-then-threshold edge definition as every
-        # jaccard tier in operators/dedup.py (r8 unification)
-        jac = F.when(
-            union > 0,
-            F.round(inter.cast("double") / union.cast("double"), 6),
-        ).otherwise(F.lit(0.0))
-        return (
-            cands.join(sh_a, "doc_a")
-            .join(sh_b, "doc_b")
-            .filter(
-                (F.col("lang_a") == F.col("lang_b"))
-                & (jac >= F.lit(JACCARD_THRESHOLD))
-            )
-            .select("doc_a", "doc_b")
+    # --- within shard ---
+    intra = (
+        shard_banded.alias("x")
+        .join(
+            shard_banded.alias("y"),
+            (F.col("x.band_idx") == F.col("y.band_idx"))
+            & (F.col("x.band_hash") == F.col("y.band_hash"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
         )
-
-    a_side = sh_shard.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("sh").alias("sh_a"),
+        .select(
+            F.col("y.doc_id").alias("doc_a"), F.col("x.doc_id").alias("doc_b")
+        )
+        .distinct()
     )
+    # doc_a > doc_b by construction: the LOWER id survives keep-min
+    drop = jaccard_verified(intra, sh_shard, sh_shard)
 
     # --- vs corpus ---
+    lsh_dir = os.path.join(corpus_dir, LSH_TABLE)
     if latest_version(lsh_dir) is not None:
         stored = read_snapshot(spark, lsh_dir).filter(
             F.col("shard_date") != shard_date
@@ -176,43 +165,17 @@ def _near_dup_shard_ids(
             .select("doc_a", "doc_b")
             .distinct()
         )
-        cand_corpus_docs = read_snapshot(spark, docs_dir).join(
+        cand_corpus_docs = read_snapshot(
+            spark, os.path.join(corpus_dir, DOCS_TABLE)
+        ).join(
             cands.select(F.col("doc_b").alias("doc_id")).distinct(),
             "doc_id",
             "left_semi",
         )
-        b_side = _shingles(cand_corpus_docs).select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("lang").alias("lang_b"),
-            F.col("sh").alias("sh_b"),
-        )
-        pairs.append(_verified(cands, a_side, b_side))
+        drop = jaccard_verified(
+            cands, sh_shard, _shingles(cand_corpus_docs)
+        ).unionByName(drop)
 
-    # --- within shard ---
-    intra = (
-        shard_banded.alias("x")
-        .join(
-            shard_banded.alias("y"),
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_hash") == F.col("y.band_hash"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("y.doc_id").alias("doc_a"), F.col("x.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    b_intra = sh_shard.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("sh").alias("sh_b"),
-    )
-    # doc_a > doc_b by construction: the LOWER id survives keep-min
-    pairs.append(_verified(intra, a_side, b_intra))
-
-    drop = pairs[0]
-    for p in pairs[1:]:
-        drop = drop.unionByName(p)
     return drop.select(F.col("doc_a").alias("doc_id")).distinct(), shard_banded
 
 

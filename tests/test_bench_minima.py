@@ -94,3 +94,20 @@ def test_regenerated_minima_match_committed_file():
                 text=True,
             ).stdout.strip()
             assert float(ct) >= bbm.FLOOR_RESETS[qid], (qid, src)
+
+
+def test_floor_resets_literal_has_no_duplicate_keys():
+    """A repeated key in the FLOOR_RESETS literal silently drops all but
+    its last value, so a reader of the earlier entry sees a reset that
+    never applies — each id must appear once."""
+    import ast
+
+    tree = ast.parse((ROOT / "scripts" / "build_bench_minima.py").read_text())
+    (literal,) = [
+        node.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "FLOOR_RESETS" for t in node.targets)
+    ]
+    keys = [k.value for k in literal.keys]
+    assert sorted({k for k in keys if keys.count(k) > 1}) == []
