@@ -26,9 +26,11 @@ at test scale."""
 
 from __future__ import annotations
 
-
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from breweries_case_spark.io.reader import load_table, spread
@@ -230,30 +232,30 @@ CONTAINMENT_THRESHOLD = 0.8
 #: size gate (needs-pair rows) for the verify-recount broadcast hint —
 #: ≤ 1M pair rows ⟹ ≤ 2M doc ids ≈ 16 MB per broadcast side, safely
 #: inside executor/driver budgets; above it the recount falls back to
-#: the shuffle semi-join plan instead of risking a broadcast OOM
+#: the shuffle semi-join plan instead of risking a broadcast OOM. The
+#: same bound caps the symmetrized edge list (≈ 16 MB of long pairs)
+#: that ``connected_components`` collects and solves on the driver.
 _NEEDS_BROADCAST_MAX = 1_000_000
 
 
 def broadcast_if_small(
     df: DataFrame, max_rows: int = _NEEDS_BROADCAST_MAX
 ) -> DataFrame:
-    """Size-gated broadcast hint — the _NEEDS_BROADCAST_MAX discipline as
-    a helper (r12 ADVICE, applied family-wide r13): an explicit
-    ``F.broadcast`` does NOT degrade at runtime, so a shard-derived key
-    set that outgrew the driver would fail the job outright instead of
-    falling back to a shuffle. Hint only when a cheap count of the
-    frame fits; above the gate return the frame unhinted and let the
-    shuffle semi-join plan run. Used by every incremental maintainer's
-    shard-key probe prune (dedup text, multimodal image/video).
+    """Size-gated broadcast hint: an explicit ``F.broadcast`` does NOT
+    degrade at runtime, so a shard-derived key set that outgrew the driver
+    would fail the job outright instead of falling back to a shuffle.
+    Hint only when the frame has at most ``max_rows`` rows; above the gate
+    return the frame unhinted and let the shuffle semi-join plan run. Used
+    by every incremental maintainer's shard-key probe prune (dedup text,
+    multimodal image/video).
 
-    r14 (optimization round 2): the frame is lazily checkpointed before
-    the gate count — callers checkpoint the PARENT, but the frame passed
-    here is usually a derived select/distinct, which the old code
-    computed twice (once for the count job, once again inside the
-    consuming join). The count now materializes the checkpoint and the
-    join reads it back, whichever side of the gate wins (guide §1.3)."""
-    mat = df.localCheckpoint(eager=False)
-    return F.broadcast(mat) if mat.count() <= max_rows else mat
+    The frame is materialized once, by an eager localCheckpoint that also
+    observes its row count, so the gate costs no separate count job and
+    the consuming join reads the checkpoint whichever side of the gate
+    wins. Callers need not checkpoint the frame first."""
+    n = Observation()
+    mat = df.observe(n, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return F.broadcast(mat) if n.get["n"] <= max_rows else mat
 
 
 def containment_pairs(
@@ -1500,67 +1502,118 @@ def q_dedup_levenshtein_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def connected_components(
     edges: DataFrame, vertices: DataFrame, max_iter: int = 50
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation.
+    """Connected components of an undirected graph.
 
     ``edges`` is (u, v) undirected candidate pairs; ``vertices`` is (node).
-    Returns (node, label) where label = the component's minimum node id.
+    Returns (node, label) where label = the component's minimum node id;
+    isolated vertices label themselves.
 
-    Each round is one equi-join (neighbor labels) + one groupBy (min per
-    node): the label front advances one hop per round, so rounds = component
-    diameter. Near-dup clusters are short transitive chains, so this
-    converges in a handful of rounds; at petabyte scale swap in
-    ``connected_components_star`` (implemented below — alternating
+    The symmetrized edge list is materialized once, and the same
+    materialization observes its row count. A list of at most
+    ``_NEEDS_BROADCAST_MAX`` rows — the size gate a broadcast join uses —
+    is solved on the driver: it is collected as Arrow and labelled by
+    vectorized union-find (``_min_labels``), then handed back as a small
+    frame. The maintainers' update graphs are O(shard + touched labels)
+    by construction, so they take this path at any corpus size, and it
+    costs two jobs instead of several per propagation round.
+
+    A larger list runs iterative min-label propagation on the cluster.
+    Each round is one join (neighbor labels) plus one groupBy (min per
+    node): the label front advances one hop per round, so rounds =
+    component diameter. Near-dup clusters are short transitive chains, so
+    this converges in a handful of rounds; when component diameters are
+    unbounded, swap in ``connected_components_star`` (alternating
     large-star/small-star, O(log n) rounds, same output contract,
-    equality unit-tested) when component diameters are unbounded. Lineage is truncated every round with an
-    eager localCheckpoint — without it the iterated plan nests one join
-    per round and the optimizer re-analyzes the whole history each time
-    (on a cluster, point spark.sparkContext.setCheckpointDir at durable
+    equality unit-tested). Lineage is truncated every round with a
+    localCheckpoint — without it the iterated plan nests one join per
+    round and the optimizer re-analyzes the whole history each time (on
+    a cluster, point spark.sparkContext.setCheckpointDir at durable
     storage and use checkpoint() instead).
     """
-    # materialize the symmetrized edge list ONCE — every round joins
-    # against it, and without this the (possibly expensive) upstream
-    # pair-finding plan would re-execute per iteration
+    # materialize the symmetrized edge list ONCE — both paths read it,
+    # and without this the (possibly expensive) upstream pair-finding
+    # plan would re-execute per read; its size is observed in that job
+    size = Observation()
     sym = (
         edges.select("u", "v")
         .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .observe(size, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    # iterate ONLY over nodes that touch an edge — an isolated vertex can
-    # never receive a neighbor label, so looping over the full vertex set
-    # just drags |V| rows through every join/checkpoint/count. Near-dup
-    # graphs are sparse (dup fraction ≪ 1), so this shrinks each round
-    # from |V| to ~2·|E| rows; isolated vertices rejoin label-as-self at
-    # the end.
-    #
-    # r14 (optimization round 2): labels START at the 1-hop minimum —
-    # min(u, min N(u)) — which is exactly what one propagation round
-    # from the identity init would compute, for the same one exchange
-    # the old distinct-nodes init already paid. Every run saves one full
-    # round (join + aggregate + materialization) at ANY scale; the
-    # monotone-sum fixpoint argument is unchanged (labels still only
-    # ever decrease from here toward the same fixpoint).
-    #
-    # Also r14: each round's checkpoint is LAZY (eager=False), so the
-    # convergence-check aggregate both materializes the round's labels
-    # (persisting + truncating lineage, exactly as before) and computes
-    # the decimal label-sum in ONE job — the eager checkpoint ran a
-    # separate materialization job per round before the sum job.
+    if size.get["n"] <= _NEEDS_BROADCAST_MAX:
+        t = sym.schema["u"].dataType
+        labels = sym.sparkSession.createDataFrame(
+            _min_labels(sym.toArrow()),
+            StructType([StructField("node", t), StructField("label", t)]),
+        )
+    else:
+        labels = _propagated_labels(sym, max_iter)
+    # total assignment: isolated vertices label themselves. The label table
+    # has one row per edge endpoint — small next to |V| — so the join
+    # broadcasts it.
+    return vertices.join(labels, "node", "left").select(
+        "node", F.coalesce("label", "node").alias("label")
+    )
+
+
+def _min_labels(sym: pa.Table) -> pa.Table:
+    """(node, label = component minimum) for every node of the symmetric
+    Arrow edge list ``sym`` (u, v), by vectorized union-find on the
+    driver. Rows with a null endpoint are no edge, as in the propagation
+    rounds (a null never matches a join key).
+
+    Nodes are indexed in sorted order, so a smaller index is a smaller
+    id. Every parent pointer points at an index ≤ its own, so each tree's
+    root is its minimum. A round compresses every pointer to its root,
+    then hooks the larger root of each edge that still joins two trees
+    onto the smaller one; each round removes at least one root, and the
+    loop stops when no edge crosses trees."""
+    sym = sym.drop_null()
+    u = sym.column("u").to_numpy()
+    v = sym.column("v").to_numpy()
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u) :]
+    parent = np.arange(len(nodes))
+    while True:
+        while not np.array_equal(hop := parent[parent], parent):
+            parent = hop
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            break
+        ra, rb = ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+    t = sym.schema.field("u").type
+    return pa.table(
+        {"node": pa.array(nodes, t), "label": pa.array(nodes[parent], t)}
+    )
+
+
+def _propagated_labels(sym: DataFrame, max_iter: int) -> DataFrame:
+    """(node, label) for every node of the materialized symmetric edge
+    list ``sym`` by min-label propagation rounds on the cluster.
+
+    Only nodes that touch an edge iterate — an isolated vertex can never
+    receive a neighbor label, so near-dup graphs (dup fraction ≪ 1)
+    shrink each round from |V| to ~2·|E| rows; the caller labels isolated
+    vertices as themselves."""
+    # labels start at the 1-hop minimum min(u, min N(u)) — what one round
+    # from the identity init computes — for the single exchange the
+    # distinct-nodes init would pay anyway. Each round's checkpoint is
+    # lazy: the convergence aggregate materializes it (persisting and
+    # truncating lineage) and sums the labels in one job.
     labels = (
         sym.groupBy("u")
         .agg(F.min(F.least(F.col("u"), F.col("v"))).alias("label"))
         .withColumnRenamed("u", "node")
         .localCheckpoint(eager=False)
     )
-    # r13 (optimization round): each round is ONE join + ONE aggregate —
-    # a node's next label is min(own label, neighbor labels), computed by
-    # unioning the label table with the neighbor-label message stream and
-    # taking one min-groupBy, instead of the old groupBy + second
-    # left-join back onto the labels (same fixpoint, one exchange and one
-    # join fewer per round). Convergence: labels only ever DECREASE, so
-    # the per-round label sum is strictly monotone and stalls exactly at
-    # the fixpoint — a scalar aggregate over the checkpointed step
-    # replaces the old_label/label comparison join (decimal sum: exact
-    # at any node-id magnitude, no ANSI long-overflow hazard).
+    # A round is one join + one aggregate: a node's next label is
+    # min(own label, neighbor labels), taken by one min-groupBy over the
+    # label table unioned with the neighbor-label messages. Labels only
+    # ever decrease, so the label sum is strictly monotone and stalls
+    # exactly at the fixpoint (decimal sum: exact at any node-id
+    # magnitude, no ANSI long-overflow hazard).
     prev_sum = labels.agg(
         F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
     ).first()["s"]
@@ -1581,15 +1634,9 @@ def connected_components(
         ).first()["s"]
         labels = stepped
         if new_sum == prev_sum:
-            break
+            return labels
         prev_sum = new_sum
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    # total assignment: isolated vertices label themselves. The label table
-    # is ~2·|E| rows — small next to |V| — so AQE broadcasts it.
-    return vertices.join(labels, "node", "left").select(
-        "node", F.coalesce("label", "node").alias("label")
-    )
+    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
 
 
 def maintain_clusters(
@@ -1712,17 +1759,13 @@ def connected_components_star(
     - small-star: every node u links its smaller-or-equal neighbors and
       itself to their minimum — flattens chains into stars.
 
-    r13 (optimization round): each star is ONE exchange — the per-node
-    minimum is a window over the adjacency partitioned by u (the same
-    co-location the old groupBy+join pair established twice), and the
-    entry edge list is canonically high→low oriented + distinct, which
-    makes the per-round symmetrize-then-distinct redundant (a
-    one-directional distinct edge list can never produce a duplicate
-    when reversed rows are appended; both star outputs stay
-    one-directional and distinct by construction). Same fixpoint, same
-    output contract, two exchanges and one join fewer per round —
-    measured 5.9 s → 1.6 s warm on the sf0.1 bounded-pipeline pair
-    stream with identical labels.
+    Each star is ONE exchange: the per-node minimum is a window over
+    the adjacency partitioned by u, and the entry edge list is
+    canonically high→low oriented + distinct, which makes a per-round
+    symmetrize-then-distinct redundant (a one-directional distinct edge
+    list can never produce a duplicate when reversed rows are appended;
+    both star outputs stay one-directional and distinct by
+    construction).
     """
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -1759,11 +1802,9 @@ def connected_components_star(
             .distinct()
         )
 
-    # r14 (optimization round 2): lazy checkpoints — the per-round count
-    # both materializes the round's edge list (persist + lineage
-    # truncation, exactly as before) and reads the cardinality in ONE
-    # job; the eager checkpoint ran a separate materialization job per
-    # round before the count job.
+    # lazy checkpoints: the per-round count both materializes the round's
+    # edge list (persist + lineage truncation) and reads its cardinality
+    # in ONE job
     e = (
         edges.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from breweries_case_spark.io.snapshots import (
@@ -56,25 +56,18 @@ FP_TABLE = "fingerprints"
 LSH_TABLE = "lsh_buckets"
 
 
-def _quality_gate(shard: DataFrame) -> DataFrame:
-    """The q_training_mix stage-1 gate, by shared expression — see
-    training_mix.quality_mask."""
-    return shard.filter(quality_mask())
-
-
-def _decontaminate(shard: DataFrame, bench_grams: DataFrame) -> DataFrame:
-    """Drop shard docs sharing any 3-gram with the benchmark set (the
-    q_decontaminate contract; bench side is eval-suite-sized →
+def _contaminated_ids(gated: DataFrame, bench_grams: DataFrame) -> DataFrame:
+    """doc_ids of ``gated`` docs sharing any 3-gram with the benchmark set
+    (the q_decontaminate contract; bench side is eval-suite-sized →
     broadcast)."""
     from breweries_case_spark.operators.text import _ngram_rows
 
-    contaminated = (
-        _ngram_rows(shard, 3)
+    return (
+        _ngram_rows(gated, 3)
         .join(F.broadcast(bench_grams.select("g").distinct()), "g", "left_semi")
         .select("doc_id")
         .distinct()
     )
-    return shard.join(contaminated, "doc_id", "left_anti")
 
 
 def _shingles(df: DataFrame) -> DataFrame:
@@ -190,7 +183,8 @@ def update_corpus(
 ) -> dict:
     """Run one shard through gate → decontaminate → dedup (within-shard
     and vs corpus) → ACID commit. Returns per-stage counts (driver-side
-    scalars — the run's audit record).
+    scalars — the run's audit record), observed on the eager
+    materializations the update runs anyway: no job exists only to count.
 
     ``shard`` must carry (doc_id, text, lang, source); ``shard_date`` is
     the idempotency key — re-running the same date replaces that
@@ -202,22 +196,49 @@ def update_corpus(
     pay the daily path's within-shard candidate join (that is the batch
     ``q_dedup_clusters_*`` job); it only needs to leave bucket state
     behind so subsequent daily shards can probe it."""
+    from breweries_case_spark.operators.dedup import broadcast_if_small
+
     docs_dir = os.path.join(corpus_dir, DOCS_TABLE)
     fp_dir = os.path.join(corpus_dir, FP_TABLE)
 
-    n_in = shard.count()
-    gated = _quality_gate(shard)
+    # gate and decontaminate FLAG rows (_ok) instead of dropping them, so
+    # every shard row reaches the within-shard dedup window and the audit
+    # observation on its output. (Under AQE an observation inside a stage
+    # that comes back empty is lost — an empty shard, or a gate that
+    # rejects every doc, can empty one: AQE prunes the empty stage from
+    # the plan whose metrics it reports.) The contaminated id set is
+    # shard-sized, so it joins as a size-gated broadcast and the shard is
+    # not shuffled for it.
+    flagged = shard.withColumn("_ok", quality_mask())
     if bench_grams is not None:
-        gated = _decontaminate(gated, bench_grams)
-    n_gated = gated.count()
+        dirty = _contaminated_ids(shard.filter(quality_mask()), bench_grams)
+        flagged = (
+            flagged.join(
+                broadcast_if_small(dirty.withColumn("_dirty", F.lit(True))),
+                "doc_id",
+                "left",
+            )
+            .withColumn("_ok", F.col("_ok") & F.col("_dirty").isNull())
+            .drop("_dirty")
+        )
+    # rejected rows ride the dedup shuffle without their text
+    flagged = flagged.withColumn("fp", content_fingerprint()).withColumn(
+        "text", F.when(F.col("_ok"), F.col("text"))
+    )
 
-    # within-shard exact dedup: keep-min doc_id per fingerprint
-    with_fp = gated.withColumn("fp", content_fingerprint())
-    w = Window.partitionBy("fp").orderBy("doc_id")
+    # within-shard exact dedup: keep-min doc_id per fingerprint among the
+    # docs that passed (they sort first)
+    w = Window.partitionBy("fp").orderBy(F.col("_ok").desc(), "doc_id")
+    audit = Observation()
     shard_unique = (
-        with_fp.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        flagged.withColumn("_rn", F.row_number().over(w))
+        .observe(
+            audit,
+            F.count(F.lit(1)).alias("n_in"),
+            F.count_if("_ok").alias("n_after_gate"),
+        )
+        .filter(F.col("_ok") & (F.col("_rn") == 1))
+        .drop("_ok", "_rn")
     )
 
     # corpus-side dedup: anti-join the stored fingerprint state from
@@ -238,26 +259,33 @@ def update_corpus(
     # full transitive clustering is the batch q_dedup_clusters_* job)
     if persist_lsh_state is None:
         persist_lsh_state = near_dedup
-    n_near_dropped = 0
+    dropped = None
     shard_banded = None
     if near_dedup:
         fresh = fresh.localCheckpoint()
         near_drop, shard_banded = _near_dup_shard_ids(
             spark, fresh, corpus_dir, shard_date
         )
-        # tiny id set, consumed by the count AND the anti-join — cut the
-        # probe/verify lineage so it runs once
-        near_drop = near_drop.localCheckpoint()
-        n_near_dropped = near_drop.count()
+        # tiny id set: cut the probe/verify lineage so it runs once, and
+        # count it in the same job
+        dropped = Observation()
+        near_drop = near_drop.observe(
+            dropped, F.count(F.lit(1)).alias("n")
+        ).localCheckpoint()
         fresh = fresh.join(near_drop, "doc_id", "left_anti")
 
-    # materialize the accepted set ONCE: the counts and the 2-3 table
-    # commits below would otherwise each re-run the full gate → dedup →
-    # near-dup lineage (the probe joins are the expensive part)
-    accepted = fresh.withColumn(
-        "shard_date", F.lit(shard_date)
-    ).localCheckpoint()
-    n_accepted = accepted.count()
+    # materialize the accepted set ONCE, counting it in the same job: the
+    # 2-3 table commits below would otherwise each re-run the full gate →
+    # dedup → near-dup lineage (the probe joins are the expensive part).
+    # Every observation above sits in the plan of this checkpoint or of an
+    # earlier eager one, so all of them are filled by now.
+    kept = Observation()
+    accepted = (
+        fresh.withColumn("shard_date", F.lit(shard_date))
+        .observe(kept, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_accepted = kept.get["n"]
 
     def _commit(df, table_dir):
         """Overwrite the shard_date partition — including the
@@ -293,9 +321,8 @@ def update_corpus(
         )
     return {
         "shard_date": shard_date,
-        "n_in": n_in,
-        "n_after_gate": n_gated,
-        "n_near_dropped": n_near_dropped,
+        **audit.get,
+        "n_near_dropped": 0 if dropped is None else dropped.get["n"],
         "n_accepted": n_accepted,
         "fingerprint_version": v,
     }

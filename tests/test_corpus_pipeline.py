@@ -227,3 +227,144 @@ def test_decontamination_drops_bench_overlap(spark, tmp_path):
     stats = update_corpus(spark, day, c, "2026-08-01", bench_grams=bench_grams)
     assert stats["n_accepted"] == 1
     assert _ids(spark, c) == {("2026-08-01", 1)}
+
+
+CONTAMINATED = (
+    "this text quotes the benchmark eval question about prime numbers today"
+)
+
+
+def _bench_grams(spark):
+    return spark.createDataFrame([("about prime numbers",)], "g string")
+
+
+def _seed_corpus(spark, c):
+    """Day 1: GOOD (an exact-dup target) and NEAR1 (a near-dup target),
+    with LSH state for the near-dup probe."""
+    update_corpus(
+        spark,
+        _shard(spark, [(1, GOOD, "en", "web"), (2, NEAR1, "en", "web")]),
+        c,
+        "2026-08-01",
+        near_dedup=True,
+    )
+
+
+def test_audit_counts_every_stage(spark, tmp_path):
+    """One shard that hits every counter: a gate failure, a
+    decontamination hit, a within-shard exact dup, a corpus exact dup, a
+    near dup of a corpus doc and a within-shard near-dup pair."""
+    c = str(tmp_path / "corpus")
+    _seed_corpus(spark, c)
+    day2 = _shard(
+        spark,
+        [
+            (10, SHORT, "en", "web"),          # fails the gate
+            (11, CONTAMINATED, "en", "web"),   # decontaminated
+            (12, GOOD2, "en", "web"),          # kept
+            (13, GOOD2, "en", "web"),          # within-shard exact dup of 12
+            (14, GOOD, "en", "web"),           # exact dup of corpus doc 1
+            (15, NEAR1_EDIT, "en", "web"),     # near dup of corpus doc 2
+            (16, OTHER, "en", "web"),          # kept
+            (17, OTHER + " extra", "en", "web"),  # within-shard near dup of 16
+        ],
+    )
+    audit = update_corpus(
+        spark, day2, c, "2026-08-02",
+        bench_grams=_bench_grams(spark), near_dedup=True,
+    )
+    assert audit == {
+        "shard_date": "2026-08-02",
+        "n_in": 8,
+        "n_after_gate": 6,
+        "n_near_dropped": 2,
+        "n_accepted": 2,
+        "fingerprint_version": 2,
+    }
+    assert _ids(spark, c) == {
+        ("2026-08-01", 1),
+        ("2026-08-01", 2),
+        ("2026-08-02", 12),
+        ("2026-08-02", 16),
+    }
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"], ids=["aqe_off", "aqe_on"])
+def test_all_rejected_shard_counts_zero_and_deletes_partition(
+    spark, tmp_path, aqe
+):
+    """A redelivered shard whose every doc is rejected completes with
+    zero counts past the gate and deletes the day's stale partition; an
+    empty shard reports all zeros. With AQE on (the production profile
+    and a vanilla session), a stage that comes back empty is pruned from
+    the reported plan, so this also pins where the audit observations
+    sit."""
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        c = str(tmp_path / "corpus")
+        _seed_corpus(spark, c)
+        day2 = [(20, OTHER, "en", "web")]
+        update_corpus(spark, _shard(spark, day2), c, "2026-08-02", near_dedup=True)
+        assert _ids(spark, c) == {
+            ("2026-08-01", 1), ("2026-08-01", 2), ("2026-08-02", 20)
+        }
+        redelivery = [(20, SHORT, "en", "web"), (21, CONTAMINATED, "en", "web")]
+        audit = update_corpus(
+            spark, _shard(spark, redelivery), c, "2026-08-02",
+            bench_grams=_bench_grams(spark), near_dedup=True,
+        )
+        assert audit == {
+            "shard_date": "2026-08-02",
+            "n_in": 2,
+            "n_after_gate": 0,
+            "n_near_dropped": 0,
+            "n_accepted": 0,
+            "fingerprint_version": 3,
+        }
+        assert _ids(spark, c) == {("2026-08-01", 1), ("2026-08-01", 2)}
+        empty = update_corpus(
+            spark, _shard(spark, []), c, "2026-08-03",
+            bench_grams=_bench_grams(spark), near_dedup=True,
+        )
+        assert empty == {
+            "shard_date": "2026-08-03",
+            "n_in": 0,
+            "n_after_gate": 0,
+            "n_near_dropped": 0,
+            "n_accepted": 0,
+            "fingerprint_version": 3,
+        }
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_update_corpus_runs_no_count_jobs(spark, tmp_path):
+    """A daily near-dedup update launches only its materializations and
+    commits: the audit counts are observed, so an extra count() adds a
+    job here."""
+    c = str(tmp_path / "corpus")
+    _seed_corpus(spark, c)
+    day2 = _shard(
+        spark,
+        [(10, SHORT, "en", "web"), (11, GOOD2, "en", "web"), (12, NEAR1_EDIT, "en", "web")],
+    )
+    sc = spark.sparkContext
+    group = f"corpus-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "update_corpus job count")
+    try:
+        audit = update_corpus(
+            spark, day2, c, "2026-08-02",
+            bench_grams=_bench_grams(spark), near_dedup=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (audit["n_in"], audit["n_after_gate"], audit["n_accepted"]) == (3, 2, 1)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    # test profile (AQE off): the contaminated-id broadcast, the fresh,
+    # near-drop and accepted checkpoints with the near-dup probe's own
+    # materializations, and the docs / fingerprints / LSH commits; each
+    # count() would add a job
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 20
