@@ -1,9 +1,9 @@
-"""Git-like branches over snapshot-versioned tables — the Nessie analog
-(VERDICT r3 "missing #3"): the reference catalogs its Iceberg tables
-through Nessie (`trino/etc/catalog/iceberg.properties:2-6`), whose core
-idea is named refs over an immutable commit store — experiment on a
-branch against production data, then merge or discard, without ever
-copying data files.
+"""Git-like branches over snapshot-versioned tables — the Nessie analog:
+the reference catalogs its Iceberg tables through Nessie
+(`trino/etc/catalog/iceberg.properties:2-6`), whose core idea is named
+refs over an immutable commit store — experiment on a branch against
+production data, then merge or discard, without ever copying data
+files.
 
 This module re-expresses that PUBLIC design (Nessie refs / git branches)
 on `io/snapshots.py`'s manifest log:
@@ -16,25 +16,30 @@ Layout (extends the snapshot layout)::
       _refs/<branch>/manifests/v*.json  # branch-local commit chain
       data/<commit-uuid>/...        # SHARED immutable data files
 
-Protocol:
-- **Create** claims ``_refs/<name>/meta.json`` via O_EXCL (exactly one
-  creator) recording the trunk version the branch diverged from.
-- **Branch commit** carries forward from the branch head (or the
-  divergence-point trunk manifest if the branch has no commits yet) and
-  publishes the next branch-local manifest via the same
-  O_EXCL-claim-and-retry as trunk commits. Data files land in the shared
-  ``data/`` dir — isolation is purely at the manifest layer, exactly as
-  in Nessie, so a branch costs zero data copies.
-- **Read** resolves a ref name to its head manifest; trunk reads
-  (`read_snapshot`) never see branch manifests — isolation both ways.
+Protocol — a branch is one more manifest chain, listed, read and
+committed by the snapshot log's own helpers (``_chain_versions``,
+``_read_chain``, ``_commit``); this module only says what each commit
+contains:
+- **Create** claims ``_refs/<name>/meta.json`` with ``publish_json_excl``
+  (exactly one creator) recording the trunk version the branch diverged
+  from.
+- **Branch commit** is the trunk's overwrite step on the branch chain:
+  it carries forward from the branch head (or the divergence-point
+  trunk manifest while the branch has no commits). Data files land in
+  the shared ``data/`` dir — isolation is purely at the manifest layer,
+  exactly as in Nessie, so a branch costs zero data copies.
+- **Read** resolves a ref name to its head manifest and scans it like a
+  trunk snapshot; trunk reads (`read_snapshot`) never see branch
+  manifests — isolation both ways.
 - **Merge into trunk** is Nessie's content-level three-way merge at
   partition granularity: base = the recorded divergence point, ours =
   trunk head, theirs = branch head. A partition changed on one side
   takes that side's files; changed on BOTH sides (to different content)
   raises ``MergeConflict`` listing the partitions — no silent
-  last-writer-wins. The merged manifest publishes through the trunk's
-  own optimistic-retry commit path, and the branch's divergence point
-  advances so repeated merge cycles stay three-way.
+  last-writer-wins. The merge is a trunk commit step, so a lost version
+  race re-runs the three-way walk against the new trunk head. The
+  branch is then fast-forwarded onto the result by ONE direct head
+  publish, so repeated merge cycles stay three-way.
 - **Vacuum safety**: `snapshots.vacuum` retains every file referenced by
   any branch manifest (see its branch-aware live-set), so a branch can
   never have its data deleted from under it.
@@ -54,11 +59,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from breweries_case_spark.io.snapshots import (
-    _MAX_COMMIT_RETRIES,
+    _chain_path,
+    _chain_versions,
+    _commit,
+    _read_chain,
     _read_manifest,
+    _replace,
+    _scan,
+    _trunk,
     latest_version,
     publish_json_excl,
     read_snapshot,
+    stage_partition_files,
 )
 
 _REFS_DIR = "_refs"
@@ -85,27 +97,29 @@ def _branch_manifest_dir(table_dir: str, name: str) -> str:
 
 
 def _branch_versions(table_dir: str, name: str) -> list[int]:
-    mdir = _branch_manifest_dir(table_dir, name)
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    return _chain_versions(_branch_manifest_dir(table_dir, name))
 
 
 def _read_branch_manifest(table_dir: str, name: str, version: int) -> dict:
-    path = os.path.join(
-        _branch_manifest_dir(table_dir, name), f"v{version:08d}.json"
-    )
-    with open(path) as f:
-        return json.load(f)
+    return _read_chain(_branch_manifest_dir(table_dir, name), version)
 
 
 def _read_meta(table_dir: str, name: str) -> dict:
     with open(os.path.join(_branch_dir(table_dir, name), "meta.json")) as f:
         return json.load(f)
+
+
+def _divergence_manifest(table_dir: str, name: str) -> dict:
+    return _read_manifest(table_dir, _read_meta(table_dir, name)["created_from"])
+
+
+def _head(table_dir: str, name: str) -> dict:
+    """Branch head manifest (the divergence-point trunk manifest for a
+    commit-less branch)."""
+    versions = _branch_versions(table_dir, name)
+    if versions:
+        return _read_branch_manifest(table_dir, name, versions[-1])
+    return _divergence_manifest(table_dir, name)
 
 
 def list_branches(table_dir: str) -> list[str]:
@@ -123,8 +137,8 @@ def create_branch(
     table_dir: str, name: str, from_version: int | None = None
 ) -> int:
     """Create ``name`` pointing at trunk ``from_version`` (default:
-    latest). O_EXCL on meta.json makes creation atomic and unique.
-    Returns the divergence version.
+    latest). The exclusive claim on meta.json makes creation atomic and
+    unique. Returns the divergence version.
 
     meta.json is published BEFORE the manifests dir exists: meta's
     ``created_from`` is the branch's only claim on trunk files until its
@@ -133,8 +147,7 @@ def create_branch(
     left a window where a commit-less branch on an old base had NO
     readable claim and vacuum could reclaim its divergence point. Every
     reader tolerates the inverse window (meta present, manifests absent:
-    ``_branch_versions`` returns [], and ``commit_to_branch`` makedirs
-    defensively)."""
+    ``_branch_versions`` returns [], and the commit loop makes the dir)."""
     base = latest_version(table_dir) if from_version is None else from_version
     if base is None:
         raise FileNotFoundError(f"no trunk snapshots under {table_dir!r}")
@@ -149,17 +162,6 @@ def create_branch(
     return base
 
 
-def _head_partitions(table_dir: str, name: str) -> tuple[dict, str]:
-    """Branch head's partition map + partition column (falling back to
-    the divergence-point trunk manifest for a commit-less branch)."""
-    versions = _branch_versions(table_dir, name)
-    if versions:
-        m = _read_branch_manifest(table_dir, name, versions[-1])
-    else:
-        m = _read_manifest(table_dir, _read_meta(table_dir, name)["created_from"])
-    return dict(m["partitions"]), m["partition_col"]
-
-
 def commit_to_branch(
     df: DataFrame,
     table_dir: str,
@@ -167,33 +169,13 @@ def commit_to_branch(
     partition_col: str = "extraction_date",
 ) -> int:
     """Partition-overwrite commit onto a branch: data files go to the
-    SHARED data dir; only the branch's manifest chain advances. Same
-    O_EXCL optimistic-retry protocol as trunk commits."""
-    from breweries_case_spark.io.snapshots import stage_partition_files
-
+    SHARED data dir; only the branch's manifest chain advances, through
+    the same optimistic-retry commit loop as trunk commits."""
     touched = stage_partition_files(df, table_dir, partition_col)
-
-    mdir = _branch_manifest_dir(table_dir, name)
-    # meta-first creation means the dir may not exist yet (see
-    # create_branch); make it here rather than assuming creation order
-    os.makedirs(mdir, exist_ok=True)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        partitions, pcol = _head_partitions(table_dir, name)
-        partitions.update(touched)
-        versions = _branch_versions(table_dir, name)
-        version = (versions[-1] if versions else 0) + 1
-        target = os.path.join(mdir, f"v{version:08d}.json")
-        manifest = {
-            "version": version,
-            "committed_at": time.time(),
-            "partition_col": partition_col,
-            "partitions": partitions,
-        }
-        if not publish_json_excl(target, manifest):
-            continue
-        return version
-    raise RuntimeError(
-        f"branch commit to {name!r} lost {_MAX_COMMIT_RETRIES} version races"
+    return _commit(
+        _branch_manifest_dir(table_dir, name),
+        _replace(touched, (), partition_col),
+        start=_divergence_manifest(table_dir, name),
     )
 
 
@@ -203,28 +185,9 @@ def read_branch(
     """Read the branch head (the divergence-point trunk snapshot if the
     branch has no commits yet). Trunk reads never see branch state and
     vice versa — manifest-level isolation."""
-    import pyspark.sql.functions as F
-
-    versions = _branch_versions(table_dir, name)
-    if not versions:
-        return read_snapshot(
-            spark, table_dir, version=_read_meta(table_dir, name)["created_from"]
-        )
-    m = _read_branch_manifest(table_dir, name, versions[-1])
-    pcol = m["partition_col"]
-    parts = []
-    for val, files in sorted(m["partitions"].items()):
-        if not files:
-            continue
-        pdf = spark.read.parquet(
-            *[os.path.join(table_dir, f) for f in files]
-        )
-        parts.append(pdf.withColumn(pcol, F.lit(val)))
-    if not parts:
+    out = _scan(spark, table_dir, _head(table_dir, name))
+    if out is None:
         raise ValueError(f"branch {name!r} head has no partitions")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     return out
 
 
@@ -243,17 +206,12 @@ def merge_branch(table_dir: str, name: str) -> int:
     data-loss path ``test_merge_cycles_preserve_trunk_divergence``
     pins."""
     meta = _read_meta(table_dir, name)
-    base_m = _read_manifest(table_dir, meta["created_from"])
-    base = base_m["partitions"]
-    theirs, pcol = _head_partitions(table_dir, name)
+    base = _read_manifest(table_dir, meta["created_from"])["partitions"]
+    head = _head(table_dir, name)
+    theirs, pcol = head["partitions"], head["partition_col"]
 
-    from breweries_case_spark.io.snapshots import _manifest_path
-
-    for _ in range(_MAX_COMMIT_RETRIES):
-        trunk_v = latest_version(table_dir)
-        ours_m = _read_manifest(table_dir, trunk_v)
-        ours = dict(ours_m["partitions"])
-
+    def step(trunk_head: dict) -> dict:
+        ours = trunk_head["partitions"]
         merged = dict(ours)
         conflicts = []
         for key in set(base) | set(ours) | set(theirs):
@@ -270,72 +228,59 @@ def merge_branch(table_dir: str, name: str) -> int:
             # trunk-only changes are already in `merged` (copied from ours)
         if conflicts:
             raise MergeConflict(conflicts)
+        return {"partition_col": pcol, "partitions": merged, "merged_from": name}
 
-        version = trunk_v + 1
-        manifest = {
-            "version": version,
+    version = _commit(_trunk(table_dir), step)
+    # fast-forward the branch onto the merge result: advance the
+    # divergence point AND republish the head as the merged map.
+    # The two must move TOGETHER: if a concurrent commit_to_branch
+    # claims this head version first, advancing created_from anyway
+    # would pair the new base with a head built on the PRE-merge
+    # map, so the next merge reads every partition that head never
+    # saw as a branch-side deletion and silently drops trunk data
+    # (the test_merge_cycles_preserve_trunk_divergence loss mode,
+    # reintroduced under a race). On a lost race we leave the
+    # branch DIVERGENT instead — base and head still agree, and the
+    # next merge's three-way walk handles the already-landed keys
+    # as t == o (same change both sides, no conflict, no loss). The
+    # only cost is a possible surfaced MergeConflict if trunk later
+    # rewrites one of those keys again — recoverable, unlike loss.
+    mdir = _branch_manifest_dir(table_dir, name)
+    bversions = _chain_versions(mdir)
+    bversion = (bversions[-1] if bversions else 0) + 1
+    ff_won = publish_json_excl(
+        _chain_path(mdir, bversion),
+        {
+            "version": bversion,
             "committed_at": time.time(),
             "partition_col": pcol,
-            "partitions": merged,
-            "merged_from": name,
-        }
-        target = _manifest_path(table_dir, version)
-        if not publish_json_excl(target, manifest):
-            continue
-        # fast-forward the branch onto the merge result: advance the
-        # divergence point AND republish the head as the merged map.
-        # The two must move TOGETHER: if a concurrent commit_to_branch
-        # claims this head version first, advancing created_from anyway
-        # would pair the new base with a head built on the PRE-merge
-        # map, so the next merge reads every partition that head never
-        # saw as a branch-side deletion and silently drops trunk data
-        # (the test_merge_cycles_preserve_trunk_divergence loss mode,
-        # reintroduced under a race). On a lost race we leave the
-        # branch DIVERGENT instead — base and head still agree, and the
-        # next merge's three-way walk handles the already-landed keys
-        # as t == o (same change both sides, no conflict, no loss). The
-        # only cost is a possible surfaced MergeConflict if trunk later
-        # rewrites one of those keys again — recoverable, unlike loss.
-        mdir = _branch_manifest_dir(table_dir, name)
-        bversions = _branch_versions(table_dir, name)
-        bversion = (bversions[-1] if bversions else 0) + 1
-        btarget = os.path.join(mdir, f"v{bversion:08d}.json")
-        ff_won = publish_json_excl(
-            btarget,
-            {
-                "version": bversion,
-                "committed_at": time.time(),
-                "partition_col": pcol,
-                "partitions": merged,
-                "fast_forward_of": version,
-            },
-        )
-        if ff_won:
-            meta_path = os.path.join(
-                _branch_dir(table_dir, name), "meta.json"
-            )
-            # full publish_json_excl staging discipline, not just the
-            # unique tmp name: a FIXED meta_path+'.tmp' would let two
-            # concurrent merges truncate each other's staged file, and
-            # replacing WITHOUT fsync can commit the rename metadata
-            # before the data blocks — power loss then leaves an empty
-            # meta.json that wedges every subsequent read/merge/vacuum
-            tmp = f"{meta_path}.{uuid.uuid4().hex}.tmp"
-            with open(tmp, "w") as f:
-                json.dump({**meta, "created_from": version}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.replace(tmp, meta_path)
-            except FileNotFoundError:
-                # an aged-sidecar vacuum sweep beat us (≥15-min stall):
-                # the head is already the merged map with base stale —
-                # consistent (next merge sees t == o on every landed
-                # key), just not fast-forwarded; don't crash a merge
-                # that already published
-                pass
-        return version
-    raise RuntimeError("merge lost every trunk version race")
+            "partitions": _read_manifest(table_dir, version)["partitions"],
+            "fast_forward_of": version,
+        },
+    )
+    if ff_won:
+        meta_path = os.path.join(_branch_dir(table_dir, name), "meta.json")
+        # full publish_json_excl staging discipline, not just the
+        # unique tmp name: a FIXED meta_path+'.tmp' would let two
+        # concurrent merges truncate each other's staged file, and
+        # replacing WITHOUT fsync can commit the rename metadata
+        # before the data blocks — power loss then leaves an empty
+        # meta.json that wedges every subsequent read/merge/vacuum
+        tmp = f"{meta_path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as f:
+            json.dump({**meta, "created_from": version}, f)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.replace(tmp, meta_path)
+        except FileNotFoundError:
+            # an aged-sidecar vacuum sweep beat us (≥15-min stall):
+            # the head is already the merged map with base stale —
+            # consistent (next merge sees t == o on every landed
+            # key), just not fast-forwarded; don't crash a merge
+            # that already published
+            pass
+    return version
 
 
 def delete_branch(table_dir: str, name: str) -> None:

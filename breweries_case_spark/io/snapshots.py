@@ -17,26 +17,38 @@ Layout::
 
     table_dir/
       _manifests/v00000001.json   # {"version", "committed_at",
+                                  #  "partition_col",
                                   #  "partitions": {val: [data paths]}}
       data/<commit-uuid>/<pcol>=<val>/part-*.parquet
 
-Protocol:
-- **Commit** = write data files to a fresh commit dir (never touching
-  live files), then publish ``v{N+1}.json`` by fully writing + fsyncing
-  a sidecar and ``os.link``-ing it into place (``publish_json_excl``) —
+Protocol — this module owns it, for the trunk chain above and for the
+branch chains of ``io/branches.py``:
+- **Stage**: data files go to a fresh commit dir, never touching live
+  files (``stage_partition_files``).
+- **Commit** is one loop for every verb (``_commit``): read the chain's
+  head manifest, let the verb build the next one from it, and publish
+  ``v{N+1}.json`` with ``publish_json_excl`` — the payload is fully
+  written and fsynced to a sidecar and ``os.link``-ed into place, and
   link(2) fails with EEXIST if the version is claimed, so POSIX
   guarantees exactly one winner AND the visible manifest is always
-  complete; losers re-read the new latest manifest, re-merge their
-  partition delta, and retry (optimistic concurrency, same model as
-  Iceberg's commit conflict retry). Partition-overwrite semantics: touched partitions point at the
-  new files, untouched partitions carry forward — the reference's
-  idempotent daily-rerun contract (``breweries_bronze_processors.py:
-  133,149-153``).
-- **Read** = pick a manifest (latest or as-of version), union the
+  complete. A loser re-reads the new head and rebuilds (optimistic
+  concurrency, as in Iceberg's commit conflict retry). The verbs:
+  overwrite and delete (``_replace``), compaction (swaps a partition's
+  files only if they are still the ones it rewrote — no lost update),
+  rollback, branch commit, and the branch merge's trunk publish (which
+  raises on a conflict against the head it read).
+- **Replace-partitions** lives here, not in the callers: an overwrite
+  replaces every partition it stages, and drops each partition it names
+  in ``values`` but staged no rows for — the reference's idempotent
+  daily-rerun contract (``breweries_bronze_processors.py:
+  133,149-153``), including a rerun that yields nothing. Untouched
+  partitions carry forward. A commit that would change nothing
+  publishes nothing.
+- **Read** = pick a manifest (latest or as-of version) and union the
   per-partition file groups with the partition value restored as a
-  literal column. Partition pruning happens at the MANIFEST level —
-  pruned partitions cost zero file-system I/O, strictly better than
-  directory listing.
+  literal column (``_scan``). Partition pruning happens at the MANIFEST
+  level — pruned partitions cost zero file-system I/O, strictly better
+  than directory listing.
 - **Readers never block writers**: a snapshot read holds the file list,
   and data files are immutable; vacuum only deletes files unreferenced
   by ANY retained manifest.
@@ -51,10 +63,12 @@ as-of reads prune before Spark ever lists a directory."""
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import time
 import uuid
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,10 +78,6 @@ _MAX_COMMIT_RETRIES = 20
 #: vacuum only sweeps publish sidecars at least this stale — younger ones
 #: may be a live commit's staged payload (fsync→link window)
 TMP_SIDECAR_RETENTION_SEC = 15 * 60
-
-
-def _manifest_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, _MANIFEST_DIR, f"v{version:08d}.json")
 
 
 def publish_json_excl(target: str, payload: dict) -> bool:
@@ -107,25 +117,121 @@ def publish_json_excl(target: str, payload: dict) -> bool:
             os.unlink(tmp)
 
 
-def _list_versions(table_dir: str) -> list[int]:
-    mdir = os.path.join(table_dir, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
+# --- manifest chains: the trunk's _manifests/ and each branch's ----------
+
+
+def _chain_path(mdir: str, version: int) -> str:
+    return os.path.join(mdir, f"v{version:08d}.json")
+
+
+def _chain_versions(mdir: str) -> list[int]:
+    """Published versions of the manifest chain in ``mdir``, ascending;
+    [] when the dir is missing (nothing committed yet, or a branch
+    removed while this lists it)."""
+    try:
+        names = os.listdir(mdir)
+    except FileNotFoundError:
         return []
-    out = []
-    for name in os.listdir(mdir):
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
+    return sorted(
+        int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json")
+    )
 
 
-def _read_manifest(table_dir: str, version: int) -> dict:
-    with open(_manifest_path(table_dir, version)) as f:
+def _read_chain(mdir: str, version: int) -> dict:
+    with open(_chain_path(mdir, version)) as f:
         return json.load(f)
 
 
+def _trunk(table_dir: str) -> str:
+    return os.path.join(table_dir, _MANIFEST_DIR)
+
+
+def _manifest_path(table_dir: str, version: int) -> str:
+    return _chain_path(_trunk(table_dir), version)
+
+
+def _read_manifest(table_dir: str, version: int) -> dict:
+    return _read_chain(_trunk(table_dir), version)
+
+
 def latest_version(table_dir: str) -> int | None:
-    versions = _list_versions(table_dir)
+    versions = _chain_versions(_trunk(table_dir))
     return versions[-1] if versions else None
+
+
+def _commit(
+    mdir: str,
+    step: Callable[[dict | None], dict | None],
+    start: dict | None = None,
+) -> int:
+    """The one publish loop of every verb on every chain. ``step`` gets
+    the chain's head manifest (``start`` while the chain is empty) and
+    returns the next manifest's fields other than ``version`` and
+    ``committed_at``, or None to publish nothing — the head version (0
+    for an empty chain) is then returned. A lost claim re-reads the new
+    head and calls ``step`` again."""
+    os.makedirs(mdir, exist_ok=True)
+    for _ in range(_MAX_COMMIT_RETRIES):
+        versions = _chain_versions(mdir)
+        head = versions[-1] if versions else 0
+        fields = step(_read_chain(mdir, head) if head else start)
+        if fields is None:
+            return head
+        version = head + 1
+        manifest = {"version": version, "committed_at": time.time(), **fields}
+        if publish_json_excl(_chain_path(mdir, version), manifest):
+            return version
+    raise RuntimeError(
+        f"commit to {mdir!r} lost {_MAX_COMMIT_RETRIES} version races"
+    )
+
+
+def _replace(
+    touched: dict[str, list[str]],
+    values: Iterable[str] = (),
+    partition_col: str | None = None,
+) -> Callable[[dict | None], dict | None]:
+    """``_commit`` step of overwrite, delete and branch commits: each
+    staged partition in ``touched`` replaces the head's, each of
+    ``values`` with no staged files is dropped, the rest carry forward.
+    Builds nothing when nothing is staged and no listed value is held."""
+    drop = set(values) - set(touched)
+
+    def step(head: dict | None) -> dict | None:
+        partitions = dict(head["partitions"]) if head else {}
+        if not touched and drop.isdisjoint(partitions):
+            return None
+        for val in drop:
+            partitions.pop(val, None)
+        partitions.update(touched)
+        return {
+            "partition_col": partition_col or head["partition_col"],
+            "partitions": partitions,
+        }
+
+    return step
+
+
+def _scan(
+    spark: SparkSession,
+    table_dir: str,
+    manifest: dict,
+    values: Iterable[str] | None = None,
+) -> DataFrame | None:
+    """The one partition map → DataFrame scan: each selected partition's
+    files (all partitions when ``values`` is None) with the partition
+    value restored as a literal column, unioned in value order. None
+    when no selected partition holds files."""
+    want = None if values is None else set(values)
+    pcol = manifest["partition_col"]
+    parts = [
+        spark.read.parquet(
+            *[os.path.join(table_dir, f) for f in files]
+        ).withColumn(pcol, F.lit(val))
+        for val, files in sorted(manifest["partitions"].items())
+        if files and (want is None or val in want)
+    ]
+    return functools.reduce(DataFrame.unionByName, parts) if parts else None
 
 
 def stage_partition_files(
@@ -154,64 +260,28 @@ def stage_partition_files(
 
 
 def commit_overwrite_partitions(
-    df: DataFrame, table_dir: str, partition_col: str = "extraction_date"
+    df: DataFrame,
+    table_dir: str,
+    partition_col: str = "extraction_date",
+    values: Iterable[str] = (),
 ) -> int:
     """Atomically commit ``df`` with dynamic partition-overwrite
-    semantics; returns the new version number."""
-    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
+    semantics; returns the new version number. ``values`` names the
+    partitions this commit replaces: one that ``df`` holds no rows for
+    is dropped in the same version (an overwrite carrying zero rows for
+    a partition removes it; Iceberg's overwritePartitions of an empty
+    frame behaves the same). A commit that stages nothing and drops
+    nothing publishes nothing and returns the current version."""
     touched = stage_partition_files(df, table_dir, partition_col)
-
-    for _ in range(_MAX_COMMIT_RETRIES):
-        base = latest_version(table_dir)
-        partitions = (
-            dict(_read_manifest(table_dir, base)["partitions"])
-            if base is not None
-            else {}
-        )
-        partitions.update(touched)
-        version = (base or 0) + 1
-        manifest = {
-            "version": version,
-            "committed_at": time.time(),
-            "partition_col": partition_col,
-            "partitions": partitions,
-        }
-        target = _manifest_path(table_dir, version)
-        if not publish_json_excl(target, manifest):
-            continue  # lost the race — re-merge onto the new latest
-        return version
-    raise RuntimeError(
-        f"commit to {table_dir!r} lost {_MAX_COMMIT_RETRIES} version races"
-    )
+    return _commit(_trunk(table_dir), _replace(touched, values, partition_col))
 
 
 def commit_delete_partitions(table_dir: str, values: list[str]) -> int:
-    """Publish a version WITHOUT the given partition values — the
-    explicit-delete half of the overwrite contract (an overwrite carrying
-    zero rows for a partition must still remove it; Iceberg's
-    overwritePartitions of an empty frame behaves the same). Data files
-    stay on disk for time travel until vacuum."""
-    drop = set(values)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        base = latest_version(table_dir)
-        if base is None:
-            raise FileNotFoundError(f"no snapshots under {table_dir!r}")
-        m = _read_manifest(table_dir, base)
-        partitions = {
-            k: v for k, v in m["partitions"].items() if k not in drop
-        }
-        version = base + 1
-        target = _manifest_path(table_dir, version)
-        manifest = {
-            "version": version,
-            "committed_at": time.time(),
-            "partition_col": m["partition_col"],
-            "partitions": partitions,
-        }
-        if not publish_json_excl(target, manifest):
-            continue
-        return version
-    raise RuntimeError("delete-partitions commit lost every version race")
+    """Publish a version WITHOUT the given partition values and return
+    it; when the table holds none of them, publish nothing and return
+    the current version (0 for a table with none). Data files stay on
+    disk for time travel until vacuum."""
+    return _commit(_trunk(table_dir), _replace({}, values))
 
 
 def read_snapshot(
@@ -225,26 +295,30 @@ def read_snapshot(
     v = latest_version(table_dir) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no snapshots committed under {table_dir!r}")
-    m = _read_manifest(table_dir, v)
-    pcol = m["partition_col"]
-    items = m["partitions"].items()
-    if partitions is not None:
-        want = set(partitions)
-        items = [(val, files) for val, files in items if val in want]
-    parts = []
-    for val, files in sorted(items):
-        if not files:
-            continue
-        pdf = spark.read.parquet(*[os.path.join(table_dir, f) for f in files])
-        parts.append(pdf.withColumn(pcol, F.lit(val)))
-    if not parts:
+    out = _scan(spark, table_dir, _read_manifest(table_dir, v), partitions)
+    if out is None:
         raise ValueError(
             f"snapshot v{v} of {table_dir!r} has no matching partitions"
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     return out
+
+
+def read_other_partitions(
+    spark: SparkSession, table_dir: str, values: list[str]
+) -> DataFrame | None:
+    """The latest snapshot without the ``values`` partitions, pruned at
+    the manifest level; None when the table has no snapshot or no other
+    partition holds files."""
+    v = latest_version(table_dir)
+    if v is None:
+        return None
+    skip = set(values)
+    others = [
+        val
+        for val, files in _read_manifest(table_dir, v)["partitions"].items()
+        if files and val not in skip
+    ]
+    return read_snapshot(spark, table_dir, v, others) if others else None
 
 
 def compact_partitions(
@@ -289,28 +363,20 @@ def compact_partitions(
         )
         rewritten[val] = (files, new_files)
 
-    for _ in range(_MAX_COMMIT_RETRIES):
-        cur = latest_version(table_dir)
-        curm = _read_manifest(table_dir, cur)
-        partitions = dict(curm["partitions"])
+    def step(head: dict) -> dict:
+        partitions = dict(head["partitions"])
         for val, (old_files, new_files) in rewritten.items():
             # no-lost-update: only swap if the partition still holds
             # exactly the files this rewrite was planned against
             if partitions.get(val) == old_files:
                 partitions[val] = new_files
-        version = cur + 1
-        manifest = {
-            "version": version,
-            "committed_at": time.time(),
-            "partition_col": curm["partition_col"],
+        return {
+            "partition_col": head["partition_col"],
             "partitions": partitions,
             "compaction_of": base,
         }
-        target = _manifest_path(table_dir, version)
-        if not publish_json_excl(target, manifest):
-            continue
-        return version
-    raise RuntimeError("compaction commit lost every version race")
+
+    return _commit(_trunk(table_dir), step)
 
 
 def snapshot_diff(
@@ -329,7 +395,6 @@ def snapshot_diff(
     diff is exceptAll both ways (exact multiset semantics)."""
     m_from = _read_manifest(table_dir, v_from)
     m_to = _read_manifest(table_dir, v_to)
-    pcol = m_from["partition_col"]
     p_from = m_from["partitions"]
     p_to = m_to["partitions"]
     changed = [
@@ -337,26 +402,8 @@ def snapshot_diff(
         for val in set(p_from) | set(p_to)
         if p_from.get(val) != p_to.get(val)
     ]
-
-    def _load(partitions: dict, vals: list[str]) -> DataFrame | None:
-        parts = []
-        for val in sorted(vals):
-            files = partitions.get(val) or []
-            if files:
-                parts.append(
-                    spark.read.parquet(
-                        *[os.path.join(table_dir, f) for f in files]
-                    ).withColumn(pcol, F.lit(val))
-                )
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    old = _load(p_from, changed)
-    new = _load(p_to, changed)
+    old = _scan(spark, table_dir, m_from, changed)
+    new = _scan(spark, table_dir, m_to, changed)
     if old is None and new is None:
         raise ValueError(
             f"versions v{v_from} and v{v_to} of {table_dir!r} are identical"
@@ -375,26 +422,20 @@ def rollback(table_dir: str, to_version: int) -> int:
     stays append-only (the Iceberg rollback model), so the bad version
     remains inspectable and vacuum rules stay simple."""
     m = _read_manifest(table_dir, to_version)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        version = (latest_version(table_dir) or 0) + 1
-        manifest = {
-            "version": version,
-            "committed_at": time.time(),
+    return _commit(
+        _trunk(table_dir),
+        lambda _head: {
             "partition_col": m["partition_col"],
             "partitions": m["partitions"],
             "rollback_of": to_version,
-        }
-        target = _manifest_path(table_dir, version)
-        if not publish_json_excl(target, manifest):
-            continue
-        return version
-    raise RuntimeError("rollback lost every version race")
+        },
+    )
 
 
 def history(table_dir: str) -> list[dict]:
     """Commit log, oldest first: version, committed_at, partition count."""
     out = []
-    for v in _list_versions(table_dir):
+    for v in _chain_versions(_trunk(table_dir)):
         m = _read_manifest(table_dir, v)
         out.append(
             {
@@ -423,20 +464,19 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
     ``TMP_SIDECAR_RETENTION_SEC``: a fresh sidecar may belong to a
     commit IN FLIGHT between fsync and link, and deleting it would make
     that commit's ``os.link`` fail spuriously."""
-    versions = _list_versions(table_dir)
+    versions = _chain_versions(_trunk(table_dir))
     if not versions:
         return []
     now = time.time()
+    refs = os.path.join(table_dir, "_refs")
+    branch_dirs = [
+        os.path.join(refs, b)
+        for b in (os.listdir(refs) if os.path.isdir(refs) else [])
+    ]
     # sweep roots: trunk manifests + each branch's manifests AND its ref
     # dir itself (merge_branch stages meta.json rewrites there)
-    for root in [os.path.join(table_dir, _MANIFEST_DIR)] + [
-        os.path.join(table_dir, "_refs", b, sub)
-        for b in (
-            os.listdir(os.path.join(table_dir, "_refs"))
-            if os.path.isdir(os.path.join(table_dir, "_refs"))
-            else []
-        )
-        for sub in ("manifests", "")
+    for root in [_trunk(table_dir)] + [
+        os.path.join(bdir, sub) for bdir in branch_dirs for sub in ("manifests", "")
     ]:
         # the isdir→listdir window can race delete_branch's rmtree — a
         # vanished dir has nothing to sweep
@@ -452,40 +492,31 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
                         os.unlink(full)
     kept = set(versions[-keep_versions:])
     live: set[str] = set()
-    refs_root = os.path.join(table_dir, "_refs")
-    if os.path.isdir(refs_root):
-        for branch in os.listdir(refs_root):
-            # a branch may be delete_branch()ed (rmtree) between the
-            # listdir above and these reads — a vanished branch has
-            # simply released its claims, so skip it rather than crash
-            # mid-sweep
-            bdir = os.path.join(refs_root, branch)
-            meta_path = os.path.join(bdir, "meta.json")
-            # try/except scoped to the meta read ONLY: a partially
-            # rmtree'd branch (meta deleted first, manifests still
-            # present) must STILL honor the manifests dir's live-file
-            # claims below — skipping the whole branch here treated its
-            # data files as unclaimed and deleted them. The creation-race
-            # direction is closed on the other side: create_branch
-            # publishes meta.json BEFORE the manifests dir exists, so a
-            # branch is never visible without its created_from claim.
+    # a branch may be delete_branch()ed (rmtree) while this walks it — a
+    # vanished branch has simply released its claims, so each read below
+    # skips what is gone rather than crash mid-sweep
+    for bdir in branch_dirs:
+        # scoped to the meta read ONLY: a partially rmtree'd branch (meta
+        # deleted first, manifests still present) must STILL honor the
+        # manifests' live-file claims below. The creation-race direction
+        # is closed on the other side: create_branch publishes meta.json
+        # BEFORE the manifests dir exists, so a branch is never visible
+        # without its created_from claim.
+        try:
+            with open(os.path.join(bdir, "meta.json")) as f:
+                base_v = json.load(f)["created_from"]
+            if base_v in versions:
+                kept.add(base_v)
+        except FileNotFoundError:
+            pass
+        mdir = os.path.join(bdir, "manifests")
+        for v in _chain_versions(mdir):
             try:
-                with open(meta_path) as f:
-                    base_v = json.load(f)["created_from"]
-                if base_v in versions:
-                    kept.add(base_v)
+                m = _read_chain(mdir, v)
             except FileNotFoundError:
-                pass
-            mdir = os.path.join(bdir, "manifests")
-            if os.path.isdir(mdir):
-                for name in os.listdir(mdir):
-                    if name.startswith("v") and name.endswith(".json"):
-                        try:
-                            with open(os.path.join(mdir, name)) as f:
-                                for files in json.load(f)["partitions"].values():
-                                    live.update(files)
-                        except FileNotFoundError:
-                            continue
+                continue
+            for files in m["partitions"].values():
+                live.update(files)
     for v in kept:
         for files in _read_manifest(table_dir, v)["partitions"].values():
             live.update(files)
@@ -644,11 +675,9 @@ QUERIES = {
     "q_snapshot_changes": q_snapshot_changes,
 }
 
-#: oracle added round 4 (previously rows-only): the demonstration's output
-#: is a deterministic function of orders — the oracle recomputes the
-#: expected per-day counts of BOTH snapshot versions directly, so the
-#: driver value-checks the ACID overwrite/carry-forward semantics, not
-#: just row counts.
+#: each demonstration's output is a deterministic function of orders —
+#: the oracles recompute it directly, so the driver value-checks the ACID
+#: overwrite/carry-forward semantics, not just row counts.
 
 ORACLES: dict[str, str] = {
     "q_snapshot_time_travel": """

@@ -1813,25 +1813,17 @@ def _state_bucket(label_col):
 
 
 def _overwrite_changed_buckets(state, changed: set[str], tdir: str) -> None:
-    """Commit a new state version rewriting ONLY the ``changed`` buckets
-    of a (…, sb)-bucketed snapshot table: the buckets that still hold
-    rows are dynamically overwritten; changed buckets the update
-    EMPTIED are dropped with an explicit delete commit (dynamic
-    overwrite only replaces partitions present in the staged frame, so
-    without the delete a drained bucket's old files would silently
-    carry forward — the stale-row bug tests/test_round13_ops pins)."""
-    from breweries_case_spark.io.snapshots import (
-        commit_delete_partitions,
-        commit_overwrite_partitions,
-    )
+    """Commit ONE state version replacing only the ``changed`` buckets
+    of a (…, sb)-bucketed snapshot table: a changed bucket that still
+    holds rows is rewritten, and one the update EMPTIED is dropped (a
+    drained bucket's old files must not carry forward — the stale-row
+    bug tests/test_round13_ops pins)."""
+    from breweries_case_spark.io.snapshots import commit_overwrite_partitions
 
-    kept = state.filter(F.col("sb").isin(sorted(changed)))
-    present = {r.sb for r in kept.select("sb").distinct().collect()}
-    if present:
-        commit_overwrite_partitions(kept, tdir, "sb")
-    emptied = sorted(changed - present)
-    if emptied:
-        commit_delete_partitions(tdir, emptied)
+    buckets = sorted(changed)
+    commit_overwrite_partitions(
+        state.filter(F.col("sb").isin(buckets)), tdir, "sb", buckets
+    )
 
 
 def q_dedup_cluster_chain_persisted(
@@ -1849,8 +1841,8 @@ def q_dedup_cluster_chain_persisted(
             the buckets the day touched — old and new buckets of every
             remapped label plus the shard rows' buckets; untouched
             buckets carry forward at the manifest level, zero bytes
-            rewritten (a bucket the remap EMPTIES is dropped with
-            ``commit_delete_partitions``). The v1→v2 ``snapshot_diff``
+            rewritten (a bucket the remap EMPTIES is dropped in the
+            same commit). The v1→v2 ``snapshot_diff``
             IS the label-remap change feed (pinned in
             tests/test_round13_ops). Day 2 reads the LATEST snapshot, so
             the in-memory state1 is never reused.
@@ -1892,7 +1884,7 @@ def q_dedup_cluster_chain_persisted(
                 .distinct()
                 .collect()
             }
-            _overwrite_changed_buckets(state, changed, tdir)  # v2 (+delete)
+            _overwrite_changed_buckets(state, changed, tdir)  # v2
         return read_snapshot(spark, tdir).select("media_id", "label").localCheckpoint()
 
     try:

@@ -37,10 +37,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from breweries_case_spark.io.snapshots import (
-    _read_manifest,
     commit_delete_partitions,
     commit_overwrite_partitions,
-    latest_version,
+    read_other_partitions,
     read_snapshot,
 )
 from breweries_case_spark.operators.training_mix import (
@@ -140,11 +139,10 @@ def _near_dup_shard_ids(
     drop = jaccard_verified(intra, sh_shard, sh_shard)
 
     # --- vs corpus ---
-    lsh_dir = os.path.join(corpus_dir, LSH_TABLE)
-    if latest_version(lsh_dir) is not None:
-        stored = read_snapshot(spark, lsh_dir).filter(
-            F.col("shard_date") != shard_date
-        )
+    stored = read_other_partitions(
+        spark, os.path.join(corpus_dir, LSH_TABLE), [shard_date]
+    )
+    if stored is not None:
         shard_buckets = shard_banded.select("band_idx", "band_hash").distinct()
         corpus_hits = stored.join(
             F.broadcast(shard_buckets), ["band_idx", "band_hash"], "left_semi"
@@ -243,15 +241,12 @@ def update_corpus(
 
     # corpus-side dedup: anti-join the stored fingerprint state from
     # every OTHER shard_date partition (self-exclusion-free reruns)
-    if latest_version(fp_dir) is not None:
-        prior = read_snapshot(spark, fp_dir).filter(
-            F.col("shard_date") != shard_date
-        )
-        fresh = shard_unique.join(
-            prior.select("fp"), "fp", "left_anti"
-        )
-    else:
-        fresh = shard_unique
+    prior = read_other_partitions(spark, fp_dir, [shard_date])
+    fresh = (
+        shard_unique
+        if prior is None
+        else shard_unique.join(prior.select("fp"), "fp", "left_anti")
+    )
 
     # near-dup tier (optional): MinHash-LSH probe of the persisted bucket
     # state + exact-Jaccard verify on candidates only; greedy
@@ -288,20 +283,15 @@ def update_corpus(
     n_accepted = kept.get["n"]
 
     def _commit(df, table_dir):
-        """Overwrite the shard_date partition — including the
-        zero-accepted case: an empty frame stages no partition dirs, so
-        commit_overwrite_partitions alone would CARRY the stale
-        partition forward; a redelivered shard whose docs now all fail
-        must instead DELETE the day (the snapshot log's explicit-delete
-        half of the overwrite contract)."""
+        """Replace the shard_date partition with ``df``. With no accepted
+        docs the commit is a delete of the day (a redelivered shard whose
+        docs now all fail leaves nothing behind), which skips writing an
+        empty frame."""
         if n_accepted > 0:
-            return commit_overwrite_partitions(df, table_dir, "shard_date")
-        base = latest_version(table_dir)
-        if base is not None and shard_date in _read_manifest(
-            table_dir, base
-        )["partitions"]:
-            return commit_delete_partitions(table_dir, [shard_date])
-        return base if base is not None else 0
+            return commit_overwrite_partitions(
+                df, table_dir, "shard_date", [shard_date]
+            )
+        return commit_delete_partitions(table_dir, [shard_date])
 
     _commit(
         accepted.select("doc_id", "text", "lang", "source", "shard_date"),

@@ -31,7 +31,7 @@ import datetime as _dt
 import json
 import os
 import shutil
-from collections.abc import Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -124,6 +124,32 @@ def _persist_layer(
     return rows
 
 
+def _run_day(
+    spark: SparkSession,
+    records: Iterable[Mapping],
+    extraction_date: _dt.date,
+    persist: Callable[[DataFrame, str], int],
+    read: Callable[[str], DataFrame],
+) -> dict[str, int]:
+    """The daily run both storage paths share: ingest → bronze → silver
+    → gold, where ``persist(df, layer)`` replaces the day's partition of
+    ``layer`` with ``df`` and returns the rows written, and
+    ``read(layer)`` reads the day's committed rows back. A layer that
+    wrote no rows hands the next one an empty frame, so an empty rerun
+    replaces the day with nothing in every layer."""
+    bronze_n = persist(ingest_to_bronze(spark, records, extraction_date), "bronze")
+    if bronze_n:
+        silver = bronze_to_silver(read("bronze"), extraction_date)
+    else:
+        silver = spark.createDataFrame([], SILVER_SCHEMA)
+    silver_n = persist(silver, "silver")
+    if silver_n:
+        gold = silver_to_gold(read("silver"), extraction_date)
+    else:
+        gold = spark.createDataFrame([], GOLD_SCHEMA)
+    return {"bronze": bronze_n, "silver": silver_n, "gold": persist(gold, "gold")}
+
+
 def run_medallion(
     spark: SparkSession,
     records: Iterable[Mapping],
@@ -152,24 +178,14 @@ def run_medallion(
             "run_medallion writes via driver-local filesystem APIs; got "
             f"{base_path!r}. Use write_iceberg for object-store targets."
         )
-    bronze = ingest_to_bronze(spark, records, extraction_date)
-    bronze_n = _persist_layer(bronze, f"{base_path}/bronze", extraction_date)
-
-    if bronze_n:
-        bronze_t = read_partitioned(spark, f"{base_path}/bronze", BRONZE_SCHEMA)
-        silver = bronze_to_silver(bronze_t, extraction_date)
-    else:
-        silver = spark.createDataFrame([], SILVER_SCHEMA)
-    silver_n = _persist_layer(silver, f"{base_path}/silver", extraction_date)
-
-    if silver_n:
-        silver_t = read_partitioned(spark, f"{base_path}/silver", SILVER_SCHEMA)
-        gold = silver_to_gold(silver_t, extraction_date)
-    else:
-        gold = spark.createDataFrame([], GOLD_SCHEMA)
-    gold_n = _persist_layer(gold, f"{base_path}/gold", extraction_date)
-
-    return {"bronze": bronze_n, "silver": silver_n, "gold": gold_n}
+    schemas = {"bronze": BRONZE_SCHEMA, "silver": SILVER_SCHEMA}
+    return _run_day(
+        spark,
+        records,
+        extraction_date,
+        lambda df, layer: _persist_layer(df, f"{base_path}/{layer}", extraction_date),
+        lambda layer: read_partitioned(spark, f"{base_path}/{layer}", schemas[layer]),
+    )
 
 
 def silver_to_gold(
@@ -205,40 +221,33 @@ def run_medallion_snapshotted(
     exactly that date's partitions while the previous run stays
     time-travel-readable — the reference's Iceberg contract
     (``breweries_bronze_processors.py:133,149-153`` + snapshot commits)
-    delivered without the unresolvable jars. An empty rerun publishes an
-    explicit partition delete (``commit_delete_partitions``), which the
-    plain-parquet path has to emulate with directory removal
-    (see ``_persist_layer``) — here it is a first-class log entry.
+    delivered without the unresolvable jars. Each commit names the day
+    as the partition it replaces, so an empty rerun drops the day in the
+    same versioned commit — the delete the plain-parquet path has to
+    emulate with directory removal (see ``_persist_layer``) — and an
+    empty first run publishes nothing.
 
     The snapshot log stores partition values as strings (directory-name
     encoding); reads restore ``extraction_date`` to DATE before the next
     stage consumes it."""
     from breweries_case_spark.io.snapshots import (
-        commit_delete_partitions,
         commit_overwrite_partitions,
-        latest_version,
         read_snapshot,
     )
 
     day = extraction_date.isoformat()
 
     def persist(df: DataFrame, layer: str) -> int:
-        """Commit ``df`` as the day's partition of ``layer``; returns the
-        rows committed, observed on the commit's write."""
-        tdir = f"{base_path}/{layer}"
-        # an overwrite commit of an empty frame would publish a no-op
-        # version, so an empty day is an explicit partition delete
-        if df.isEmpty():
-            if latest_version(tdir) is not None:
-                commit_delete_partitions(tdir, [day])
-            return 0
         obs = Observation()
         commit_overwrite_partitions(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")), tdir, "extraction_date"
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            f"{base_path}/{layer}",
+            "extraction_date",
+            [day],
         )
         return obs.get["rows"]
 
-    def read_day(layer: str) -> DataFrame:
+    def read(layer: str) -> DataFrame:
         # manifest-level prune: only the day's own partition is ever
         # listed or read — a read-all-then-filter would pay O(history)
         # file I/O per layer per run, growing with table age
@@ -247,19 +256,4 @@ def run_medallion_snapshotted(
             "extraction_date", F.col("extraction_date").cast("date")
         )
 
-    bronze = ingest_to_bronze(spark, records, extraction_date)
-    bronze_n = persist(bronze, "bronze")
-
-    if bronze_n:
-        silver = bronze_to_silver(read_day("bronze"), extraction_date)
-    else:
-        silver = spark.createDataFrame([], SILVER_SCHEMA)
-    silver_n = persist(silver, "silver")
-
-    if silver_n:
-        gold = silver_to_gold(read_day("silver"), extraction_date)
-    else:
-        gold = spark.createDataFrame([], GOLD_SCHEMA)
-    gold_n = persist(gold, "gold")
-
-    return {"bronze": bronze_n, "silver": silver_n, "gold": gold_n}
+    return _run_day(spark, records, extraction_date, persist, read)

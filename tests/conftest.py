@@ -26,3 +26,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def lose_claim(monkeypatch):
+    """``lose_claim(target, winner)`` patches the snapshot log's atomic
+    claim point (``os.link``) so that the first publish of ``target``
+    runs ``winner`` — a real commit that claims ``target`` first — and
+    then loses with EEXIST. Returns the list of targets it fired on."""
+    import breweries_case_spark.io.snapshots as S
+
+    real_link = S.os.link
+    fired: list[str] = []
+
+    def arm(target, winner):
+        def racing_link(src, dst, *a, **kw):
+            if not fired and dst == target:
+                fired.append(dst)
+                monkeypatch.setattr(S.os, "link", real_link)
+                winner()
+                monkeypatch.setattr(S.os, "link", racing_link)
+            return real_link(src, dst, *a, **kw)
+
+        monkeypatch.setattr(S.os, "link", racing_link)
+        return fired
+
+    return arm

@@ -377,3 +377,35 @@ def test_branch_lifecycle_matches_sequential_model(
             assert _branch(spark, t, "exp") == {
                 k: set(v) for k, v in branch[2].items()
             }, (op, ops)
+
+
+@pytest.mark.parametrize("winner_day", ["d3", "d2"], ids=["disjoint", "conflicting"])
+def test_merge_trunk_publish_race_rechecks_conflicts(
+    spark, tmp_path, lose_claim, winner_day
+):
+    """A merge that loses its trunk version claim to a concurrent trunk
+    commit re-runs the three-way walk against the WINNER's manifest: a
+    winner on another partition is kept beside the branch's change, and
+    a winner on the branch's partition is a conflict — trunk then holds
+    the winner's version and nothing else."""
+    from breweries_case_spark.io.snapshots import _manifest_path
+
+    t = str(tmp_path / "t")
+    commit_overwrite_partitions(_df(spark, [(1, "d1"), (3, "d2")]), t, "day")
+    create_branch(t, "exp")
+    commit_to_branch(_df(spark, [(9, "d2")]), t, "exp", "day")
+    fired = lose_claim(
+        _manifest_path(t, 2),
+        lambda: commit_overwrite_partitions(_df(spark, [(7, winner_day)]), t, "day"),
+    )
+    if winner_day == "d2":
+        with pytest.raises(MergeConflict) as ei:
+            merge_branch(t, "exp")
+        assert ei.value.partitions == ["d2"]
+        assert latest_version(t) == 2
+        assert _trunk(spark, t) == {"d1": {1}, "d2": {7}}
+    else:
+        assert merge_branch(t, "exp") == 3
+        assert _trunk(spark, t) == {"d1": {1}, "d2": {9}, "d3": {7}}
+        assert _branch(spark, t, "exp") == {"d1": {1}, "d2": {9}, "d3": {7}}
+    assert fired

@@ -368,3 +368,33 @@ def test_update_corpus_runs_no_count_jobs(spark, tmp_path):
     # materializations, and the docs / fingerprints / LSH commits; each
     # count() would add a job
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 20
+
+
+@pytest.mark.parametrize(
+    "other_day", [True, False], ids=["other_day_present", "other_day_absent"]
+)
+def test_update_after_rerun_deleted_a_state_partition(spark, tmp_path, other_day):
+    """Once a zero-accepted rerun deleted a day, the next update reads
+    the fingerprint and LSH state of the OTHER days only — also when the
+    deleted day was the only one, which leaves the state tables with no
+    partition at all (no state, not an error)."""
+    c = str(tmp_path / "corpus")
+    if other_day:
+        update_corpus(
+            spark, _shard(spark, [(1, OTHER, "en", "web")]), c, "2026-08-01",
+            near_dedup=True,
+        )
+    update_corpus(
+        spark, _shard(spark, [(2, GOOD, "en", "web")]), c, "2026-08-02",
+        near_dedup=True,
+    )
+    rerun = update_corpus(
+        spark, _shard(spark, [(2, SHORT, "en", "web")]), c, "2026-08-02",
+        near_dedup=True,
+    )
+    assert rerun["n_accepted"] == 0
+    day3 = [(3, GOOD, "en", "web"), (4, NEAR1, "en", "web")]
+    s3 = update_corpus(spark, _shard(spark, day3), c, "2026-08-03", near_dedup=True)
+    assert (s3["n_near_dropped"], s3["n_accepted"]) == (0, 2)
+    want = {("2026-08-03", 3), ("2026-08-03", 4)}
+    assert _ids(spark, c) == (want | {("2026-08-01", 1)} if other_day else want)

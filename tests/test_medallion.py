@@ -500,3 +500,54 @@ def test_sampling_plan_shapes(spark, sf_dir):
     p2 = q_scd2_compress(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert p2.count("Exchange") == 1, p2
     assert p2.count("Sort") == 1, p2
+
+
+def test_run_medallion_snapshotted_runs_only_the_layer_commits(spark, tmp_path):
+    """A snapshotted day launches one job per layer commit plus the
+    schema read of each committed layer it reads back: the audit counts
+    are observed on the commits' writes, so an emptiness probe or a
+    count() adds a job here."""
+    from breweries_case_spark.pipelines.medallion import run_medallion_snapshotted
+
+    sc = spark.sparkContext
+    group = f"medallion-snap-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "run_medallion_snapshotted job count")
+    try:
+        audit = run_medallion_snapshotted(
+            spark, _good_records(20), TEST_DATE, str(tmp_path / "lake")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert audit == {"bronze": 20, "silver": 20, "gold": 1}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    # test profile (AQE off): 3 layer writes + 2 parquet schema reads
+    # (bronze and silver read back from their snapshot files)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"], ids=["aqe_off", "aqe_on"])
+def test_run_medallion_snapshotted_empty_days(spark, tmp_path, aqe):
+    """An empty first-run day publishes no version in any layer; an empty
+    rerun drops the day from every layer in exactly one version. The
+    zero audit counts come from observations on empty writes, which must
+    be reported with AQE on too."""
+    from breweries_case_spark.io.snapshots import history, latest_version
+    from breweries_case_spark.pipelines.medallion import run_medallion_snapshotted
+
+    key = "spark.sql.adaptive.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        base = str(tmp_path / "lake")
+        zero = {"bronze": 0, "silver": 0, "gold": 0}
+        assert run_medallion_snapshotted(spark, [], TEST_DATE, base) == zero
+        for layer in ("bronze", "silver", "gold"):
+            assert latest_version(f"{base}/{layer}") is None, layer
+
+        run_medallion_snapshotted(spark, _good_records(3), TEST_DATE, base)
+        assert run_medallion_snapshotted(spark, [], TEST_DATE, base) == zero
+        for layer in ("bronze", "silver", "gold"):
+            assert [h["n_partitions"] for h in history(f"{base}/{layer}")] == [1, 0], layer
+    finally:
+        spark.conf.set(key, prior)

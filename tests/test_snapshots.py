@@ -384,3 +384,94 @@ def test_vacuum_tolerates_branch_deleted_mid_sweep(spark, tmp_path):
     deleted = vacuum(t, keep_versions=1)
     assert deleted  # the sweep completed and reclaimed v1's files
     assert _counts(spark, t, version=2) == {"d1": {2}}
+
+
+# --- publisher races: every verb rebuilds on the winner's manifest ---------
+
+
+def test_delete_race_rebuilds_on_the_winners_manifest(spark, tmp_path, lose_claim):
+    """A delete that loses its version claim to a concurrent overwrite
+    lands the next version, dropping its partition from the WINNER's
+    manifest: the winner's new partition survives."""
+    from breweries_case_spark.io.snapshots import (
+        _manifest_path,
+        commit_delete_partitions,
+    )
+
+    t = str(tmp_path / "t")
+    commit_overwrite_partitions(_df(spark, [(1, "d1"), (2, "d2")]), t, "day")
+    fired = lose_claim(
+        _manifest_path(t, 2),
+        lambda: commit_overwrite_partitions(_df(spark, [(3, "d3")]), t, "day"),
+    )
+    v = commit_delete_partitions(t, ["d2"])
+    assert fired and v == 3
+    assert _counts(spark, t, version=2) == {"d1": {1}, "d2": {2}, "d3": {3}}
+    assert _counts(spark, t) == {"d1": {1}, "d3": {3}}
+
+
+def test_rollback_race_lands_after_the_winner(spark, tmp_path, lose_claim):
+    """A rollback that loses its version claim republishes the rolled-
+    back content at the next version; the winner's version stays in
+    history."""
+    from breweries_case_spark.io.snapshots import _manifest_path
+
+    t = str(tmp_path / "t")
+    commit_overwrite_partitions(_df(spark, [(1, "d1")]), t, "day")
+    commit_overwrite_partitions(_df(spark, [(2, "d1")]), t, "day")
+    fired = lose_claim(
+        _manifest_path(t, 3),
+        lambda: commit_overwrite_partitions(_df(spark, [(3, "d3")]), t, "day"),
+    )
+    v = rollback(t, to_version=1)
+    assert fired and v == 4
+    assert _counts(spark, t, version=3) == {"d1": {2}, "d3": {3}}
+    assert _counts(spark, t) == {"d1": {1}}
+    assert [h["rollback_of"] for h in history(t)] == [None, None, None, 1]
+
+
+def test_compaction_race_keeps_the_winners_files(spark, tmp_path, lose_claim):
+    """The no-lost-update rule: a compaction planned against a partition
+    that a concurrent overwrite replaced before the compaction's publish
+    must NOT swap its rewrite in — the winner's files survive, and
+    untouched partitions still carry forward."""
+    from breweries_case_spark.io.snapshots import (
+        _manifest_path,
+        _read_manifest,
+        compact_partitions,
+    )
+
+    t = str(tmp_path / "t")
+    commit_overwrite_partitions(
+        _df(spark, [(i, "d1") for i in range(8)]).repartition(4), t, "day"
+    )
+    commit_overwrite_partitions(_df(spark, [(99, "d2")]), t, "day")
+    fired = lose_claim(
+        _manifest_path(t, 3),
+        lambda: commit_overwrite_partitions(_df(spark, [(100, "d1")]), t, "day"),
+    )
+    v = compact_partitions(spark, t, values=["d1"])
+    assert fired and v == 4
+    winner, compacted = _read_manifest(t, 3), _read_manifest(t, 4)
+    assert compacted["partitions"] == winner["partitions"]
+    assert compacted["compaction_of"] == 2
+    assert _counts(spark, t) == {"d1": {100}, "d2": {99}}
+
+
+def test_replace_partitions_drops_listed_values_without_rows(spark, tmp_path):
+    """An overwrite names the partitions it replaces: a listed value with
+    no staged rows is dropped in the same version; an overwrite that
+    stages nothing and a delete of values the table does not hold
+    publish nothing."""
+    from breweries_case_spark.io.snapshots import commit_delete_partitions
+
+    t = str(tmp_path / "t")
+    assert commit_delete_partitions(t, ["d1"]) == 0
+    assert latest_version(t) is None
+    commit_overwrite_partitions(_df(spark, [(1, "d1"), (2, "d2")]), t, "day")
+    v = commit_overwrite_partitions(_df(spark, [(3, "d3")]), t, "day", ["d2", "d3"])
+    assert v == 2
+    assert _counts(spark, t) == {"d1": {1}, "d3": {3}}
+    assert commit_overwrite_partitions(_df(spark, []), t, "day", ["d9"]) == 2
+    assert commit_delete_partitions(t, ["d2"]) == 2
+    assert latest_version(t) == 2

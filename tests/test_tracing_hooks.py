@@ -26,3 +26,23 @@ def test_every_tracing_hook_resolves():
         )
     ]
     assert not missing
+
+
+def test_snapshot_helpers_the_tracer_calls_still_bind():
+    """Besides the hooked names, the tracer's snapshot hooks call storage
+    helpers directly — the manifest path and reader of a returned or
+    requested version, and the latest version — and call
+    ``read_snapshot`` positionally. A storage refactor that changes
+    these signatures breaks ``--trace 1`` runs, so bind each call the
+    hooks make."""
+    import inspect
+
+    from breweries_case_spark.io import snapshots
+
+    for fn, args in (
+        (snapshots._manifest_path, ("table_dir", 1)),  # noqa: SLF001
+        (snapshots._read_manifest, ("table_dir", 1)),  # noqa: SLF001
+        (snapshots.latest_version, ("table_dir",)),
+        (snapshots.read_snapshot, ("spark", "table_dir", None, None)),
+    ):
+        inspect.signature(fn).bind(*args)
