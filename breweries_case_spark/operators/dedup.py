@@ -60,7 +60,7 @@ def _docs_with_gram_rows(
     to an empty shingle set for every consumer (it can never clear a
     positive Jaccard threshold).
 
-    ``docs`` (r14 optimization round): an optional pre-filtered
+    ``docs``: an optional pre-filtered
     documents frame (doc_id, lang, text) to shingle instead of the full
     table — Spark cannot push a caller's doc_id semi-join below the
     explode+window, so a composite that grams only its gate survivors
@@ -115,7 +115,7 @@ def _hashed_shingles_from_token_hashes(
     land in a materialized column (referenced ~doc_len times by the roll's
     element_at calls, so CollapseProject keeps it materialized rather than
     inlining the transform into every use). ``keep`` names extra ``base``
-    columns to carry through unchanged (r13: lets the incremental text
+    columns to carry through unchanged (lets the incremental text
     maintainer build ONE (doc_id, lang, fp, th64, sh) feature checkpoint
     instead of re-scanning/re-tokenizing the corpus per consumer)."""
     body = base.select(
@@ -233,9 +233,14 @@ CONTAINMENT_THRESHOLD = 0.8
 #: ≤ 1M pair rows ⟹ ≤ 2M doc ids ≈ 16 MB per broadcast side, safely
 #: inside executor/driver budgets; above it the recount falls back to
 #: the shuffle semi-join plan instead of risking a broadcast OOM. The
-#: same bound caps the symmetrized edge list (≈ 16 MB of long pairs)
-#: that ``connected_components`` collects and solves on the driver.
+#: same bound caps the edge list that ``connected_components`` collects
+#: and solves on the driver: one row per edge as the caller gives it, not
+#: symmetrized, so still ≈ 16 MB of long pairs.
 _NEEDS_BROADCAST_MAX = 1_000_000
+
+#: round bound of ``connected_components_star``: star rounds number
+#: O(log n), so hitting it means a defect, not a large graph, and raises
+_STAR_MAX_ROUNDS = 30
 
 
 def broadcast_if_small(
@@ -282,7 +287,7 @@ def containment_pairs(
     recount (candidate-then-verify, the q_dedup_prefix_filter
     topology) — so published containment values are exact everywhere;
     the recount's posting tables are pruned to the needs-pair docs via
-    broadcast semi-joins (r11), so an idle cap costs zero posting
+    broadcast semi-joins, so an idle cap costs zero posting
     shuffle and an engaged one shuffles only the hot-pair docs' grams.
     The cap is NOT recall-free in general: a true pair
     whose shared grams ALL have df > df_cap posts no candidate — at
@@ -326,7 +331,7 @@ def containment_pairs(
         # (one row per shared rare gram by distinctness of the gram
         # inventory) — for a pair whose BOTH docs hold only rare grams
         # that count IS the full intersection, so verify is skipped for
-        # it (r10: at driver scale no gram exceeds the cluster-sized
+        # it (at driver scale no gram exceeds the cluster-sized
         # cap, making the whole verify join empty; at 100 TB only pairs
         # touching a hot gram pay it)
         cand = (
@@ -385,19 +390,18 @@ def containment_pairs(
             .drop("rare_inter")
             .localCheckpoint()
         )
-        # r11: prune the full-inventory recount to the docs that
-        # actually need it via semi-joins on the needs-pair ids BEFORE
-        # the posting tables enter the join — without this the recount
-        # shuffled the ENTIRE posting inventory even when zero pairs
-        # touched a hot gram (the measured drag behind
-        # q_training_mix_v2's floor drift). Hot-pair docs are usually
-        # ≪ corpus (by construction: docs sharing a hotter-than-cap
-        # gram with a candidate partner), so the id sets broadcast —
-        # but an explicit F.broadcast hint does NOT degrade at runtime
-        # (r12, ADVICE): a dup-heavy corpus whose needs set outgrew the
-        # driver would fail the job outright, so the hint is size-gated
-        # on a cheap count of the already-checkpointed needs frame and
-        # falls back to the r10 shuffle semi-join plan above the gate.
+        # prune the full-inventory recount to the docs that actually
+        # need it via semi-joins on the needs-pair ids BEFORE the
+        # posting tables enter the join — without this the recount
+        # shuffles the ENTIRE posting inventory even when zero pairs
+        # touch a hot gram. Hot-pair docs are usually ≪ corpus (by
+        # construction: docs sharing a hotter-than-cap gram with a
+        # candidate partner), so the id sets broadcast — but an explicit
+        # F.broadcast hint does NOT degrade at runtime: a dup-heavy
+        # corpus whose needs set outgrew the driver would fail the job
+        # outright, so the hint is size-gated on a cheap count of the
+        # already-checkpointed needs frame and falls back to the shuffle
+        # semi-join plan above the gate.
         # no .distinct() on the broadcast sides: the semi join dedups,
         # and a distinct here would cost a shuffle each
         ids_a = needs.select(F.col("doc_a").alias("doc_id"))
@@ -489,12 +493,12 @@ def q_dedup_containment_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: every candidate bucket is ≤ DF_CAP² rows by construction —
     the Σ_gram df² quadratic of the ground-truth tier cannot occur; the
     price is one df aggregate + a semi-join + the verify join, all
-    equi-joins on (lang, gram) / (doc, gram). r11: the verify recount
-    is pruned to the needs-pair docs via broadcast semi-joins before
-    the posting tables enter the join (see ``containment_pairs``) — an
-    empty hot set now costs zero posting shuffle; r12 size-gates that
-    broadcast hint (_NEEDS_BROADCAST_MAX) so an oversized needs set
-    falls back to the shuffle plan instead of failing the job. This is
+    equi-joins on (lang, gram) / (doc, gram). The verify recount is
+    pruned to the needs-pair docs via broadcast semi-joins before the
+    posting tables enter the join (see ``containment_pairs``) — an
+    empty hot set costs zero posting shuffle; that broadcast hint is
+    size-gated (_NEEDS_BROADCAST_MAX) so an oversized needs set falls
+    back to the shuffle plan instead of failing the job. This is
     the plan you run at 100×."""
     return containment_pairs(
         _docs_with_gram_rows(spark, sf_dir), capped=True
@@ -504,7 +508,7 @@ def q_dedup_containment_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: document-frequency ceiling for containment candidate blocking: only
 #: grams with df ≤ DF_CAP post candidates (the skew lever both gram-join
 #: docstrings reference — this id makes it real and driver-certified).
-#: Sized WELL ABOVE typical near-dup cluster fan-out (r9 advice: at
+#: Sized WELL ABOVE typical near-dup cluster fan-out (at
 #: df_cap=2 any dup cluster of 3+ docs pushes every shared gram past the
 #: cap and the pair posts no candidate) while still bounding every
 #: per-gram candidate bucket at DF_CAP² = 4096 rows — the Σdf² quadratic
@@ -683,7 +687,7 @@ def _simhash_signatures_from_token_hashes(base: DataFrame) -> DataFrame:
     64-column bit matrix summed per doc, majority vote per bit.
 
     Why Python here when the repo doctrine is JVM-first: this REPLACES
-    the r5 packed-lane JVM vote aggregate (22 lane-structured longs
+    a packed-lane JVM vote aggregate (22 lane-structured longs
     summed per doc, itself ~10× over the naive HOF form) after
     measuring the Arrow kernel BIT-IDENTICAL on the sf0.1 corpus and
     5.5× faster warm (0.46 s vs 2.56 s) — ~64 numpy C ops per doc on a
@@ -891,16 +895,15 @@ def _lsh_banded(sigs: DataFrame) -> DataFrame:
 
 
 #: df ceiling for a (band_idx, band_hash) LSH bucket over DISTINCT
-#: signatures — r12 closes the last uncapped blocker (r11 verdict): a band
-#: value shared by more than this many distinct signatures posts no
-#: tier-2 candidates (its bucket would be C(df,2)), so every candidate
+#: signatures: a band value shared by more than this many distinct
+#: signatures posts no tier-2 candidates (its bucket would be C(df,2)), so every candidate
 #: bucket is ≤ LSH_BAND_DF_CAP² by construction — the perceptual tier's
 #: BAND_DF_CAP discipline (multimodal.py) applied to text. The cap acts
 #: on DISTINCT signatures: exact-dup floods (boilerplate, mirrors)
 #: collapse to ONE distinct signature in tier 1 before banding, so they
 #: never inflate band df at all. Sized above the fixtures' max observed
-#: distinct-signature band df (4 / 3 / 13 at sf0.001/0.01/0.1 — probed
-#: r12), so the cap is currently lossless on driver data, pinned by
+#: distinct-signature band df (4 / 3 / 13 at sf0.001/0.01/0.1), so the
+#: cap is currently lossless on driver data, pinned by
 #: q_dedup_blocker_recall's missed-pair row and exercised in cap-miss
 #: mode by q_dedup_lsh_mechanism_cap.
 LSH_BAND_DF_CAP = 64
@@ -920,8 +923,7 @@ def _sig_tagged(sigs: DataFrame) -> DataFrame:
 
 
 def lsh_candidates(sigs: DataFrame, band_df_cap: int | None = None) -> DataFrame:
-    """Banded LSH candidate pairs, in the two-tier scale form (r12 —
-    closes the r11 verdict's last uncapped blocker):
+    """Banded LSH candidate pairs, in the two-tier scale form:
 
     1. **Identical signatures**: docs sharing the full k-slot signature
        (exact-dup populations — identical shingle sets always collide on
@@ -1079,8 +1081,8 @@ def q_dedup_blocker_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
       text, anchoring the certificate to real data).
     - ``minhash_lsh_missed_true_pairs``: true pairs absent from the LSH
       band-bucket candidate set (anti-join). Oracle pins 0 — banding
-      losing recall on this corpus reds the driver hash. r12: the
-      candidate set is now the two-tier capped form (LSH_BAND_DF_CAP),
+      losing recall on this corpus reds the driver hash. The
+      candidate set is the two-tier capped form (LSH_BAND_DF_CAP),
       so this row also pins the production cap lossless.
     - ``minhash_output_vs_exact_diff``: symmetric difference between
       q_dedup_minhash's verified output pairs and the exact pair set,
@@ -1172,12 +1174,12 @@ LSH_MECH_CAP = 2
 
 def q_dedup_lsh_mechanism_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checked MECHANISM-CAP certificate for the text MinHash-LSH
-    blocker (the q_dedup_mechanism_cap pattern applied to the r12 band-df
-    cap): xxhash64 signatures have no DuckDB twin, so — like
-    q_dedup_blocker_recall — the oracle recomputes the TRUE pair anchor
-    from raw text and pins every mechanism property as a literal, making
-    any drift in the collapse/cap/expand plumbing red the driver on
-    values. Rows ``(check_name, value)``:
+    blocker (the q_dedup_mechanism_cap pattern applied to the
+    LSH_BAND_DF_CAP band-df cap): xxhash64 signatures have no DuckDB
+    twin, so — like q_dedup_blocker_recall — the oracle recomputes the
+    TRUE pair anchor from raw text and pins every mechanism property as
+    a literal, making any drift in the collapse/cap/expand plumbing red
+    the driver on values. Rows ``(check_name, value)``:
 
     - ``true_pairs``: exact 3-gram Jaccard pair count (oracle RECOMPUTES
       from text — anchors the certificate to real data).
@@ -1193,8 +1195,8 @@ def q_dedup_lsh_mechanism_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
       the uncapped set (anti-join). Pinned 0 — pruning must only remove.
     - ``tier1_pairs_survive_mech_cap``: identical-signature pairs (the
       exact-dup collapse tier) missing from the capped candidates.
-      Pinned 0 — THE r12 property: an exact-dup flood survives ANY band
-      cap because it is paired in tier 1, before banding.
+      Pinned 0 — THE two-tier property: an exact-dup flood survives ANY
+      band cap because it is paired in tier 1, before banding.
     - ``verified_diff_capped_vs_uncapped``: symmetric difference between
       the verified outputs built from production-capped vs uncapped
       candidates. Pinned 0 — losslessness at the VALUE level, not just
@@ -1421,14 +1423,14 @@ def q_dedup_levenshtein_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     a true lev ≤ 20 pair differs by ≤ 20 tokens and every pair whose
     shorter doc has ≤ 44 tokens lands entirely inside the SimHash tier,
     while pairs with min ≥ 45 tokens (≥ 43 shingles) sit squarely in
-    MinHash's reliable regime. r10 ran SimHash over the FULL corpus; its
-    hamming ≤ 6 band on mid-length template docs emitted 158,768
-    candidates for 79 true pairs, and that candidate shuffle + bounded
-    verify was the measured source of this id's r10 wall-time instability
-    (9.6–25 s swings). The short tier emits 1,880. Both blockers are
-    deterministic (fixed seeds), so equality with the exact output is a
-    reproducible test property, not a distributional claim; the union is
-    verified equal to the exact pairs at sf0.001/0.01/0.1 in tests.
+    MinHash's reliable regime. SimHash over the FULL corpus would emit
+    158,768 candidates for 79 true pairs at sf0.1 from its hamming ≤ 6
+    band on mid-length template docs, and that candidate shuffle +
+    bounded verify swings this id's wall time 9.6–25 s. The short tier
+    emits 1,880. Both blockers are deterministic (fixed seeds), so
+    equality with the exact output is a reproducible test property, not
+    a distributional claim; the union is verified equal to the exact
+    pairs at sf0.001/0.01/0.1 in tests.
     Precision is exact: every candidate is re-checked with Spark's
     bounded ``levenshtein(l, r, k)`` (early-exit at k, −1 filtered) plus
     the same-lang and length residuals, so the output contract is
@@ -1447,11 +1449,11 @@ def q_dedup_levenshtein_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolls shingles, SimHash votes on the distinct raw values of the
     short tail.
 
-    r12: the MinHash leg now runs the two-tier ``lsh_candidates``
+    The MinHash leg runs the two-tier ``lsh_candidates``
     (identical-signature collapse + LSH_BAND_DF_CAP over distinct
-    signatures) — candidate set unchanged on this data (cap lossless,
-    pinned by q_dedup_lsh_mechanism_cap), bucket volume now bounded on
-    dup floods."""
+    signatures): the cap is lossless on this data (pinned by
+    q_dedup_lsh_mechanism_cap), and bucket volume stays bounded on dup
+    floods."""
     base = _docs_with_token_hashes(spark, sf_dir).localCheckpoint()
     mh = lsh_candidates(
         minhash_signatures(
@@ -1499,68 +1501,61 @@ def q_dedup_levenshtein_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- X2e: cluster resolution (pairs → components → keeper) ------------------
 
 
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 50
-) -> DataFrame:
+def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """Connected components of an undirected graph.
 
-    ``edges`` is (u, v) undirected candidate pairs; ``vertices`` is (node).
-    Returns (node, label) where label = the component's minimum node id;
-    isolated vertices label themselves.
+    ``edges`` is (u, v) undirected candidate pairs, each pair in either
+    or both directions; ``vertices`` is (node). Returns (node, label)
+    where label = the component's minimum node id; isolated vertices
+    label themselves, and an edge with a null endpoint is no edge.
 
-    The symmetrized edge list is materialized once, and the same
-    materialization observes its row count. A list of at most
-    ``_NEEDS_BROADCAST_MAX`` rows — the size gate a broadcast join uses —
-    is solved on the driver: it is collected as Arrow and labelled by
-    vectorized union-find (``_min_labels``), then handed back as a small
-    frame. The maintainers' update graphs are O(shard + touched labels)
-    by construction, so they take this path at any corpus size, and it
-    costs two jobs instead of several per propagation round.
+    The edge list is materialized once, as given, and the same
+    materialization observes its row count. The count picks one of two
+    tiers, both reading that checkpoint:
 
-    A larger list runs iterative min-label propagation on the cluster.
-    Each round is one join (neighbor labels) plus one groupBy (min per
-    node): the label front advances one hop per round, so rounds =
-    component diameter. Near-dup clusters are short transitive chains, so
-    this converges in a handful of rounds; when component diameters are
-    unbounded, swap in ``connected_components_star`` (alternating
-    large-star/small-star, O(log n) rounds, same output contract,
-    equality unit-tested). Lineage is truncated every round with a
-    localCheckpoint — without it the iterated plan nests one join per
-    round and the optimizer re-analyzes the whole history each time (on
-    a cluster, point spark.sparkContext.setCheckpointDir at durable
-    storage and use checkpoint() instead).
+    - at most ``_NEEDS_BROADCAST_MAX`` rows (the size gate a broadcast
+      join uses): the list is collected as Arrow and labelled on the
+      driver by vectorized union-find (``_min_labels``), then handed
+      back as a small frame. The maintainers' update graphs are
+      O(shard + touched labels) by construction, so they take this tier
+      at any corpus size, for two jobs in all.
+    - above it: ``connected_components_star``, whose alternating
+      large-star/small-star rounds number O(log n) whatever the
+      component diameters.
     """
-    # materialize the symmetrized edge list ONCE — both paths read it,
-    # and without this the (possibly expensive) upstream pair-finding
-    # plan would re-execute per read; its size is observed in that job
+    # materialize ONCE: without it the (possibly expensive) upstream
+    # pair-finding plan would re-execute for the gate and again for the
+    # tier that reads it
     size = Observation()
-    sym = (
+    e = (
         edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .observe(size, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    if size.get["n"] <= _NEEDS_BROADCAST_MAX:
-        t = sym.schema["u"].dataType
-        labels = sym.sparkSession.createDataFrame(
-            _min_labels(sym.toArrow()),
-            StructType([StructField("node", t), StructField("label", t)]),
-        )
-    else:
-        labels = _propagated_labels(sym, max_iter)
-    # total assignment: isolated vertices label themselves. The label table
-    # has one row per edge endpoint — small next to |V| — so the join
-    # broadcasts it.
+    if size.get["n"] > _NEEDS_BROADCAST_MAX:
+        return connected_components_star(e, vertices)
+    t = e.schema["u"].dataType
+    labels = e.sparkSession.createDataFrame(
+        _min_labels(e.toArrow()),
+        StructType([StructField("node", t), StructField("label", t)]),
+    )
+    return _total_labels(vertices, labels)
+
+
+def _total_labels(vertices: DataFrame, labels: DataFrame) -> DataFrame:
+    """(node, label) for every vertex: isolated vertices label
+    themselves. ``labels`` has one row per edge endpoint — in a near-dup
+    graph small next to |V| — so below the gate the join broadcasts it."""
     return vertices.join(labels, "node", "left").select(
         "node", F.coalesce("label", "node").alias("label")
     )
 
 
-def _min_labels(sym: pa.Table) -> pa.Table:
-    """(node, label = component minimum) for every node of the symmetric
-    Arrow edge list ``sym`` (u, v), by vectorized union-find on the
-    driver. Rows with a null endpoint are no edge, as in the propagation
-    rounds (a null never matches a join key).
+def _min_labels(edges: pa.Table) -> pa.Table:
+    """(node, label = component minimum) for every endpoint of the
+    undirected Arrow edge list ``edges`` (u, v), by vectorized union-find
+    on the driver. Direction does not matter, and rows with a null
+    endpoint are no edge.
 
     Nodes are indexed in sorted order, so a smaller index is a smaller
     id. Every parent pointer points at an index ≤ its own, so each tree's
@@ -1568,9 +1563,9 @@ def _min_labels(sym: pa.Table) -> pa.Table:
     then hooks the larger root of each edge that still joins two trees
     onto the smaller one; each round removes at least one root, and the
     loop stops when no edge crosses trees."""
-    sym = sym.drop_null()
-    u = sym.column("u").to_numpy()
-    v = sym.column("v").to_numpy()
+    edges = edges.drop_null()
+    u = edges.column("u").to_numpy()
+    v = edges.column("v").to_numpy()
     nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
     a, b = idx[: len(u)], idx[len(u) :]
     parent = np.arange(len(nodes))
@@ -1583,60 +1578,10 @@ def _min_labels(sym: pa.Table) -> pa.Table:
             break
         ra, rb = ra[cross], rb[cross]
         np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
-    t = sym.schema.field("u").type
+    t = edges.schema.field("u").type
     return pa.table(
         {"node": pa.array(nodes, t), "label": pa.array(nodes[parent], t)}
     )
-
-
-def _propagated_labels(sym: DataFrame, max_iter: int) -> DataFrame:
-    """(node, label) for every node of the materialized symmetric edge
-    list ``sym`` by min-label propagation rounds on the cluster.
-
-    Only nodes that touch an edge iterate — an isolated vertex can never
-    receive a neighbor label, so near-dup graphs (dup fraction ≪ 1)
-    shrink each round from |V| to ~2·|E| rows; the caller labels isolated
-    vertices as themselves."""
-    # labels start at the 1-hop minimum min(u, min N(u)) — what one round
-    # from the identity init computes — for the single exchange the
-    # distinct-nodes init would pay anyway. Each round's checkpoint is
-    # lazy: the convergence aggregate materializes it (persisting and
-    # truncating lineage) and sums the labels in one job.
-    labels = (
-        sym.groupBy("u")
-        .agg(F.min(F.least(F.col("u"), F.col("v"))).alias("label"))
-        .withColumnRenamed("u", "node")
-        .localCheckpoint(eager=False)
-    )
-    # A round is one join + one aggregate: a node's next label is
-    # min(own label, neighbor labels), taken by one min-groupBy over the
-    # label table unioned with the neighbor-label messages. Labels only
-    # ever decrease, so the label sum is strictly monotone and stalls
-    # exactly at the fixpoint (decimal sum: exact at any node-id
-    # magnitude, no ANSI long-overflow hazard).
-    prev_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).first()["s"]
-    for _ in range(max_iter):
-        msgs = (
-            sym.alias("e")
-            .join(labels.alias("l"), F.col("e.v") == F.col("l.node"))
-            .select(F.col("e.u").alias("node"), F.col("l.label").alias("label"))
-        )
-        stepped = (
-            labels.unionByName(msgs)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = stepped.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).first()["s"]
-        labels = stepped
-        if new_sum == prev_sum:
-            return labels
-        prev_sum = new_sum
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
 
 
 def maintain_clusters(
@@ -1731,23 +1676,21 @@ def advance_state(
     )
 
 
-def connected_components_star(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 30
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """Connected components by alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm): the O(log n)-round scale path promised in
-    ``connected_components``'s docstring, with the same (node, label)
-    output contract (label = component minimum; isolated vertices label
-    themselves). Equality with the propagation form is unit-tested on
-    chains, random graphs, and the real near-dup pair stream.
+    SoCC'14 — public algorithm): the above-gate tier of
+    ``connected_components``, with the same (node, label) output contract
+    (label = component minimum; isolated vertices label themselves; an
+    edge with a null endpoint is no edge). Equality with the driver tier
+    is unit-tested on paths, random graphs, and the real near-dup pair
+    stream.
 
     Each round is two edge transforms, each one groupBy + one join on the
     current edge list — per-round cost is O(|E|) shuffle rows with no
-    vertex-diameter dependence, so a path graph that takes D rounds of
-    label propagation finishes in O(log D) star rounds. Convergence is
-    detected by EXACT edge-set equality: a count per round (one tiny agg
-    job, same job count as the propagation loop's `changed` check), and
+    vertex-diameter dependence, so a path of D hops finishes in O(log D)
+    rounds (at most ``_STAR_MAX_ROUNDS``). Convergence is detected by
+    EXACT edge-set equality: a count per round (one tiny agg job), and
     only when consecutive counts match, an `exceptAll(...).isEmpty()`
     difference check over the two checkpointed edge lists. Both lists are
     distinct, so equal counts + empty difference ⟺ identical sets — no
@@ -1804,7 +1747,8 @@ def connected_components_star(
 
     # lazy checkpoints: the per-round count both materializes the round's
     # edge list (persist + lineage truncation) and reads its cardinality
-    # in ONE job
+    # in ONE job. greatest/least skip a null, so an edge with one null
+    # endpoint becomes a self-loop and the filter drops it with the rest.
     e = (
         edges.select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
@@ -1814,7 +1758,7 @@ def connected_components_star(
         .localCheckpoint(eager=False)
     )
     n = e.count()
-    for _ in range(max_iter):
+    for _ in range(_STAR_MAX_ROUNDS):
         stepped = _small_star(_large_star(e)).localCheckpoint(eager=False)
         m = stepped.count()
         # exact set equality over the two materialized distinct edge
@@ -1826,13 +1770,13 @@ def connected_components_star(
         e, n = stepped, m
     else:
         raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iter} rounds"
+            "connected_components_star: no fixpoint in "
+            f"{_STAR_MAX_ROUNDS} rounds"
         )
     # fixpoint is a star forest: every remaining edge points node → root.
     # Roots and isolated vertices label themselves.
-    labels = e.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    return vertices.join(labels, "node", "left").select(
-        "node", F.coalesce("label", "node").alias("label")
+    return _total_labels(
+        vertices, e.select(F.col("u").alias("node"), F.col("v").alias("label"))
     )
 
 
@@ -2057,10 +2001,11 @@ def q_dedup_keeper_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_dedup_clusters with components resolved by the alternating-star
-    algorithm (``connected_components_star``) instead of label
-    propagation — registered separately so the O(log n)-round scale path
-    is itself driver-checked against the SAME recursive-CTE oracle, not
-    just unit-tested equal to the propagation form."""
+    tier (``connected_components_star``) called directly, skipping the
+    size gate of ``connected_components`` — registered separately because
+    at fixture sizes every other id takes the driver tier, so this is the
+    one id that checks the above-gate tier against the SAME
+    recursive-CTE oracle, not just in unit tests."""
     pairs = q_dedup_ngram_jaccard(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
@@ -2077,12 +2022,13 @@ def q_dedup_clusters_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilistic blockers (MinHash-LSH ∪ SimHash, both fed from ONE
     checkpointed token-hash base) → exact-Jaccard verification of ONLY the
     candidates (hashed 3-gram shingles, same arithmetic as the ground-truth
-    pair source) → alternating-star connected components over
-    REPRESENTATIVES → member expansion → cluster table. Every stage is the
-    corpus-linear scale form: no (lang, block) pair enumeration anywhere,
-    candidate volume scales with the near-dup rate, components converge in
-    O(log n) rounds. This is the composition that runs at 100 TB;
-    q_dedup_clusters/_star are its exact-pair-source ground-truth twins.
+    pair source) → connected components over REPRESENTATIVES → member
+    expansion → cluster table. Every stage is the corpus-linear scale form:
+    no (lang, block) pair enumeration anywhere, candidate volume scales
+    with the near-dup rate, and components are solved on the driver up to
+    the size gate and by O(log n) star rounds above it. This is the
+    composition that runs at 100 TB; q_dedup_clusters/_star are its
+    exact-pair-source ground-truth twins.
 
     The pre-collapse: docs are grouped by (lang, md5 of normalized
     text) — the q_dedup_exact fingerprint — and only one representative
@@ -2121,7 +2067,7 @@ def bounded_component_assignment(
     """The q_dedup_clusters_bounded engine over ANY documents frame
     (doc_id, lang, text): (lang, md5) pre-collapse → MinHash-LSH ∪
     SimHash blockers over representatives → exact hashed-shingle
-    Jaccard verify → alternating-star components → member expansion.
+    Jaccard verify → ``connected_components`` → member expansion.
     Returns the TOTAL (node, label) assignment (label = component
     minimum; singletons label themselves). The incremental text-cluster
     maintainer builds its stored corpus state with it, so the state has
@@ -2225,10 +2171,10 @@ def bounded_component_assignment(
         )
     ).select("doc_a", "doc_b")
     # no global distinct on the candidate union — the only consumer is
-    # the verify join feeding star CC, whose entry canonicalizes +
-    # distincts edges anyway; a duplicate candidate (a pair both
-    # blockers surface) costs one extra verify row, where the distinct
-    # would cost a full exchange of the candidate stream
+    # the verify join feeding the components, which take duplicate edges
+    # in either tier; a duplicate candidate (a pair both blockers
+    # surface) costs one extra verify row, where the distinct would cost
+    # a full exchange of the candidate stream
     cands = mh.union(sim)
     # the verify join attaches the shingle arrays to the candidate
     # stream — size-gate a broadcast of the (already checkpointed)
@@ -2245,7 +2191,7 @@ def bounded_component_assignment(
     # components over REPRESENTATIVES only; members inherit their rep's
     # label (rep = group minimum, so min-label semantics are preserved
     # through the contraction — see docstring)
-    rep_comps = connected_components_star(
+    rep_comps = connected_components(
         pairs, base.select(F.col("doc_id").alias("node"))
     )
     return (

@@ -236,7 +236,7 @@ def q_join_jaro(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end entity resolution: blocked JW match edges → min-label
-    connected components (reusing dedup's propagation engine) → one row
+    connected components (reusing dedup's components engine) → one row
     per entity cluster with side counts. Matched clean/dirty re-entries
     collapse into one cluster keyed by the smallest record id; unmatched
     records stay singleton clusters (counted via the vertex union, not

@@ -1,6 +1,6 @@
 """Graph analytics beyond connected components (which lives with dedup —
-``operators/dedup.py::connected_components{,_star}``): weighted PageRank
-over the event-type transition graph.
+``operators/dedup.py::connected_components``): weighted PageRank over the
+event-type transition graph.
 
 The graph: nodes are event types, a directed edge (src → dst) carries the
 count of observed per-user transitions (the q_event_transitions matrix),
@@ -20,8 +20,8 @@ recursive member).
 Scale notes: each iteration is one edge-keyed join + one dst-keyed
 aggregate — the standard Pregel-as-DataFrame shape. The plan grows
 linearly with iterations; for big graphs / many rounds the lineage must
-be cut per round (``localCheckpoint``, exactly as
-``connected_components`` at ``dedup.py`` does); at 3 rounds the plan is
+be cut per round (``localCheckpoint``, exactly as the star rounds of
+``connected_components_star`` at ``dedup.py`` do); at 3 rounds the plan is
 small enough to leave uncut so Catalyst sees the whole pipeline.
 Dangling nodes (no out-edges) get no redistribution here — the event
 graph is strongly connected in practice; a web-scale variant adds the
@@ -127,7 +127,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributions). The support filter cuts
     the edge set before any node-keyed shuffle. The oriented edge set
     feeds THREE join branches, so it is localCheckpoint-ed (the
-    ``connected_components`` lineage-cut pattern at ``dedup.py``) —
+    materialize-once pattern of ``connected_components`` at ``dedup.py``) —
     without it Catalyst re-derives the whole pair-build per branch and
     the fact table is scanned six times."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -189,14 +189,15 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel/BSP shape where per-round work is O(frontier out-edges), not
     O(graph). The driver-side empty-frontier early exit is one tiny
     count per round, the same stopping job every iterative Spark
-    algorithm pays (cf. ``connected_components`` at ``dedup.py``).
+    algorithm pays (cf. the per-round count of
+    ``connected_components_star`` at ``dedup.py``).
 
     The oracle is a recursive CTE enumerating all walk depths ≤
     BFS_MAX_HOPS then taking MIN per node — first-visit depth and
     min-over-walks are the same function, so the iterative engine form
     is checked against a declarative spelling, not a twin of itself.
     At real scale the per-round lineage is cut with ``localCheckpoint``
-    (as ``connected_components`` does); at ≤6 rounds on a
+    (as ``connected_components_star`` does); at ≤6 rounds on a
     handful-of-nodes graph the plan stays whole so Catalyst sees it."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -505,8 +505,9 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     would-be leaks plus their collateral).
 
     Scale: the pair source and components are the documented dedup-tier
-    shapes (at 100 TB swap in the bounded blocker composition and
-    ``connected_components_star``); the split itself adds one
+    shapes (at 100 TB swap in the bounded blocker composition;
+    ``connected_components`` moves to star rounds above its size gate
+    by itself); the split itself adds one
     label-join plus stateless hash expressions — nothing new shuffles.
     Oracle: the recursive-CTE component fixpoint + the identical md5
     bucket arithmetic."""

@@ -1,8 +1,10 @@
 """``connected_components``: edge lists up to ``_NEEDS_BROADCAST_MAX``
-rows are solved on the driver, larger ones by propagation rounds on the
-cluster. Both paths must give the same (node, label) rows: label = the
-component minimum, isolated vertices label themselves, and both columns
-keep the id column's type."""
+rows are solved on the driver, larger ones by ``connected_components_star``
+rounds on the cluster. Both tiers must give the same (node, label) rows:
+label = the component minimum, isolated vertices label themselves, an
+edge with a null endpoint is no edge, and both columns keep the id
+column's type. Setting ``_NEEDS_BROADCAST_MAX`` to -1 forces the star
+tier at any size."""
 
 from __future__ import annotations
 
@@ -17,6 +19,8 @@ def _reference(edges, nodes):
     """Component minimum per node by a plain graph search."""
     adj: dict = {}
     for u, v in edges:
+        if u is None or v is None:
+            continue
         adj.setdefault(u, set()).add(v)
         adj.setdefault(v, set()).add(u)
     label: dict = {}
@@ -34,20 +38,21 @@ def _reference(edges, nodes):
 
 def _graph(seed, span):
     """Sparse ids of both signs, self-loops, duplicate and reversed
-    edges, vertices without edges, and edge endpoints missing from the
-    vertex set."""
+    edges, an edge with a null endpoint, vertices without edges, and edge
+    endpoints missing from the vertex set."""
     rng = random.Random(seed)
     ids = rng.sample(range(-span, span), 80)
     edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(60)]
     edges += [(ids[0], ids[0]), (ids[1], ids[1])]
     edges += edges[:5] + [(v, u) for u, v in edges[5:10]]
+    edges += [(ids[2], None)]
     return edges, ids[:70]
 
 
 def _components(spark, edges, nodes, typ, monkeypatch, driver):
-    """Labels from ``connected_components``, asserting which path ran."""
+    """Labels from ``connected_components``, asserting which tier ran."""
     ran = []
-    for name in ("_min_labels", "_propagated_labels"):
+    for name in ("_min_labels", "connected_components_star"):
         real = getattr(dedup, name)
         monkeypatch.setattr(
             dedup, name, lambda *a, _n=name, _f=real: ran.append(_n) or _f(*a)
@@ -60,7 +65,7 @@ def _components(spark, edges, nodes, typ, monkeypatch, driver):
     )
     got = {(r.node, r.label) for r in out.collect()}
     monkeypatch.undo()
-    assert ran == ["_min_labels" if driver else "_propagated_labels"]
+    assert ran == ["_min_labels" if driver else "connected_components_star"]
     spark_type = {"int": "int", "long": "bigint"}[typ]
     assert out.schema.simpleString() == (
         f"struct<node:{spark_type},label:{spark_type}>"
@@ -83,6 +88,18 @@ def test_components_of_an_empty_edge_set(spark, monkeypatch):
     want = {(n, n) for n in nodes}
     for driver in (True, False):
         assert _components(spark, [], nodes, "long", monkeypatch, driver) == want
+
+
+def test_star_tier_labels_a_long_shuffled_path(spark, monkeypatch):
+    """A path's diameter is its length, the worst case for any tier whose
+    rounds follow the diameter; star rounds are O(log n), so a 10,000-node
+    path with shuffled ids converges inside the round bound and every node
+    gets the path minimum."""
+    rng = random.Random(11)
+    ids = rng.sample(range(-(2**40), 2**40), 10_000)
+    edges = list(zip(ids, ids[1:]))
+    got = _components(spark, edges, ids, "long", monkeypatch, driver=False)
+    assert got == {(n, min(ids)) for n in ids}
 
 
 def test_driver_components_without_arrow_conversion(spark, monkeypatch):

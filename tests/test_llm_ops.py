@@ -481,10 +481,11 @@ def test_connected_components_transitive_chain(spark):
 
 
 @pytest.mark.slow
-def test_star_components_equal_propagation(spark, sf_dir):
-    """The alternating large-star/small-star form must produce the exact
-    same (node, label) assignment as min-label propagation on: a long
-    path (the propagation worst case — D rounds vs O(log D)), a
+def test_star_components_equal_driver_tier(spark, sf_dir):
+    """The alternating large-star/small-star tier must produce the exact
+    same (node, label) assignment as the driver union-find tier that
+    ``connected_components`` takes at these sizes, on: a long path (one
+    hop per round would need D rounds, star needs O(log D)), a
     multi-component random graph, and the real near-dup pair stream."""
     import random
 
