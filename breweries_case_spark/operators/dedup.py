@@ -26,6 +26,8 @@ at test scale."""
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -235,7 +237,9 @@ CONTAINMENT_THRESHOLD = 0.8
 #: the shuffle semi-join plan instead of risking a broadcast OOM. The
 #: same bound caps the edge list that ``connected_components`` collects
 #: and solves on the driver: one row per edge as the caller gives it, not
-#: symmetrized, so still ≈ 16 MB of long pairs.
+#: symmetrized, so still ≈ 16 MB of long pairs — and the update graph
+#: ``maintain_clusters`` collects (one row per shard id or edge, plus a
+#: one-byte kind).
 _NEEDS_BROADCAST_MAX = 1_000_000
 
 #: round bound of ``connected_components_star``: star rounds number
@@ -1584,9 +1588,28 @@ def _min_labels(edges: pa.Table) -> pa.Table:
     )
 
 
+#: row kinds of a ``maintain_clusters`` update graph: a shard id (as a
+#: self-loop), a shard item's contact with a stored label, and a
+#: verified pair of shard items
+_SHARD, _CONTACT, _INTRA = 0, 1, 2
+
+
+class ClusterUpdate(NamedTuple):
+    """One ``maintain_clusters`` result. ``out`` = one row per shard
+    item (node, cluster_id, verdict); ``comps`` = (node, label) over the
+    update graph's nodes; ``lab_nodes`` = the touched stored labels
+    (node); ``remap`` = (label0, newl), where each touched stored label
+    moved (``touched_remap``)."""
+
+    out: DataFrame
+    comps: DataFrame
+    lab_nodes: DataFrame
+    remap: DataFrame
+
+
 def maintain_clusters(
     shard_ids: DataFrame, e_corpus: DataFrame, e_shard: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> ClusterUpdate:
     """The contraction step every incremental cluster maintainer (text,
     image, video) ends in: assign a new shard to the EXISTING clusters,
     or mint new cluster ids, without recomputing the corpus fixpoint.
@@ -1594,52 +1617,136 @@ def maintain_clusters(
     A stored corpus cluster is already connected, so it enters the
     update as ONE node — its label. The update graph is
 
-        nodes = ``shard_ids`` (node) ∪ the stored labels the shard touches
+        nodes = ``shard_ids`` (node, distinct) ∪ the stored labels the
+                shard touches
         edges = ``e_corpus`` (u = shard item, v = stored label it was
                 verified against) ∪ ``e_shard`` (u, v = verified pairs
-                of shard items)
+                of shard items; a null endpoint is no edge)
 
-    and one min-label ``connected_components`` over it reproduces the
+    and one min-label components pass over it reproduces the
     full-recompute fixpoint restricted to shard-touched components:
     stored labels are their clusters' minima, and every combined-graph
     path between corpus items crosses the shard only through verified
     shard↔corpus edges (corpus↔corpus edges are already inside the
     stored clusters). Work is O(shard + touched labels), never O(corpus).
 
-    Returns ``out`` = one row per shard item (node, cluster_id = its
-    post-update label, verdict 'new' — no stored cluster in its
-    component; 'attached' — exactly one; 'merged' — its arrival bridged
-    ≥ 2 formerly separate stored clusters), ``comps`` = the update
-    graph's (node, label) assignment, and ``lab_nodes`` = the touched
-    stored labels (node). ``comps`` + ``lab_nodes`` are what evolving the
-    stored state needs (``advance_state``)."""
-    lab_nodes = e_corpus.select(F.col("v").alias("node")).distinct()
-    nodes = shard_ids.union(e_corpus.select(F.col("v").alias("node"))).distinct()
-    comps = connected_components(e_corpus.unionByName(e_shard), nodes)
+    The graph is materialized ONCE — shard ids as self-loops, contact
+    edges and intra-shard edges in one tagged checkpoint whose row count
+    is observed — and that count picks one of two tiers, both reading
+    the checkpoint:
+
+    - at most ``_NEEDS_BROADCAST_MAX`` rows: the checkpoint is collected
+      once as Arrow, and one driver union-find (``_min_labels``) yields
+      the labels, each component's count of stored labels and so the
+      verdicts, and the touched remap. They come back as small frames;
+      Spark runs no join or aggregation for them.
+    - above it: ``connected_components_star`` over the same checkpoint,
+      and the verdicts, touched labels and remap by Spark joins (the
+      remap materialized, since it relabels state and earlier days).
+
+    Returns a ``ClusterUpdate``: ``out`` has one row per shard item
+    (node, cluster_id = its post-update label, verdict 'new' — no stored
+    cluster in its component; 'attached' — exactly one; 'merged' — its
+    arrival bridged ≥ 2 formerly separate stored clusters)."""
+    size = Observation()
+    loops = shard_ids.select(F.col("node").alias("u"), F.col("node").alias("v"))
+    g = (
+        _tagged(loops, _SHARD)
+        .unionByName(_tagged(e_corpus, _CONTACT))
+        .unionByName(_tagged(e_shard, _INTRA))
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    if size.get["n"] > _NEEDS_BROADCAST_MAX:
+        return _maintain_on_cluster(g)
+    return _maintain_on_driver(g)
+
+
+def _tagged(edges: DataFrame, kind: int) -> DataFrame:
+    return edges.select("u", "v", F.lit(kind).cast("byte").alias("kind"))
+
+
+def _with_verdict(labelled: DataFrame) -> DataFrame:
+    """(node, cluster_id, n_corpus) → (node, cluster_id, verdict), where
+    n_corpus counts the stored labels in the node's component."""
+    n = F.coalesce(F.col("n_corpus"), F.lit(0))
+    return labelled.select(
+        "node",
+        "cluster_id",
+        F.when(n == 0, F.lit("new"))
+        .when(n == 1, F.lit("attached"))
+        .otherwise(F.lit("merged"))
+        .alias("verdict"),
+    )
+
+
+def _maintain_on_driver(g: DataFrame) -> ClusterUpdate:
+    """The driver tier of ``maintain_clusters`` over its graph checkpoint."""
+    t = g.toArrow().drop_null()
+    kind = t.column("kind").to_numpy()
+    v = t.column("v").to_numpy()
+    comps = _min_labels(t.select(["u", "v"]))
+    nodes = comps.column("node").to_numpy()
+    label = comps.column("label").to_numpy()
+    shard = v[kind == _SHARD]
+    labs = np.unique(v[kind == _CONTACT])
+    # nodes are sorted and every label is a node, so positions index the
+    # component roots; n_root counts each root's stored labels
+    root = np.searchsorted(nodes, label)
+    s_at, l_at = np.searchsorted(nodes, shard), np.searchsorted(nodes, labs)
+    n_root = np.bincount(root[l_at], minlength=len(nodes))
+    typ = t.schema.field("u").type
+    spark = g.sparkSession
+
+    def frame(**cols):
+        return spark.createDataFrame(
+            pa.table({k: pa.array(c, typ) for k, c in cols.items()})
+        )
+
+    return ClusterUpdate(
+        out=_with_verdict(
+            frame(node=shard, cluster_id=label[s_at], n_corpus=n_root[root[s_at]])
+        ),
+        comps=spark.createDataFrame(comps),
+        lab_nodes=frame(node=labs),
+        remap=frame(label0=labs, newl=label[l_at]),
+    )
+
+
+def _maintain_on_cluster(g: DataFrame) -> ClusterUpdate:
+    """The above-gate tier of ``maintain_clusters``: star rounds over its
+    graph checkpoint, then the verdicts and remap by Spark joins."""
+    shard_ids = g.filter(F.col("kind") == _SHARD).select(F.col("u").alias("node"))
+    lab_nodes = (
+        g.filter(F.col("kind") == _CONTACT)
+        .select(F.col("v").alias("node"))
+        .distinct()
+    )
+    comps = connected_components_star(
+        g.select("u", "v"), shard_ids.unionByName(lab_nodes).distinct()
+    )
     comp_corpus = (
         comps.join(lab_nodes, "node")
         .groupBy("label")
         .agg(F.countDistinct("node").alias("n_corpus"))
     )
-    out = (
+    out = _with_verdict(
         shard_ids.join(comps, "node")
         .join(comp_corpus, "label", "left")
-        .select(
-            "node",
-            F.col("label").alias("cluster_id"),
-            F.when(F.coalesce(F.col("n_corpus"), F.lit(0)) == 0, F.lit("new"))
-            .when(F.col("n_corpus") == 1, F.lit("attached"))
-            .otherwise(F.lit("merged"))
-            .alias("verdict"),
-        )
+        .select("node", F.col("label").alias("cluster_id"), "n_corpus")
     )
-    return out, comps, lab_nodes
+    remap = touched_remap(comps, lab_nodes).localCheckpoint()
+    return ClusterUpdate(out, comps, lab_nodes, remap)
 
 
 def touched_remap(comps: DataFrame, lab_nodes: DataFrame) -> DataFrame:
     """(label0, newl): where the update graph moved each touched stored
     label. Untouched labels have no row — by definition they have no
-    edge to the shard, so their clusters keep their label."""
+    edge to the shard, so their clusters keep their label. The driver
+    tier of ``maintain_clusters`` computes the same rows on the driver
+    (``ClusterUpdate.remap``); this is the Spark form the above-gate tier
+    runs. For the image chain a stored label is a label of the stored
+    hash index."""
     return comps.join(lab_nodes, "node").select(
         F.col("node").alias("label0"), F.col("label").alias("newl")
     )
@@ -1657,23 +1764,20 @@ def relabel(rows: DataFrame, remap: DataFrame) -> DataFrame:
 
 
 def advance_state(
-    state: DataFrame,
-    update: tuple[DataFrame, DataFrame, DataFrame],
-    key: str,
-) -> tuple[DataFrame, DataFrame]:
+    state: DataFrame, update: ClusterUpdate, added: DataFrame
+) -> DataFrame:
     """One day's state-advance step of a maintainer chain: ``state`` is
-    the stored (key, label) assignment the day probed and ``update`` its
-    ``maintain_clusters`` result (``out`` keyed by ``key``). Returns
-    (remap, next state): the touched-label remap, materialized because
-    it relabels both this state and, on a later day, earlier days'
-    shard rows (``relabel``); and the lazy next state — stored rows with
-    touched labels remapped, plus the shard's rows. Cost is O(touched)
-    plus the shard append, never a corpus rewrite."""
-    out, comps, lab_nodes = update
-    remap = touched_remap(comps, lab_nodes).localCheckpoint()
-    return remap, relabel(state, remap).unionByName(
-        out.select(key, F.col("cluster_id").alias("label"))
-    )
+    the stored (…, label) table the day probed, ``update`` its
+    ``maintain_clusters`` result and ``added`` the rows the shard adds
+    to the state, already carrying their post-update labels. Returns
+    the lazy next state: stored rows with touched labels remapped
+    (``update.remap``), plus ``added``. Cost is O(touched) plus the
+    append, never a corpus rewrite.
+
+    For the image chain the state is the stored hash index — one
+    (hash_hi, hash_lo, label) row per distinct stored hash — and
+    ``added`` holds the shard's hashes the index did not hold yet."""
+    return relabel(state, update.remap).unionByName(added)
 
 
 def connected_components_star(edges: DataFrame, vertices: DataFrame) -> DataFrame:
@@ -2319,7 +2423,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _text_cluster_update(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[ClusterUpdate, DataFrame]:
     """Incremental TEXT-cluster maintainer: assign a new document shard
     (doc_id % 20 == 0) to the EXISTING near-dup clusters, or mint new
     ids, without recomputing the corpus fixpoint (``maintain_clusters``
@@ -2337,9 +2441,9 @@ def _text_cluster_update(
     Identical-text arrivals need no separate exact tier: identical
     shingle sets share every LSH band, so the probe already pairs them.
 
-    Returns (out = shard verdict rows (doc_id, cluster_id, verdict),
-    comps, lab_nodes, corpus_assign = the stored corpus state) — the
-    keeper election (q_dedup_text_keeper) reuses the update pieces.
+    Returns (the ``ClusterUpdate``, its ``out`` keyed by doc_id,
+    corpus_assign = the stored corpus state) — the keeper election
+    (q_dedup_text_keeper) reuses the remap and the state.
     Oracle (q_dedup_text_cluster_incremental): the exact 3-gram Jaccard
     pair CTEs + TWO recursive fixpoints (corpus-only stored state, full
     corpus+shard ground truth) — label equality proves the contraction
@@ -2383,7 +2487,6 @@ def _text_cluster_update(
         .join(corpus_assign.withColumnRenamed("node", "doc_b"), "doc_b")
         .select(F.col("doc_a").alias("u"), F.col("label").alias("v"))
         .distinct()
-        .localCheckpoint()
     )
     # no distinct on the blocker union: edges feed the min-label CC,
     # where duplicate edges are harmless (min over a multiset)
@@ -2398,10 +2501,11 @@ def _text_cluster_update(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
 
-    out, comps, lab_nodes = maintain_clusters(
+    update = maintain_clusters(
         shard_sh.select(F.col("doc_id").alias("node")), e_corpus, e_shard
     )
-    return out.withColumnRenamed("node", "doc_id"), comps, lab_nodes, corpus_assign
+    out = update.out.withColumnRenamed("node", "doc_id")
+    return update._replace(out=out), corpus_assign
 
 
 def q_dedup_text_cluster_incremental(
@@ -2410,8 +2514,8 @@ def q_dedup_text_cluster_incremental(
     """Incremental TEXT-cluster maintainer: one row per shard doc —
     (doc_id, cluster_id = the post-update fixpoint label, verdict
     'attached'/'merged'/'new'). See ``_text_cluster_update``."""
-    out, _comps, _labs, _state = _text_cluster_update(spark, sf_dir)
-    return out
+    update, _state = _text_cluster_update(spark, sf_dir)
+    return update.out
 
 
 def q_dedup_text_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2437,15 +2541,12 @@ def q_dedup_text_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     order agree with ground truth."""
     from breweries_case_spark.operators.text import gate_scored
 
-    out, comps, lab_nodes, corpus_assign = _text_cluster_update(
-        spark, sf_dir
-    )
-    remap = touched_remap(comps, lab_nodes)
+    update, corpus_assign = _text_cluster_update(spark, sf_dir)
     corpus_members = (
-        corpus_assign.join(remap, F.col("label") == F.col("label0"))
+        corpus_assign.join(update.remap, F.col("label") == F.col("label0"))
         .select(F.col("node").alias("doc_id"), F.col("newl").alias("cluster_id"))
     )
-    members = corpus_members.unionByName(out.select("doc_id", "cluster_id"))
+    members = corpus_members.unionByName(update.out.select("doc_id", "cluster_id"))
     docs = load_table(spark, sf_dir, "documents")
     m = (
         members.join(docs.select("doc_id", "n_chars"), "doc_id")

@@ -562,7 +562,7 @@ def q_multimodal_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL decode pipeline (oracle-backed since r5 — the payloads are
+    """REAL decode pipeline (oracle-backed — the payloads are
     closed-form functions of (doc_id, n_chars), so DuckDB recomputes
     features and container byte sizes): synthesize genuine WAV/BMP/IVF
     binaries (``synth_media_table``), then extract features with the
@@ -574,7 +574,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The registered form projects the 4-slot feature vector to scalar
     columns ``f0..f3`` — a list-typed cell is unsortable/unhashable on
-    any pandas-based comparison bridge (the r5 driver err), and the
+    any pandas-based comparison bridge, and the
     same rule already keeps arrays out of q_embed_normalize's hashed
     output. The library function (``extract_features``) keeps the
     array form."""
@@ -684,25 +684,24 @@ def q_multimodal_real_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: 16-bit bands the banded blocker is LOSSLESS by pigeonhole
 #: (≤ 3 differing bits cannot touch all 4 bands)
 IMG_HAMMING_MAX = 3
-#: band COUNT for the banded blocker — a parameter (r9 verdict): the
+#: band COUNT for the banded blocker — a parameter, not a constant: the
 #: pigeonhole guarantee needs n_bands ≥ IMG_HAMMING_MAX + 1, and wider
 #: bands (fewer of them) collide less on hash-uniform data, so 4×16-bit
 #: is the max-width lossless geometry for a 64-bit hash at hamming ≤ 3;
 #: a 128-bit fingerprint at larger corpus scales would run 4×32-bit
 #: bands (expected random collisions per band ~ |distinct|²/2^width).
 _HASH_BANDS = 4
-#: df ceiling for a (band_idx, band_val) bucket over DISTINCT hashes —
-#: the r9 scale-killer fix: a band value shared by more than this many
-#: distinct hashes posts no candidates (its bucket would be C(df,2)),
-#: so every candidate bucket is ≤ BAND_DF_CAP² by construction. Sized
-#: above the driver fixtures' max observed band df (61 at sf0.1 — the
-#: audio sawtooth's saturated all-ones bands) so the cap is currently
-#: lossless on driver data, pinned by q_dedup_perceptual_capped's
-#: missed-pair-count = 0 oracle. NOTE the cap acts on DISTINCT hashes:
-#: the constant-hash populations the r9 verdict named (black frames,
-#: silence, boilerplate intros) collapse to ONE distinct hash before
-#: banding, so they never inflate band df at all — the cap only guards
-#: residual near-collisions between distinct values.
+#: df ceiling for a (band_idx, band_val) bucket over DISTINCT hashes: a
+#: band value shared by more than this many distinct hashes posts no
+#: candidates (its bucket would be C(df,2)), so every candidate bucket
+#: is ≤ BAND_DF_CAP² by construction. Sized above the driver fixtures'
+#: max observed band df (61 at sf0.1 — the audio sawtooth's saturated
+#: all-ones bands) so the cap is currently lossless on driver data,
+#: pinned by q_dedup_perceptual_capped's missed-pair-count = 0 oracle.
+#: NOTE the cap acts on DISTINCT hashes: constant-hash populations
+#: (black frames, silence, boilerplate intros) collapse to ONE distinct
+#: hash before banding, so they never inflate band df at all — the cap
+#: only guards residual near-collisions between distinct values.
 BAND_DF_CAP = 64
 #: df ceiling (videos per distinct frame fingerprint) for the video
 #: candidate join — a fingerprint carried by more videos than this (the
@@ -819,7 +818,7 @@ def q_dedup_image_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate IMAGE pairs — the dedup family
     extended to the multimodal surface: pairs of image payloads whose
     aHashes differ in ≤ IMG_HAMMING_MAX bits, via the shared two-tier
-    ``hamming_near_pairs`` core (r10): identical hashes pair in one
+    ``hamming_near_pairs`` core: identical hashes pair in one
     full-hash equi-join (constant-hash populations collapse BEFORE
     banding), and distinct hashes go through the df-capped banded
     blocker (≤ BAND_DF_CAP² per candidate bucket by construction — the
@@ -843,7 +842,7 @@ def _band_structs(n_bands: int) -> list:
     """Band-extraction struct expressions over (hash_hi, hash_lo) for a
     64-bit hash split into ``n_bands`` equal bands (n_bands even,
     64 % n_bands == 0 — bands never straddle the hi/lo split). The
-    default 4×16-bit geometry reproduces the r9 layout bit for bit."""
+    default 4×16-bit geometry is the registered ids' layout."""
     if n_bands % 2 or 64 % n_bands:
         raise ValueError(f"n_bands must be even and divide 64: {n_bands}")
     per_half = n_bands // 2
@@ -897,21 +896,31 @@ def hamming_probe(sdist: DataFrame, cdist: DataFrame) -> DataFrame:
     maintainers: shard DISTINCT hashes ``sdist`` against corpus DISTINCT
     hashes ``cdist`` (both (hash_hi, hash_lo)) → distinct near pairs
     (hash_hi, hash_lo = the shard hash, c_hi, c_lo = the corpus hash) at
-    hamming 1..IMG_HAMMING_MAX. Corpus band postings are df-capped at
-    BAND_DF_CAP (the stored index is built capped), and the shard's band
-    keys semi-join them before any pair forms, so corpus-side candidate
-    work is proportional to the SHARD — the q_dedup_incremental probe
+    hamming 1..IMG_HAMMING_MAX. The shard's band keys semi-join the
+    corpus band postings first, then the touched buckets are df-capped
+    at BAND_DF_CAP, so corpus-side candidate and count work is
+    proportional to the SHARD — the q_dedup_incremental probe
     discipline. Lossless by pigeonhole where the cap does not bite."""
     from breweries_case_spark.operators.dedup import broadcast_if_small
 
     sbands = _bands(sdist).localCheckpoint()
-    probe = _rare_bands(_bands(cdist), BAND_DF_CAP).join(
-        # size-gated hint: shard band keys are tiny, but an unconditional
-        # F.broadcast fails rather than degrades if a large delivery's key
-        # set outgrows the driver
-        broadcast_if_small(sbands.select("band_idx", "band_val").distinct()),
-        ["band_idx", "band_val"],
-        "left_semi",
+    # the shard's band keys prune the corpus band rows BEFORE the df
+    # count, so only shard-touched buckets are counted; a touched bucket
+    # keeps all its postings, so its df — and the cap — are unchanged.
+    # The df is a window over the bucket, so the pruned rows are read once
+    df = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val"))
+    probe = (
+        _bands(cdist)
+        .join(
+            # size-gated hint: shard band keys are tiny, but an
+            # unconditional F.broadcast fails rather than degrades if a
+            # large delivery's key set outgrows the driver
+            broadcast_if_small(sbands.select("band_idx", "band_val").distinct()),
+            ["band_idx", "band_val"],
+            "left_semi",
+        )
+        .withColumn("df", df)
+        .filter(F.col("df") <= BAND_DF_CAP)
     )
     hamming = F.bit_count(
         F.col("a.hash_hi").bitwiseXOR(F.col("b.hash_hi"))
@@ -982,8 +991,8 @@ def hamming_near_pairs(
 ) -> DataFrame:
     """Near-dup core over ANY 64-bit perceptual hash published as
     (media_id, hash_hi, hash_lo) — shared by the image (aHash) and
-    audio (delta-sign) tiers. Two tiers, closing the r9 verdict's
-    uncapped-C(df,2) scale-killer:
+    audio (delta-sign) tiers. Two tiers, so no bucket pairs an
+    uncapped C(df,2) candidates:
 
     1. **Identical hashes (hamming 0)**: one equi-join on the full
        64-bit value. A constant-hash population (black frames, silence)
@@ -1117,7 +1126,7 @@ def q_dedup_audio_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     Density note: the synthetic sawtooth population is deliberately
     near-dup-DENSE (450k true pairs among 1,667 docs at sf0.1), so
     output volume tracks the true-pair count, which no correct
-    algorithm can beat — but under the r10 two-tier core the heavy
+    algorithm can beat — but under the two-tier core the heavy
     same-period cliques pair in the hamming-0 full-hash join (84
     distinct hashes at sf0.1 vs 1,667 media rows enter banding), and
     the distinct-hash banded join is df-capped at BAND_DF_CAP — the
@@ -1181,8 +1190,8 @@ def q_dedup_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     container is REALLY demuxed (stdlib parser), every frame's BMP gets
     the shared 64-bit aHash (``_bmp_ahash`` — the image tier's exact
     kernel), per-video fingerprints are DISTINCTed, and videos pair on
-    ≥ VIDEO_SHARED_MIN shared distinct fingerprints. r10 closes the r9
-    verdict's uncapped-df² bucket: CANDIDATES come only from
+    ≥ VIDEO_SHARED_MIN shared distinct fingerprints. No bucket pairs an
+    uncapped df² candidates: CANDIDATES come only from
     fingerprints with df ≤ FP_DF_CAP (a boilerplate intro frame shared
     by more videos than the cap posts no candidates — it carries no
     pairing signal, exactly the containment family's DF_CAP stance),
@@ -1328,14 +1337,26 @@ def hash_cluster_assignment(hashes: DataFrame) -> DataFrame:
     """(media_id, hash_hi, hash_lo) → the (media_id, label) total
     assignment via distinct-hash-graph components — the body of
     q_dedup_image_clusters, factored so the audio tier and the
-    cross-modal table (q_dedup_media_clusters) run the SAME
-    machinery: one representative (min media) per distinct hash,
-    capped tier-2 edges between hash values, min-label components,
-    one hash-keyed label join."""
+    cross-modal table (q_dedup_media_clusters) run the SAME machinery:
+    ``hash_index`` over the distinct hashes, then one hash-keyed label
+    join."""
+    h = hashes.localCheckpoint()
+    return h.join(hash_index(h), ["hash_hi", "hash_lo"]).select(
+        "media_id", "label"
+    )
+
+
+def hash_index(hashes: DataFrame) -> DataFrame:
+    """(media_id, hash_hi, hash_lo) → the stored hash index: one
+    (hash_hi, hash_lo, label) row per DISTINCT hash, labelled by the
+    min-label components of the distinct-hash graph — one representative
+    (min media) per hash, capped tier-2 edges between hash values. All
+    media sharing a hash share its cluster, so the label is the
+    component's min media id. The incremental image maintainers carry
+    this index as their state (``_hash_cluster_update``)."""
     from breweries_case_spark.operators.dedup import connected_components
 
-    h = hashes.localCheckpoint()
-    reps = h.groupBy("hash_hi", "hash_lo").agg(
+    reps = hashes.groupBy("hash_hi", "hash_lo").agg(
         F.min("media_id").alias("rep")
     ).localCheckpoint()
     near = hash_near_pairs(reps.select("hash_hi", "hash_lo"))
@@ -1353,10 +1374,8 @@ def hash_cluster_assignment(hashes: DataFrame) -> DataFrame:
     comps = connected_components(
         edges.select("u", "v"), reps.select(F.col("rep").alias("node"))
     )
-    return (
-        h.join(reps, ["hash_hi", "hash_lo"])
-        .join(comps, F.col("rep") == F.col("node"))
-        .select("media_id", "label")
+    return reps.join(comps, F.col("rep") == F.col("node")).select(
+        "hash_hi", "hash_lo", "label"
     )
 
 
@@ -1458,7 +1477,7 @@ def video_cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def video_cluster_assignment_from(fp: DataFrame) -> DataFrame:
     """``video_cluster_assignment`` over ANY prepared fingerprint
-    inventory (media_id, hash_hi, hash_lo) — factored (r12) so the
+    inventory (media_id, hash_hi, hash_lo) — factored so the
     incremental video-cluster maintainer builds its stored corpus
     state with provably the registered cluster id's semantics."""
     from breweries_case_spark.operators.dedup import connected_components
@@ -1630,9 +1649,9 @@ def q_dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign a new image shard (media_id % 20 == 0) to the EXISTING
     perceptual clusters, or mint new cluster ids, without recomputing
     the corpus fixpoint (``_hash_cluster_update``; the contraction
-    argument is on ``dedup.maintain_clusters``). The corpus assignment
-    is the stored state, computed here once as the baseline — at scale
-    it is loaded, the pipelines/incremental.py discipline.
+    argument is on ``dedup.maintain_clusters``). The stored state is the
+    corpus hash index (``hash_index``), built here once as the baseline
+    — at scale it is loaded, the pipelines/incremental.py discipline.
 
     Output: one row per shard image — (media_id, cluster_id = the
     post-update fixpoint label, verdict 'attached'/'merged'/'new').
@@ -1643,60 +1662,53 @@ def q_dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     component. A driver red is probe/cap recall loss, not CC logic."""
     h = _ahash_table(spark, sf_dir).localCheckpoint()
     is_shard = F.col("media_id") % _MEDIA_SHARD_MOD == 0
-    shard = h.filter(is_shard).localCheckpoint()
-    corpus = h.filter(~is_shard)
-    corpus_assign = hash_cluster_assignment(corpus).localCheckpoint()
-    out, _, _ = _hash_cluster_update(corpus, corpus_assign, shard)
-    return out
+    index = hash_index(h.filter(~is_shard)).localCheckpoint()
+    update, _ = _hash_cluster_update(index, h.filter(is_shard))
+    return update.out
 
 
-def _hash_cluster_update(
-    corpus: DataFrame, state: DataFrame, shard: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """ONE image-maintainer step: (corpus (media_id, hash_hi, hash_lo),
-    its stored (media_id, label) state, shard frame) → the
-    ``maintain_clusters`` result (out keyed by media_id, comps,
-    lab_nodes). Update-graph edges: shard→cluster probe hits (the exact
-    hash tier ∪ ``hamming_probe``, mapped hash → stored label) ∪
-    intra-shard edges (same-hash members hook to a rep, reps connect via
-    ``hash_near_pairs`` over the shard's distinct hashes)."""
-    from breweries_case_spark.operators.dedup import maintain_clusters
+def _hash_cluster_update(index: DataFrame, shard: DataFrame):
+    """ONE image-maintainer day: (the stored hash index (hash_hi,
+    hash_lo, label), shard (media_id, hash_hi, hash_lo)) → (the
+    ``maintain_clusters`` result with ``out`` keyed by media_id, the
+    lazy next index). Work is O(shard) apart from the probes' scans of
+    the index; the corpus media table is never read.
 
-    # the stored index: one row per corpus DISTINCT hash with its
-    # cluster label (all media sharing a hash share a cluster, so min
-    # is just a deterministic pick)
-    hash_label = (
-        corpus.join(state, "media_id")
-        .groupBy("hash_hi", "hash_lo")
-        .agg(F.min("label").alias("clabel"))
-        .localCheckpoint()
+    The shard's single group-by gives one representative (min media) per
+    distinct shard hash. Update-graph edges: representative → stored
+    label for every index hash it hits (the exact hash tier ∪
+    ``hamming_probe``), ∪ intra-shard edges (same-hash members hook to
+    their representative, representatives connect via
+    ``hash_near_pairs`` over the shard's distinct hashes). The next index
+    is the index relabelled through the day's remap plus the shard's
+    hashes the index did not hold, each labelled with its
+    representative's cluster (``dedup.advance_state``)."""
+    from breweries_case_spark.operators.dedup import (
+        advance_state,
+        maintain_clusters,
     )
-    sdist = shard.select("hash_hi", "hash_lo").distinct().localCheckpoint()
-    exact = sdist.join(hash_label, ["hash_hi", "hash_lo"]).select(
-        "hash_hi", "hash_lo", "clabel"
-    )
-    near = (
-        hamming_probe(sdist, hash_label.select("hash_hi", "hash_lo"))
-        .join(
-            hash_label.select(
-                F.col("hash_hi").alias("c_hi"),
-                F.col("hash_lo").alias("c_lo"),
-                "clabel",
-            ),
-            ["c_hi", "c_lo"],
-        )
-        .select("hash_hi", "hash_lo", "clabel")
-    )
-    touched = exact.unionByName(near).distinct()
-    e_corpus = (
-        shard.join(touched, ["hash_hi", "hash_lo"])
-        .select(F.col("media_id").alias("u"), F.col("clabel").alias("v"))
-        .localCheckpoint()
-    )
+
     sreps = (
         shard.groupBy("hash_hi", "hash_lo")
         .agg(F.min("media_id").alias("rep"))
         .localCheckpoint()
+    )
+    sdist = sreps.select("hash_hi", "hash_lo")
+    # (shard hash, stored label) for every index hash it hits
+    hits = sdist.join(index, ["hash_hi", "hash_lo"]).unionByName(
+        hamming_probe(sdist, index.select("hash_hi", "hash_lo"))
+        .join(
+            index.select(
+                F.col("hash_hi").alias("c_hi"),
+                F.col("hash_lo").alias("c_lo"),
+                "label",
+            ),
+            ["c_hi", "c_lo"],
+        )
+        .select("hash_hi", "hash_lo", "label")
+    )
+    e_corpus = sreps.join(hits, ["hash_hi", "hash_lo"]).select(
+        F.col("rep").alias("u"), F.col("label").alias("v")
     )
     e_same = (
         shard.join(sreps, ["hash_hi", "hash_lo"])
@@ -1724,47 +1736,56 @@ def _hash_cluster_update(
         .select("u", "v")
     )
     # one row per shard image, so its media ids are already distinct
-    out, comps, lab_nodes = maintain_clusters(
+    update = maintain_clusters(
         shard.select(F.col("media_id").alias("node")),
         e_corpus,
         e_same.unionByName(e_near),
     )
-    return out.withColumnRenamed("node", "media_id"), comps, lab_nodes
+    out = update.out.withColumnRenamed("node", "media_id")
+    added = (
+        sreps.join(index, ["hash_hi", "hash_lo"], "left_anti")
+        .join(out, F.col("rep") == F.col("media_id"))
+        .select("hash_hi", "hash_lo", F.col("cluster_id").alias("label"))
+    )
+    return update._replace(out=out), advance_state(index, update, added)
 
 
 def _cluster_chain(spark: SparkSession, sf_dir: str, store) -> DataFrame:
     """The two-day image-maintainer chain shared by
     q_dedup_cluster_chain (state kept in memory) and
     q_dedup_cluster_chain_persisted (state committed to and read back
-    from a snapshot table). ``store(state, delta)`` turns a day's lazy
-    (media_id, label) state into the state the next update probes;
-    ``delta`` is None for the initial corpus state and (remap, out) —
-    the day's touched-label remap and shard verdicts — after day 1."""
-    from breweries_case_spark.operators.dedup import advance_state, relabel
+    from a snapshot table). The state is the stored hash index
+    (``hash_index``: one (hash_hi, hash_lo, label) row per distinct
+    stored hash), built once from the corpus and then advanced by each
+    day (``_hash_cluster_update``). ``store(index, delta)`` turns a
+    lazy index into the one the next day probes; ``delta`` is None for
+    the initial corpus index and (remap, out) — the day's touched-label
+    remap and shard verdicts — after day 1."""
+    from breweries_case_spark.operators.dedup import relabel
 
     h = _ahash_table(spark, sf_dir).localCheckpoint()
-    s1 = h.filter(F.col("media_id") % 40 == 0).localCheckpoint()
-    s2 = h.filter(F.col("media_id") % 40 == 20).localCheckpoint()
     corpus = h.filter(F.col("media_id") % _MEDIA_SHARD_MOD != 0)
-    state0 = store(hash_cluster_assignment(corpus), None)
+    index0 = store(hash_index(corpus), None)
 
-    out1, comps1, labs1 = _hash_cluster_update(corpus, state0, s1)
-    out1 = out1.localCheckpoint()
-    remap1, state1 = advance_state(state0, (out1, comps1, labs1), "media_id")
-    state1 = store(state1, (remap1, out1))
-
-    update2 = _hash_cluster_update(corpus.unionByName(s1), state1, s2)
+    update1, index1 = _hash_cluster_update(
+        index0, h.filter(F.col("media_id") % 40 == 0)
+    )
+    index1 = store(index1, (update1.remap, update1.out))
+    update2, _ = _hash_cluster_update(
+        index1, h.filter(F.col("media_id") % 40 == 20)
+    )
     # day 2's remap also relabels day 1's rows: two clusters can only
     # merge later through a future shard, which then touches both
-    remap2, _ = advance_state(state1, update2, "media_id")
-    day1 = relabel(out1.withColumnRenamed("cluster_id", "label"), remap2)
+    day1 = relabel(
+        update1.out.withColumnRenamed("cluster_id", "label"), update2.remap
+    )
     return day1.select(
         "media_id",
         F.lit(1).cast("long").alias("day"),
         F.col("label").alias("cluster_id"),
         "verdict",
     ).unionByName(
-        update2[0].select(
+        update2.out.select(
             "media_id", F.lit(2).cast("long").alias("day"), "cluster_id", "verdict"
         )
     )
@@ -1776,17 +1797,19 @@ def q_dedup_cluster_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     a state that day 2 can update to the exact full-recompute fixpoint.
     Deterministic deliveries: day 1 = media_id % 40 == 0, day 2 =
     media_id % 40 == 20 (together the family's % 20 shard); corpus =
-    the rest. The chain:
+    the rest. The state the chain carries is the stored hash index — one
+    (hash_hi, hash_lo, label) row per distinct stored hash, never a row
+    per corpus media. The chain:
 
-        state0 = stored corpus clusters (``hash_cluster_assignment``)
-        day 1:  ``_hash_cluster_update``(corpus, state0, shard1) →
-                verdicts1; state1 = ``advance_state``: corpus rows with
-                TOUCHED labels remapped through the update graph +
-                shard1 rows (untouched clusters keep their label — by
+        index0 = the corpus hash index (``hash_index``)
+        day 1:  ``_hash_cluster_update``(index0, shard1) → verdicts1;
+                index1 = ``advance_state``: index rows with TOUCHED
+                labels remapped through the update graph + shard1's new
+                hashes (untouched clusters keep their label — by
                 definition they have no edge to the shard)
-        day 2:  ``_hash_cluster_update``(corpus ∪ shard1, state1,
-                shard2) → verdicts2; shard1's FINAL labels remap once
-                more through day 2's touched map
+        day 2:  ``_hash_cluster_update``(index1, shard2) → verdicts2;
+                shard1's FINAL labels remap once more through day 2's
+                touched map
 
     Output: one row per shard media — (media_id, day, cluster_id =
     the FINAL post-day-2 label, verdict = that doc's own-day verdict
@@ -1795,8 +1818,10 @@ def q_dedup_cluster_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the full fixpoint and each day's verdicts must audit the
     PREVIOUS state's cluster counts, so a drift anywhere in the
     probe → contract → remap → append cycle reds the driver. Per-day
-    cost is O(shard_d); state maintenance is the touched-label remap
-    (O(touched)) plus the shard append — never a corpus rewrite."""
+    cost is O(shard_d) Spark work in one update-graph materialization
+    solved on the driver below the components gate; state maintenance
+    is the touched-label remap (O(touched)) plus the shard's new
+    hashes — never a corpus rewrite, and no corpus ⋈ state join."""
     return _cluster_chain(
         spark, sf_dir, lambda state, _delta: state.localCheckpoint()
     )
@@ -1830,22 +1855,24 @@ def q_dedup_cluster_chain_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """q_dedup_cluster_chain with its state PERSISTED through the
-    snapshot log — the same chain (``_cluster_chain``), but the 'stored
-    state' is a real ACID table instead of an in-memory frame, turning
-    the O(shard) claim into the production read/write contract:
+    snapshot log — the same chain (``_cluster_chain``), but the stored
+    hash index is a real ACID table instead of an in-memory frame,
+    turning the O(shard) claim into the production read/write contract.
+    The table holds the index rows (hash_hi, hash_lo, label), bucketed
+    by label % _STATE_BUCKETS:
 
-        v1: state0 is COMMITTED to a snapshot table bucketed by
-            label % _STATE_BUCKETS (io/snapshots.py's manifest log), and
-            day 1 reads it back (``read_snapshot``).
-        day 1 → v2: state1 is committed by dynamically overwriting ONLY
+        v1: index0 is COMMITTED to the snapshot table
+            (io/snapshots.py's manifest log), and day 1 reads it back
+            (``read_snapshot``).
+        day 1 → v2: index1 is committed by dynamically overwriting ONLY
             the buckets the day touched — old and new buckets of every
-            remapped label plus the shard rows' buckets; untouched
+            remapped label plus the shard labels' buckets; untouched
             buckets carry forward at the manifest level, zero bytes
             rewritten (a bucket the remap EMPTIES is dropped in the
             same commit). The v1→v2 ``snapshot_diff``
             IS the label-remap change feed (pinned in
             tests/test_round13_ops). Day 2 reads the LATEST snapshot, so
-            the in-memory state1 is never reused.
+            the in-memory index1 is never reused.
 
     Output and oracle are exactly q_dedup_cluster_chain's — a hash
     match proves the write → carry-forward → read → update cycle loses
@@ -1870,8 +1897,9 @@ def q_dedup_cluster_chain_persisted(
             remap, out = delta
             state = state.localCheckpoint()
             # the day's write set: every bucket a remapped label leaves
-            # or enters, plus the shard rows' buckets — bounded by the
-            # touched set, never the corpus (≤ _STATE_BUCKETS values).
+            # or enters, plus the buckets of the shard's labels, where its
+            # new index rows land — bounded by the touched set, never the
+            # corpus (≤ _STATE_BUCKETS values).
             # Rows that leave a bucket rewrite it, so its surviving rows
             # are restaged too: state filtered to the changed set covers
             # both
@@ -1885,7 +1913,11 @@ def q_dedup_cluster_chain_persisted(
                 .collect()
             }
             _overwrite_changed_buckets(state, changed, tdir)  # v2
-        return read_snapshot(spark, tdir).select("media_id", "label").localCheckpoint()
+        return (
+            read_snapshot(spark, tdir)
+            .select("hash_hi", "hash_lo", "label")
+            .localCheckpoint()
+        )
 
     try:
         out = _cluster_chain(spark, sf_dir, store)
@@ -1978,17 +2010,16 @@ def q_dedup_video_cluster_incremental(
         .join(state.withColumnRenamed("media_id", "corpus_id"), "corpus_id")
         .select(F.col("shard_id").alias("u"), F.col("label").alias("v"))
         .distinct()
-        .localCheckpoint()
     )
     e_shard = video_shared_pairs(shard_fp).select(
         F.col("media_id_a").alias("u"), F.col("media_id_b").alias("v")
     )
-    out, _, _ = maintain_clusters(
+    update = maintain_clusters(
         shard_fp.select(F.col("media_id").alias("node")).distinct(),
         e_corpus,
         e_shard,
     )
-    return out.withColumnRenamed("node", "media_id")
+    return update.out.withColumnRenamed("node", "media_id")
 
 
 def q_dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2154,7 +2185,8 @@ def q_dedup_media_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checked certificate for the PERCEPTUAL NEAR-DUP CAPS —
-    the q_dedup_containment_capped pattern applied to the r10 blockers:
+    the q_dedup_containment_capped pattern applied to the banded and
+    fingerprint blockers:
     publishes, per modality, the ground-truth pair count, the pairs the
     df cap would MISS (**pinned 0 in the oracle** — a blocking-recall
     regression after a cap, band-geometry, or fixture change turns the
@@ -2324,7 +2356,7 @@ def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: BELOW driver-fixture dfs so every prune + verify-recount branch
 #: actually executes under the oracle (production caps sit above every
 #: fixture maximum, so there capped == full and those branches are
-#: no-ops end-to-end — the r10 ADVICE gap this id closes)
+#: no-ops end-to-end, and no other id would test them)
 MECH_CAP = 2
 
 
@@ -2540,7 +2572,7 @@ ORACLES = {
                MAX(n_chars * 10) AS max_duration_ms
         FROM documents GROUP BY 1
     """,
-    # The real-decode pipeline is FULLY oracle-checkable (r5): every
+    # The real-decode pipeline is FULLY oracle-checkable: every
     # synthesized payload is a closed-form function of (doc_id, n_chars),
     # so DuckDB recomputes the decoded features and exact container byte
     # sizes from the documents table — WAV is 44 header + 2 bytes/sample,
@@ -2550,7 +2582,7 @@ ORACLES = {
     # value hash; only COMPRESSED codecs stay out (the one declared
     # NotImplementedError).
     # Outer projection flattens the feature list to scalars f0..f3 —
-    # list cells are unhashable on pandas comparison bridges (r5 err);
+    # list cells are unhashable on pandas comparison bridges;
     # DuckDB lists are 1-indexed, Spark arrays 0-indexed.
     "q_multimodal_decode": """
         SELECT media_id, modality, n_bytes,

@@ -6,6 +6,7 @@ are slow-marked)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -111,22 +112,54 @@ def test_hamming_probe_pairs_only_distance_one_to_max(spark):
 def _graph(spark):
     """Stored clusters labelled 10, 20, 30 (40 is never touched). Shard:
     101 → cluster 10; 102 bridges clusters 20 and 30; 104 chains into
-    101 by an intra-shard edge; 103 is isolated; 105–106 only pair with
-    each other."""
+    101 by an intra-shard edge; 103 and 107 have no edge, and 106's
+    intra-shard edge with a null endpoint is no edge; 105–106 only pair
+    with each other."""
     shard_ids = spark.createDataFrame(
-        [(i,) for i in (101, 102, 103, 104, 105, 106)], "node long"
+        [(i,) for i in (101, 102, 103, 104, 105, 106, 107)], "node long"
     )
     e_corpus = spark.createDataFrame(
         [(101, 10), (102, 20), (102, 30)], "u long, v long"
     )
-    e_shard = spark.createDataFrame([(104, 101), (105, 106)], "u long, v long")
+    e_shard = spark.createDataFrame(
+        [(104, 101), (105, 106), (106, None)], "u long, v long"
+    )
     return shard_ids, e_corpus, e_shard
 
 
-def test_maintain_clusters_verdicts(spark):
-    from breweries_case_spark.operators.dedup import maintain_clusters
+#: the contraction step's tiers: driver union-find (also with Arrow
+#: conversion off, as in a vanilla session) and star rounds above the gate
+TIERS = ["driver", "cluster", "driver_no_arrow"]
 
-    out, comps, lab_nodes = maintain_clusters(*_graph(spark))
+
+@pytest.fixture(params=TIERS)
+def update(request, spark, monkeypatch):
+    """``maintain_clusters`` over ``_graph`` in one tier, asserting that
+    this tier ran."""
+    from breweries_case_spark.operators import dedup
+
+    ran = []
+    for name in ("_min_labels", "connected_components_star"):
+        real = getattr(dedup, name)
+        monkeypatch.setattr(
+            dedup, name, lambda *a, _n=name, _f=real: ran.append(_n) or _f(*a)
+        )
+    if request.param == "cluster":
+        monkeypatch.setattr(dedup, "_NEEDS_BROADCAST_MAX", -1)
+    if request.param == "driver_no_arrow":
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        prior = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        request.addfinalizer(lambda: spark.conf.set(key, prior))
+    result = dedup.maintain_clusters(*_graph(spark))
+    assert ran == [
+        "connected_components_star" if request.param == "cluster" else "_min_labels"
+    ]
+    return result
+
+
+def test_maintain_clusters_verdicts(update):
+    out, comps, lab_nodes, _ = update
     assert out.columns == ["node", "cluster_id", "verdict"]
     assert {tuple(r) for r in out.collect()} == {
         (101, 10, "attached"),
@@ -135,41 +168,65 @@ def test_maintain_clusters_verdicts(spark):
         (104, 10, "attached"),
         (105, 105, "new"),
         (106, 105, "new"),
+        (107, 107, "new"),
     }
     assert {r.node for r in lab_nodes.collect()} == {10, 20, 30}
     labels = {r.node: r.label for r in comps.collect()}
     assert (labels[10], labels[20], labels[30]) == (10, 20, 20)
 
 
-def test_advance_state_remaps_touched_labels_and_appends_shard(spark):
+def test_advance_state_remaps_touched_labels_and_appends_shard(spark, update):
     from breweries_case_spark.operators.dedup import (
         advance_state,
-        maintain_clusters,
         relabel,
         touched_remap,
     )
 
-    update = maintain_clusters(*_graph(spark))
-    _, comps, lab_nodes = update
-    assert {tuple(r) for r in touched_remap(comps, lab_nodes).collect()} == {
-        (10, 10),
-        (20, 20),
-        (30, 20),
-    }
+    want = {(10, 10), (20, 20), (30, 20)}
+    assert {tuple(r) for r in update.remap.collect()} == want
+    assert {
+        tuple(r) for r in touched_remap(update.comps, update.lab_nodes).collect()
+    } == want
     state = spark.createDataFrame(
         [(10, 10), (11, 10), (20, 20), (30, 30), (31, 30), (40, 40)],
         "node long, label long",
     )
-    remap, nxt = advance_state(state, update, "node")
+    nxt = advance_state(
+        state, update, update.out.select("node", F.col("cluster_id").alias("label"))
+    )
     assert sorted(map(tuple, nxt.collect())) == [
         (10, 10), (11, 10), (20, 20), (30, 20), (31, 20), (40, 40),
         (101, 10), (102, 20), (103, 103), (104, 10), (105, 105), (106, 105),
+        (107, 107),
     ]
     # relabel keeps every other column in place
     day = spark.createDataFrame(
         [(7, 30, "new"), (8, 40, "attached")], "id long, label long, verdict string"
     )
-    assert [tuple(r) for r in relabel(day, remap).orderBy("id").collect()] == [
+    assert [tuple(r) for r in relabel(day, update.remap).orderBy("id").collect()] == [
         (7, 20, "new"),
         (8, 40, "attached"),
     ]
+
+
+# ------------------------------------------------------- maintainer chain
+
+
+def test_cluster_chain_job_count(spark, sf_dir):
+    """A chain day is one update-graph materialization solved on the
+    driver, plus the probe's and the stored hash index's own
+    materializations: an extra corpus ⋈ state pass or a Spark-side
+    components or remap step adds jobs here (test profile, AQE off)."""
+    from breweries_case_spark.operators.multimodal import q_dedup_cluster_chain
+
+    sc = spark.sparkContext
+    group = "cluster-chain-jobs"
+    sc.setJobGroup(group, "q_dedup_cluster_chain job count")
+    try:
+        rows = q_dedup_cluster_chain(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 9
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 48

@@ -209,7 +209,7 @@ def test_text_keeper_elects_a_member_per_updated_cluster(spark, sf_dir):
         q_dedup_text_keeper,
     )
 
-    out, comps, lab_nodes, corpus_assign = _text_cluster_update(
+    (out, comps, lab_nodes, _), corpus_assign = _text_cluster_update(
         spark, sf_dir
     )
     remap = comps.join(lab_nodes, "node").select(
