@@ -66,6 +66,8 @@ from breweries_case_spark.io.snapshots import (
     _read_manifest,
     _replace,
     _scan,
+    _schema_of,
+    _staged_schema,
     _trunk,
     latest_version,
     publish_json_excl,
@@ -174,7 +176,7 @@ def commit_to_branch(
     touched = stage_partition_files(df, table_dir, partition_col)
     return _commit(
         _branch_manifest_dir(table_dir, name),
-        _replace(touched, (), partition_col),
+        _replace(touched, (), partition_col, _staged_schema(df, partition_col)),
         start=_divergence_manifest(table_dir, name),
     )
 
@@ -228,7 +230,12 @@ def merge_branch(table_dir: str, name: str) -> int:
             # trunk-only changes are already in `merged` (copied from ours)
         if conflicts:
             raise MergeConflict(conflicts)
-        return {"partition_col": pcol, "partitions": merged, "merged_from": name}
+        return {
+            "partition_col": pcol,
+            **_schema_of(trunk_head),
+            "partitions": merged,
+            "merged_from": name,
+        }
 
     version = _commit(_trunk(table_dir), step)
     # fast-forward the branch onto the merge result: advance the
@@ -248,13 +255,15 @@ def merge_branch(table_dir: str, name: str) -> int:
     mdir = _branch_manifest_dir(table_dir, name)
     bversions = _chain_versions(mdir)
     bversion = (bversions[-1] if bversions else 0) + 1
+    merged_m = _read_manifest(table_dir, version)
     ff_won = publish_json_excl(
         _chain_path(mdir, bversion),
         {
             "version": bversion,
             "committed_at": time.time(),
             "partition_col": pcol,
-            "partitions": _read_manifest(table_dir, version)["partitions"],
+            **_schema_of(merged_m),
+            "partitions": merged_m["partitions"],
             "fast_forward_of": version,
         },
     )

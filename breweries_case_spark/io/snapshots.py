@@ -17,9 +17,13 @@ Layout::
 
     table_dir/
       _manifests/v00000001.json   # {"version", "committed_at",
-                                  #  "partition_col",
+                                  #  "partition_col", "schema",
                                   #  "partitions": {val: [data paths]}}
-      data/<commit-uuid>/<pcol>=<val>/part-*.parquet
+      data/<commit-uuid>/<pcol>=<escaped val>/part-*.parquet
+
+``schema`` is the data files' Spark schema (JSON; the partition column
+is not stored in the files). ``partitions`` is keyed by the partition
+VALUE as written, not by its escaped directory name.
 
 Protocol — this module owns it, for the trunk chain above and for the
 branch chains of ``io/branches.py``:
@@ -44,11 +48,14 @@ branch chains of ``io/branches.py``:
   133,149-153``), including a rerun that yields nothing. Untouched
   partitions carry forward. A commit that would change nothing
   publishes nothing.
-- **Read** = pick a manifest (latest or as-of version) and union the
-  per-partition file groups with the partition value restored as a
-  literal column (``_scan``). Partition pruning happens at the MANIFEST
-  level — pruned partitions cost zero file-system I/O, strictly better
-  than directory listing.
+- **Read** = pick a manifest (latest or as-of version) and scan each
+  selected partition's files with the manifest's recorded schema, the
+  partition value restored as a literal column (``_scan``). A declared
+  schema means no read runs a schema-inference job, so a snapshot of 1
+  or 64 partitions reads in the same jobs. A manifest written without a
+  schema infers it once, from one file. Partition pruning happens at
+  the MANIFEST level — pruned partitions cost zero file-system I/O,
+  strictly better than directory listing.
 - **Readers never block writers**: a snapshot read holds the file list,
   and data files are immutable; vacuum only deletes files unreferenced
   by ANY retained manifest.
@@ -57,8 +64,13 @@ Scale notes: manifests are O(partitions × files) JSON — fine for the
 daily-partition cardinality this models; at true 100 TB one moves to
 Iceberg's split manifests (this module is the semantic bridge until the
 jars exist, exposing the same verbs as ``io/writer.py::write_iceberg``).
-The per-partition union keeps plans linear in touched partitions, so
-as-of reads prune before Spark ever lists a directory."""
+The scan is a union of one declared-schema file scan per selected
+partition: plans grow linearly in the partitions read, Spark jobs do
+not. One scan over every selected file would pack small files into
+fewer tasks, but Spark lists more than 32 root paths in a job of its
+own (``spark.sql.sources.parallelPartitionDiscovery.threshold``), so a
+long history would again cost jobs. As-of reads prune before Spark
+ever lists a directory."""
 
 from __future__ import annotations
 
@@ -67,11 +79,13 @@ import functools
 import json
 import os
 import time
+import urllib.parse
 import uuid
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_manifests"
 _MAX_COMMIT_RETRIES = 20
@@ -186,15 +200,26 @@ def _commit(
     )
 
 
+def _schema_of(manifest: dict | None) -> dict:
+    """``manifest``'s recorded file schema as a field to carry into the
+    next manifest; {} when it records none."""
+    if manifest and "schema" in manifest:
+        return {"schema": manifest["schema"]}
+    return {}
+
+
 def _replace(
     touched: dict[str, list[str]],
     values: Iterable[str] = (),
     partition_col: str | None = None,
+    schema: dict | None = None,
 ) -> Callable[[dict | None], dict | None]:
     """``_commit`` step of overwrite, delete and branch commits: each
     staged partition in ``touched`` replaces the head's, each of
     ``values`` with no staged files is dropped, the rest carry forward.
-    Builds nothing when nothing is staged and no listed value is held."""
+    ``schema`` is the staged frame's file schema; a delete (None)
+    carries the head's forward. Builds nothing when nothing is staged
+    and no listed value is held."""
     drop = set(values) - set(touched)
 
     def step(head: dict | None) -> dict | None:
@@ -206,10 +231,30 @@ def _replace(
         partitions.update(touched)
         return {
             "partition_col": partition_col or head["partition_col"],
+            **({"schema": schema} if schema is not None else _schema_of(head)),
             "partitions": partitions,
         }
 
     return step
+
+
+def _read_files(
+    spark: SparkSession, table_dir: str, schema: StructType, files: list[str]
+) -> DataFrame:
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(table_dir, f) for f in files]
+    )
+
+
+def _file_schema(
+    spark: SparkSession, table_dir: str, manifest: dict, files: list[str]
+) -> StructType:
+    """The data files' schema: as ``manifest`` recorded it at commit, or
+    — for a manifest written without one — inferred once, from
+    ``files[0]`` (one Spark job)."""
+    if "schema" in manifest:
+        return StructType.fromJson(manifest["schema"])
+    return spark.read.parquet(os.path.join(table_dir, files[0])).schema
 
 
 def _scan(
@@ -219,19 +264,25 @@ def _scan(
     values: Iterable[str] | None = None,
 ) -> DataFrame | None:
     """The one partition map → DataFrame scan: each selected partition's
-    files (all partitions when ``values`` is None) with the partition
-    value restored as a literal column, unioned in value order. None
-    when no selected partition holds files."""
+    files (all partitions when ``values`` is None), read with the
+    manifest's file schema and the partition value restored as a literal
+    column, unioned in value order. None when no selected partition
+    holds files."""
     want = None if values is None else set(values)
-    pcol = manifest["partition_col"]
-    parts = [
-        spark.read.parquet(
-            *[os.path.join(table_dir, f) for f in files]
-        ).withColumn(pcol, F.lit(val))
+    selected = [
+        (val, files)
         for val, files in sorted(manifest["partitions"].items())
         if files and (want is None or val in want)
     ]
-    return functools.reduce(DataFrame.unionByName, parts) if parts else None
+    if not selected:
+        return None
+    schema = _file_schema(spark, table_dir, manifest, selected[0][1])
+    pcol = manifest["partition_col"]
+    parts = [
+        _read_files(spark, table_dir, schema, files).withColumn(pcol, F.lit(val))
+        for val, files in selected
+    ]
+    return functools.reduce(DataFrame.union, parts)
 
 
 def stage_partition_files(
@@ -239,9 +290,11 @@ def stage_partition_files(
 ) -> dict[str, list[str]]:
     """Write ``df`` to a fresh commit dir under ``table_dir/data`` and
     return the staged files keyed by partition VALUE (table-relative
-    paths). Shared by trunk commits and branch commits
-    (io/branches.py::commit_to_branch) so the staging protocol cannot
-    drift between the two write paths."""
+    paths). Spark escapes path specials in a partition directory name
+    as ``%XX`` (``:`` → ``%3A``, ``%`` → ``%25``; only ASCII characters,
+    so decoding the name recovers the value exactly). Shared by trunk
+    commits and branch commits (io/branches.py::commit_to_branch) so the
+    staging protocol cannot drift between the two write paths."""
     commit_id = uuid.uuid4().hex
     stage = os.path.join(table_dir, "data", commit_id)
     df.write.partitionBy(partition_col).parquet(stage)
@@ -249,7 +302,7 @@ def stage_partition_files(
     for entry in os.listdir(stage):
         if not entry.startswith(f"{partition_col}="):
             continue
-        val = entry.split("=", 1)[1]
+        val = urllib.parse.unquote(entry.split("=", 1)[1])
         pdir = os.path.join(stage, entry)
         touched[val] = sorted(
             os.path.join("data", commit_id, entry, f)
@@ -257,6 +310,14 @@ def stage_partition_files(
             if f.endswith(".parquet")
         )
     return touched
+
+
+def _staged_schema(df: DataFrame, partition_col: str) -> dict:
+    """The file schema a commit of ``df`` records: ``df``'s schema
+    without the partition column, which lives in directory names."""
+    return StructType(
+        [f for f in df.schema.fields if f.name != partition_col]
+    ).jsonValue()
 
 
 def commit_overwrite_partitions(
@@ -273,7 +334,10 @@ def commit_overwrite_partitions(
     frame behaves the same). A commit that stages nothing and drops
     nothing publishes nothing and returns the current version."""
     touched = stage_partition_files(df, table_dir, partition_col)
-    return _commit(_trunk(table_dir), _replace(touched, values, partition_col))
+    return _commit(
+        _trunk(table_dir),
+        _replace(touched, values, partition_col, _staged_schema(df, partition_col)),
+    )
 
 
 def commit_delete_partitions(table_dir: str, values: list[str]) -> int:
@@ -341,7 +405,6 @@ def compact_partitions(
     if base is None:
         raise FileNotFoundError(f"no snapshots under {table_dir!r}")
     m = _read_manifest(table_dir, base)
-    pcol = m["partition_col"]
     todo = {
         val: files
         for val, files in m["partitions"].items()
@@ -350,14 +413,15 @@ def compact_partitions(
     commit_id = uuid.uuid4().hex
     rewritten: dict[str, tuple[list[str], list[str]]] = {}
     for val, files in todo.items():
-        out_dir = os.path.join(
-            table_dir, "data", commit_id, f"{pcol}={val}"
-        )
-        spark.read.parquet(
-            *[os.path.join(table_dir, f) for f in files]
-        ).coalesce(target_files).write.parquet(out_dir)
+        schema = _file_schema(spark, table_dir, m, files)
+        # the partition's (already escaped) directory name, reused as is
+        entry = os.path.basename(os.path.dirname(files[0]))
+        out_dir = os.path.join(table_dir, "data", commit_id, entry)
+        _read_files(spark, table_dir, schema, files).coalesce(
+            target_files
+        ).write.parquet(out_dir)
         new_files = sorted(
-            os.path.join("data", commit_id, f"{pcol}={val}", f)
+            os.path.join("data", commit_id, entry, f)
             for f in os.listdir(out_dir)
             if f.endswith(".parquet")
         )
@@ -372,6 +436,7 @@ def compact_partitions(
                 partitions[val] = new_files
         return {
             "partition_col": head["partition_col"],
+            **_schema_of(head),
             "partitions": partitions,
             "compaction_of": base,
         }
@@ -426,6 +491,7 @@ def rollback(table_dir: str, to_version: int) -> int:
         _trunk(table_dir),
         lambda _head: {
             "partition_col": m["partition_col"],
+            **_schema_of(m),
             "partitions": m["partitions"],
             "rollback_of": to_version,
         },

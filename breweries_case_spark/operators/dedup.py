@@ -1047,24 +1047,32 @@ def jaccard(sh_a: str, sh_b: str):
 
 
 def jaccard_verified(
-    cands: DataFrame, a_docs: DataFrame, b_docs: DataFrame
+    cands: DataFrame,
+    a_docs: DataFrame,
+    b_docs: DataFrame,
+    b_tag: str | None = None,
 ) -> DataFrame:
     """The verify step of every text near-dup tier: (doc_a, doc_b)
     candidate pairs → the pairs whose docs share a language and clear
     ``JACCARD_THRESHOLD``. ``a_docs``/``b_docs`` are the (doc_id, lang,
     sh) shingle frames that ``doc_a``/``doc_b`` are looked up in; a
-    broadcast hint on either one carries through to its join."""
+    broadcast hint on either one carries through to its join. ``b_tag``
+    names a column that ``cands`` and ``b_docs`` both carry and the b
+    lookup matches too, so one b frame can hold docs from two sources
+    that reuse an id."""
+    tags = (b_tag,) if b_tag else ()
 
-    def side(docs: DataFrame, s: str) -> DataFrame:
+    def side(docs: DataFrame, s: str, keep: tuple[str, ...] = ()) -> DataFrame:
         return docs.select(
             F.col("doc_id").alias(f"doc_{s}"),
             F.col("lang").alias(f"lang_{s}"),
             F.col("sh").alias(f"sh_{s}"),
+            *keep,
         )
 
     return (
         cands.join(side(a_docs, "a"), "doc_a")
-        .join(side(b_docs, "b"), "doc_b")
+        .join(side(b_docs, "b", tags), ["doc_b", *tags])
         .filter(
             (F.col("lang_a") == F.col("lang_b"))
             & (jaccard("sh_a", "sh_b") >= F.lit(JACCARD_THRESHOLD))

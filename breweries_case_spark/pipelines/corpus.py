@@ -8,19 +8,21 @@ fingerprint state (io/snapshots.py).
 
 Design contract — the three properties a production corpus store needs:
 
-- **Corpus-side work is O(shard)**: the corpus is never re-paired; the
-  only corpus-scale touch is an equi-join of shard fingerprints against
-  the stored fingerprint table (one shuffle of O(shard) probe rows
-  against a bucketable state table). The near-dup tier composes the
-  same way via `operators/dedup.py::q_dedup_incremental`'s LSH probe
-  and is deliberately not repeated here.
-- **Idempotent re-runs**: both the documents AND the fingerprint state
-  are partitioned by ``shard_date`` and committed with
-  partition-overwrite, and the dedup join reads fingerprints from every
-  partition EXCEPT the one being written — so a crash-retry (or a
-  backfill re-delivery) replaces the day's output wholesale and
-  converges to the same corpus state instead of self-excluding or
-  double-accumulating.
+- **Corpus-side work is O(shard)**: the corpus is never re-paired. The
+  exact tier anti-joins the shard's fingerprints with the stored
+  fingerprint table. The near-dup tier (``near_dedup``) probes the
+  stored MinHash-LSH bucket table once with the shard's bucket keys,
+  materializes the candidate pairs once, and verifies them in one
+  exact-Jaccard join that reads corpus text only for candidate docs
+  (``_near_dup_shard_ids``). Shard-sized id sets join as size-gated
+  broadcasts (``dedup.broadcast_if_small``).
+- **Idempotent re-runs**: the documents, the fingerprint state and the
+  bucket state are all partitioned by ``shard_date`` and committed with
+  partition-overwrite, and every state read (fingerprints, buckets and
+  candidate docs) covers every partition EXCEPT the one being written —
+  so a crash-retry (or a backfill re-delivery) replaces the day's
+  output wholesale and converges to the same corpus state instead of
+  self-excluding or double-accumulating.
 - **Snapshot isolation**: readers of the corpus see complete versions;
   a failed update leaves the previous snapshot intact (the snapshot
   log's O_EXCL commit contract).
@@ -58,12 +60,12 @@ LSH_TABLE = "lsh_buckets"
 def _contaminated_ids(gated: DataFrame, bench_grams: DataFrame) -> DataFrame:
     """doc_ids of ``gated`` docs sharing any 3-gram with the benchmark set
     (the q_decontaminate contract; bench side is eval-suite-sized →
-    broadcast)."""
+    broadcast, with no distinct: a semi-join's build side needs none)."""
     from breweries_case_spark.operators.text import _ngram_rows
 
     return (
         _ngram_rows(gated, 3)
-        .join(F.broadcast(bench_grams.select("g").distinct()), "g", "left_semi")
+        .join(F.broadcast(bench_grams.select("g")), "g", "left_semi")
         .select("doc_id")
         .distinct()
     )
@@ -111,18 +113,25 @@ def _near_dup_shard_ids(
 
     Flow — every stage O(shard) or O(candidates), never O(corpus):
     shard shingles → signatures → bands; broadcast the shard's tiny
-    bucket-key set to semi-join the STORED bucket state (corpus rows
-    sharing no bucket are pruned before any pair forms); exact-Jaccard
-    verify only the candidates, reading corpus TEXT only for candidate
-    docs (semi-join on the docs table). Within-shard near-dups resolve
-    keep-min-doc_id over the same verified pair set."""
-    from breweries_case_spark.operators.dedup import jaccard_verified
+    bucket-key set to semi-join the STORED bucket state of every other
+    day (corpus rows sharing no bucket are pruned before any pair
+    forms); the within-shard and vs-corpus candidate pairs are
+    materialized once, as one shard-sized id set; one exact-Jaccard
+    verify then checks them all, reading corpus TEXT only for candidate
+    docs of other days. Its b side is tagged shard / stored, so a shard
+    doc never verifies against a stored doc that reuses its id, or
+    against its own earlier copy when a day is retried. Every pair
+    has doc_a in the shard and doc_a > doc_b within it, so dropping
+    each verified doc_a resolves within-shard near-dups keep-min."""
+    from breweries_case_spark.operators.dedup import (
+        broadcast_if_small,
+        jaccard_verified,
+    )
 
     sh_shard = _shingles(fresh).localCheckpoint()
     shard_banded = _banded(sh_shard).localCheckpoint()
 
-    # --- within shard ---
-    intra = (
+    pairs = (
         shard_banded.alias("x")
         .join(
             shard_banded.alias("y"),
@@ -131,14 +140,11 @@ def _near_dup_shard_ids(
             & (F.col("x.doc_id") < F.col("y.doc_id")),
         )
         .select(
-            F.col("y.doc_id").alias("doc_a"), F.col("x.doc_id").alias("doc_b")
+            F.col("y.doc_id").alias("doc_a"),
+            F.col("x.doc_id").alias("doc_b"),
+            F.lit(False).alias("stored"),
         )
-        .distinct()
     )
-    # doc_a > doc_b by construction: the LOWER id survives keep-min
-    drop = jaccard_verified(intra, sh_shard, sh_shard)
-
-    # --- vs corpus ---
     stored = read_other_partitions(
         spark, os.path.join(corpus_dir, LSH_TABLE), [shard_date]
     )
@@ -147,26 +153,35 @@ def _near_dup_shard_ids(
         corpus_hits = stored.join(
             F.broadcast(shard_buckets), ["band_idx", "band_hash"], "left_semi"
         )
-        cands = (
-            shard_banded.withColumnRenamed("doc_id", "doc_a")
-            .join(
+        pairs = pairs.unionByName(
+            shard_banded.join(
                 corpus_hits.withColumnRenamed("doc_id", "doc_b"),
                 ["band_idx", "band_hash"],
+            ).select(
+                F.col("doc_id").alias("doc_a"), "doc_b", F.lit(True).alias("stored")
             )
-            .select("doc_a", "doc_b")
-            .distinct()
         )
-        cand_corpus_docs = read_snapshot(
-            spark, os.path.join(corpus_dir, DOCS_TABLE)
-        ).join(
-            cands.select(F.col("doc_b").alias("doc_id")).distinct(),
+    cands = broadcast_if_small(pairs.distinct())
+
+    b_docs = sh_shard.withColumn("stored", F.lit(False))
+    other_docs = (
+        None
+        if stored is None
+        else read_other_partitions(
+            spark, os.path.join(corpus_dir, DOCS_TABLE), [shard_date]
+        )
+    )
+    if other_docs is not None:
+        cand_docs = other_docs.join(
+            cands.filter("stored").select(F.col("doc_b").alias("doc_id")),
             "doc_id",
             "left_semi",
         )
-        drop = jaccard_verified(
-            cands, sh_shard, _shingles(cand_corpus_docs)
-        ).unionByName(drop)
+        b_docs = b_docs.unionByName(
+            _shingles(cand_docs).withColumn("stored", F.lit(True))
+        )
 
+    drop = jaccard_verified(cands, sh_shard, b_docs, b_tag="stored")
     return drop.select(F.col("doc_a").alias("doc_id")).distinct(), shard_banded
 
 
@@ -255,18 +270,19 @@ def update_corpus(
     if persist_lsh_state is None:
         persist_lsh_state = near_dedup
     dropped = None
-    shard_banded = None
+    near_drop = None
     if near_dedup:
         fresh = fresh.localCheckpoint()
         near_drop, shard_banded = _near_dup_shard_ids(
             spark, fresh, corpus_dir, shard_date
         )
-        # tiny id set: cut the probe/verify lineage so it runs once, and
-        # count it in the same job
+        # shard-sized id set: materialized once (cutting the probe/verify
+        # lineage) and counted in the same job; it joins as a size-gated
+        # broadcast, here and in the LSH-state commit
         dropped = Observation()
-        near_drop = near_drop.observe(
-            dropped, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint()
+        near_drop = broadcast_if_small(
+            near_drop.observe(dropped, F.count(F.lit(1)).alias("n"))
+        )
         fresh = fresh.join(near_drop, "doc_id", "left_anti")
 
     # materialize the accepted set ONCE, counting it in the same job: the
@@ -299,14 +315,16 @@ def update_corpus(
     )
     v = _commit(accepted.select("fp", "doc_id", "shard_date"), fp_dir)
     if persist_lsh_state:
-        # persist bucket state for ACCEPTED docs only (dropped docs must
-        # not shadow future deliveries of the doc that displaced them)
-        if shard_banded is None:
-            shard_banded = _banded(_shingles(accepted))
+        # persist bucket state for ACCEPTED docs only (near-dropped docs
+        # must not shadow future deliveries of the doc that displaced
+        # them); the backfill bands the accepted docs themselves
+        accepted_banded = (
+            _banded(_shingles(accepted))
+            if near_drop is None
+            else shard_banded.join(near_drop, "doc_id", "left_anti")
+        )
         _commit(
-            shard_banded.join(
-                accepted.select("doc_id"), "doc_id", "left_semi"
-            ).withColumn("shard_date", F.lit(shard_date)),
+            accepted_banded.withColumn("shard_date", F.lit(shard_date)),
             os.path.join(corpus_dir, LSH_TABLE),
         )
     return {

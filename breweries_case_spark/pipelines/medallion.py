@@ -227,9 +227,10 @@ def run_medallion_snapshotted(
     emulate with directory removal (see ``_persist_layer``) — and an
     empty first run publishes nothing.
 
-    The snapshot log stores partition values as strings (directory-name
-    encoding); reads restore ``extraction_date`` to DATE before the next
-    stage consumes it."""
+    The snapshot log returns partition values as strings; reads restore
+    ``extraction_date`` to DATE before the next stage consumes it. Each
+    read scans with the schema the layer's manifest recorded, so the
+    reads run no Spark job of their own."""
     from breweries_case_spark.io.snapshots import (
         commit_overwrite_partitions,
         read_snapshot,

@@ -340,6 +340,20 @@ def test_all_rejected_shard_counts_zero_and_deletes_partition(
         spark.conf.set(key, prior)
 
 
+def _update_jobs(spark, group, *args, **kwargs):
+    """(audit, jobs) of one ``update_corpus`` call under its own job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "update_corpus job count")
+    try:
+        audit = update_corpus(spark, *args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return audit, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_update_corpus_runs_no_count_jobs(spark, tmp_path):
     """A daily near-dedup update launches only its materializations and
     commits: the audit counts are observed, so an extra count() adds a
@@ -350,24 +364,52 @@ def test_update_corpus_runs_no_count_jobs(spark, tmp_path):
         spark,
         [(10, SHORT, "en", "web"), (11, GOOD2, "en", "web"), (12, NEAR1_EDIT, "en", "web")],
     )
-    sc = spark.sparkContext
-    group = f"corpus-jobs-{tmp_path.name}"
-    sc.setJobGroup(group, "update_corpus job count")
-    try:
-        audit = update_corpus(
-            spark, day2, c, "2026-08-02",
-            bench_grams=_bench_grams(spark), near_dedup=True,
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    audit, jobs = _update_jobs(
+        spark, f"corpus-jobs-{tmp_path.name}", day2, c, "2026-08-02",
+        bench_grams=_bench_grams(spark), near_dedup=True,
+    )
     assert (audit["n_in"], audit["n_after_gate"], audit["n_accepted"]) == (3, 2, 1)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
     # test profile (AQE off): the contaminated-id broadcast, the fresh,
     # near-drop and accepted checkpoints with the near-dup probe's own
-    # materializations, and the docs / fingerprints / LSH commits; each
-    # count() would add a job
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 20
+    # materializations (shingles, bands, candidate pairs) and broadcast
+    # builds, and the docs / fingerprints / LSH commits; the state reads
+    # infer no schema, and each count() would add a job
+    assert jobs == 19
+
+
+def test_update_corpus_jobs_do_not_grow_with_history(spark, tmp_path):
+    """The fingerprint, bucket and candidate-doc reads scan every other
+    day with the schema its manifest recorded, so a near-dedup update
+    runs the same jobs after 1 and after 4 stored days (a read that
+    inferred schemas paid one job per stored day and table)."""
+    import random
+
+    rng = random.Random(7)
+    words = (
+        "river stone cloud maple harbor lantern meadow copper violet summit"
+        " anchor willow ember falcon garden quartz orchard canyon tundra"
+        " beacon island forest desert valley glacier prairie marsh lagoon"
+    ).split()
+    jobs = {}
+    for days in (1, 4):
+        c = str(tmp_path / f"corpus{days}")
+        for d in range(days):
+            rows = [
+                (10 * d + i, " ".join(rng.sample(words, 14)), "en", "web")
+                for i in (1, 2)
+            ]
+            stats = update_corpus(
+                spark, _shard(spark, rows), c, f"2026-07-{d + 1:02d}",
+                near_dedup=True,
+            )
+            assert stats["n_accepted"] == 2
+        day = _shard(spark, [(900, GOOD2, "en", "web"), (901, OTHER, "en", "web")])
+        audit, jobs[days] = _update_jobs(
+            spark, f"corpus-history-{tmp_path.name}-{days}", day, c,
+            "2026-08-01", near_dedup=True,
+        )
+        assert audit["n_accepted"] == 2
+    assert jobs[1] == jobs[4], jobs
 
 
 @pytest.mark.parametrize(
@@ -398,3 +440,39 @@ def test_update_after_rerun_deleted_a_state_partition(spark, tmp_path, other_day
     assert (s3["n_near_dropped"], s3["n_accepted"]) == (0, 2)
     want = {("2026-08-03", 3), ("2026-08-03", 4)}
     assert _ids(spark, c) == (want | {("2026-08-01", 1)} if other_day else want)
+
+
+# REUSED_B shares an LSH bucket with REUSED_A at Jaccard ≈ 0.22, under
+# the verify threshold: a candidate pair that must NOT be dropped
+REUSED_A = (
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+    " omicron pi"
+)
+REUSED_B = (
+    "harbor summit gamma delta epsilon zeta eta theta iota ember lambda river"
+    " nu canyon falcon pi"
+)
+
+
+def test_retry_converges_when_a_shard_reuses_a_stored_doc_id(spark, tmp_path):
+    """Day 2 delivers doc id 5, which day 1 already stored with other
+    text. Its candidate pair against the stored doc 5 fails the verify,
+    so the doc is accepted — and a crash-retry of day 2 must verify it
+    against day 1's doc 5 again, not against its own copy the first run
+    stored (Jaccard 1.0), which would drop it and delete the day."""
+    from breweries_case_spark.pipelines.corpus import _banded, _shingles
+
+    pair = _shard(spark, [(1, REUSED_A, "en", "web"), (2, REUSED_B, "en", "web")])
+    shared = _banded(_shingles(pair)).groupBy("band_idx", "band_hash").count()
+    assert shared.filter("count > 1").count() > 0  # the pair is a candidate
+
+    c = str(tmp_path / "corpus")
+    day1 = _shard(spark, [(5, REUSED_A, "en", "web")])
+    update_corpus(spark, day1, c, "2026-08-01", near_dedup=True)
+    day2 = _shard(spark, [(5, REUSED_B, "en", "web")])
+    keys = ("n_in", "n_after_gate", "n_near_dropped", "n_accepted")
+    first = update_corpus(spark, day2, c, "2026-08-02", near_dedup=True)
+    assert [first[k] for k in keys] == [1, 1, 0, 1]
+    retry = update_corpus(spark, day2, c, "2026-08-02", near_dedup=True)
+    assert [retry[k] for k in keys] == [1, 1, 0, 1]
+    assert _ids(spark, c) == {("2026-08-01", 5), ("2026-08-02", 5)}

@@ -503,10 +503,11 @@ def test_sampling_plan_shapes(spark, sf_dir):
 
 
 def test_run_medallion_snapshotted_runs_only_the_layer_commits(spark, tmp_path):
-    """A snapshotted day launches one job per layer commit plus the
-    schema read of each committed layer it reads back: the audit counts
-    are observed on the commits' writes, so an emptiness probe or a
-    count() adds a job here."""
+    """A snapshotted day launches one job per layer commit and nothing
+    else: the audit counts are observed on the commits' writes, and the
+    layers it reads back are scanned with the schema their manifests
+    recorded, so an emptiness probe, a count() or a schema-inference
+    read adds a job here."""
     from breweries_case_spark.pipelines.medallion import run_medallion_snapshotted
 
     sc = spark.sparkContext
@@ -521,9 +522,8 @@ def test_run_medallion_snapshotted_runs_only_the_layer_commits(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert audit == {"bronze": 20, "silver": 20, "gold": 1}
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    # test profile (AQE off): 3 layer writes + 2 parquet schema reads
-    # (bronze and silver read back from their snapshot files)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    # test profile (AQE off): the 3 layer writes
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
 
 
 @pytest.mark.parametrize("aqe", ["false", "true"], ids=["aqe_off", "aqe_on"])

@@ -475,3 +475,120 @@ def test_replace_partitions_drops_listed_values_without_rows(spark, tmp_path):
     assert commit_overwrite_partitions(_df(spark, []), t, "day", ["d9"]) == 2
     assert commit_delete_partitions(t, ["d2"]) == 2
     assert latest_version(t) == 2
+
+
+# --- declared-schema reads and partition values -----------------------------
+
+
+def _read_jobs(spark, tdir, group):
+    """(rows, jobs) of reading and counting the latest snapshot."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        n = read_snapshot(spark, tdir).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return n, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_read_jobs_do_not_grow_with_partitions(spark, tmp_path):
+    """Reads scan with the schema the manifest recorded: no read runs a
+    schema-inference job, so a 1-, 16- and 64-partition snapshot read
+    and count in the same jobs (64 partitions also exceed the 32 root
+    paths above which Spark lists files in a job of its own)."""
+    from pyspark.sql import functions as F
+
+    jobs = {}
+    for n in (1, 16, 64):
+        t = str(tmp_path / f"t{n}")
+        df = spark.range(n).select(
+            "id", F.format_string("d%02d", "id").alias("day")
+        )
+        commit_overwrite_partitions(df, t, "day")
+        rows, jobs[n] = _read_jobs(spark, t, f"snap-read-{tmp_path.name}-{n}")
+        assert rows == n
+    # only the count's own jobs: 1 with AQE off, 2 with it on
+    assert jobs[1] == jobs[16] == jobs[64] <= 2, jobs
+
+
+def test_manifest_without_schema_reads_back_identical_rows(spark, tmp_path):
+    """A manifest written before the log recorded schemas reads back the
+    same rows and column types: the schema is inferred once, from one
+    file."""
+    import datetime
+    import json
+
+    from breweries_case_spark.io.snapshots import _manifest_path
+
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [
+            (1, 0.5, [1, 2], datetime.datetime(2024, 1, 1, 3), "d1"),
+            (2, None, [], None, "d2"),
+        ],
+        "id long, x double, xs array<int>, ts timestamp, day string",
+    )
+    commit_overwrite_partitions(df, t, "day")
+    declared = read_snapshot(spark, t)
+    want = (declared.schema, sorted(declared.collect()))
+    _, declared_jobs = _read_jobs(spark, t, f"snap-declared-{tmp_path.name}")
+
+    path = _manifest_path(t, 1)
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest.pop("schema", None)
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    inferred = read_snapshot(spark, t)
+    assert (inferred.schema, sorted(inferred.collect())) == want
+    rows, jobs = _read_jobs(spark, t, f"snap-legacy-{tmp_path.name}")
+    assert (rows, jobs) == (2, declared_jobs + 1)  # one inference job
+
+
+def test_every_verb_carries_the_schema_forward(spark, tmp_path):
+    """Overwrite and branch commits record the staged schema; delete,
+    compaction, rollback and merge carry it from the manifest they build
+    on, so no version of the table reads with an inferred schema."""
+    from breweries_case_spark.io import branches
+    from breweries_case_spark.io.snapshots import (
+        _read_manifest,
+        commit_delete_partitions,
+        compact_partitions,
+    )
+
+    t = str(tmp_path / "t")
+    commit_overwrite_partitions(_df(spark, [(1, "d1"), (2, "d2")]), t, "day")
+    schema = _read_manifest(t, 1)["schema"]
+    assert [f["name"] for f in schema["fields"]] == ["id"]
+    branches.create_branch(t, "b")
+    branches.commit_to_branch(_df(spark, [(3, "d3")]), t, "b", "day")
+    commit_delete_partitions(t, ["d2"])  # v2
+    compact_partitions(spark, t)  # v3
+    rollback(t, 1)  # v4
+    branches.merge_branch(t, "b")  # v5
+    for v in range(1, 6):
+        assert _read_manifest(t, v)["schema"] == schema, v
+    head = branches._read_branch_manifest(t, "b", branches._branch_versions(t, "b")[-1])
+    assert head["schema"] == schema
+    assert _counts(spark, t) == {"d1": {1}, "d2": {2}, "d3": {3}}
+
+
+def test_partition_values_that_spark_escapes_round_trip(spark, tmp_path):
+    """Spark escapes path specials in partition directory names (``:`` →
+    ``%3A``, ``%`` → ``%25``); the log records the value as written, so
+    reads return it, ``read_other_partitions`` excludes it, and a rerun
+    that names it with no rows drops it."""
+    from breweries_case_spark.io.snapshots import read_other_partitions
+
+    t = str(tmp_path / "t")
+    odd = ["2024-01-01T00:00", "x%3Ay", "a b"]
+    commit_overwrite_partitions(
+        _df(spark, [(1, "d1")] + [(i + 2, v) for i, v in enumerate(odd)]), t, "day"
+    )
+    assert _counts(spark, t) == {"d1": {1}, **{v: {i + 2} for i, v in enumerate(odd)}}
+    others = read_other_partitions(spark, t, odd)
+    assert {(r.id, r.day) for r in others.collect()} == {(1, "d1")}
+    commit_overwrite_partitions(_df(spark, []), t, "day", odd)
+    assert _counts(spark, t) == {"d1": {1}}
