@@ -23,7 +23,9 @@ Layout::
 
 ``schema`` is the data files' Spark schema (JSON; the partition column
 is not stored in the files). ``partitions`` is keyed by the partition
-VALUE as written, not by its escaped directory name.
+VALUE as written, not by its escaped directory name; a null value is
+keyed by Spark's default-partition name (``_NULL_PARTITION``), and
+reads restore it as null.
 
 Protocol — this module owns it, for the trunk chain above and for the
 branch chains of ``io/branches.py``:
@@ -257,6 +259,17 @@ def _file_schema(
     return spark.read.parquet(os.path.join(table_dir, files[0])).schema
 
 
+#: the directory value Spark writes for a null partition value, and so
+#: the manifest key of that partition
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_value(val: str):
+    """The literal a scan restores for partition key ``val``: the value,
+    or a null string for Spark's null partition."""
+    return F.lit(None).cast("string") if val == _NULL_PARTITION else F.lit(val)
+
+
 def _scan(
     spark: SparkSession,
     table_dir: str,
@@ -266,8 +279,8 @@ def _scan(
     """The one partition map → DataFrame scan: each selected partition's
     files (all partitions when ``values`` is None), read with the
     manifest's file schema and the partition value restored as a literal
-    column, unioned in value order. None when no selected partition
-    holds files."""
+    column (null for the null partition), unioned in value order. None
+    when no selected partition holds files."""
     want = None if values is None else set(values)
     selected = [
         (val, files)
@@ -279,7 +292,9 @@ def _scan(
     schema = _file_schema(spark, table_dir, manifest, selected[0][1])
     pcol = manifest["partition_col"]
     parts = [
-        _read_files(spark, table_dir, schema, files).withColumn(pcol, F.lit(val))
+        _read_files(spark, table_dir, schema, files).withColumn(
+            pcol, _partition_value(val)
+        )
         for val, files in selected
     ]
     return functools.reduce(DataFrame.union, parts)

@@ -863,25 +863,39 @@ def _band_structs(n_bands: int) -> list:
     return out
 
 
-def _bands(dist: DataFrame, n_bands: int = _HASH_BANDS) -> DataFrame:
-    """(hash_hi, hash_lo) → one (hash_hi, hash_lo, band_idx, band_val)
-    row per band of the ``_band_structs`` geometry."""
-    return dist.select(
-        "hash_hi",
-        "hash_lo",
-        F.explode(F.array(*_band_structs(n_bands))).alias("b"),
+#: the columns a band row always has; any other column is payload
+_BAND_COLS = ("hash_hi", "hash_lo", "band_idx", "band_val")
+
+
+def _payload(rows: DataFrame) -> list[str]:
+    return [c for c in rows.columns if c not in _BAND_COLS]
+
+
+def _bands(rows: DataFrame, n_bands: int = _HASH_BANDS) -> DataFrame:
+    """(hash_hi, hash_lo, …) → one row per band of the ``_band_structs``
+    geometry: every input column, then (band_idx, band_val). Payload
+    columns (a shard representative, a stored label) ride through, so a
+    band join yields them without a join back to ``rows``."""
+    return rows.select(
+        "*", F.explode(F.array(*_band_structs(n_bands))).alias("b")
     ).select(
-        "hash_hi",
-        "hash_lo",
+        *rows.columns,
         F.col("b.band_idx").alias("band_idx"),
         F.col("b.band_val").alias("band_val"),
     )
 
 
-def _rare_bands(bands: DataFrame, cap: int) -> DataFrame:
+def _rare_bands(bands: DataFrame, cap: int, by_window: bool = False) -> DataFrame:
     """The band rows whose (band_idx, band_val) bucket holds ≤ ``cap``
     rows — over distinct hashes, every surviving bucket pairs at most
-    cap² candidates."""
+    cap² candidates. The count is a group-by (partial aggregation never
+    buffers a bucket, so a hot bucket costs nothing to drop), or with
+    ``by_window`` a window over the bucket: one exchange fewer, which a
+    band join on the same keys reuses, but the window buffers each
+    bucket whole, so use it only on shard-sized rows."""
+    if by_window:
+        df = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val"))
+        return bands.withColumn("df", df).filter(F.col("df") <= cap).drop("df")
     rare = (
         bands.groupBy("band_idx", "band_val")
         .agg(F.count("*").alias("df"))
@@ -891,15 +905,72 @@ def _rare_bands(bands: DataFrame, cap: int) -> DataFrame:
     return bands.join(rare, ["band_idx", "band_val"], "left_semi")
 
 
+def _hamming(a: str, b: str):
+    """Bit distance between the (hash_hi, hash_lo) of aliases ``a``, ``b``."""
+    return F.bit_count(
+        F.col(f"{a}.hash_hi").bitwiseXOR(F.col(f"{b}.hash_hi"))
+    ) + F.bit_count(F.col(f"{a}.hash_lo").bitwiseXOR(F.col(f"{b}.hash_lo")))
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """The banded self-join: every pair of ``_bands`` rows that share a
+    (band_idx, band_val) bucket, the smaller hash as ``a`` — one row per
+    shared band, so a pair sharing k bands appears k times. Columns:
+    hi_a, lo_a, hi_b, lo_b, hamming, then ``<c>_a`` / ``<c>_b`` for each
+    payload column ``c`` of the band rows."""
+    a, b = bands.alias("a"), bands.alias("b")
+    pair_lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
+        F.col("b.hash_hi"), F.col("b.hash_lo")
+    )
+    return a.join(
+        b,
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_val") == F.col("b.band_val"))
+        & pair_lt,
+    ).select(
+        F.col("a.hash_hi").alias("hi_a"),
+        F.col("a.hash_lo").alias("lo_a"),
+        F.col("b.hash_hi").alias("hi_b"),
+        F.col("b.hash_lo").alias("lo_b"),
+        _hamming("a", "b").cast("long").alias("hamming"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in _payload(bands) for s in "ab"],
+    )
+
+
+def _near_hash_edges(
+    rows: DataFrame,
+    cap: int = BAND_DF_CAP,
+    n_bands: int = _HASH_BANDS,
+    by_window: bool = False,
+) -> DataFrame:
+    """Near-hash candidate edges over DISTINCT-hash rows (hash_hi,
+    hash_lo, …): the df-capped banded self-join (``_rare_bands``,
+    ``_band_pairs``) with the XOR/bit_count verify at hamming
+    1..IMG_HAMMING_MAX. Payload columns ride through as ``<c>_a`` /
+    ``<c>_b``, so a graph builder reads its (u, v) edges straight off
+    the band join. NOT distinct: a pair that shares several bands
+    yields one row per shared band — a components consumer takes the
+    duplicates as they are, and a pairs consumer adds the ``distinct``
+    (``hash_near_pairs``)."""
+    return _band_pairs(
+        _rare_bands(_bands(rows, n_bands), cap, by_window)
+    ).filter(F.col("hamming") <= IMG_HAMMING_MAX)
+
+
 def hamming_probe(sdist: DataFrame, cdist: DataFrame) -> DataFrame:
     """The shard→corpus banded Hamming probe of the incremental image
     maintainers: shard DISTINCT hashes ``sdist`` against corpus DISTINCT
-    hashes ``cdist`` (both (hash_hi, hash_lo)) → distinct near pairs
-    (hash_hi, hash_lo = the shard hash, c_hi, c_lo = the corpus hash) at
-    hamming 1..IMG_HAMMING_MAX. The shard's band keys semi-join the
-    corpus band postings first, then the touched buckets are df-capped
-    at BAND_DF_CAP, so corpus-side candidate and count work is
-    proportional to the SHARD — the q_dedup_incremental probe
+    hashes ``cdist`` (both (hash_hi, hash_lo, …)) → distinct near pairs
+    (hash_hi, hash_lo = the shard hash, the shard side's payload
+    columns, c_hi, c_lo = the corpus hash, the corpus side's payload
+    columns) at hamming 1..IMG_HAMMING_MAX. Payload columns ride
+    through the band rows, so the maintainer feeds the shard
+    representatives (with ``rep``) and the stored index (with
+    ``label``) and reads its (rep, label) contact edges off the output;
+    the two sides' payload names must differ. The shard's band keys
+    semi-join the corpus band postings first, then the touched buckets
+    are df-capped at BAND_DF_CAP, so corpus-side candidate and count
+    work is proportional to the SHARD — the q_dedup_incremental probe
     discipline. Lossless by pigeonhole where the cap does not bite."""
     from breweries_case_spark.operators.dedup import broadcast_if_small
 
@@ -907,24 +978,20 @@ def hamming_probe(sdist: DataFrame, cdist: DataFrame) -> DataFrame:
     # the shard's band keys prune the corpus band rows BEFORE the df
     # count, so only shard-touched buckets are counted; a touched bucket
     # keeps all its postings, so its df — and the cap — are unchanged.
-    # The df is a window over the bucket, so the pruned rows are read once
-    df = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val"))
-    probe = (
-        _bands(cdist)
-        .join(
+    # What is counted is shard-sized, so the count is a window over the
+    # bucket and the pruned rows are read once
+    probe = _rare_bands(
+        _bands(cdist).join(
             # size-gated hint: shard band keys are tiny, but an
             # unconditional F.broadcast fails rather than degrades if a
             # large delivery's key set outgrows the driver
             broadcast_if_small(sbands.select("band_idx", "band_val").distinct()),
             ["band_idx", "band_val"],
             "left_semi",
-        )
-        .withColumn("df", df)
-        .filter(F.col("df") <= BAND_DF_CAP)
+        ),
+        BAND_DF_CAP,
+        by_window=True,
     )
-    hamming = F.bit_count(
-        F.col("a.hash_hi").bitwiseXOR(F.col("b.hash_hi"))
-    ) + F.bit_count(F.col("a.hash_lo").bitwiseXOR(F.col("b.hash_lo")))
     return (
         sbands.alias("a")
         .join(
@@ -932,12 +999,14 @@ def hamming_probe(sdist: DataFrame, cdist: DataFrame) -> DataFrame:
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val")),
         )
-        .filter(hamming.between(1, IMG_HAMMING_MAX))
+        .filter(_hamming("a", "b").between(1, IMG_HAMMING_MAX))
         .select(
             F.col("a.hash_hi").alias("hash_hi"),
             F.col("a.hash_lo").alias("hash_lo"),
+            *[F.col(f"a.{c}") for c in _payload(sdist)],
             F.col("b.hash_hi").alias("c_hi"),
             F.col("b.hash_lo").alias("c_lo"),
+            *[F.col(f"b.{c}") for c in _payload(cdist)],
         )
         .distinct()
     )
@@ -950,37 +1019,18 @@ def hash_near_pairs(
 ) -> DataFrame:
     """Tier-2 core over a DISTINCT-hash frame (hash_hi, hash_lo):
     df-capped banded blocking + XOR/bit_count verify, returning
-    hash-VALUE near pairs (hi_a, lo_a, hi_b, lo_b, hamming) at
-    hamming 1..IMG_HAMMING_MAX. Factored from ``hamming_near_pairs``
-    so cluster-granularity consumers (q_dedup_image_clusters) can run
-    connected components on the HASH graph directly — never
-    materializing the media-pair expansion."""
+    DISTINCT hash-VALUE near pairs (hi_a, lo_a, hi_b, lo_b, hamming) at
+    hamming 1..IMG_HAMMING_MAX — ``_near_hash_edges`` plus the
+    ``distinct`` a pairs consumer needs (hamming_near_pairs,
+    q_dedup_mechanism_cap). Graph builders (``hash_index``, the
+    maintainer day) call ``_near_hash_edges`` instead, carrying their
+    representatives through the band rows and taking the duplicate
+    edges as they come."""
     cap = BAND_DF_CAP if band_df_cap is None else band_df_cap
-    rb = _rare_bands(_bands(dist, n_bands), cap)
-    a, b = rb.alias("a"), rb.alias("b")
-    pair_lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
-        F.col("b.hash_hi"), F.col("b.hash_lo")
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & pair_lt,
-        )
-        .select(
-            F.col("a.hash_hi").alias("hi_a"),
-            F.col("a.hash_lo").alias("lo_a"),
-            F.col("b.hash_hi").alias("hi_b"),
-            F.col("b.hash_lo").alias("lo_b"),
-        )
+    return (
+        _near_hash_edges(dist.select("hash_hi", "hash_lo"), cap, n_bands)
+        .select("hi_a", "lo_a", "hi_b", "lo_b", "hamming")
         .distinct()
-    )
-    hamming = F.bit_count(
-        F.col("hi_a").bitwiseXOR(F.col("hi_b"))
-    ) + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-    return cand.withColumn("hamming", hamming.cast("long")).filter(
-        F.col("hamming") <= IMG_HAMMING_MAX
     )
 
 
@@ -1353,26 +1403,23 @@ def hash_index(hashes: DataFrame) -> DataFrame:
     (min media) per hash, capped tier-2 edges between hash values. All
     media sharing a hash share its cluster, so the label is the
     component's min media id. The incremental image maintainers carry
-    this index as their state (``_hash_cluster_update``)."""
+    this index as their state (``_hash_cluster_update``).
+
+    The representative rides through the band rows of
+    ``_near_hash_edges``, so its (rep_a, rep_b) output is the edge list
+    as it stands: duplicate edges (pairs sharing several bands) go to
+    the components engine unmerged. The rows are corpus-sized, so the
+    band cap is counted by a group-by."""
     from breweries_case_spark.operators.dedup import connected_components
 
     reps = hashes.groupBy("hash_hi", "hash_lo").agg(
         F.min("media_id").alias("rep")
     ).localCheckpoint()
-    near = hash_near_pairs(reps.select("hash_hi", "hash_lo"))
-    ra = reps.select(
-        F.col("hash_hi").alias("hi_a"),
-        F.col("hash_lo").alias("lo_a"),
-        F.col("rep").alias("u"),
-    )
-    rb = reps.select(
-        F.col("hash_hi").alias("hi_b"),
-        F.col("hash_lo").alias("lo_b"),
-        F.col("rep").alias("v"),
-    )
-    edges = near.join(ra, ["hi_a", "lo_a"]).join(rb, ["hi_b", "lo_b"])
     comps = connected_components(
-        edges.select("u", "v"), reps.select(F.col("rep").alias("node"))
+        _near_hash_edges(reps).select(
+            F.col("rep_a").alias("u"), F.col("rep_b").alias("v")
+        ),
+        reps.select(F.col("rep").alias("node")),
     )
     return reps.join(comps, F.col("rep") == F.col("node")).select(
         "hash_hi", "hash_lo", "label"
@@ -1671,18 +1718,28 @@ def _hash_cluster_update(index: DataFrame, shard: DataFrame):
     """ONE image-maintainer day: (the stored hash index (hash_hi,
     hash_lo, label), shard (media_id, hash_hi, hash_lo)) → (the
     ``maintain_clusters`` result with ``out`` keyed by media_id, the
-    lazy next index). Work is O(shard) apart from the probes' scans of
-    the index; the corpus media table is never read.
+    lazy next index). Work is O(shard) apart from the probes' narrow
+    scans of the index; no exchange takes the unpruned index, and the
+    corpus media table is never read.
 
-    The shard's single group-by gives one representative (min media) per
-    distinct shard hash. Update-graph edges: representative → stored
-    label for every index hash it hits (the exact hash tier ∪
-    ``hamming_probe``), ∪ intra-shard edges (same-hash members hook to
-    their representative, representatives connect via
-    ``hash_near_pairs`` over the shard's distinct hashes). The next index
-    is the index relabelled through the day's remap plus the shard's
-    hashes the index did not hold, each labelled with its
-    representative's cluster (``dedup.advance_state``)."""
+    The shard's single group-by gives one representative ``rep`` (min
+    media) per distinct shard hash. Update-graph edges, each read
+    straight off a join that carries its endpoints:
+
+    - contact edges (rep, stored label) for every index hash a
+      representative hits — the exact hash tier (representatives ⋈
+      index) ∪ ``hamming_probe``(representatives with ``rep``, index
+      with ``label``);
+    - same-hash shard members hook to their representative;
+    - representatives connect through ``_near_hash_edges`` over the
+      representatives (``rep`` on both sides, the cap counted by a
+      window: the rows are shard-sized).
+
+    The near edges are not distinct (a pair sharing several bands gives
+    one edge per band); ``maintain_clusters``' union-find takes the
+    duplicates. The next index is the index relabelled through the day's
+    remap plus the shard's hashes the index did not hold, each labelled
+    with its representative's cluster (``dedup.advance_state``)."""
     from breweries_case_spark.operators.dedup import (
         advance_state,
         maintain_clusters,
@@ -1693,47 +1750,19 @@ def _hash_cluster_update(index: DataFrame, shard: DataFrame):
         .agg(F.min("media_id").alias("rep"))
         .localCheckpoint()
     )
-    sdist = sreps.select("hash_hi", "hash_lo")
-    # (shard hash, stored label) for every index hash it hits
-    hits = sdist.join(index, ["hash_hi", "hash_lo"]).unionByName(
-        hamming_probe(sdist, index.select("hash_hi", "hash_lo"))
-        .join(
-            index.select(
-                F.col("hash_hi").alias("c_hi"),
-                F.col("hash_lo").alias("c_lo"),
-                "label",
-            ),
-            ["c_hi", "c_lo"],
-        )
-        .select("hash_hi", "hash_lo", "label")
-    )
-    e_corpus = sreps.join(hits, ["hash_hi", "hash_lo"]).select(
-        F.col("rep").alias("u"), F.col("label").alias("v")
+    e_corpus = (
+        sreps.join(index, ["hash_hi", "hash_lo"])
+        .select("rep", "label")
+        .unionByName(hamming_probe(sreps, index).select("rep", "label"))
+        .select(F.col("rep").alias("u"), F.col("label").alias("v"))
     )
     e_same = (
         shard.join(sreps, ["hash_hi", "hash_lo"])
         .filter(F.col("media_id") != F.col("rep"))
         .select(F.col("media_id").alias("u"), F.col("rep").alias("v"))
     )
-    e_near = (
-        hash_near_pairs(sdist)
-        .join(
-            sreps.select(
-                F.col("hash_hi").alias("hi_a"),
-                F.col("hash_lo").alias("lo_a"),
-                F.col("rep").alias("u"),
-            ),
-            ["hi_a", "lo_a"],
-        )
-        .join(
-            sreps.select(
-                F.col("hash_hi").alias("hi_b"),
-                F.col("hash_lo").alias("lo_b"),
-                F.col("rep").alias("v"),
-            ),
-            ["hi_b", "lo_b"],
-        )
-        .select("u", "v")
+    e_near = _near_hash_edges(sreps, by_window=True).select(
+        F.col("rep_a").alias("u"), F.col("rep_b").alias("v")
     )
     # one row per shard image, so its media ids are already distinct
     update = maintain_clusters(
@@ -1821,7 +1850,15 @@ def q_dedup_cluster_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is O(shard_d) Spark work in one update-graph materialization
     solved on the driver below the components gate; state maintenance
     is the touched-label remap (O(touched)) plus the shard's new
-    hashes — never a corpus rewrite, and no corpus ⋈ state join."""
+    hashes — never a corpus rewrite, and no corpus ⋈ state join.
+
+    The band joins carry their endpoints: the day's band rows hold the
+    shard representative ``rep`` or the stored ``label``, so its contact
+    edges (rep, label) and intra-shard edges (rep, rep) come straight off
+    ``hamming_probe`` and ``_near_hash_edges`` with no join back to the
+    index or the representatives — no exchange of the day's graph plan
+    takes the unpruned index. The intra-shard edges keep the duplicates
+    of pairs that share several bands; the union-find takes them."""
     return _cluster_chain(
         spark, sf_dir, lambda state, _delta: state.localCheckpoint()
     )
@@ -2211,47 +2248,17 @@ def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``video_true_pairs``: ground-truth ≥ VIDEO_SHARED_MIN pairs.
     """
     out: list[tuple[str, int]] = []
-    ham = F.bit_count(
-        F.col("a.hash_hi").bitwiseXOR(F.col("b.hash_hi"))
-    ) + F.bit_count(F.col("a.hash_lo").bitwiseXOR(F.col("b.hash_lo")))
+    ham = _hamming("a", "b")
     lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
         F.col("b.hash_hi"), F.col("b.hash_lo")
     )
 
     def _band_cands(dist: DataFrame, cap: int | None) -> DataFrame:
-        bands = dist.select(
-            "hash_hi",
-            "hash_lo",
-            F.explode(F.array(*_band_structs(_HASH_BANDS))).alias("b"),
-        ).select(
-            "hash_hi",
-            "hash_lo",
-            F.col("b.band_idx").alias("band_idx"),
-            F.col("b.band_val").alias("band_val"),
-        )
+        bands = _bands(dist)
         if cap is not None:
-            rare = (
-                bands.groupBy("band_idx", "band_val")
-                .agg(F.count("*").alias("df"))
-                .filter(F.col("df") <= cap)
-                .select("band_idx", "band_val")
-            )
-            bands = bands.join(rare, ["band_idx", "band_val"], "left_semi")
-        a, b = bands.alias("a"), bands.alias("b")
+            bands = _rare_bands(bands, cap)
         return (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & lt,
-            )
-            .select(
-                F.col("a.hash_hi").alias("hi_a"),
-                F.col("a.hash_lo").alias("lo_a"),
-                F.col("b.hash_hi").alias("hi_b"),
-                F.col("b.hash_lo").alias("lo_b"),
-            )
-            .distinct()
+            _band_pairs(bands).select("hi_a", "lo_a", "hi_b", "lo_b").distinct()
         )
 
     for tag, hashes in (
@@ -2420,9 +2427,7 @@ def q_dedup_mechanism_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    ham = F.bit_count(
-        F.col("a.hash_hi").bitwiseXOR(F.col("b.hash_hi"))
-    ) + F.bit_count(F.col("a.hash_lo").bitwiseXOR(F.col("b.hash_lo")))
+    ham = _hamming("a", "b")
     lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
         F.col("b.hash_hi"), F.col("b.hash_lo")
     )

@@ -23,6 +23,29 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _restore_runtime_conf(request):
+    """Put back every runtime SQL conf a test changed on the shared
+    session. ``session.get_session`` (the bench profile) ``getOrCreate``s
+    onto the running session and sets the bench profile's confs on it —
+    AQE on among them — so a test that runs a pipeline building its own
+    session would change how every later test plans and counts jobs."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    conf = request.getfixturevalue("spark").conf
+    before = dict(conf.getAll)
+    yield
+    after = dict(conf.getAll)
+    for key in set(before) | set(after):
+        if before.get(key) == after.get(key) or not conf.isModifiable(key):
+            continue
+        if key in before:
+            conf.set(key, before[key])
+        else:
+            conf.unset(key)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -106,6 +106,208 @@ def test_hamming_probe_pairs_only_distance_one_to_max(spark):
     )
 
 
+def _band_vals(h):
+    """The 4×16-bit band values of a (hi, lo) hash, as ``_band_structs``."""
+    hi, lo = h
+    return [(hi >> 16) & 0xFFFF, hi & 0xFFFF, (lo >> 16) & 0xFFFF, lo & 0xFFFF]
+
+
+def _ham(a, b):
+    return bin(a[0] ^ b[0]).count("1") + bin(a[1] ^ b[1]).count("1")
+
+
+def _planted_hashes():
+    """(base, neighbours, hot): random 64-bit hashes as (hi, lo) halves;
+    planted 1-, 2- and 3-bit neighbours of base hashes (a 1-bit
+    neighbour shares three bands, so the band join meets it three
+    times); and a hot band-0 bucket of 140 hashes, above BAND_DF_CAP in
+    either half, whose last two are neighbours of its first two: one
+    differs by a bit in each of bands 1–3, so it shares only the hot
+    band and the cap drops it, the other differs in band 3 only and is
+    found through bands 1 and 2."""
+    import random
+
+    rng = random.Random(7)
+    r32 = lambda: rng.getrandbits(32)  # noqa: E731
+
+    def flip(h, bits):
+        hi, lo = h
+        for b in bits:
+            if b >= 32:
+                hi ^= 1 << (b - 32)
+            else:
+                lo ^= 1 << b
+        return hi, lo
+
+    base = [(r32(), r32()) for _ in range(30)]
+    near = [flip(h, rng.sample(range(64), 1 + i % 3)) for i, h in enumerate(base[:18])]
+    near += [flip(base[0], [40, 41]), flip(base[1], [2, 3, 4])]  # within one band
+    hot = [(0xABCD0000 | rng.getrandbits(16), r32()) for _ in range(138)]
+    hot += [flip(hot[0], [32 + 3, 16 + 5, 7]), flip(hot[1], [9])]
+    assert len(set(base + near + hot)) == len(base + near + hot)
+    return base, near, hot
+
+
+def _capped_near_pairs(hashes, cap):
+    """Brute force: (a, b, hamming) for a < b at hamming 1..3 that share
+    a band whose bucket holds ≤ ``cap`` of ``hashes``."""
+    from collections import Counter
+
+    df = Counter((j, v) for h in hashes for j, v in enumerate(_band_vals(h)))
+    out = set()
+    for a in hashes:
+        for b in hashes:
+            shared = [
+                (j, v)
+                for j, (v, w) in enumerate(zip(_band_vals(a), _band_vals(b)))
+                if v == w
+            ]
+            if a < b and 1 <= _ham(a, b) <= 3 and any(df[k] <= cap for k in shared):
+                out.add((a, b, _ham(a, b)))
+    return out
+
+
+def _record_tier(monkeypatch, cluster):
+    """Record which components engine runs — driver union-find or, with
+    ``cluster``, star rounds, forced by lowering the size gate below
+    every frame (which also drops the probes' broadcast hints). Returns
+    (the engines that ran, the one that should have)."""
+    from breweries_case_spark.operators import dedup
+
+    ran = []
+    for name in ("_min_labels", "connected_components_star"):
+        real = getattr(dedup, name)
+        monkeypatch.setattr(
+            dedup, name, lambda *a, _n=name, _f=real: ran.append(_n) or _f(*a)
+        )
+    if cluster:
+        monkeypatch.setattr(dedup, "_NEEDS_BROADCAST_MAX", -1)
+    return ran, "connected_components_star" if cluster else "_min_labels"
+
+
+@pytest.fixture(params=["driver", "cluster"])
+def tier(request, monkeypatch):
+    return _record_tier(monkeypatch, request.param == "cluster")
+
+
+def test_band_edges_equal_the_join_back_edges(spark, tier):
+    """The graph edges read off band rows that carry ``rep`` equal the
+    old hash-pair output joined back to the representatives, as sets,
+    for both cap counts; ``hash_near_pairs`` keeps its exact distinct
+    pairs; ``hash_index`` labels are the components of those edges."""
+    from breweries_case_spark.operators.multimodal import (
+        BAND_DF_CAP,
+        _near_hash_edges,
+        hash_index,
+        hash_near_pairs,
+    )
+
+    ran, want = tier
+    base, near, hot = _planted_hashes()
+    hashes = base + near + hot
+    rep = {h: 1000 + 7 * i for i, h in enumerate(hashes)}
+    reps = spark.createDataFrame(
+        [(hi, lo, rep[(hi, lo)]) for hi, lo in hashes],
+        "hash_hi long, hash_lo long, rep long",
+    )
+    expected = _capped_near_pairs(hashes, BAND_DF_CAP)
+    dropped = _capped_near_pairs(hashes, len(hashes)) - expected
+    assert dropped == {(*sorted([hot[0], hot[-2]]), 3)}
+    assert (*sorted([hot[1], hot[-1]]), 1) in expected
+    pairs = hash_near_pairs(reps.select("hash_hi", "hash_lo")).collect()
+    assert len(pairs) == len(expected)
+    assert {((r.hi_a, r.lo_a), (r.hi_b, r.lo_b), r.hamming) for r in pairs} == expected
+
+    def ends(ra, rb):
+        return reps.select(
+            F.col("hash_hi").alias(ra[0]), F.col("hash_lo").alias(ra[1]),
+            F.col("rep").alias(rb),
+        )
+
+    joined_back = {
+        tuple(r)
+        for r in hash_near_pairs(reps.select("hash_hi", "hash_lo"))
+        .join(ends(("hi_a", "lo_a"), "u"), ["hi_a", "lo_a"])
+        .join(ends(("hi_b", "lo_b"), "v"), ["hi_b", "lo_b"])
+        .select("u", "v")
+        .collect()
+    }
+    assert joined_back == {(rep[a], rep[b]) for a, b, _ in expected}
+    for by_window in (False, True):
+        edges = _near_hash_edges(reps, by_window=by_window).select("rep_a", "rep_b")
+        rows = [tuple(r) for r in edges.collect()]
+        assert len(rows) > len(set(rows))  # pairs sharing several bands repeat
+        assert set(rows) == joined_back
+
+    parent = {r: r for r in rep.values()}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for u, v in joined_back:
+        a, b = find(u), find(v)
+        parent[max(a, b)] = min(a, b)
+    media = reps.select(F.col("rep").alias("media_id"), "hash_hi", "hash_lo")
+    got = {(r.hash_hi, r.hash_lo): r.label for r in hash_index(media).collect()}
+    assert got == {h: find(rep[h]) for h in hashes}
+    assert ran == [want]
+
+
+def test_probe_contact_edges_equal_the_join_back_edges(spark, tier):
+    """``hamming_probe`` fed the shard representatives (with ``rep``) and
+    the stored index (with ``label``) gives the same (rep, label) contact
+    edges as its hash-pair output joined back to both; the hot band-0
+    bucket exceeds the cap on the index side too."""
+    from breweries_case_spark.operators.dedup import maintain_clusters
+    from breweries_case_spark.operators.multimodal import hamming_probe
+
+    ran, want = tier
+    base, near, hot = _planted_hashes()
+    shard, index = near + hot[70:], base + hot[:70]
+    sreps = spark.createDataFrame(
+        [(hi, lo, 1 + 2 * i) for i, (hi, lo) in enumerate(shard)],
+        "hash_hi long, hash_lo long, rep long",
+    )
+    idx = spark.createDataFrame(
+        [(hi, lo, 10_000 + i // 3) for i, (hi, lo) in enumerate(index)],
+        "hash_hi long, hash_lo long, label long",
+    )
+    carried = {
+        tuple(r) for r in hamming_probe(sreps, idx).select("rep", "label").collect()
+    }
+    pairs = hamming_probe(
+        sreps.select("hash_hi", "hash_lo"), idx.select("hash_hi", "hash_lo")
+    )
+    joined_back = {
+        tuple(r)
+        for r in pairs.join(sreps, ["hash_hi", "hash_lo"])
+        .join(
+            idx.select(
+                F.col("hash_hi").alias("c_hi"), F.col("hash_lo").alias("c_lo"), "label"
+            ),
+            ["c_hi", "c_lo"],
+        )
+        .select("rep", "label")
+        .collect()
+    }
+    assert carried == joined_back
+    srep = {h: 1 + 2 * i for i, h in enumerate(shard)}
+    hit = {u for u, _ in carried}
+    assert srep[hot[-1]] in hit and srep[hot[-2]] not in hit
+    assert len(hit) >= 10
+    out = maintain_clusters(
+        sreps.select(F.col("rep").alias("node")),
+        spark.createDataFrame(sorted(carried), "u long, v long"),
+        spark.createDataFrame([], "u long, v long"),
+    ).out
+    assert {r.node for r in out.filter(F.col("verdict") != "new").collect()} == {
+        u for u, _ in carried
+    }
+    assert ran == [want]
+
+
 # ------------------------------------------------------- contraction step
 
 
@@ -138,23 +340,14 @@ def update(request, spark, monkeypatch):
     this tier ran."""
     from breweries_case_spark.operators import dedup
 
-    ran = []
-    for name in ("_min_labels", "connected_components_star"):
-        real = getattr(dedup, name)
-        monkeypatch.setattr(
-            dedup, name, lambda *a, _n=name, _f=real: ran.append(_n) or _f(*a)
-        )
-    if request.param == "cluster":
-        monkeypatch.setattr(dedup, "_NEEDS_BROADCAST_MAX", -1)
+    ran, want = _record_tier(monkeypatch, request.param == "cluster")
     if request.param == "driver_no_arrow":
         key = "spark.sql.execution.arrow.pyspark.enabled"
         prior = spark.conf.get(key)
         spark.conf.set(key, "false")
         request.addfinalizer(lambda: spark.conf.set(key, prior))
     result = dedup.maintain_clusters(*_graph(spark))
-    assert ran == [
-        "connected_components_star" if request.param == "cluster" else "_min_labels"
-    ]
+    assert ran == [want]
     return result
 
 
@@ -215,8 +408,10 @@ def test_advance_state_remaps_touched_labels_and_appends_shard(spark, update):
 def test_cluster_chain_job_count(spark, sf_dir):
     """A chain day is one update-graph materialization solved on the
     driver, plus the probe's and the stored hash index's own
-    materializations: an extra corpus ⋈ state pass or a Spark-side
-    components or remap step adds jobs here (test profile, AQE off)."""
+    materializations: an extra corpus ⋈ state pass, a join back from the
+    band joins' hash pairs to the index or the representatives, or a
+    Spark-side components or remap step adds jobs here (test profile,
+    AQE off)."""
     from breweries_case_spark.operators.multimodal import q_dedup_cluster_chain
 
     sc = spark.sparkContext
@@ -229,4 +424,4 @@ def test_cluster_chain_job_count(spark, sf_dir):
         sc.setLocalProperty("spark.job.description", None)
     assert len(rows) == 9
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 48
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 36

@@ -509,8 +509,8 @@ def test_snapshot_read_jobs_do_not_grow_with_partitions(spark, tmp_path):
         commit_overwrite_partitions(df, t, "day")
         rows, jobs[n] = _read_jobs(spark, t, f"snap-read-{tmp_path.name}-{n}")
         assert rows == n
-    # only the count's own jobs: 1 with AQE off, 2 with it on
-    assert jobs[1] == jobs[16] == jobs[64] <= 2, jobs
+    assert jobs[1] == jobs[16] == jobs[64], jobs
+    assert jobs[1] == 1, jobs  # only the count's own job (AQE off)
 
 
 def test_manifest_without_schema_reads_back_identical_rows(spark, tmp_path):
@@ -592,3 +592,39 @@ def test_partition_values_that_spark_escapes_round_trip(spark, tmp_path):
     assert {(r.id, r.day) for r in others.collect()} == {(1, "d1")}
     commit_overwrite_partitions(_df(spark, []), t, "day", odd)
     assert _counts(spark, t) == {"d1": {1}}
+
+
+def test_null_partition_value_reads_back_as_null(spark, tmp_path):
+    """Spark writes a null partition value as the directory
+    ``<pcol>=__HIVE_DEFAULT_PARTITION__``; trunk reads, branch reads and
+    the change feed return null for it, not that directory name."""
+    from breweries_case_spark.io.branches import (
+        commit_to_branch,
+        create_branch,
+        read_branch,
+    )
+    from breweries_case_spark.io.snapshots import (
+        read_other_partitions,
+        snapshot_diff,
+    )
+
+    t = str(tmp_path / "t")
+    commit_overwrite_partitions(_df(spark, [(1, "d1"), (2, None)]), t, "day")
+    assert sorted(map(tuple, read_snapshot(spark, t).collect())) == [
+        (1, "d1"),
+        (2, None),
+    ]
+    assert [tuple(r) for r in read_other_partitions(spark, t, ["d1"]).collect()] == [
+        (2, None)
+    ]
+    commit_overwrite_partitions(_df(spark, [(3, None)]), t, "day")
+    assert {tuple(r) for r in snapshot_diff(spark, t, 1, 2).collect()} == {
+        (3, None, "insert"),
+        (2, None, "delete"),
+    }
+    create_branch(t, "b")
+    commit_to_branch(_df(spark, [(4, None)]), t, "b", "day")
+    assert sorted(map(tuple, read_branch(spark, t, "b").collect())) == [
+        (1, "d1"),
+        (4, None),
+    ]
