@@ -404,18 +404,21 @@ def compact_partitions(
     spark: SparkSession,
     table_dir: str,
     values: list[str] | None = None,
-    target_files: int = 1,
 ) -> int:
     """Small-file compaction as a COMMIT (Iceberg's ``rewrite_data_files``
-    analog on the snapshot log): rewrite each selected partition's file
-    set into ``target_files`` files and publish a new version whose
-    content is bit-for-bit the same rows. Readers of older versions keep
-    the original files (vacuum reclaims them later); a concurrent
-    overwrite of the same partition wins harmlessly — the retry re-reads
-    the latest manifest and SKIPS partitions whose file list changed
-    since the rewrite was planned, so compaction never clobbers newer
-    data (the same no-lost-update rule Iceberg enforces via sequence
-    numbers)."""
+    analog on the snapshot log): rewrite the selected partitions (all
+    when ``values`` is None) into one file each and publish a new
+    version whose content is bit-for-bit the same rows. The rewrite is
+    one write: the selected partitions are scanned together
+    (``_scan``), repartitioned by the partition column so each value
+    lands in one task, and staged like any commit
+    (``stage_partition_files``), so compacting costs the same jobs for
+    1 or 64 partitions. Readers of older versions keep the original
+    files (vacuum reclaims them later); a concurrent overwrite of the
+    same partition wins harmlessly — the retry re-reads the latest
+    manifest and SKIPS partitions whose file list changed since the
+    rewrite was planned, so compaction never clobbers newer data (the
+    same no-lost-update rule Iceberg enforces via sequence numbers)."""
     base = latest_version(table_dir)
     if base is None:
         raise FileNotFoundError(f"no snapshots under {table_dir!r}")
@@ -425,29 +428,18 @@ def compact_partitions(
         for val, files in m["partitions"].items()
         if files and (values is None or val in values)
     }
-    commit_id = uuid.uuid4().hex
-    rewritten: dict[str, tuple[list[str], list[str]]] = {}
-    for val, files in todo.items():
-        schema = _file_schema(spark, table_dir, m, files)
-        # the partition's (already escaped) directory name, reused as is
-        entry = os.path.basename(os.path.dirname(files[0]))
-        out_dir = os.path.join(table_dir, "data", commit_id, entry)
-        _read_files(spark, table_dir, schema, files).coalesce(
-            target_files
-        ).write.parquet(out_dir)
-        new_files = sorted(
-            os.path.join("data", commit_id, entry, f)
-            for f in os.listdir(out_dir)
-            if f.endswith(".parquet")
-        )
-        rewritten[val] = (files, new_files)
+    pcol = m["partition_col"]
+    rows = _scan(spark, table_dir, m, todo)
+    staged = {} if rows is None else stage_partition_files(
+        rows.repartition(pcol), table_dir, pcol
+    )
 
     def step(head: dict) -> dict:
         partitions = dict(head["partitions"])
-        for val, (old_files, new_files) in rewritten.items():
+        for val, new_files in staged.items():
             # no-lost-update: only swap if the partition still holds
             # exactly the files this rewrite was planned against
-            if partitions.get(val) == old_files:
+            if val in todo and partitions.get(val) == todo[val]:
                 partitions[val] = new_files
         return {
             "partition_col": head["partition_col"],

@@ -247,16 +247,16 @@ _NEEDS_BROADCAST_MAX = 1_000_000
 _STAR_MAX_ROUNDS = 30
 
 
-def broadcast_if_small(
-    df: DataFrame, max_rows: int = _NEEDS_BROADCAST_MAX
-) -> DataFrame:
+def broadcast_if_small(df: DataFrame, max_rows: int | None = None) -> DataFrame:
     """Size-gated broadcast hint: an explicit ``F.broadcast`` does NOT
     degrade at runtime, so a shard-derived key set that outgrew the driver
     would fail the job outright instead of falling back to a shuffle.
-    Hint only when the frame has at most ``max_rows`` rows; above the gate
+    Hint only when the frame has at most ``max_rows`` rows (default
+    ``_NEEDS_BROADCAST_MAX``, read at call time); above the gate
     return the frame unhinted and let the shuffle semi-join plan run. Used
-    by every incremental maintainer's shard-key probe prune (dedup text,
-    multimodal image/video).
+    for shard-sized id sets (the nightly corpus update's candidate pairs,
+    dropped and contaminated ids); a probe's shard keys are gated inside
+    ``probe_postings`` instead, on the checkpoint it takes anyway.
 
     The frame is materialized once, by an eager localCheckpoint that also
     observes its row count, so the gate costs no separate count job and
@@ -264,7 +264,63 @@ def broadcast_if_small(
     wins. Callers need not checkpoint the frame first."""
     n = Observation()
     mat = df.observe(n, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    return F.broadcast(mat) if n.get["n"] <= max_rows else mat
+    gate = _NEEDS_BROADCAST_MAX if max_rows is None else max_rows
+    return F.broadcast(mat) if n.get["n"] <= gate else mat
+
+
+def probe_postings(
+    shard: DataFrame, stored: DataFrame | None, keys: list[str]
+) -> tuple[DataFrame, DataFrame | None]:
+    """THE shard→stored probe of every incremental near-dup family (text
+    LSH bands, image band postings, video frame fingerprints, the nightly
+    corpus update): before any pair forms, the stored postings are
+    pruned to the shard's ``keys``, so stored-side work is O(shard).
+
+    ``shard`` (posting rows carrying ``keys``) is materialized once, by
+    an eager localCheckpoint that observes its row count. That count
+    bounds the shard's distinct key set from above, so the size gate
+    (``_NEEDS_BROADCAST_MAX``, read at call time) costs no job of its
+    own: at most that many rows, the key projection of the checkpoint
+    joins as a broadcast semi-join; above it, as a shuffle semi-join (an
+    unconditional ``F.broadcast`` would fail a large delivery instead).
+    No ``distinct`` on the keys: a semi-join's build side needs none.
+
+    Returns (the shard checkpoint, ``stored`` semi-joined to its keys);
+    the second is None when there is no stored side yet. The probe runs
+    one job, the checkpoint; each family pairs and verifies the two
+    frames its own way."""
+    n = Observation()
+    mat = shard.observe(n, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    if stored is None:
+        return mat, None
+    probe_keys = mat.select(*keys)
+    if n.get["n"] <= _NEEDS_BROADCAST_MAX:
+        probe_keys = F.broadcast(probe_keys)
+    return mat, stored.join(probe_keys, keys, "left_semi")
+
+
+def rare_postings(
+    rows: DataFrame, keys: list[str], cap: int, by_window: bool = False
+) -> DataFrame:
+    """THE df cap of every near-dup family: the posting ``rows`` whose
+    ``keys`` bucket holds at most ``cap`` rows, so a bucket self-join
+    pairs at most cap² candidates by construction. The count is a
+    group-by (partial aggregation never buffers a bucket, so a hot
+    bucket costs nothing to drop), or with ``by_window`` a window over
+    the bucket: one exchange fewer, which a join on the same keys
+    reuses, but the window buffers each bucket whole, so use it only on
+    shard-sized rows (a probe's pruned postings: pruning keeps every
+    posting of a touched bucket, so its df is unchanged)."""
+    if by_window:
+        df = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        return rows.withColumn("_df", df).filter(F.col("_df") <= cap).drop("_df")
+    rare = (
+        rows.groupBy(*keys)
+        .agg(F.count("*").alias("_df"))
+        .filter(F.col("_df") <= cap)
+        .select(*keys)
+    )
+    return rows.join(rare, keys, "left_semi")
 
 
 def containment_pairs(
@@ -316,21 +372,28 @@ def containment_pairs(
     sized = grams.withColumn(
         "sz", F.count("*").over(Window.partitionBy("doc_id"))
     ).localCheckpoint()
-    inter = F.count("*")
-    cont = (
-        F.floor(
-            inter / F.least(F.col("sz_a"), F.col("sz_b")) * 1e6
-            + F.lit(0.5)
+
+    def rounded(inter, sz_a: str = "sz_a", sz_b: str = "sz_b"):
+        return F.floor(inter / F.least(F.col(sz_a), F.col(sz_b)) * 1e6 + F.lit(0.5)) / 1e6
+
+    def pair_groups(g: DataFrame):
+        """Same-lang pairs sharing a gram of ``g``, grouped per pair."""
+        a, b = g.alias("a"), g.alias("b")
+        return a.join(
+            b,
+            (F.col("a.lang") == F.col("b.lang"))
+            & (F.col("a.gram") == F.col("b.gram"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        ).groupBy(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.lang").alias("lang"),
+            F.col("a.sz").alias("sz_a"),
+            F.col("b.sz").alias("sz_b"),
         )
-        / 1e6
-    )
+
     if capped:
-        df_tbl = sized.groupBy("lang", "gram").agg(
-            F.count("*").alias("df")
-        )
-        rare = df_tbl.filter(F.col("df") <= cap).select("lang", "gram")
-        blocked = sized.join(rare, ["lang", "gram"], "left_semi")
-        a, b = blocked.alias("a"), blocked.alias("b")
+        blocked = rare_postings(sized, ["lang", "gram"], cap)
         # the candidate aggregate ALSO counts the rare-gram intersection
         # (one row per shared rare gram by distinctness of the gram
         # inventory) — for a pair whose BOTH docs hold only rare grams
@@ -339,28 +402,19 @@ def containment_pairs(
         # cap, making the whole verify join empty; at 100 TB only pairs
         # touching a hot gram pay it)
         cand = (
-            a.join(
-                b,
-                (F.col("a.lang") == F.col("b.lang"))
-                & (F.col("a.gram") == F.col("b.gram"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.lang").alias("lang"),
-                F.col("a.sz").alias("sz_a"),
-                F.col("b.sz").alias("sz_b"),
-            )
+            pair_groups(blocked)
             .agg(F.count("*").alias("rare_inter"))
             .localCheckpoint()  # reused by the clean/verify splits
         )
         # docs carrying at least one hot (df > cap) gram — only their
-        # pairs need the full-inventory recount
+        # pairs need the full-inventory recount. A doc in a candidate
+        # pair has blocked postings; it is hot iff it has fewer of them
+        # than grams
         hot = (
-            sized.join(rare, ["lang", "gram"], "left_anti")
+            blocked.groupBy("doc_id", "sz")
+            .agg(F.count("*").alias("n_rare"))
+            .filter(F.col("n_rare") < F.col("sz"))
             .select("doc_id")
-            .distinct()
         )
         clean = cand.join(
             hot.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_anti"
@@ -373,15 +427,7 @@ def containment_pairs(
             "lang",
             "sz_a",
             "sz_b",
-            (
-                F.floor(
-                    F.col("rare_inter")
-                    / F.least(F.col("sz_a"), F.col("sz_b"))
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("containment"),
+            rounded(F.col("rare_inter")).alias("containment"),
         )
         # checkpointed: consumed by the verify probe AND both broadcast
         # prune sides — without the pin each broadcast subtree would
@@ -422,37 +468,14 @@ def containment_pairs(
             needs.join(ga, "doc_a")
             .join(gb, ["doc_b", "gram"])
             .groupBy("doc_a", "doc_b", "lang", "sz_a", "sz_b")
-            .agg(cont.alias("containment"))
+            .agg(rounded(F.count("*")).alias("containment"))
         )
         return exact_clean.unionByName(verified).filter(
             F.col("containment") >= F.lit(t)
         )
-    a, b = sized.alias("a"), sized.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.lang").alias("lang"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
-        )
-        .agg(
-            (
-                F.floor(
-                    F.count("*")
-                    / F.least(F.col("a.sz"), F.col("b.sz"))
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("containment")
-        )
+        pair_groups(sized)
+        .agg(rounded(F.count("*"), "a.sz", "b.sz").alias("containment"))
         .filter(F.col("containment") >= F.lit(t))
     )
 
@@ -552,9 +575,7 @@ def q_dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate + semi-join keeps only rare-gram postings, so the
     self-join's per-bucket cost is capped at DF_CAP² by construction."""
     grams = _docs_with_gram_rows(spark, sf_dir).localCheckpoint()
-    df_tbl = grams.groupBy("lang", "gram").agg(F.count("*").alias("df"))
-    rare = df_tbl.filter(F.col("df") <= DF_CAP).select("lang", "gram")
-    gr = grams.join(rare, ["lang", "gram"], "left_semi")
+    gr = rare_postings(grams, ["lang", "gram"], DF_CAP)
 
     def _pairs(g: DataFrame) -> DataFrame:
         a, b = g.alias("a"), g.alias("b")
@@ -875,6 +896,10 @@ def minhash_signatures(docs_with_hashed_shingles: DataFrame) -> DataFrame:
     return ex.groupBy("doc_id").agg(*mins)
 
 
+#: the bucket key of an LSH band row
+LSH_BAND_KEYS = ["band_idx", "band_hash"]
+
+
 def _lsh_banded(sigs: DataFrame) -> DataFrame:
     """Signature table → exploded (doc_id, band_idx, band_hash) bucket rows.
     Band hashes are 64-bit (xxhash64 of the band's minhash slots), so the
@@ -962,10 +987,7 @@ def lsh_candidates(sigs: DataFrame, band_df_cap: int | None = None) -> DataFrame
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
     reps = tagged.filter(F.col("doc_id") == F.col("rep")).drop("rep")
-    banded = _lsh_banded(reps)
-    bdf = banded.groupBy("band_idx", "band_hash").agg(F.count("*").alias("df"))
-    rare = bdf.filter(F.col("df") <= cap).select("band_idx", "band_hash")
-    rb = banded.join(rare, ["band_idx", "band_hash"], "left_semi")
+    rb = rare_postings(_lsh_banded(reps), LSH_BAND_KEYS, cap)
     rep_pairs = (
         rb.alias("a")
         .join(
@@ -2319,39 +2341,47 @@ def bounded_component_assignment(
 _SHARD_MOD = 20
 
 
-def incremental_near_candidates(banded, is_shard):
-    """Shard-driven LSH probe: from the full (doc_id, band_idx, band_hash)
-    bucket table and a shard predicate, return
+def shard_band_pairs(shard_banded: DataFrame, hits: DataFrame) -> DataFrame:
+    """The text pair step of the shard→stored probe: shard band rows ⋈
+    the stored band rows ``probe_postings`` kept, on the bucket key →
+    (doc_a = shard doc, doc_b = stored doc), one row per shared band."""
+    return shard_banded.join(
+        hits.select(F.col("doc_id").alias("doc_b"), *LSH_BAND_KEYS), LSH_BAND_KEYS
+    ).select(F.col("doc_id").alias("doc_a"), "doc_b")
 
-    - ``corpus_hits`` — corpus bucket rows that share a bucket with the
-      shard (everything else is pruned BEFORE any pair forms, by a
-      broadcast left-semi join on the shard's tiny bucket-key set), and
-    - ``cand`` — distinct (doc_a = shard doc, doc_b = corpus doc)
-      candidate pairs, the shape ``jaccard_verified`` takes.
 
-    Exposed separately so the unit test can pin the O(shard) property:
-    |corpus_hits| is bounded by shard bucket collisions, not corpus size."""
-    shard_banded = banded.filter(is_shard)
-    shard_buckets = shard_banded.select("band_idx", "band_hash").distinct()
-    corpus_hits = banded.filter(~is_shard).join(
-        # size-gated hint: a daily shard's bucket-key set is tiny, but an
-        # explicit F.broadcast fails rather than degrades if it ever
-        # isn't — above the gate the semi-join runs as a shuffle
-        broadcast_if_small(shard_buckets),
-        ["band_idx", "band_hash"],
-        "left_semi",
+def incremental_near_candidates(banded: DataFrame, is_shard) -> DataFrame:
+    """Distinct (doc_a = shard doc, doc_b = corpus doc) LSH candidate
+    pairs, the shape ``jaccard_verified`` takes, from the full
+    (doc_id, band_idx, band_hash) bucket table and a shard predicate:
+    ``probe_postings`` prunes the corpus rows to the shard's bucket keys
+    before ``shard_band_pairs`` forms any pair, so corpus-side work is
+    O(shard) (tests/test_llm_ops.py pins the bound on the probe)."""
+    shard_banded, hits = probe_postings(
+        banded.filter(is_shard), banded.filter(~is_shard), LSH_BAND_KEYS
     )
-    cand = (
-        shard_banded.alias("s")
-        .join(
-            corpus_hits.alias("c"),
-            (F.col("s.band_idx") == F.col("c.band_idx"))
-            & (F.col("s.band_hash") == F.col("c.band_hash")),
+    return shard_band_pairs(shard_banded, hits).distinct()
+
+
+def dup_verdicts(shard: DataFrame, exact: DataFrame, near: DataFrame) -> DataFrame:
+    """The verdict tail of the incremental dedup ids: one row per
+    ``shard`` row (key column first, then any carried columns), left-
+    joined to ``exact`` (key, exact_dup_of) and ``near`` (key,
+    near_dup_of) → the shard columns, verdict 'exact_dup' / 'near_dup' /
+    'new' (exact precedence) and dup_of (NULL for 'new')."""
+    key = shard.columns[0]
+    return (
+        shard.join(exact, key, "left")
+        .join(near, key, "left")
+        .select(
+            *shard.columns,
+            F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact_dup"))
+            .when(F.col("near_dup_of").isNotNull(), F.lit("near_dup"))
+            .otherwise(F.lit("new"))
+            .alias("verdict"),
+            F.coalesce("exact_dup_of", "near_dup_of").alias("dup_of"),
         )
-        .select(F.col("s.doc_id").alias("doc_a"), F.col("c.doc_id").alias("doc_b"))
-        .distinct()
     )
-    return corpus_hits, cand
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2368,8 +2398,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
        rows against it.
     2. **near** — MinHash-LSH band buckets. The corpus side is probed ONLY
        where a shard doc shares a bucket: the shard's bucket-key set
-       (O(shard × bands), tiny) broadcast-semi-joins the corpus bucket
-       table before any pair is formed, so corpus-side candidate work is
+       (O(shard × bands), tiny) semi-joins the corpus bucket table
+       (``probe_postings``: a broadcast under the size gate) before any
+       pair is formed, so corpus-side candidate work is
        proportional to the SHARD, not the corpus — the unit test pins this
        (corpus docs reaching verification ≪ corpus). Candidates are
        verified with exact hashed-shingle Jaccard ≥ 0.5 (same-lang), the
@@ -2407,26 +2438,14 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- tier 2: near-dup via shard-driven bucket probe ---
     sh_docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
     banded = _lsh_banded(minhash_signatures(sh_docs)).localCheckpoint()
-    _, cand = incremental_near_candidates(banded, is_shard)
+    cand = incremental_near_candidates(banded, is_shard)
     near = (
         jaccard_verified(cand, sh_docs, sh_docs)
         .groupBy(F.col("doc_a").alias("doc_id"))
         .agg(F.min("doc_b").alias("near_dup_of"))
     )
 
-    return (
-        shard_docs.join(ex, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            "lang",
-            F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("near_dup_of").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-            F.coalesce("exact_dup_of", "near_dup_of").alias("dup_of"),
-        )
-    )
+    return dup_verdicts(shard_docs, ex, near)
 
 
 def _text_cluster_update(
@@ -2441,7 +2460,7 @@ def _text_cluster_update(
     not recomputed; here it is built once as the baseline). Edges:
 
     - shard↔corpus: the q_dedup_incremental LSH bucket probe (shard band
-      keys broadcast-semi-join the corpus bucket table), candidates
+      keys semi-join the corpus bucket table, ``probe_postings``), candidates
       verified by ``jaccard_verified``, mapped doc → stored label;
     - intra-shard: MinHash ∪ SimHash restricted to the shard (the
       flagship blocker pair), then the same verify.
@@ -2489,7 +2508,7 @@ def _text_cluster_update(
     ).localCheckpoint()
 
     banded = _lsh_banded(sigs_full).localCheckpoint()
-    _, cand = incremental_near_candidates(banded, is_shard)
+    cand = incremental_near_candidates(banded, is_shard)
     e_corpus = (
         jaccard_verified(cand, sh_docs, sh_docs)
         .join(corpus_assign.withColumnRenamed("node", "doc_b"), "doc_b")

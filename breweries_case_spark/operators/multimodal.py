@@ -30,6 +30,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from breweries_case_spark.io.reader import load_table
+from breweries_case_spark.operators.dedup import (
+    dup_verdicts,
+    probe_postings,
+    rare_postings,
+)
 
 MODALITIES = ("image", "audio", "video")
 
@@ -805,6 +810,16 @@ def _ahash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(media_id, hash_hi, hash_lo): the audio delta-sign hash in the
+    same shape as ``_ahash_table``."""
+    return audio_hashes(spark, sf_dir).select(
+        "media_id",
+        F.col("dhash_hi").alias("hash_hi"),
+        F.col("dhash_lo").alias("hash_lo"),
+    )
+
+
 def q_multimodal_image_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered form of ``image_hashes`` — see its docstring. The
     oracle regenerates every pixel from the synth closed form
@@ -863,8 +878,11 @@ def _band_structs(n_bands: int) -> list:
     return out
 
 
+#: the bucket key of a band row, and the hash key of a posting
+_BAND_KEYS = ["band_idx", "band_val"]
+_HASH_KEYS = ["hash_hi", "hash_lo"]
 #: the columns a band row always has; any other column is payload
-_BAND_COLS = ("hash_hi", "hash_lo", "band_idx", "band_val")
+_BAND_COLS = (*_HASH_KEYS, *_BAND_KEYS)
 
 
 def _payload(rows: DataFrame) -> list[str]:
@@ -883,26 +901,6 @@ def _bands(rows: DataFrame, n_bands: int = _HASH_BANDS) -> DataFrame:
         F.col("b.band_idx").alias("band_idx"),
         F.col("b.band_val").alias("band_val"),
     )
-
-
-def _rare_bands(bands: DataFrame, cap: int, by_window: bool = False) -> DataFrame:
-    """The band rows whose (band_idx, band_val) bucket holds ≤ ``cap``
-    rows — over distinct hashes, every surviving bucket pairs at most
-    cap² candidates. The count is a group-by (partial aggregation never
-    buffers a bucket, so a hot bucket costs nothing to drop), or with
-    ``by_window`` a window over the bucket: one exchange fewer, which a
-    band join on the same keys reuses, but the window buffers each
-    bucket whole, so use it only on shard-sized rows."""
-    if by_window:
-        df = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val"))
-        return bands.withColumn("df", df).filter(F.col("df") <= cap).drop("df")
-    rare = (
-        bands.groupBy("band_idx", "band_val")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= cap)
-        .select("band_idx", "band_val")
-    )
-    return bands.join(rare, ["band_idx", "band_val"], "left_semi")
 
 
 def _hamming(a: str, b: str):
@@ -944,8 +942,8 @@ def _near_hash_edges(
     by_window: bool = False,
 ) -> DataFrame:
     """Near-hash candidate edges over DISTINCT-hash rows (hash_hi,
-    hash_lo, …): the df-capped banded self-join (``_rare_bands``,
-    ``_band_pairs``) with the XOR/bit_count verify at hamming
+    hash_lo, …): the df-capped banded self-join (``dedup.rare_postings``
+    on the band key, ``_band_pairs``) with the XOR/bit_count verify at hamming
     1..IMG_HAMMING_MAX. Payload columns ride through as ``<c>_a`` /
     ``<c>_b``, so a graph builder reads its (u, v) edges straight off
     the band join. NOT distinct: a pair that shares several bands
@@ -953,52 +951,36 @@ def _near_hash_edges(
     duplicates as they are, and a pairs consumer adds the ``distinct``
     (``hash_near_pairs``)."""
     return _band_pairs(
-        _rare_bands(_bands(rows, n_bands), cap, by_window)
+        rare_postings(_bands(rows, n_bands), _BAND_KEYS, cap, by_window)
     ).filter(F.col("hamming") <= IMG_HAMMING_MAX)
 
 
 def hamming_probe(sdist: DataFrame, cdist: DataFrame) -> DataFrame:
     """The shard→corpus banded Hamming probe of the incremental image
-    maintainers: shard DISTINCT hashes ``sdist`` against corpus DISTINCT
-    hashes ``cdist`` (both (hash_hi, hash_lo, …)) → distinct near pairs
-    (hash_hi, hash_lo = the shard hash, the shard side's payload
-    columns, c_hi, c_lo = the corpus hash, the corpus side's payload
-    columns) at hamming 1..IMG_HAMMING_MAX. Payload columns ride
-    through the band rows, so the maintainer feeds the shard
-    representatives (with ``rep``) and the stored index (with
-    ``label``) and reads its (rep, label) contact edges off the output;
-    the two sides' payload names must differ. The shard's band keys
-    semi-join the corpus band postings first, then the touched buckets
-    are df-capped at BAND_DF_CAP, so corpus-side candidate and count
-    work is proportional to the SHARD — the q_dedup_incremental probe
-    discipline. Lossless by pigeonhole where the cap does not bite."""
-    from breweries_case_spark.operators.dedup import broadcast_if_small
+    ids: shard hashes ``sdist`` against corpus DISTINCT hashes ``cdist``
+    (both (hash_hi, hash_lo, …)) → distinct near pairs (hash_hi,
+    hash_lo = the shard hash, the shard side's payload columns, c_hi,
+    c_lo = the corpus hash, the corpus side's payload columns) at
+    hamming 1..IMG_HAMMING_MAX. Payload columns ride through the band
+    rows, so a maintainer feeds the shard representatives (with ``rep``)
+    and the stored index (with ``label``) and reads its (rep, label)
+    contact edges off the output, and q_dedup_media_incremental feeds
+    shard media (with ``media_id``) and the index with ``c_rep``; the
+    two sides' payload names must differ.
 
-    sbands = _bands(sdist).localCheckpoint()
-    # the shard's band keys prune the corpus band rows BEFORE the df
-    # count, so only shard-touched buckets are counted; a touched bucket
-    # keeps all its postings, so its df — and the cap — are unchanged.
-    # What is counted is shard-sized, so the count is a window over the
-    # bucket and the pruned rows are read once
-    probe = _rare_bands(
-        _bands(cdist).join(
-            # size-gated hint: shard band keys are tiny, but an
-            # unconditional F.broadcast fails rather than degrades if a
-            # large delivery's key set outgrows the driver
-            broadcast_if_small(sbands.select("band_idx", "band_val").distinct()),
-            ["band_idx", "band_val"],
-            "left_semi",
-        ),
-        BAND_DF_CAP,
-        by_window=True,
-    )
+    ``dedup.probe_postings`` materializes the shard's band rows once and
+    prunes the corpus band rows to their keys (size-gated on the
+    checkpoint's observed row count); the touched buckets are then
+    df-capped at BAND_DF_CAP by a window (``dedup.rare_postings``: the
+    pruned rows are shard-sized, and a touched bucket keeps all its
+    postings, so its df — and the cap — are unchanged). Corpus-side
+    candidate and count work is proportional to the SHARD. Lossless by
+    pigeonhole where the cap does not bite."""
+    sbands, hits = probe_postings(_bands(sdist), _bands(cdist), _BAND_KEYS)
+    probe = rare_postings(hits, _BAND_KEYS, BAND_DF_CAP, by_window=True)
     return (
         sbands.alias("a")
-        .join(
-            probe.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
+        .join(probe.alias("b"), _BAND_KEYS)
         .filter(_hamming("a", "b").between(1, IMG_HAMMING_MAX))
         .select(
             F.col("a.hash_hi").alias("hash_hi"),
@@ -1183,14 +1165,7 @@ def q_dedup_audio_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     sawtooth's saturated all-ones bands (df 61 at sf0.1, the fixture's
     own constant-band population) sit just under the cap, pinned
     lossless by q_dedup_perceptual_capped."""
-    h = audio_hashes(spark, sf_dir)
-    return hamming_near_pairs(
-        h.select(
-            "media_id",
-            F.col("dhash_hi").alias("hash_hi"),
-            F.col("dhash_lo").alias("hash_lo"),
-        )
-    )
+    return hamming_near_pairs(_dhash_table(spark, sf_dir))
 
 
 #: minimum shared distinct frame fingerprints for a video near-dup pair
@@ -1274,13 +1249,15 @@ def video_shared_pairs(fp: DataFrame, df_cap: int | None = None) -> DataFrame:
     (q_dedup_mechanism_cap) can engage the pruning branch on driver
     data — the containment family's ``df_cap`` stance."""
     cap = FP_DF_CAP if df_cap is None else df_cap
-    fdf = fp.groupBy("hash_hi", "hash_lo").agg(F.count("*").alias("df"))
-    rare = fdf.filter(F.col("df") <= cap).select(
-        "hash_hi", "hash_lo"
-    )
-    rfp = fp.join(rare, ["hash_hi", "hash_lo"], "left_semi")
-    a, b = rfp.alias("a"), rfp.alias("b")
-    cand = (
+    cand = _fp_pairs(rare_postings(fp, _HASH_KEYS, cap))
+    return _recounted(cand, fp, fp)
+
+
+def _fp_pairs(posts: DataFrame) -> DataFrame:
+    """Distinct (media_id_a < media_id_b) video pairs sharing a
+    fingerprint posting of ``posts`` (media_id, hash_hi, hash_lo)."""
+    a, b = posts.alias("a"), posts.alias("b")
+    return (
         a.join(
             b,
             (F.col("a.hash_hi") == F.col("b.hash_hi"))
@@ -1293,14 +1270,20 @@ def video_shared_pairs(fp: DataFrame, df_cap: int | None = None) -> DataFrame:
         )
         .distinct()
     )
-    # verify: recount shared fingerprints against the FULL inventory so
-    # the published counts are exact even where the cap pruned postings
-    fa = fp.select(F.col("media_id").alias("media_id_a"), "hash_hi", "hash_lo")
-    fb = fp.select(F.col("media_id").alias("media_id_b"), "hash_hi", "hash_lo")
+
+
+def _recounted(cand: DataFrame, fa: DataFrame, fb: DataFrame) -> DataFrame:
+    """The verify step of every video pair tier: candidate pairs
+    ``cand`` (two id columns) → (the two ids, shared_frames) for the
+    pairs sharing ≥ VIDEO_SHARED_MIN fingerprints, recounted against the
+    FULL inventories ``fa`` / ``fb`` (media_id, hash_hi, hash_lo) of the
+    first / second id, so the count is exact even where a df cap pruned
+    the postings the candidates came from."""
+    a, b = cand.columns
     return (
-        cand.join(fa, "media_id_a")
-        .join(fb, ["media_id_b", "hash_hi", "hash_lo"])
-        .groupBy("media_id_a", "media_id_b")
+        cand.join(fa.withColumnRenamed("media_id", a), a)
+        .join(fb.withColumnRenamed("media_id", b), [b, *_HASH_KEYS])
+        .groupBy(a, b)
         .agg(F.count("*").alias("shared_frames"))
         .filter(F.col("shared_frames") >= VIDEO_SHARED_MIN)
     )
@@ -1452,13 +1435,7 @@ def q_dedup_media_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_cluster_assignment(_ahash_table(spark, sf_dir))
     ).withColumn("modality", F.lit("image"))
     aud = perceptual_cluster_output(
-        hash_cluster_assignment(
-            audio_hashes(spark, sf_dir).select(
-                "media_id",
-                F.col("dhash_hi").alias("hash_hi"),
-                F.col("dhash_lo").alias("hash_lo"),
-            )
-        )
+        hash_cluster_assignment(_dhash_table(spark, sf_dir))
     ).withColumn("modality", F.lit("audio"))
     vid = perceptual_cluster_output(
         video_cluster_assignment(spark, sf_dir)
@@ -1622,72 +1599,48 @@ def q_dedup_media_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delivery) against the stored fingerprint index WITHOUT re-pairing
     the corpus. Tiers:
 
-    1. **exact** — shard aHashes equi-join corpus aHashes (identical
-       fingerprint = re-upload/re-encode of the same image); at scale
-       the corpus side is the stored hash table, probed with O(shard)
-       rows.
-    2. **near** — ``hamming_probe``: the shard's band keys prune the
-       df-capped corpus band index before any pair forms (corpus-side
-       work O(shard)), and candidates XOR-verify at hamming
-       1..IMG_HAMMING_MAX.
+    The corpus side is the stored-index form the image maintainers
+    carry: one (hash_hi, hash_lo, c_rep = min media_id) row per DISTINCT
+    corpus hash, built once (``q_dedup_cluster_incremental`` builds its
+    baseline the same way). Tiers, both reading the smallest matching
+    media off ``c_rep`` with no join back to the corpus media:
+
+    1. **exact** — shard aHashes equi-join the index (identical
+       fingerprint = re-upload/re-encode of the same image), probed
+       with O(shard) rows.
+    2. **near** — ``hamming_probe``(shard media, index): the shard's
+       band keys prune the index's band postings before any pair forms
+       (corpus-side work O(shard)), the touched buckets are df-capped,
+       and candidates XOR-verify at hamming 1..IMG_HAMMING_MAX.
 
     Output: one row per shard image — verdict 'exact_dup' /
     'near_dup' / 'new' with dup_of = the smallest matching corpus
     media_id (exact precedence, NULL for 'new'). Oracle: brute-force
     closed-form SQL over the same split — like every bounded tier, a
     driver red here means blocker/cap recall loss, not a verify bug.
-    At 100 TB the corpus hash + band tables are the incremental state
+    At 100 TB the hash index is the incremental state
     (pipelines/incremental.py discipline): built once, appended per
     shard, per-day cost O(shard)."""
     h = _ahash_table(spark, sf_dir).localCheckpoint()
     is_shard = F.col("media_id") % _MEDIA_SHARD_MOD == 0
-    shard, corpus = h.filter(is_shard), h.filter(~is_shard)
-
-    # tier 1: exact fingerprint
-    ex = (
-        shard.alias("s")
-        .join(
-            corpus.alias("c"),
-            (F.col("s.hash_hi") == F.col("c.hash_hi"))
-            & (F.col("s.hash_lo") == F.col("c.hash_lo")),
-        )
-        .groupBy(F.col("s.media_id").alias("media_id"))
-        .agg(F.min("c.media_id").alias("exact_dup_of"))
+    shard = h.filter(is_shard)
+    index = (
+        h.filter(~is_shard)
+        .groupBy(*_HASH_KEYS)
+        .agg(F.min("media_id").alias("c_rep"))
+        .localCheckpoint()
     )
-
-    # tier 2: shard-driven band probe over the (capped) corpus index
-    near_hash = hamming_probe(
-        shard.select("hash_hi", "hash_lo").distinct(),
-        corpus.select("hash_hi", "hash_lo").distinct(),
+    ex = (
+        shard.join(index, _HASH_KEYS)
+        .groupBy("media_id")
+        .agg(F.min("c_rep").alias("exact_dup_of"))
     )
     nr = (
-        shard.alias("s")
-        .join(
-            near_hash.alias("n"),
-            (F.col("s.hash_hi") == F.col("n.hash_hi"))
-            & (F.col("s.hash_lo") == F.col("n.hash_lo")),
-        )
-        .join(
-            corpus.alias("c"),
-            (F.col("c.hash_hi") == F.col("n.c_hi"))
-            & (F.col("c.hash_lo") == F.col("n.c_lo")),
-        )
-        .groupBy(F.col("s.media_id").alias("media_id"))
-        .agg(F.min("c.media_id").alias("near_dup_of"))
+        hamming_probe(shard, index)
+        .groupBy("media_id")
+        .agg(F.min("c_rep").alias("near_dup_of"))
     )
-    return (
-        shard.select("media_id")
-        .join(ex, "media_id", "left")
-        .join(nr, "media_id", "left")
-        .select(
-            "media_id",
-            F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("near_dup_of").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-            F.coalesce("exact_dup_of", "near_dup_of").alias("dup_of"),
-        )
-    )
+    return dup_verdicts(shard.select("media_id"), ex, nr)
 
 
 def q_dedup_cluster_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1964,6 +1917,30 @@ def q_dedup_cluster_chain_persisted(
         shutil.rmtree(tdir, ignore_errors=True)
 
 
+def _video_probe(shard: DataFrame, corpus_fp: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The shard→corpus probe of the incremental video ids: shard
+    fingerprint postings ``shard`` against the corpus inventory
+    ``corpus_fp`` (both (media_id, hash_hi, hash_lo)) → (the shard
+    checkpoint ``dedup.probe_postings`` takes, the (shard_id, corpus_id,
+    shared_frames) pairs sharing ≥ VIDEO_SHARED_MIN fingerprints). The
+    shard's keys prune the corpus postings before any candidate forms;
+    a touched key keeps all its postings, so the FP_DF_CAP count runs on
+    shard-sized rows (a window). Candidates recount against both FULL
+    inventories, so the threshold sees exact counts under the cap."""
+    shard_fp, hits = probe_postings(shard, corpus_fp, _HASH_KEYS)
+    cand = (
+        shard_fp.join(
+            rare_postings(hits, _HASH_KEYS, FP_DF_CAP, by_window=True).select(
+                F.col("media_id").alias("corpus_id"), *_HASH_KEYS
+            ),
+            _HASH_KEYS,
+        )
+        .select(F.col("media_id").alias("shard_id"), "corpus_id")
+        .distinct()
+    )
+    return shard_fp, _recounted(cand, shard_fp, corpus_fp)
+
+
 def q_dedup_video_cluster_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1978,12 +1955,9 @@ def q_dedup_video_cluster_incremental(
     Update-graph edges:
 
         shard↔corpus pairs sharing ≥ VIDEO_SHARED_MIN fingerprints —
-        candidates from the shard's distinct fingerprint keys
-        BROADCAST-semi-pruning the FP_DF_CAP-capped corpus postings
-        (corpus work O(shard), q_dedup_video_incremental's probe),
-        verified by recounting against the candidates' FULL
-        inventories — mapped video → stored label; ∪ intra-shard
-        ``video_shared_pairs`` (shard-sized)
+        ``_video_probe`` (corpus work O(shard), shared with
+        q_dedup_video_incremental) — mapped video → stored label;
+        ∪ intra-shard ``video_shared_pairs`` (shard-sized)
 
     The shared-frame predicate is a pairwise function of the two
     inventories, so corpus↔corpus edges are already inside the stored
@@ -1993,58 +1967,16 @@ def q_dedup_video_cluster_incremental(
     + TWO recursive fixpoints (corpus-only, corpus+shard) over the
     uncapped shared-count relation; a driver red is probe/cap recall
     loss, not CC logic."""
-    from breweries_case_spark.operators.dedup import (
-        broadcast_if_small,
-        maintain_clusters,
-    )
+    from breweries_case_spark.operators.dedup import maintain_clusters
 
     fp = video_fingerprints(spark, sf_dir).localCheckpoint()
     is_shard = F.col("media_id") % _MEDIA_SHARD_MOD == 0
-    shard_fp = fp.filter(is_shard).localCheckpoint()
     corpus_fp = fp.filter(~is_shard).localCheckpoint()
     state = video_cluster_assignment_from(corpus_fp).localCheckpoint()
 
-    # shard→corpus probe: shard fingerprint keys prune the df-capped
-    # corpus postings before any candidate forms
-    rare = (
-        corpus_fp.groupBy("hash_hi", "hash_lo")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= FP_DF_CAP)
-        .select("hash_hi", "hash_lo")
-    )
-    probe = corpus_fp.join(rare, ["hash_hi", "hash_lo"], "left_semi").join(
-        broadcast_if_small(shard_fp.select("hash_hi", "hash_lo").distinct()),
-        ["hash_hi", "hash_lo"],
-        "left_semi",
-    )
-    cand = (
-        shard_fp.alias("s")
-        .join(
-            probe.alias("c"),
-            (F.col("s.hash_hi") == F.col("c.hash_hi"))
-            & (F.col("s.hash_lo") == F.col("c.hash_lo")),
-        )
-        .select(
-            F.col("s.media_id").alias("shard_id"),
-            F.col("c.media_id").alias("corpus_id"),
-        )
-        .distinct()
-    )
-    # verify: recount shared fingerprints against the FULL inventories
-    # of the candidate videos (published thresholds exact under the cap)
-    fa = shard_fp.select(
-        F.col("media_id").alias("shard_id"), "hash_hi", "hash_lo"
-    )
-    fb = corpus_fp.select(
-        F.col("media_id").alias("corpus_id"), "hash_hi", "hash_lo"
-    )
+    shard_fp, pairs = _video_probe(fp.filter(is_shard), corpus_fp)
     e_corpus = (
-        cand.join(fa, "shard_id")
-        .join(fb, ["corpus_id", "hash_hi", "hash_lo"])
-        .groupBy("shard_id", "corpus_id")
-        .agg(F.count("*").alias("shared_frames"))
-        .filter(F.col("shared_frames") >= VIDEO_SHARED_MIN)
-        .join(state.withColumnRenamed("media_id", "corpus_id"), "corpus_id")
+        pairs.join(state.withColumnRenamed("media_id", "corpus_id"), "corpus_id")
         .select(F.col("shard_id").alias("u"), F.col("label").alias("v"))
         .distinct()
     )
@@ -2071,13 +2003,13 @@ def q_dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
        q_dedup_video_clusters' collapse key used as a probe key).
        At scale the corpus side is the stored per-video set table,
        probed with O(shard) rows.
-    2. **near** — the shard's distinct fingerprints (tiny) BROADCAST-
-       semi-prune the df ≤ FP_DF_CAP corpus postings before any
-       candidate forms (corpus-side work O(shard), the
-       q_dedup_incremental discipline), then candidate (shard, corpus)
-       video pairs verify their shared count against the FULL corpus
-       inventory of the candidate videos — published thresholds exact,
-       ≥ VIDEO_SHARED_MIN.
+    2. **near** — ``_video_probe``: the shard's fingerprint keys prune
+       the corpus postings before any candidate forms (the
+       q_dedup_incremental discipline), the touched keys are capped at
+       df ≤ FP_DF_CAP (corpus-side work O(shard)), then candidate
+       (shard, corpus) video pairs verify their shared count against
+       the FULL inventories of the candidate videos — published
+       thresholds exact, ≥ VIDEO_SHARED_MIN.
 
     Output one row per shard video: verdict 'exact_dup' / 'near_dup'
     / 'new' with dup_of = the smallest matching corpus media_id
@@ -2088,12 +2020,11 @@ def q_dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver red is cap/probe recall loss, not a verify bug). At 100 TB
     the set table and the fingerprint postings are the incremental
     state: built once, appended per shard, per-day cost O(shard)."""
-    from breweries_case_spark.operators.dedup import broadcast_if_small
-
     fp = video_fingerprints(spark, sf_dir).localCheckpoint()
     is_shard = F.col("media_id") % _MEDIA_SHARD_MOD == 0
-    shard_fp = fp.filter(is_shard).localCheckpoint()
     corp_fp = fp.filter(~is_shard).localCheckpoint()
+    # the shard checkpoint of the near tier's probe also feeds the exact tier
+    shard_fp, pairs = _video_probe(fp.filter(is_shard), corp_fp)
 
     def _sets(f: DataFrame) -> DataFrame:
         return f.groupBy("media_id").agg(
@@ -2113,61 +2044,10 @@ def q_dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("media_id")
         .agg(F.min("cid").alias("exact_dup_of"))
     )
-    # near: shard fingerprint keys broadcast-prune the capped corpus
-    # postings; only colliding corpus rows enter the candidate join
-    rare_corp = corp_fp.join(
-        corp_fp.groupBy("hash_hi", "hash_lo")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= FP_DF_CAP)
-        .select("hash_hi", "hash_lo"),
-        ["hash_hi", "hash_lo"],
-        "left_semi",
+    nr = pairs.groupBy(F.col("shard_id").alias("media_id")).agg(
+        F.min("corpus_id").alias("near_dup_of")
     )
-    probe_keys = shard_fp.select("hash_hi", "hash_lo").distinct()
-    hits = rare_corp.join(
-        # size-gated hint — see broadcast_if_small
-        broadcast_if_small(probe_keys), ["hash_hi", "hash_lo"], "left_semi"
-    )
-    cand = (
-        shard_fp.join(
-            hits.select(
-                F.col("media_id").alias("cid"), "hash_hi", "hash_lo"
-            ),
-            ["hash_hi", "hash_lo"],
-        )
-        .select("media_id", "cid")
-        .distinct()
-    )
-    # verify against the FULL inventories of the candidate videos so
-    # the threshold sees exact shared counts even where the cap pruned
-    nr = (
-        cand.join(shard_fp, "media_id")
-        .join(
-            corp_fp.select(
-                F.col("media_id").alias("cid"), "hash_hi", "hash_lo"
-            ),
-            ["cid", "hash_hi", "hash_lo"],
-        )
-        .groupBy("media_id", "cid")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= VIDEO_SHARED_MIN)
-        .groupBy("media_id")
-        .agg(F.min("cid").alias("near_dup_of"))
-    )
-    return (
-        shard_fp.select("media_id")
-        .distinct()
-        .join(ex, "media_id", "left")
-        .join(nr, "media_id", "left")
-        .select(
-            "media_id",
-            F.when(F.col("exact_dup_of").isNotNull(), F.lit("exact_dup"))
-            .when(F.col("near_dup_of").isNotNull(), F.lit("near_dup"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-            F.coalesce("exact_dup_of", "near_dup_of").alias("dup_of"),
-        )
-    )
+    return dup_verdicts(shard_fp.select("media_id").distinct(), ex, nr)
 
 
 def q_dedup_media_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2220,6 +2100,60 @@ def q_dedup_media_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: the columns of a distinct hash-value pair
+_PAIR_KEYS = ["hi_a", "lo_a", "hi_b", "lo_b"]
+
+
+def _true_hash_pairs(spark: SparkSession, sf_dir: str):
+    """The all-pairs Hamming ground truth of the cap certificates: per
+    hash modality (image aHash, audio delta-sign) yields (tag, dist =
+    the checkpointed DISTINCT hashes, tp = every distinct hash-value
+    pair at hamming 1..IMG_HAMMING_MAX as (hi_a, lo_a, hi_b, lo_b),
+    checkpointed). Quadratic in hash DIVERSITY, not corpus size; a
+    certify-only tier, never the 100 TB plan."""
+    lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
+        F.col("b.hash_hi"), F.col("b.hash_lo")
+    )
+    for tag, table in (("image", _ahash_table), ("audio", _dhash_table)):
+        dist = table(spark, sf_dir).select(*_HASH_KEYS).distinct().localCheckpoint()
+        tp = (
+            dist.alias("a")
+            .join(dist.alias("b"), lt)
+            .filter(_hamming("a", "b") <= IMG_HAMMING_MAX)
+            .select(
+                F.col("a.hash_hi").alias("hi_a"),
+                F.col("a.hash_lo").alias("lo_a"),
+                F.col("b.hash_hi").alias("hi_b"),
+                F.col("b.hash_lo").alias("lo_b"),
+            )
+            .localCheckpoint()
+        )
+        yield tag, dist, tp
+
+
+def _true_video_pairs(fp: DataFrame) -> DataFrame:
+    """The video ground truth of the cap certificates: every
+    (media_id_a, media_id_b) sharing ≥ VIDEO_SHARED_MIN fingerprints in
+    the uncapped inventory ``fp``, checkpointed."""
+    return (
+        fp.alias("a")
+        .join(
+            fp.alias("b"),
+            (F.col("a.hash_hi") == F.col("b.hash_hi"))
+            & (F.col("a.hash_lo") == F.col("b.hash_lo"))
+            & (F.col("a.media_id") < F.col("b.media_id")),
+        )
+        .groupBy(
+            F.col("a.media_id").alias("media_id_a"),
+            F.col("b.media_id").alias("media_id_b"),
+        )
+        .agg(F.count("*").alias("shared"))
+        .filter(F.col("shared") >= VIDEO_SHARED_MIN)
+        .select("media_id_a", "media_id_b")
+        .localCheckpoint()
+    )
+
+
 def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checked certificate for the PERCEPTUAL NEAR-DUP CAPS —
     the q_dedup_containment_capped pattern applied to the banded and
@@ -2248,54 +2182,20 @@ def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``video_true_pairs``: ground-truth ≥ VIDEO_SHARED_MIN pairs.
     """
     out: list[tuple[str, int]] = []
-    ham = _hamming("a", "b")
-    lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
-        F.col("b.hash_hi"), F.col("b.hash_lo")
-    )
 
     def _band_cands(dist: DataFrame, cap: int | None) -> DataFrame:
         bands = _bands(dist)
         if cap is not None:
-            bands = _rare_bands(bands, cap)
-        return (
-            _band_pairs(bands).select("hi_a", "lo_a", "hi_b", "lo_b").distinct()
-        )
+            bands = rare_postings(bands, _BAND_KEYS, cap)
+        return _band_pairs(bands).select(*_PAIR_KEYS).distinct()
 
-    for tag, hashes in (
-        ("image", _ahash_table(spark, sf_dir)),
-        (
-            "audio",
-            audio_hashes(spark, sf_dir).select(
-                "media_id",
-                F.col("dhash_hi").alias("hash_hi"),
-                F.col("dhash_lo").alias("hash_lo"),
-            ),
-        ),
-    ):
-        dist = (
-            hashes.select("hash_hi", "hash_lo").distinct().localCheckpoint()
-        )
-        # ground-truth tier: all-pairs over DISTINCT hashes (tiny —
-        # bounded by hash diversity; certify-only, never the 100× plan)
-        tp = (
-            dist.alias("a")
-            .join(dist.alias("b"), lt)
-            .filter(ham <= IMG_HAMMING_MAX)
-            .select(
-                F.col("a.hash_hi").alias("hi_a"),
-                F.col("a.hash_lo").alias("lo_a"),
-                F.col("b.hash_hi").alias("hi_b"),
-                F.col("b.hash_lo").alias("lo_b"),
-            )
-            .localCheckpoint()
-        )
+    for tag, dist, tp in _true_hash_pairs(spark, sf_dir):
         capped = _band_cands(dist, BAND_DF_CAP).localCheckpoint()
-        keys = ["hi_a", "lo_a", "hi_b", "lo_b"]
         out.append((f"{tag}_true_hash_pairs", tp.count()))
         out.append(
             (
                 f"{tag}_capped_missed_true_pairs",
-                tp.join(capped, keys, "left_anti").count(),
+                tp.join(capped, _PAIR_KEYS, "left_anti").count(),
             )
         )
         out.append(
@@ -2305,48 +2205,8 @@ def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fp = video_fingerprints(spark, sf_dir).localCheckpoint()
 
-    def _fp_cands(posts: DataFrame) -> DataFrame:
-        a, b = posts.alias("a"), posts.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.hash_hi") == F.col("b.hash_hi"))
-                & (F.col("a.hash_lo") == F.col("b.hash_lo"))
-                & (F.col("a.media_id") < F.col("b.media_id")),
-            )
-            .select(
-                F.col("a.media_id").alias("media_id_a"),
-                F.col("b.media_id").alias("media_id_b"),
-            )
-            .distinct()
-        )
-
-    vtp = (
-        fp.alias("a")
-        .join(
-            fp.alias("b"),
-            (F.col("a.hash_hi") == F.col("b.hash_hi"))
-            & (F.col("a.hash_lo") == F.col("b.hash_lo"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .groupBy(
-            F.col("a.media_id").alias("media_id_a"),
-            F.col("b.media_id").alias("media_id_b"),
-        )
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= VIDEO_SHARED_MIN)
-        .select("media_id_a", "media_id_b")
-        .localCheckpoint()
-    )
-    rare_fp = fp.join(
-        fp.groupBy("hash_hi", "hash_lo")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= FP_DF_CAP)
-        .select("hash_hi", "hash_lo"),
-        ["hash_hi", "hash_lo"],
-        "left_semi",
-    )
-    vcap = _fp_cands(rare_fp).localCheckpoint()
+    vtp = _true_video_pairs(fp)
+    vcap = _fp_pairs(rare_postings(fp, _HASH_KEYS, FP_DF_CAP)).localCheckpoint()
     out.append(("video_true_pairs", vtp.count()))
     out.append(
         (
@@ -2354,7 +2214,7 @@ def q_dedup_perceptual_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
             vtp.join(vcap, ["media_id_a", "media_id_b"], "left_anti").count(),
         )
     )
-    out.append(("video_candidates_full", _fp_cands(fp).count()))
+    out.append(("video_candidates_full", _fp_pairs(fp).count()))
     out.append(("video_candidates_capped", vcap.count()))
     return spark.createDataFrame(out, "check_name string, value long")
 
@@ -2427,65 +2287,19 @@ def q_dedup_mechanism_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    ham = _hamming("a", "b")
-    lt = F.struct(F.col("a.hash_hi"), F.col("a.hash_lo")) < F.struct(
-        F.col("b.hash_hi"), F.col("b.hash_lo")
-    )
-    for tag, hashes in (
-        ("image", _ahash_table(spark, sf_dir)),
-        (
-            "audio",
-            audio_hashes(spark, sf_dir).select(
-                "media_id",
-                F.col("dhash_hi").alias("hash_hi"),
-                F.col("dhash_lo").alias("hash_lo"),
-            ),
-        ),
-    ):
-        dist = (
-            hashes.select("hash_hi", "hash_lo").distinct().localCheckpoint()
-        )
-        tp = (
-            dist.alias("a")
-            .join(dist.alias("b"), lt)
-            .filter(ham <= IMG_HAMMING_MAX)
-            .select(
-                F.col("a.hash_hi").alias("hi_a"),
-                F.col("a.hash_lo").alias("lo_a"),
-                F.col("b.hash_hi").alias("hi_b"),
-                F.col("b.hash_lo").alias("lo_b"),
-            )
-            .localCheckpoint()
-        )
+    for tag, dist, tp in _true_hash_pairs(spark, sf_dir):
         mp = (
             hash_near_pairs(dist, band_df_cap=MECH_CAP)
-            .select("hi_a", "lo_a", "hi_b", "lo_b")
+            .select(*_PAIR_KEYS)
             .localCheckpoint()
         )
-        keys = ["hi_a", "lo_a", "hi_b", "lo_b"]
         out.append((f"{tag}_mech_pairs", mp.count()))
         out.append(
-            (f"{tag}_mech_missed", tp.join(mp, keys, "left_anti").count())
+            (f"{tag}_mech_missed", tp.join(mp, _PAIR_KEYS, "left_anti").count())
         )
 
     fp = video_fingerprints(spark, sf_dir).localCheckpoint()
-    vtp = (
-        fp.alias("a")
-        .join(
-            fp.alias("b"),
-            (F.col("a.hash_hi") == F.col("b.hash_hi"))
-            & (F.col("a.hash_lo") == F.col("b.hash_lo"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .groupBy(
-            F.col("a.media_id").alias("media_id_a"),
-            F.col("b.media_id").alias("media_id_b"),
-        )
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= VIDEO_SHARED_MIN)
-        .select("media_id_a", "media_id_b")
-        .localCheckpoint()
-    )
+    vtp = _true_video_pairs(fp)
     vm = (
         video_shared_pairs(fp, df_cap=MECH_CAP)
         .select("media_id_a", "media_id_b")

@@ -11,11 +11,14 @@ Design contract — the three properties a production corpus store needs:
 - **Corpus-side work is O(shard)**: the corpus is never re-paired. The
   exact tier anti-joins the shard's fingerprints with the stored
   fingerprint table. The near-dup tier (``near_dedup``) probes the
-  stored MinHash-LSH bucket table once with the shard's bucket keys,
-  materializes the candidate pairs once, and verifies them in one
-  exact-Jaccard join that reads corpus text only for candidate docs
-  (``_near_dup_shard_ids``). Shard-sized id sets join as size-gated
-  broadcasts (``dedup.broadcast_if_small``).
+  stored MinHash-LSH bucket table once with the shard's bucket keys
+  (``dedup.probe_postings``, the probe every incremental near-dup
+  family shares), materializes the candidate pairs once, and verifies
+  them in one exact-Jaccard join that reads corpus text only for
+  candidate docs (``_near_dup_shard_ids``). Shard-sized key and id sets
+  join as size-gated broadcasts: the bucket keys on the row count the
+  probe's checkpoint observes, the id sets through
+  ``dedup.broadcast_if_small``; above the gate each join shuffles.
 - **Idempotent re-runs**: the documents, the fingerprint state and the
   bucket state are all partitioned by ``shard_date`` and committed with
   partition-overwrite, and every state read (fingerprints, buckets and
@@ -112,24 +115,33 @@ def _near_dup_shard_ids(
     bucket rows for state persistence).
 
     Flow — every stage O(shard) or O(candidates), never O(corpus):
-    shard shingles → signatures → bands; broadcast the shard's tiny
-    bucket-key set to semi-join the STORED bucket state of every other
-    day (corpus rows sharing no bucket are pruned before any pair
-    forms); the within-shard and vs-corpus candidate pairs are
-    materialized once, as one shard-sized id set; one exact-Jaccard
-    verify then checks them all, reading corpus TEXT only for candidate
-    docs of other days. Its b side is tagged shard / stored, so a shard
-    doc never verifies against a stored doc that reuses its id, or
-    against its own earlier copy when a day is retried. Every pair
-    has doc_a in the shard and doc_a > doc_b within it, so dropping
-    each verified doc_a resolves within-shard near-dups keep-min."""
+    shard shingles → signatures → bands; ``dedup.probe_postings``
+    materializes the shard's band rows once and semi-joins the STORED
+    bucket state of every other day to their keys (a broadcast while the
+    observed row count is under the size gate, a shuffle above it), so
+    corpus rows sharing no bucket are pruned before any pair forms; the
+    within-shard and vs-corpus (``dedup.shard_band_pairs``) candidate
+    pairs are materialized once, as one shard-sized id set; one
+    exact-Jaccard verify then checks them all, reading corpus TEXT only
+    for candidate docs of other days. Its b side is tagged shard /
+    stored, so a shard doc never verifies against a stored doc that
+    reuses its id, or against its own earlier copy when a day is
+    retried. Every pair has doc_a in the shard and doc_a > doc_b within
+    it, so dropping each verified doc_a resolves within-shard near-dups
+    keep-min."""
     from breweries_case_spark.operators.dedup import (
+        LSH_BAND_KEYS,
         broadcast_if_small,
         jaccard_verified,
+        probe_postings,
+        shard_band_pairs,
     )
 
     sh_shard = _shingles(fresh).localCheckpoint()
-    shard_banded = _banded(sh_shard).localCheckpoint()
+    stored = read_other_partitions(
+        spark, os.path.join(corpus_dir, LSH_TABLE), [shard_date]
+    )
+    shard_banded, hits = probe_postings(_banded(sh_shard), stored, LSH_BAND_KEYS)
 
     pairs = (
         shard_banded.alias("x")
@@ -145,21 +157,9 @@ def _near_dup_shard_ids(
             F.lit(False).alias("stored"),
         )
     )
-    stored = read_other_partitions(
-        spark, os.path.join(corpus_dir, LSH_TABLE), [shard_date]
-    )
-    if stored is not None:
-        shard_buckets = shard_banded.select("band_idx", "band_hash").distinct()
-        corpus_hits = stored.join(
-            F.broadcast(shard_buckets), ["band_idx", "band_hash"], "left_semi"
-        )
+    if hits is not None:
         pairs = pairs.unionByName(
-            shard_banded.join(
-                corpus_hits.withColumnRenamed("doc_id", "doc_b"),
-                ["band_idx", "band_hash"],
-            ).select(
-                F.col("doc_id").alias("doc_a"), "doc_b", F.lit(True).alias("stored")
-            )
+            shard_band_pairs(shard_banded, hits).withColumn("stored", F.lit(True))
         )
     cands = broadcast_if_small(pairs.distinct())
 

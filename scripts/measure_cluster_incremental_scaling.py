@@ -22,11 +22,12 @@ from pyspark.sql import functions as F
 from breweries_case_spark.io.reader import load_table, spread
 from breweries_case_spark.operators.dedup import (
     _SHARD_MOD,
+    LSH_BAND_KEYS,
     _docs_with_hashed_shingles,
     _lsh_banded,
     bounded_component_assignment,
-    incremental_near_candidates,
     minhash_signatures,
+    probe_postings,
     q_dedup_text_cluster_incremental,
 )
 from breweries_case_spark.session import get_test_session
@@ -57,7 +58,9 @@ def main() -> None:
                 _docs_with_hashed_shingles(spark, f"/root/testdata/{sf}")
             )
         ).localCheckpoint()
-        corpus_hits, _ = incremental_near_candidates(banded, is_shard)
+        _, corpus_hits = probe_postings(
+            banded.filter(is_shard), banded.filter(~is_shard), LSH_BAND_KEYS
+        )
         n_corpus_rows = banded.filter(~is_shard).count()
         n_hits = corpus_hits.count()
         print(

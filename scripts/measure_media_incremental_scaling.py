@@ -3,7 +3,8 @@
 q_dedup_media_incremental's claim: corpus-side candidate work is
 O(shard), not O(corpus) — the corpus band index is semi-joined by the
 SHARD's band-key set (tiny, |shard distinct hashes| × 4 keys) before
-any pair forms, with corpus postings df-capped at BAND_DF_CAP. This
+any pair forms (``dedup.probe_postings``), and the touched buckets are
+df-capped at BAND_DF_CAP (``dedup.rare_postings``). This
 probe grows the corpus (sf0.1 image hashes at 1× and 8× doc_id-offset
 replicas — a re-crawl / re-upload regime: new media ids landing in the
 same bounded perceptual-hash space) while the shard stays fixed, and
@@ -22,12 +23,14 @@ import time
 
 from pyspark.sql import functions as F
 
+from breweries_case_spark.operators.dedup import probe_postings, rare_postings
 from breweries_case_spark.operators.multimodal import (
-    BAND_DF_CAP,
-    _HASH_BANDS,
+    _BAND_KEYS,
+    _HASH_KEYS,
     _MEDIA_SHARD_MOD,
-    _band_structs,
-    image_hashes,
+    BAND_DF_CAP,
+    _ahash_table,
+    _bands,
 )
 from breweries_case_spark.session import get_session
 
@@ -35,39 +38,18 @@ SF_DIR = "/root/testdata/sf0.1"
 ROUNDS = 3
 
 
-def _bands(dist):
-    return dist.select(
-        "hash_hi",
-        "hash_lo",
-        F.explode(F.array(*_band_structs(_HASH_BANDS))).alias("b"),
-    ).select(
-        "hash_hi",
-        "hash_lo",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_val").alias("band_val"),
-    )
-
-
 def main():
     spark = get_session(
         app_name="media_incremental_probe",
         extra_configs={"spark.ui.showConsoleProgress": "false"},
     )
-    base = image_hashes(spark, SF_DIR).select(
-        "media_id",
-        F.col("ahash_hi").alias("hash_hi"),
-        F.col("ahash_lo").alias("hash_lo"),
-    ).localCheckpoint()
-    n0 = base.count()
+    base = _ahash_table(spark, SF_DIR).localCheckpoint()
     is_shard = F.col("media_id") % _MEDIA_SHARD_MOD == 0
     shard = base.filter(is_shard).localCheckpoint()
-    sbands = _bands(
-        shard.select("hash_hi", "hash_lo").distinct()
-    ).localCheckpoint()
-    skeys = sbands.select("band_idx", "band_val").distinct().localCheckpoint()
+    sbands = _bands(shard.select(*_HASH_KEYS).distinct())
     out = {
         "shard_media": shard.count(),
-        "shard_band_keys": skeys.count(),
+        "shard_band_keys": sbands.select(*_BAND_KEYS).distinct().count(),
         "band_df_cap": BAND_DF_CAP,
     }
     for mult, tag in ((1, "corpus_1x"), (8, "corpus_8x")):
@@ -85,16 +67,12 @@ def main():
         for r in reps[1:]:
             corpus = corpus.unionByName(r)
         corpus = corpus.localCheckpoint()
-        cbands = _bands(corpus.select("hash_hi", "hash_lo").distinct())
-        rare = (
-            cbands.groupBy("band_idx", "band_val")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= BAND_DF_CAP)
-            .select("band_idx", "band_val")
+        # the hamming_probe prune: shard band keys semi-join the corpus
+        # band postings, then the touched buckets are df-capped
+        _, hits = probe_postings(
+            sbands, _bands(corpus.select(*_HASH_KEYS).distinct()), _BAND_KEYS
         )
-        probe = cbands.join(rare, ["band_idx", "band_val"], "left_semi").join(
-            F.broadcast(skeys), ["band_idx", "band_val"], "left_semi"
-        )
+        probe = rare_postings(hits, _BAND_KEYS, BAND_DF_CAP, by_window=True)
         out[f"{tag}_rows"] = corpus.count()
         out[f"{tag}_probe_rows"] = probe.count()
         walls = []

@@ -129,3 +129,16 @@ def test_broadcast_if_small_gates_on_observed_rows(spark):
     big = dedup.broadcast_if_small(df, max_rows=3)
     assert hinted(small) and not hinted(big)
     assert sorted(r.k for r in small.collect()) == sorted(r.k for r in big.collect()) == [0, 1, 2, 3]
+
+
+def test_broadcast_if_small_default_gate_follows_the_constant(spark, monkeypatch):
+    """Without ``max_rows`` the gate is ``_NEEDS_BROADCAST_MAX`` as it
+    stands at the call, so lowering it forces the unhinted plan."""
+    df = spark.range(3)
+
+    def hinted(frame):
+        return "broadcast" in frame._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
+
+    assert hinted(dedup.broadcast_if_small(df))
+    monkeypatch.setattr(dedup, "_NEEDS_BROADCAST_MAX", -1)
+    assert not hinted(dedup.broadcast_if_small(df))

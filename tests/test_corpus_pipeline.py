@@ -476,3 +476,55 @@ def test_retry_converges_when_a_shard_reuses_a_stored_doc_id(spark, tmp_path):
     retry = update_corpus(spark, day2, c, "2026-08-02", near_dedup=True)
     assert [retry[k] for k in keys] == [1, 1, 0, 1]
     assert _ids(spark, c) == {("2026-08-01", 5), ("2026-08-02", 5)}
+
+
+def test_update_corpus_above_the_probe_gate_matches_broadcast(
+    spark, tmp_path, monkeypatch
+):
+    """The near-dup probe's bucket keys and the shard-sized id sets join
+    as broadcasts only under the size gate; forced above it (a delivery
+    too large to broadcast), those joins shuffle and the update gives
+    the same audit and leaves the same docs, fingerprint and bucket
+    tables."""
+    import os
+
+    from breweries_case_spark.io.snapshots import read_snapshot
+    from breweries_case_spark.operators import dedup
+    from breweries_case_spark.pipelines.corpus import DOCS_TABLE, FP_TABLE, LSH_TABLE
+
+    probe = dedup.probe_postings
+    hinted = []
+
+    def spy(shard, stored, keys):
+        mat, hits = probe(shard, stored, keys)
+        if hits is not None:
+            plan = hits._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
+            hinted.append("broadcast" in plan)
+        return mat, hits
+
+    monkeypatch.setattr(dedup, "probe_postings", spy)
+    day2 = [
+        (10, SHORT, "en", "web"),
+        (11, GOOD2, "en", "web"),
+        (12, NEAR1_EDIT, "en", "web"),
+        (13, OTHER, "en", "web"),
+    ]
+    runs = {}
+    for gate in (dedup._NEEDS_BROADCAST_MAX, -1):  # noqa: SLF001
+        monkeypatch.setattr(dedup, "_NEEDS_BROADCAST_MAX", gate)
+        c = str(tmp_path / f"corpus{gate}")
+        _seed_corpus(spark, c)
+        audit = update_corpus(
+            spark, _shard(spark, day2), c, "2026-08-02",
+            bench_grams=_bench_grams(spark), near_dedup=True,
+        )
+        tables = {
+            t: sorted(map(tuple, read_snapshot(spark, os.path.join(c, t)).collect()))
+            for t in (DOCS_TABLE, FP_TABLE, LSH_TABLE)
+        }
+        runs[gate] = (audit, tables)
+    assert hinted == [True, False]
+    (audit, tables), (forced_audit, forced_tables) = runs.values()
+    assert audit == forced_audit
+    assert audit["n_near_dropped"] == 1 and audit["n_accepted"] == 2
+    assert tables == forced_tables

@@ -135,16 +135,18 @@ def test_levenshtein_bounded_equals_exact(spark, sf_dir):
 def test_incremental_probe_corpus_work_is_shard_bounded(spark, sf_dir):
     """The incremental dedup near tier must touch only the corpus rows that
     collide with a SHARD bucket — corpus-side candidate work is O(shard),
-    not O(corpus). Pinned two ways: (a) the probed corpus doc set is a
+    not O(corpus). Pinned two ways on ``probe_postings``, the probe every
+    incremental near-dup family runs: (a) the probed corpus doc set is a
     small fraction of the corpus; (b) halving the shard at least halves
     the probed set's upper-bound structure (probe keys come only from
     shard buckets, so fewer shard docs can only shrink the probe)."""
     from breweries_case_spark.operators.dedup import (
         _SHARD_MOD,
+        LSH_BAND_KEYS,
         _docs_with_hashed_shingles,
         _lsh_banded,
-        incremental_near_candidates,
         minhash_signatures,
+        probe_postings,
         q_dedup_incremental,
     )
     from breweries_case_spark.io.reader import load_table
@@ -152,21 +154,23 @@ def test_incremental_probe_corpus_work_is_shard_bounded(spark, sf_dir):
     sh_docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
     banded = _lsh_banded(minhash_signatures(sh_docs)).localCheckpoint()
     is_shard = F.col("doc_id") % _SHARD_MOD == 0
-    corpus_hits, cand = incremental_near_candidates(banded, is_shard)
+
+    def probed_docs(shard) -> int:
+        _, hits = probe_postings(
+            banded.filter(shard), banded.filter(~is_shard), LSH_BAND_KEYS
+        )
+        return hits.select("doc_id").distinct().count()
 
     n_docs = load_table(spark, sf_dir, "documents").count()
     n_corpus = n_docs - (n_docs + _SHARD_MOD - 1) // _SHARD_MOD
-    probed = corpus_hits.select("doc_id").distinct().count()
+    probed = probed_docs(is_shard)
     # (a) probed corpus docs ≪ corpus — bucket collisions track the
     # near-dup rate, not corpus size
     assert probed <= 0.2 * n_corpus, f"probed {probed} of {n_corpus} corpus docs"
 
     # (b) probe keys derive only from shard buckets: a half-shard probe
     # against the SAME corpus is a subset of the full-shard one
-    half_shard = F.col("doc_id") % (2 * _SHARD_MOD) == 0
-    banded_half = banded.filter(half_shard | ~is_shard)
-    half_hits, _ = incremental_near_candidates(banded_half, half_shard)
-    half_probed = half_hits.select("doc_id").distinct().count()
+    half_probed = probed_docs(F.col("doc_id") % (2 * _SHARD_MOD) == 0)
     assert half_probed <= probed
 
     # output contract: one verdict row per shard doc

@@ -407,11 +407,11 @@ def test_advance_state_remaps_touched_labels_and_appends_shard(spark, update):
 
 def test_cluster_chain_job_count(spark, sf_dir):
     """A chain day is one update-graph materialization solved on the
-    driver, plus the probe's and the stored hash index's own
-    materializations: an extra corpus ⋈ state pass, a join back from the
-    band joins' hash pairs to the index or the representatives, or a
-    Spark-side components or remap step adds jobs here (test profile,
-    AQE off)."""
+    driver, plus the probe's one checkpoint and the stored hash index's
+    own materializations: an extra corpus ⋈ state pass, a join back from
+    the band joins' hash pairs to the index or the representatives, a
+    separate materialization of the probe's key set, or a Spark-side
+    components or remap step adds jobs here (test profile, AQE off)."""
     from breweries_case_spark.operators.multimodal import q_dedup_cluster_chain
 
     sc = spark.sparkContext
@@ -424,4 +424,4 @@ def test_cluster_chain_job_count(spark, sf_dir):
         sc.setLocalProperty("spark.job.description", None)
     assert len(rows) == 9
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 36
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 34

@@ -628,3 +628,60 @@ def test_null_partition_value_reads_back_as_null(spark, tmp_path):
         (1, "d1"),
         (4, None),
     ]
+
+
+def test_compaction_keeps_null_and_escaped_partition_keys(spark, tmp_path):
+    """Compaction stages its rewrite like a commit, so a null partition
+    (Spark's default-partition directory) and a value Spark escapes in
+    its directory name (``:`` → ``%3A``) keep their manifest keys, and
+    every partition ends in one file with its rows unchanged."""
+    from breweries_case_spark.io.snapshots import (
+        _NULL_PARTITION,
+        _read_manifest,
+        compact_partitions,
+    )
+
+    t = str(tmp_path / "t")
+    rows = [(i, d) for i in range(6) for d in ("2024-01-01T00:00", None, "d1")]
+    commit_overwrite_partitions(_df(spark, rows).repartition(3), t, "day")
+    before = _read_manifest(t, 1)["partitions"]
+    assert set(before) == {"2024-01-01T00:00", _NULL_PARTITION, "d1"}
+    assert all(len(files) > 1 for files in before.values())
+
+    v = compact_partitions(spark, t)
+    after = _read_manifest(t, v)["partitions"]
+    assert set(after) == set(before)
+    assert all(len(files) == 1 for files in after.values())
+    assert sorted(map(tuple, read_snapshot(spark, t).collect()), key=repr) == sorted(
+        rows, key=repr
+    )
+
+
+def test_compaction_jobs_do_not_grow_with_partitions(spark, tmp_path):
+    """The selected partitions are rewritten in one write, so compacting
+    16 partitions runs the jobs compacting 1 does (test profile: one)."""
+    from pyspark.sql import functions as F
+
+    from breweries_case_spark.io.snapshots import _read_manifest, compact_partitions
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (1, 16):
+        t = str(tmp_path / f"t{n}")
+        df = spark.range(4 * n).select(
+            "id", F.format_string("d%02d", F.col("id") % n).alias("day")
+        )
+        commit_overwrite_partitions(df.repartition(4), t, "day")
+        group = f"compact-{tmp_path.name}-{n}"
+        sc.setJobGroup(group, "compaction job count")
+        try:
+            v = compact_partitions(spark, t)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        parts = _read_manifest(t, v)["partitions"]
+        assert len(parts) == n and all(len(f) == 1 for f in parts.values())
+        assert read_snapshot(spark, t).count() == 4 * n
+    assert jobs[1] == jobs[16] == 1, jobs
