@@ -35,23 +35,25 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
+from breweries_case_spark.functions import fingerprint, token_hashes, tokens
 from breweries_case_spark.io.reader import load_table, spread
 
 # --- shared fragments -------------------------------------------------------
+#
+# The feature builders take a documents frame (doc_id, lang, text). Callers
+# that read a table pass ``spread(load_table(...))``: shingling is
+# compute-bound, and spread parallelizes a small local scan (a no-op at
+# scale, where splits >> cores).
 
 
 def _norm_tokens(col):
-    return F.split(F.lower(F.trim(col)), r"\s+")
+    """The dedup token base: ``tokens`` with empty tokens kept."""
+    return tokens(col, drop_empty=False)
 
 
-def _docs_with_gram_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    docs: DataFrame | None = None,
-) -> DataFrame:
+def _docs_with_gram_rows(docs: DataFrame, n: int = 3) -> DataFrame:
     """DISTINCT (doc_id, lang, gram) rows — one row per string 3-gram
-    shingle per document.
+    shingle per document of ``docs``.
 
     Built codegen-first: posexplode tokens → window lead(n-1) to form each
     gram → groupBy for distinctness. Every expression is JVM codegen; the
@@ -60,20 +62,11 @@ def _docs_with_gram_rows(
     formulation whose interpreted higher-order functions made the build
     ~8× slower at sf0.1. Docs with < n tokens yield no rows — equivalent
     to an empty shingle set for every consumer (it can never clear a
-    positive Jaccard threshold).
-
-    ``docs``: an optional pre-filtered
-    documents frame (doc_id, lang, text) to shingle instead of the full
-    table — Spark cannot push a caller's doc_id semi-join below the
-    explode+window, so a composite that grams only its gate survivors
-    (q_training_mix_v2) passes them here and the dropped tail is never
-    tokenized (guide §2.3: project/filter before the expensive pass)."""
-    # spread: shingling is compute-bound; parallelize the small local scan
-    # (no-op at scale where splits >> cores)
-    d = spread(
-        load_table(spark, sf_dir, "documents") if docs is None else docs
-    )
-    toks = d.select(
+    positive Jaccard threshold). Spark cannot push a caller's doc_id
+    semi-join below the explode+window, so a caller that grams a subset
+    filters ``docs`` first (guide §2.3: project/filter before the
+    expensive pass)."""
+    toks = docs.select(
         "doc_id", "lang", F.posexplode(_norm_tokens(F.col("text"))).alias("pos", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
@@ -92,7 +85,7 @@ _MERSENNE_P = (1 << 31) - 1
 _SHINGLE_MIX = 2654435761 % _MERSENNE_P
 
 
-def _docs_with_token_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _docs_with_token_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, th64: array<long>) — one 64-bit xxhash64 per token,
     in document order. The SHARED feature base for the probabilistic
     blockers: MinHash folds these down to [0, P) and rolls shingle hashes;
@@ -100,13 +93,8 @@ def _docs_with_token_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_dedup_levenshtein_bounded, q_dedup_clusters_bounded) localCheckpoint
     this ONCE so the corpus is scanned/tokenized/hashed a single time for
     both blockers instead of once per blocker."""
-    d = spread(load_table(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        "lang",
-        F.transform(_norm_tokens(F.col("text")), lambda t: F.xxhash64(t)).alias(
-            "th64"
-        ),
+    return docs.select(
+        "doc_id", "lang", token_hashes(_norm_tokens(F.col("text"))).alias("th64")
     )
 
 
@@ -145,18 +133,14 @@ def _hashed_shingles_from_token_hashes(
     return body.select("doc_id", "lang", *keep, sh.alias("sh"))
 
 
-def _docs_with_hashed_shingles(
-    spark: SparkSession, sf_dir: str, n: int = 3
-) -> DataFrame:
+def _docs_with_hashed_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """Integer shingles for the probabilistic dedup path: hash each token
     ONCE (xxhash64 → [0, P)), then roll n-gram hashes with modular mixing —
     no per-shingle string building. Same distinct-shingle semantics as the
     string form (collision probability ~n²/P per doc, negligible), at a
     fraction of the CPU; the string form stays as the DuckDB-checkable
     ground truth in q_dedup_ngram_jaccard."""
-    return _hashed_shingles_from_token_hashes(
-        _docs_with_token_hashes(spark, sf_dir), n
-    )
+    return _hashed_shingles_from_token_hashes(_docs_with_token_hashes(docs), n)
 
 
 # --- X1: exact dedup --------------------------------------------------------
@@ -167,9 +151,8 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest doc_id (deterministic keeper). One shuffle on the fingerprint;
     at 100 TB this is the cheapest dedup and runs first in any pipeline."""
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
     return (
-        d.select(fp.alias("fingerprint"), "doc_id")
+        d.select(fingerprint(F.col("text")).alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count("*").alias("copies"))
     )
@@ -199,7 +182,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-filtering; unnecessary at test scale."""
     t = JACCARD_THRESHOLD
     grams = (
-        _docs_with_gram_rows(spark, sf_dir)
+        _docs_with_gram_rows(spread(load_table(spark, sf_dir, "documents")))
         .withColumn("sz", F.count("*").over(Window.partitionBy("doc_id")))
         .localCheckpoint()
     )
@@ -432,12 +415,15 @@ def containment_pairs(
         # checkpointed: consumed by the verify probe AND both broadcast
         # prune sides — without the pin each broadcast subtree would
         # replay the anti-join chain (and its shuffles) independently.
-        # Bounded: ⊆ cand, and empty whenever the cap never engaged.
+        # Bounded: ⊆ cand, and empty whenever the cap never engaged. The
+        # checkpoint observes its row count for the broadcast gate below.
+        n_needs = Observation()
         needs = (
             cand.join(
                 clean.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti"
             )
             .drop("rare_inter")
+            .observe(n_needs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
         # prune the full-inventory recount to the docs that actually
@@ -449,14 +435,14 @@ def containment_pairs(
         # candidate partner), so the id sets broadcast — but an explicit
         # F.broadcast hint does NOT degrade at runtime: a dup-heavy
         # corpus whose needs set outgrew the driver would fail the job
-        # outright, so the hint is size-gated on a cheap count of the
-        # already-checkpointed needs frame and falls back to the shuffle
-        # semi-join plan above the gate.
+        # outright, so the hint is size-gated on the needs row count the
+        # checkpoint observed and falls back to the shuffle semi-join plan
+        # above the gate.
         # no .distinct() on the broadcast sides: the semi join dedups,
         # and a distinct here would cost a shuffle each
         ids_a = needs.select(F.col("doc_a").alias("doc_id"))
         ids_b = needs.select(F.col("doc_b").alias("doc_id"))
-        if needs.count() <= _NEEDS_BROADCAST_MAX:
+        if n_needs.get["n"] <= _NEEDS_BROADCAST_MAX:
             ids_a, ids_b = F.broadcast(ids_a), F.broadcast(ids_b)
         ga = sized.join(ids_a, "doc_id", "left_semi").select(
             F.col("doc_id").alias("doc_a"), "gram"
@@ -499,7 +485,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     as q_dedup_levenshtein defers to its _bounded twin. Keep this form
     for certifying the blocked tier on samples."""
     return containment_pairs(
-        _docs_with_gram_rows(spark, sf_dir), capped=False
+        _docs_with_gram_rows(spread(load_table(spark, sf_dir, "documents"))),
+        capped=False,
     ).select("doc_a", "doc_b", "lang", "containment")
 
 
@@ -528,7 +515,8 @@ def q_dedup_containment_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to the shuffle plan instead of failing the job. This is
     the plan you run at 100×."""
     return containment_pairs(
-        _docs_with_gram_rows(spark, sf_dir), capped=True
+        _docs_with_gram_rows(spread(load_table(spark, sf_dir, "documents"))),
+        capped=True,
     ).select("doc_a", "doc_b", "lang", "containment")
 
 
@@ -574,7 +562,9 @@ def q_dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the capped candidate build is the production path — df
     aggregate + semi-join keeps only rare-gram postings, so the
     self-join's per-bucket cost is capped at DF_CAP² by construction."""
-    grams = _docs_with_gram_rows(spark, sf_dir).localCheckpoint()
+    grams = _docs_with_gram_rows(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     gr = rare_postings(grams, ["lang", "gram"], DF_CAP)
 
     def _pairs(g: DataFrame) -> DataFrame:
@@ -636,7 +626,7 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1: see SURVEY §6."""
     t = JACCARD_THRESHOLD
     grams = (
-        _docs_with_gram_rows(spark, sf_dir)
+        _docs_with_gram_rows(spread(load_table(spark, sf_dir, "documents")))
         .withColumn("sz", F.count("*").over(Window.partitionBy("doc_id")))
         .localCheckpoint()
     )
@@ -700,7 +690,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Routes through the shared token-hash base and the vectorized vote
     kernel — see ``_simhash_signatures_from_token_hashes``."""
     return _simhash_signatures_from_token_hashes(
-        _docs_with_token_hashes(spark, sf_dir)
+        _docs_with_token_hashes(spread(load_table(spark, sf_dir, "documents")))
     )
 
 
@@ -1030,7 +1020,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache manager across invocations (every later run silently
     # measures a cache hit); checkpointed blocks are GC'd with the
     # DataFrame and never match future plans.
-    docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
+    docs = _docs_with_hashed_shingles(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     return minhash_verified_pairs(docs)
 
 
@@ -1143,7 +1135,9 @@ def q_dedup_blocker_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one shingle/signature build feeds BOTH the candidate check and the
     # verified output (minhash_verified_pairs with cands passed through)
-    docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
+    docs = _docs_with_hashed_shingles(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     cands = lsh_candidates(
         minhash_signatures(docs).localCheckpoint()
     ).localCheckpoint()
@@ -1239,7 +1233,9 @@ def q_dedup_lsh_mechanism_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: this is a CERTIFICATE (it runs the blocker three times
     and the uncapped form once); the production ids run the capped
     builder once."""
-    docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
+    docs = _docs_with_hashed_shingles(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     sigs = minhash_signatures(docs).localCheckpoint()
     cands_prod = lsh_candidates(sigs).localCheckpoint()
     cands_unc = lsh_candidates(sigs, band_df_cap=1 << 62).localCheckpoint()
@@ -1488,7 +1484,9 @@ def q_dedup_levenshtein_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures): the cap is lossless on this data (pinned by
     q_dedup_lsh_mechanism_cap), and bucket volume stays bounded on dup
     floods."""
-    base = _docs_with_token_hashes(spark, sf_dir).localCheckpoint()
+    base = _docs_with_token_hashes(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     mh = lsh_candidates(
         minhash_signatures(
             _hashed_shingles_from_token_hashes(base)
@@ -2239,7 +2237,7 @@ def bounded_component_assignment(
         lean = d.select(
             "doc_id",
             "lang",
-            F.md5(F.lower(F.trim(F.col("text")))).alias("fp"),
+            fingerprint(F.col("text")).alias("fp"),
             F.size(_norm_tokens(F.col("text"))).alias("n_tok"),
         )
     # group key: (lang, fingerprint) for docs with ≥ 3 tokens (nonempty
@@ -2278,17 +2276,9 @@ def bounded_component_assignment(
         )
         sh_docs = base.select("doc_id", "lang", "sh")
     else:
-        base = (
+        base = _docs_with_token_hashes(
             d.join(rep_ids, "doc_id", "left_semi")
-            .select(
-                "doc_id",
-                "lang",
-                F.transform(
-                    _norm_tokens(F.col("text")), lambda t: F.xxhash64(t)
-                ).alias("th64"),
-            )
-            .localCheckpoint()
-        )
+        ).localCheckpoint()
         # shingles feed the MinHash signatures AND both sides of the
         # verification join — materialize once
         sh_docs = _hashed_shingles_from_token_hashes(base).localCheckpoint()
@@ -2425,8 +2415,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard_docs = d.filter(is_shard).select("doc_id", "lang")
 
     # --- tier 1: exact fingerprint ---
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
-    with_fp = d.select("doc_id", fp.alias("fp"))
+    with_fp = d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
     ex = (
         with_fp.filter(is_shard)
         .alias("s")
@@ -2436,7 +2425,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- tier 2: near-dup via shard-driven bucket probe ---
-    sh_docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
+    sh_docs = _docs_with_hashed_shingles(spread(d)).localCheckpoint()
     banded = _lsh_banded(minhash_signatures(sh_docs)).localCheckpoint()
     cand = incremental_near_candidates(banded, is_shard)
     near = (
@@ -2488,10 +2477,8 @@ def _text_cluster_update(
         d.select(
             "doc_id",
             "lang",
-            F.md5(F.lower(F.trim(F.col("text")))).alias("fp"),
-            F.transform(
-                _norm_tokens(F.col("text")), lambda t: F.xxhash64(t)
-            ).alias("th64"),
+            fingerprint(F.col("text")).alias("fp"),
+            token_hashes(_norm_tokens(F.col("text"))).alias("th64"),
         ),
         keep=("fp", "th64"),
     ).localCheckpoint()

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from breweries_case_spark.io.reader import load_table
+from breweries_case_spark.io.reader import load_table, spread
 from breweries_case_spark.operators.dedup import (
     dup_verdicts,
     probe_postings,
@@ -2268,7 +2268,9 @@ def q_dedup_mechanism_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     out: list[tuple[str, int]] = []
-    grams = _docs_with_gram_rows(spark, sf_dir).localCheckpoint()
+    grams = _docs_with_gram_rows(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     exact = (
         containment_pairs(grams, capped=False)
         .select("doc_a", "doc_b")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from breweries_case_spark.functions import tokens
 from breweries_case_spark.io.reader import load_table, spread
 
 CHUNK_TOKENS = 10
@@ -141,9 +142,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-            "n_tokens"
-        ),
+        F.size(tokens(F.col("text"), drop_empty=False)).alias("n_tokens"),
     )
     return d.groupBy("lang").applyInPandas(
         _pack, "doc_id long, lang string, n_tokens int, bin_id int, bin_fill int"

@@ -23,15 +23,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from breweries_case_spark.functions import decimal_avg
+from breweries_case_spark.functions import (
+    decimal_avg,
+    fingerprint,
+    tokens,
+)
+from breweries_case_spark.functions import ws_tokens as _ws_tokens
 from breweries_case_spark.io.reader import load_table
 
 # shared expression fragments -------------------------------------------------
-
-#: whitespace tokens of the trimmed text
-def _ws_tokens(col):
-    return F.split(F.trim(col), r"\s+")
-
 
 #: BPE-ish lexer: words OR single non-word-non-space symbols — the classic
 #: pre-tokenizer shape (public GPT-2/tiktoken-style regex, simplified)
@@ -119,7 +119,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.md5(F.lower(F.trim(F.col("text")))).alias("fingerprint"),
+        fingerprint(F.col("text")).alias("fingerprint"),
     )
 
 
@@ -161,8 +161,27 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEXT_SHARD_MOD = 20
 
 
+def merge_counts(
+    stored: DataFrame, delta: DataFrame, key: str, col: str
+) -> DataFrame:
+    """Stored aggregate ⊕ shard delta: both frames carry (``key``,
+    ``col``) counts over disjoint document sets, so the merged count of
+    a key is the sum of its two counts, and a key on one side only keeps
+    its own. The mergeable-state step of every incremental count
+    maintainer here — the day counts the shard, never the corpus, and
+    the merged table equals a full recount exactly."""
+    s, d = stored.alias("_stored"), delta.alias("_delta")
+    return s.join(d, key, "full_outer").select(
+        key,
+        (
+            F.coalesce(F.col(f"_stored.{col}"), F.lit(0))
+            + F.coalesce(F.col(f"_delta.{col}"), F.lit(0))
+        ).alias(col),
+    )
+
+
 def q_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental TF-IDF index maintainer (r13 — the stored-index
+    """Incremental TF-IDF index maintainer (the stored-index
     discipline on the retrieval surface): score a NEW document shard
     (doc_id % 20 == 0) under the post-append index WITHOUT re-scoring or
     re-counting the corpus. Stored state (built once here as the
@@ -184,9 +203,7 @@ def q_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_shard = F.col("doc_id") % TEXT_SHARD_MOD == 0
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-            "term"
-        ),
+        F.explode(tokens(F.col("text"), drop_empty=False)).alias("term"),
     ).filter(F.col("term") != "")
 
     # stored state stand-ins: corpus df table + corpus doc count
@@ -195,7 +212,7 @@ def q_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
         .groupBy("term")
-        .agg(F.count("*").alias("df_c"))
+        .agg(F.count("*").alias("df"))
         .localCheckpoint()
     )
     n_c = d.filter(~is_shard).agg(
@@ -207,14 +224,9 @@ def q_tfidf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
-    delta_df = shard_tf.groupBy("term").agg(F.count("*").alias("df_s"))
+    delta_df = shard_tf.groupBy("term").agg(F.count("*").alias("df"))
     n_s = d.filter(is_shard).agg(F.count("*").cast("double").alias("_n_s"))
-    merged = stored_df.join(delta_df, "term", "full_outer").select(
-        "term",
-        (
-            F.coalesce("df_c", F.lit(0)) + F.coalesce("df_s", F.lit(0))
-        ).alias("df"),
-    )
+    merged = merge_counts(stored_df, delta_df, "term", "df")
     tfidf = (
         F.col("tf").cast("double")
         * (F.col("_n_c") + F.col("_n_s"))
@@ -261,13 +273,13 @@ def _ngram_rows(
     with < n tokens emit no rows (explicit empty-array guard: Spark's
     sequence(1, 0) is DESCENDING [1, 0], not empty).
 
-    ``distinct_within_doc`` (r13 optimization round) dedups the gram
+    ``distinct_within_doc`` dedups the gram
     array inside the scan stage before the explode — for consumers whose
     key includes the doc id, ``array_distinct`` here is row-for-row
     identical to a global ``.distinct()`` over (doc_id, g) but costs
     ZERO exchanges instead of a full shuffle of the gram stream
     (guide §2.4)."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens(F.col("text"), drop_empty=False)
     base = d.select(*keep, toks.alias("t"))
     cnt = F.size(F.col("t")) - (n - 1)
     gram = lambda i: F.concat_ws(  # noqa: E731
@@ -765,32 +777,9 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, a small fraction of the token stream. The oracle runs the
     identical gaps-and-islands as a DuckDB CTE chain sharing no code."""
     n = DUP_SPAN_N
-    d = load_table(spark, sf_dir, "documents")
-    arr = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda t: t != F.lit(""),
-    )
-    base = d.select("doc_id", arr.alias("t")).withColumn(
-        "n", F.size("t").cast("long")
-    ).localCheckpoint()  # token arrays feed spans AND the text rebuild
-
-    # span rows: 1-based start pos, md5 of the space-joined n-gram
-    span = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), (F.col("n") - F.lit(n - 1)).cast("int")),
-            lambda i: F.struct(
-                i.cast("long").alias("pos"),
-                F.md5(F.concat_ws(" ", F.slice(F.col("t"), i, n))).alias(
-                    "h"
-                ),
-            ),
-        )
-    )
-    sp = (
-        base.filter(F.col("n") >= n)
-        .select("doc_id", span.alias("s"))
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.h").alias("h"))
-    )
+    base = _span_base(load_table(spark, sf_dir, "documents"))
+    # md5 the gram so every window key is 32 chars
+    sp = _span_rows(base, n).select("doc_id", "pos", F.md5("g").alias("h"))
     dup_starts = (
         sp.withColumn("tot", F.count("*").over(Window.partitionBy("h")))
         .withColumn(
@@ -800,6 +789,37 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "pos")
     )
     return _excise_spans(base, dup_starts, n)
+
+
+def _span_base(d: DataFrame) -> DataFrame:
+    """(doc_id, t, n): the excision family's token arrays (empty tokens
+    dropped) and their lengths, checkpointed — the span rows AND the
+    kept-text rebuild both read them."""
+    return (
+        d.select("doc_id", tokens(F.col("text"), drop_empty=True).alias("t"))
+        .withColumn("n", F.size("t").cast("long"))
+        .localCheckpoint()
+    )
+
+
+def _span_rows(base: DataFrame, n: int) -> DataFrame:
+    """(doc_id, pos, g): one row per n-token span of ``base``'s token
+    arrays — the 1-based start position and the space-joined gram,
+    exploded inside the scan stage. Docs shorter than n emit none."""
+    span = F.explode(
+        F.transform(
+            F.sequence(F.lit(1), (F.col("n") - F.lit(n - 1)).cast("int")),
+            lambda i: F.struct(
+                i.cast("long").alias("pos"),
+                F.concat_ws(" ", F.slice(F.col("t"), i, n)).alias("g"),
+            ),
+        )
+    )
+    return (
+        base.filter(F.col("n") >= n)
+        .select("doc_id", span.alias("s"))
+        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.g").alias("g"))
+    )
 
 
 def _excise_spans(
@@ -905,32 +925,8 @@ def q_repetition_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     at all, so at 100 TB it is embarrassingly parallel by document);
     the excision chain runs on the (small) repeated-start subset."""
     n = REP_SPAN_N
-    d = load_table(spark, sf_dir, "documents")
-    arr = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda t: t != F.lit(""),
-    )
-    base = (
-        d.select("doc_id", arr.alias("t"))
-        .withColumn("n", F.size("t").cast("long"))
-        .localCheckpoint()
-    )
-    span = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), (F.col("n") - F.lit(n - 1)).cast("int")),
-            lambda i: F.struct(
-                i.cast("long").alias("pos"),
-                F.md5(F.concat_ws(" ", F.slice(F.col("t"), i, n))).alias(
-                    "h"
-                ),
-            ),
-        )
-    )
-    sp = (
-        base.filter(F.col("n") >= n)
-        .select("doc_id", span.alias("s"))
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.h").alias("h"))
-    )
+    base = _span_base(load_table(spark, sf_dir, "documents"))
+    sp = _span_rows(base, n).select("doc_id", "pos", F.md5("g").alias("h"))
     first = F.min("pos").over(Window.partitionBy("doc_id", "h"))
     starts = (
         sp.withColumn("first_pos", first)
@@ -963,31 +959,9 @@ def q_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands chain, sharing no code."""
     n = 3
     d = load_table(spark, sf_dir, "documents")
-    arr = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda t: t != F.lit(""),
-    )
     is_bench = F.col("doc_id") % BENCHMARK_MOD == 0
-    base = (
-        d.filter(~is_bench)
-        .select("doc_id", arr.alias("t"))
-        .withColumn("n", F.size("t").cast("long"))
-        .localCheckpoint()
-    )
-    span = F.explode(
-        F.transform(
-            F.sequence(F.lit(1), (F.col("n") - F.lit(n - 1)).cast("int")),
-            lambda i: F.struct(
-                i.cast("long").alias("pos"),
-                F.concat_ws(" ", F.slice(F.col("t"), i, n)).alias("g"),
-            ),
-        )
-    )
-    sp = (
-        base.filter(F.col("n") >= n)
-        .select("doc_id", span.alias("s"))
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.g").alias("g"))
-    )
+    base = _span_base(d.filter(~is_bench))
+    sp = _span_rows(base, n)
     bench_grams = _ngram_rows(d.filter(is_bench), n).select("g").distinct()
     starts = sp.join(F.broadcast(bench_grams), "g", "left_semi").select(
         "doc_id", "pos"
@@ -1162,8 +1136,8 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental BM25 index maintainer (r13 — completes the
-    stored-index family beside q_tfidf_incremental): score a NEW
+    """Incremental BM25 index maintainer (the stored-index
+    family beside q_tfidf_incremental): score a NEW
     document shard (doc_id % 20 == 0) against the fixed query-term set
     under the POST-append index without re-tokenizing the corpus.
     Stored state (in-fixture stand-ins for loaded tables): the corpus
@@ -1181,9 +1155,7 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute bit for bit (integer merges; one double division)."""
     d = load_table(spark, sf_dir, "documents")
     is_shard = F.col("doc_id") % TEXT_SHARD_MOD == 0
-    tk = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != ""
-    )
+    tk = tokens(F.col("text"), drop_empty=True)
     docs = d.select("doc_id", tk.alias("tk")).select(
         "doc_id", "tk", F.size("tk").alias("dl")
     )
@@ -1203,7 +1175,7 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored_df = (
         term_tf(corpus_docs)
         .groupBy("term")
-        .agg(F.count("*").alias("df_c"))
+        .agg(F.count("*").alias("df"))
         .localCheckpoint()
     )
 
@@ -1212,13 +1184,8 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("_n_s"), F.sum("dl").alias("_s_s")
     )
     shard_tf = term_tf(shard_docs)
-    delta_df = shard_tf.groupBy("term").agg(F.count("*").alias("df_s"))
-    merged_df = stored_df.join(delta_df, "term", "full_outer").select(
-        "term",
-        (
-            F.coalesce("df_c", F.lit(0)) + F.coalesce("df_s", F.lit(0))
-        ).alias("df"),
-    )
+    delta_df = shard_tf.groupBy("term").agg(F.count("*").alias("df"))
+    merged_df = merge_counts(stored_df, delta_df, "term", "df")
     stats = (
         stored_scalars.crossJoin(F.broadcast(shard_scalars))
         .select(
@@ -1408,10 +1375,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-K, no full sort). The (count DESC, left, right) order is total,
     so the K-boundary is deterministic on both engines."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = tokens(F.col("text"), drop_empty=True)
     base = d.select(toks.alias("t")).withColumn("n", F.size("t"))
     ln = F.greatest(F.col("n") - 1, F.lit(0))  # n=1 → zero pairs
     pairs = F.arrays_zip(
@@ -1443,7 +1407,7 @@ def bpe_merge_fold(tokens, left, right):
     with a tree that stays linear in k — the faster
     ``bpe_merge_greedy`` below references its input many times and
     would make such a chain exponential (it blew the analyzer's
-    100-iteration resolution budget when chained; measured r13). Use
+    100-iteration resolution budget when chained, measured). Use
     ``bpe_merge_greedy`` whenever the input is a plain column (loop
     bodies separated by checkpoints, stacked single-merge selects)."""
     return F.aggregate(
@@ -1465,7 +1429,7 @@ def bpe_apply_rules_regex(tokens, rules):
     """Apply a COLLECTED literal merge table (round-ordered
     (left_tok, right_tok) pairs) to a token array — the persisted-
     artifact re-encode path — as one chained ``regexp_replace`` pass
-    over a newline-delimited rendering (r13 optimization round).
+    over a newline-delimited rendering.
 
     Tokens are whitespace-split so none contains ``\\n``; merged tokens
     are space-joined so they don't either. Render the array as
@@ -1498,8 +1462,7 @@ def bpe_apply_rules_regex(tokens, rules):
 
 
 def bpe_merge_greedy(tokens, left, right):
-    """``bpe_merge_fold``'s semantics in closed vectorized form
-    (r13 optimization round): when ``left != right`` two match starts
+    """``bpe_merge_fold``'s semantics in closed vectorized form: when ``left != right`` two match starts
     can never be adjacent (the shared middle token would have to equal
     both), so greedy-LTR degenerates to "merge EVERY match" — drop the
     positions consumed as a match's right half, rewrite match starts
@@ -1569,10 +1532,7 @@ def q_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacent-match positions of ceil(island/2). The two computations
     share no code path, so agreement certifies the fold."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = tokens(F.col("text"), drop_empty=True)
     base = d.select("doc_id", toks.alias("t")).withColumn(
         "n", F.size("t")
     )
@@ -1612,7 +1572,7 @@ BPE_TRAIN_ROUNDS = 4
 def _bpe_adjacent_pairs(col: str):
     """The adjacent-pair expansion every BPE count reads: arrays_zip of
     the token array against its 1-shift, length-guarded for 0/1-token
-    docs — factored (r14) so the full round-1 count and the incremental
+    docs — shared so the full round-1 count and the incremental
     delta pass build pairs with ONE expression."""
     ln = F.greatest(F.size(col) - 1, F.lit(0))
     return F.arrays_zip(
@@ -1623,7 +1583,7 @@ def _bpe_adjacent_pairs(col: str):
 
 def _bpe_counts_update(counts: DataFrame, merged: DataFrame) -> DataFrame:
     """counts(k+1) from counts(k) and the round's merged frame — the
-    incremental BPE pair-count maintenance (r14, guide §2.2): rows whose
+    incremental BPE pair-count maintenance (guide §2.2): rows whose
     arrays the merge changed (t_old non-NULL by construction upstream)
     contribute their OLD pairs with weight −1 and NEW pairs with weight
     +1; one vocabulary-bounded aggregate over
@@ -1690,13 +1650,12 @@ def q_bpe_train_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = right), sharing no code with the Spark fold, so agreement
     certifies both the fold and the loop plumbing round by round.
 
-    r14 (optimization round 2): INCREMENTAL pair counts. Only round 1
-    explodes the full corpus; every later round maintains the
-    (left_tok, right_tok, pair_count) state table from the docs the
-    previous merge actually CHANGED (measured ~7% of docs / ~8% of
-    tokens per round at sf0.1; the table itself is pair-vocabulary-
-    bounded, ~1k rows) — a doc's pair multiset is a pure function of
-    its token array, so
+    INCREMENTAL pair counts: only round 1 explodes the full corpus;
+    every later round maintains the (left_tok, right_tok, pair_count)
+    state table from the docs the previous merge actually CHANGED
+    (measured ~7% of docs / ~8% of tokens per round at sf0.1; the table
+    itself is pair-vocabulary-bounded, ~1k rows) — a doc's pair
+    multiset is a pure function of its token array, so
         counts(round k+1) = counts(round k)
                             − pairs(changed docs' old arrays)
                             + pairs(changed docs' new arrays)
@@ -1708,10 +1667,7 @@ def q_bpe_train_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — per-round exchange rows drop from O(corpus tokens) to
     O(changed tokens + |pair vocab|))."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = tokens(F.col("text"), drop_empty=True)
     cur = d.select("doc_id", toks.alias("t"))
     per_round = []
     counts = None
@@ -1823,15 +1779,11 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two computations share no code path, so agreement certifies
     every merge round AND the final stream assembly.
 
-    r14 (optimization round 2): the loop body IS ``bpe_train_rounds``
-    (this function was its verbatim inline twin; the shared helper now
-    carries the incremental pair-count state, so the encode trains off
-    delta counts too)."""
+    The loop body IS ``bpe_train_rounds``, which carries the
+    incremental pair-count state, so the encode trains off delta counts
+    too."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = tokens(F.col("text"), drop_empty=True)
     cur, _winners = bpe_train_rounds(d.select("doc_id", toks.alias("t")))
     return cur.select(
         "doc_id", F.posexplode(F.col("t")).alias("pos0", "tok")
@@ -1850,8 +1802,8 @@ def bpe_train_rounds(cur: DataFrame):
     the empty-round identity-fold guard included — JVM greedy fold,
     localCheckpoint between rounds).
 
-    r14 (optimization round 2): q_bpe_train_k's incremental pair-count
-    state — only round 1 explodes the full corpus; later rounds update
+    q_bpe_train_k's incremental pair-count state — only round 1
+    explodes the full corpus; later rounds update
     the vocabulary-bounded counts table from the ~7% of docs the merge
     changed (``_bpe_counts_update``; exact by the pair-multiset
     identity documented there)."""
@@ -1946,8 +1898,7 @@ def q_bpe_vocab_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
        bounded artifact — collected like any tokenizer load) are
        applied as ONE chained-regexp pass over a newline-delimited
        rendering (``bpe_apply_rules_regex`` — native JVM regex with
-       greedy-LTR semantics identical to the fold chain it replaced,
-       r13) in ONE narrow select, ZERO exchanges for the whole encode
+       greedy-LTR semantics identical to the fold chain) in ONE narrow select, ZERO exchanges for the whole encode
        (cheaper than training's per-round plan: this is exactly why
        tokenizers persist their merges) — then one posexplode.
 
@@ -1959,10 +1910,7 @@ def q_bpe_vocab_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from breweries_case_spark.io.rest_source import _staging_dir
 
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = tokens(F.col("text"), drop_empty=True)
     _, winners = bpe_train_rounds(d.select("doc_id", toks.alias("t")))
     merges = winners[0]
     for w in winners[1:]:
@@ -1982,7 +1930,7 @@ def q_bpe_vocab_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table(table).collect(),
         key=lambda r: r["round"],
     )
-    # r12 (ADVICE): the round trip is complete once the rules are
+    # The round trip is complete once the rules are
     # collected — drop the appId-namespaced catalog entry (and its
     # staging artifact) so a persistent metastore doesn't accumulate one
     # stale table per run, each with a dangling LOCATION once the
@@ -1990,11 +1938,8 @@ def q_bpe_vocab_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LITERAL rules, never the table.
     spark.sql("DROP TABLE IF EXISTS " + table)
     shutil.rmtree(path, ignore_errors=True)
-    enc_t = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
-    # r13 (optimization round): the k collected literal rules are
+    enc_t = tokens(F.col("text"), drop_empty=True)
+    # The k collected literal rules are
     # applied as ONE chained-regexp pass over a delimited rendering
     # (bpe_apply_rules_regex — native JVM regex, greedy-LTR semantics
     # identical to the fold, measured 14×) instead of k nested
@@ -2124,10 +2069,7 @@ def q_bpe_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two benched train loops (vocabulary-bounded exchanges) + a
     fold-only re-encode + two |langs|-bounded aggregates."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
+    toks = tokens(F.col("text"), drop_empty=True)
     base = d.select("doc_id", "lang", toks.alias("t")).filter(
         F.size("t") > 0
     )
@@ -2140,7 +2082,7 @@ def q_bpe_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for w in old_winners[1:]:
         merges = merges.unionByName(w)
     rules = sorted(merges.collect(), key=lambda r: r["round"])
-    # r13 (optimization round): the frozen rules are applied as ONE
+    # The frozen rules are applied as ONE
     # chained-regexp pass (bpe_apply_rules_regex — native JVM regex,
     # greedy-LTR semantics identical to the fold, measured 14×) instead
     # of k nested interpreted folds; still zero exchanges
@@ -2673,8 +2615,8 @@ def gate_scored(d: DataFrame) -> DataFrame:
 
 
 def q_quality_gate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental quality-gate CUTOFF maintainer (r13 — the mergeable
-    -state discipline on the gate surface): admit a NEW document shard
+    """Incremental quality-gate CUTOFF maintainer (the
+    mergeable-state discipline on the gate surface): admit a NEW document shard
     (doc_id % 20 == 0) through the global-quantile gate WITHOUT
     re-scoring the corpus. The stored state is the corpus's
     quantized-score HISTOGRAM (one value-bounded (quality_bin, count)
@@ -2697,19 +2639,14 @@ def q_quality_gate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored_hist = (
         gate_scored(d.filter(~is_shard))
         .groupBy("quality_bin")
-        .agg(F.count("*").alias("n_c"))
+        .agg(F.count("*").alias("c"))
         .localCheckpoint()
     )
     scored_shard = gate_scored(d.filter(is_shard)).localCheckpoint()
     shard_hist = scored_shard.groupBy("quality_bin").agg(
-        F.count("*").alias("n_s")
+        F.count("*").alias("c")
     )
-    merged = stored_hist.join(shard_hist, "quality_bin", "full_outer").select(
-        "quality_bin",
-        (
-            F.coalesce("n_c", F.lit(0)) + F.coalesce("n_s", F.lit(0))
-        ).alias("c"),
-    )
+    merged = merge_counts(stored_hist, shard_hist, "quality_bin", "c")
     w_cum = Window.orderBy("quality_bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -3915,7 +3852,7 @@ def _bpe_round_ctes_pfx(i: int, pfx: str, win_ref: str | None = None) -> str:
                    lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
             FROM {pfx}stream_{i}),{win_cte}
         {pfx}mt_{i} AS (
-            -- LEFT JOIN ON TRUE, not CROSS JOIN (r12, ADVICE): if a
+            -- LEFT JOIN ON TRUE, not CROSS JOIN: if a
             -- training round on the half corpus finds zero adjacent
             -- pairs its winner CTE is empty, and a cross join would
             -- annihilate the stream; the left join keeps every row with

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from breweries_case_spark.io.reader import load_table
+from breweries_case_spark.functions import fingerprint, ws_tokens
+from breweries_case_spark.io.reader import load_table, spread
 from breweries_case_spark.io.rest_source import (
     PII_EMAIL_RE as _PII_EMAIL_RE,
     PII_PHONE_RE as _PII_PHONE_RE,
@@ -62,7 +63,7 @@ def quality_mask():
     whitespace tokens AND mean token length inside MEAN_TOKEN_LEN_RANGE.
     Shared with ``pipelines/corpus.py`` so the nightly pipeline's gate
     is provably THIS gate, not a drifting re-implementation."""
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = F.size(ws_tokens(F.col("text")))
     mean_len = F.length(F.col("text")).cast("double") / n_tok
     lo, hi = MEAN_TOKEN_LEN_RANGE
     return (n_tok >= MIN_TOKENS) & mean_len.between(lo, hi)
@@ -71,7 +72,7 @@ def quality_mask():
 def content_fingerprint():
     """Exact-dedup canonicalization: md5 of the lowercased trimmed text
     (the q_dedup_exact contract; shared with pipelines/corpus.py)."""
-    return F.md5(F.lower(F.trim(F.col("text"))))
+    return fingerprint(F.col("text"))
 
 
 def q_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,7 +194,7 @@ def epoch_table(corpus: DataFrame) -> DataFrame:
     q_mix_epochs and q_training_mix_v2 stage 3 so the epoch formula
     cannot drift between the unit operator and the composite. One hash
     aggregate (the only corpus exchange) + a 1-row broadcast scalar."""
-    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tok = F.size(ws_tokens(F.col("text")))
     per = corpus.groupBy("source").agg(
         F.sum(n_tok.cast("long")).alias("toks")
     )
@@ -341,8 +342,9 @@ def q_mix_epochs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_training_mix_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second-generation curation composite, chaining the round-8 wave
-    end to end the way q_training_mix chained the exact tier:
+    """Second-generation curation composite, chaining the quantile gate,
+    containment dedup and epoch upsampling operators end to end the way
+    q_training_mix chained the exact tier:
 
         quantile quality gate → containment (subset-dup) dedup →
         epoch-based source upsampling
@@ -367,15 +369,15 @@ def q_training_mix_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: stage 1 is histogram-cheap (see q_quality_gate); stage 2
     runs the df-CAPPED candidate join + full-inventory verify (the
     containment family's production default — every candidate bucket
-    ≤ DF_CAP² by construction, closing the Σdf² quadratic the r8
-    verdict flagged; recall pinned 0 by q_dedup_containment_capped's
+    ≤ DF_CAP² by construction, closing the uncapped join's Σdf²
+    quadratic; recall pinned 0 by q_dedup_containment_capped's
     oracle, and this composite's own oracle recomputes the EXACT pair
     set, so a lossy cap reds the driver here too) RESTRICTED to gate
     survivors (the composition order is itself an optimization — gate
     first shrinks the join's input; measured −36% candidates for −25%
     docs, SURVEY §6); stage 3 is one aggregate + broadcast join. No
     stage shuffles the corpus more than once per key. The stage
-    HAND-OFF frames are checkpointed (r11): without them the gate's
+    HAND-OFF frames are checkpointed: without them the gate's
     histogram subplan re-executed inside the gram build, the epoch
     aggregate, AND the output join (3×), and the survivor scan twice —
     the measured source of this composite's 3× floor drift; kept_ids
@@ -395,16 +397,16 @@ def q_training_mix_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 2. containment dedup among survivors — the shared df-capped
     # builder (q_dedup_containment_blocked's plan) on the gated
-    # inventory. r14: survivors are filtered BEFORE the gram build (the
-    # semi-join used to sit above the explode+window, which Spark cannot
-    # push down, so the gated-out tail was tokenized and gram-distincted
-    # just to be discarded — guide §2.3)
+    # inventory. Survivors are filtered BEFORE the gram build: Spark
+    # cannot push a semi-join above the explode+window down, so the
+    # gated-out tail would be tokenized and gram-distincted just to be
+    # discarded (guide §2.3)
     grams = _docs_with_gram_rows(
-        spark,
-        sf_dir,
-        docs=d.select("doc_id", "lang", "text").join(
-            kept_ids, "doc_id", "left_semi"
-        ),
+        spread(
+            d.select("doc_id", "lang", "text").join(
+                kept_ids, "doc_id", "left_semi"
+            )
+        )
     )
     pairs = containment_pairs(grams, capped=True)
     dropped = pairs.select(

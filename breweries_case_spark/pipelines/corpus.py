@@ -74,25 +74,6 @@ def _contaminated_ids(gated: DataFrame, bench_grams: DataFrame) -> DataFrame:
     )
 
 
-def _shingles(df: DataFrame) -> DataFrame:
-    """(doc_id, lang, sh: array<long>) — the dedup module's hashed-shingle
-    feature over an arbitrary documents frame (its sf_dir-based builders
-    read the test table; this adapter runs the same expressions)."""
-    from breweries_case_spark.operators.dedup import (
-        _hashed_shingles_from_token_hashes,
-        _norm_tokens,
-    )
-
-    base = df.select(
-        "doc_id",
-        "lang",
-        F.transform(
-            _norm_tokens(F.col("text")), lambda t: F.xxhash64(t)
-        ).alias("th64"),
-    )
-    return _hashed_shingles_from_token_hashes(base)
-
-
 def _banded(shingles: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_hash) LSH bucket rows."""
     from breweries_case_spark.operators.dedup import (
@@ -131,13 +112,14 @@ def _near_dup_shard_ids(
     keep-min."""
     from breweries_case_spark.operators.dedup import (
         LSH_BAND_KEYS,
+        _docs_with_hashed_shingles,
         broadcast_if_small,
         jaccard_verified,
         probe_postings,
         shard_band_pairs,
     )
 
-    sh_shard = _shingles(fresh).localCheckpoint()
+    sh_shard = _docs_with_hashed_shingles(fresh).localCheckpoint()
     stored = read_other_partitions(
         spark, os.path.join(corpus_dir, LSH_TABLE), [shard_date]
     )
@@ -178,7 +160,9 @@ def _near_dup_shard_ids(
             "left_semi",
         )
         b_docs = b_docs.unionByName(
-            _shingles(cand_docs).withColumn("stored", F.lit(True))
+            _docs_with_hashed_shingles(cand_docs).withColumn(
+                "stored", F.lit(True)
+            )
         )
 
     drop = jaccard_verified(cands, sh_shard, b_docs, b_tag="stored")
@@ -209,7 +193,10 @@ def update_corpus(
     pay the daily path's within-shard candidate join (that is the batch
     ``q_dedup_clusters_*`` job); it only needs to leave bucket state
     behind so subsequent daily shards can probe it."""
-    from breweries_case_spark.operators.dedup import broadcast_if_small
+    from breweries_case_spark.operators.dedup import (
+        _docs_with_hashed_shingles,
+        broadcast_if_small,
+    )
 
     docs_dir = os.path.join(corpus_dir, DOCS_TABLE)
     fp_dir = os.path.join(corpus_dir, FP_TABLE)
@@ -319,7 +306,7 @@ def update_corpus(
         # must not shadow future deliveries of the doc that displaced
         # them); the backfill bands the accepted docs themselves
         accepted_banded = (
-            _banded(_shingles(accepted))
+            _banded(_docs_with_hashed_shingles(accepted))
             if near_drop is None
             else shard_banded.join(near_drop, "doc_id", "left_anti")
         )

@@ -55,7 +55,7 @@ def main() -> None:
 
         banded = _lsh_banded(
             minhash_signatures(
-                _docs_with_hashed_shingles(spark, f"/root/testdata/{sf}")
+                _docs_with_hashed_shingles(d)
             )
         ).localCheckpoint()
         _, corpus_hits = probe_postings(

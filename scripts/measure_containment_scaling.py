@@ -34,7 +34,7 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from breweries_case_spark.io.reader import load_table
+from breweries_case_spark.io.reader import load_table, spread
 from breweries_case_spark.session import get_session
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -44,7 +44,7 @@ ROUNDS = 3
 def _grams(spark, half: bool):
     from breweries_case_spark.operators.dedup import _docs_with_gram_rows
 
-    g = _docs_with_gram_rows(spark, SF_DIR)
+    g = _docs_with_gram_rows(spread(load_table(spark, SF_DIR, "documents")))
     if half:
         n = load_table(spark, SF_DIR, "documents").count()
         g = g.filter(F.col("doc_id") < n // 2)

@@ -26,6 +26,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from breweries_case_spark.io.reader import load_table, spread
 from breweries_case_spark.operators.dedup import (
     MINHASH_K,
     _docs_with_hashed_shingles,
@@ -68,7 +69,9 @@ def main() -> None:
     heavy = docs.unionByName(copies)
     heavy.write.mode("overwrite").parquet("/tmp/lsh_cap_probe/documents.parquet")
 
-    sh = _docs_with_hashed_shingles(spark, "/tmp/lsh_cap_probe").localCheckpoint()
+    sh = _docs_with_hashed_shingles(
+        spread(load_table(spark, "/tmp/lsh_cap_probe", "documents"))
+    ).localCheckpoint()
     sigs = minhash_signatures(sh).localCheckpoint()
     n = sigs.count()
 

@@ -11,6 +11,7 @@ import time
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from breweries_case_spark.io.reader import load_table, spread
 from breweries_case_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _docs_with_gram_rows,
@@ -32,7 +33,9 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     t = JACCARD_THRESHOLD
-    grams = _docs_with_gram_rows(spark, SF_DIR).withColumn(
+    grams = _docs_with_gram_rows(
+        spread(load_table(spark, SF_DIR, "documents"))
+    ).withColumn(
         "sz", F.count("*").over(Window.partitionBy("doc_id"))
     )
     df_tbl = grams.groupBy("lang", "gram").agg(F.count("*").alias("df"))

@@ -11,7 +11,7 @@ from pyspark.sql import SparkSession, functions as F
 
 sys.path.insert(0, ".")
 from breweries_case_spark.operators import dedup  # noqa: E402
-from breweries_case_spark.io.reader import load_table  # noqa: E402
+from breweries_case_spark.io.reader import load_table, spread  # noqa: E402
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
@@ -37,7 +37,7 @@ def t(label, fn):
 
 
 print("--- stage-by-stage ---")
-base = t("base = token hashes + localCheckpoint", lambda: dedup._docs_with_token_hashes(spark, sf_dir).localCheckpoint())
+base = t("base = token hashes + localCheckpoint", lambda: dedup._docs_with_token_hashes(spread(load_table(spark, sf_dir, "documents"))).localCheckpoint())
 sigs = t("minhash signatures + localCheckpoint", lambda: dedup.minhash_signatures(dedup._hashed_shingles_from_token_hashes(base)).localCheckpoint())
 mh = dedup.lsh_candidates(sigs)
 n_mh = t("lsh_candidates count", lambda: mh.count())

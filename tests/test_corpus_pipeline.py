@@ -460,10 +460,15 @@ def test_retry_converges_when_a_shard_reuses_a_stored_doc_id(spark, tmp_path):
     so the doc is accepted — and a crash-retry of day 2 must verify it
     against day 1's doc 5 again, not against its own copy the first run
     stored (Jaccard 1.0), which would drop it and delete the day."""
-    from breweries_case_spark.pipelines.corpus import _banded, _shingles
+    from breweries_case_spark.operators.dedup import _docs_with_hashed_shingles
+    from breweries_case_spark.pipelines.corpus import _banded
 
     pair = _shard(spark, [(1, REUSED_A, "en", "web"), (2, REUSED_B, "en", "web")])
-    shared = _banded(_shingles(pair)).groupBy("band_idx", "band_hash").count()
+    shared = (
+        _banded(_docs_with_hashed_shingles(pair))
+        .groupBy("band_idx", "band_hash")
+        .count()
+    )
     assert shared.filter("count > 1").count() > 0  # the pair is a candidate
 
     c = str(tmp_path / "corpus")

@@ -72,8 +72,9 @@ def test_lsh_two_tier_matches_single_join_and_bounds_flood(spark, sf_dir):
         lsh_candidates,
         minhash_signatures,
     )
+    from breweries_case_spark.io.reader import load_table, spread
 
-    sh = _docs_with_hashed_shingles(spark, sf_dir)
+    sh = _docs_with_hashed_shingles(spread(load_table(spark, sf_dir, "documents")))
     # synthetic mirror flood: 30 extra copies of the largest-id doc's
     # shingle set, ids above the real corpus
     top = sh.orderBy(F.col("doc_id").desc()).limit(1)
@@ -149,9 +150,11 @@ def test_incremental_probe_corpus_work_is_shard_bounded(spark, sf_dir):
         probe_postings,
         q_dedup_incremental,
     )
-    from breweries_case_spark.io.reader import load_table
+    from breweries_case_spark.io.reader import load_table, spread
 
-    sh_docs = _docs_with_hashed_shingles(spark, sf_dir).localCheckpoint()
+    sh_docs = _docs_with_hashed_shingles(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     banded = _lsh_banded(minhash_signatures(sh_docs)).localCheckpoint()
     is_shard = F.col("doc_id") % _SHARD_MOD == 0
 

@@ -1,9 +1,12 @@
 """The two mechanisms every incremental near-dup family shares
 (operators/dedup.py): ``probe_postings`` prunes the stored postings to a
 shard's keys behind one size-gated checkpoint, and ``rare_postings`` is
-the posting df cap."""
+the posting df cap. ``containment_pairs``' capped recount gates its id
+broadcast the same way, on the count its checkpoint observed."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -88,3 +91,54 @@ def test_rare_postings_group_by_and_window_agree(spark, cap):
     windowed = dedup.rare_postings(df, KEYS, cap, by_window=True)
     assert sorted(grouped.columns) == sorted(windowed.columns) == sorted(df.columns)
     assert _rows(grouped) == _rows(windowed) == want
+
+
+#: (doc_id, lang, gram): docs 1 and 2 share the rare grams a, b and the
+#: hot gram h (df 3 > cap 2), so their pair takes the full recount
+CONTAINMENT_GRAMS = [
+    (1, "en", "a"), (1, "en", "b"), (1, "en", "h"),
+    (2, "en", "a"), (2, "en", "b"), (2, "en", "h"),
+    (3, "en", "h"), (3, "en", "x"),
+]
+
+
+def test_containment_recount_above_the_gate_shuffles(spark, monkeypatch):
+    """Forced above the size gate, the capped recount prunes its posting
+    sides to the needs-pair ids by shuffle semi-joins, with the same
+    pairs as the broadcast path."""
+    # only the recount's own hint may broadcast
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    grams = spark.createDataFrame(
+        CONTAINMENT_GRAMS, "doc_id long, lang string, gram string"
+    )
+    want = [(1, 2, "en", 3, 3, 1.0)]
+
+    def pairs():
+        out = dedup.containment_pairs(grams, capped=True, df_cap=2)
+        cols = ("doc_a", "doc_b", "lang", "sz_a", "sz_b", "containment")
+        return sorted(map(tuple, out.select(*cols).collect())), _plan(out)
+
+    rows, plan = pairs()
+    assert rows == want and "BroadcastExchange" in plan
+    monkeypatch.setattr(dedup, "_NEEDS_BROADCAST_MAX", -1)
+    rows, plan = pairs()
+    assert rows == want and "BroadcastExchange" not in plan
+
+
+def test_containment_blocked_gate_costs_no_job(spark, sf_dir):
+    """The recount's broadcast gate reads the row count the needs
+    checkpoint observed, so no job exists only to count it (test
+    profile, sf0.01)."""
+    sc = spark.sparkContext
+    group = "containment-blocked-jobs"
+    sc.setJobGroup(group, "q_dedup_containment_blocked job count")
+    try:
+        rows = dedup.q_dedup_containment_blocked(
+            spark, os.path.join(os.path.dirname(sf_dir), "sf0.01")
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 6
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 20

@@ -447,7 +447,7 @@ def test_short_doc_simhash_tier_recall_split(spark, sf_dir):
     """The r11 blocker split holds on the fixture: the bounded form
     still equals the exact pairs (hard equality — re-pinned after the
     tier change), and the short tier emits a small candidate set."""
-    from breweries_case_spark.io.reader import load_table
+    from breweries_case_spark.io.reader import load_table, spread
     from breweries_case_spark.operators.dedup import (
         _docs_with_token_hashes,
         _short_doc_simhash_candidates,
@@ -464,7 +464,9 @@ def test_short_doc_simhash_tier_recall_split(spark, sf_dir):
     )
     assert exact == bounded
 
-    base = _docs_with_token_hashes(spark, sf_dir).localCheckpoint()
+    base = _docs_with_token_hashes(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).localCheckpoint()
     doc_len = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("len")
     )

@@ -541,15 +541,16 @@ def test_prefix_filter_lossless_and_smaller_index(spark, sf_dir):
         q_dedup_ngram_jaccard,
         q_dedup_prefix_filter,
     )
+    from breweries_case_spark.io.reader import load_table, spread
     from pyspark.sql.window import Window
 
     full = {tuple(r) for r in q_dedup_ngram_jaccard(spark, sf_dir).collect()}
     pref = {tuple(r) for r in q_dedup_prefix_filter(spark, sf_dir).collect()}
     assert full == pref and len(full) > 0
     t = JACCARD_THRESHOLD
-    grams = _docs_with_gram_rows(spark, sf_dir).withColumn(
-        "sz", F.count("*").over(Window.partitionBy("doc_id"))
-    )
+    grams = _docs_with_gram_rows(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).withColumn("sz", F.count("*").over(Window.partitionBy("doc_id")))
     df_tbl = grams.groupBy("lang", "gram").agg(F.count("*").alias("df"))
     ranked = grams.join(df_tbl, ["lang", "gram"]).withColumn(
         "pos",

@@ -144,6 +144,7 @@ def test_v2_composite_drops_match_blocked_pairs(spark, sf_dir):
     the composite really runs the registered default, not a fork."""
     from pyspark.sql import functions as F
 
+    from breweries_case_spark.io.reader import load_table, spread
     from breweries_case_spark.operators.dedup import (
         _docs_with_gram_rows,
         containment_pairs,
@@ -154,9 +155,9 @@ def test_v2_composite_drops_match_blocked_pairs(spark, sf_dir):
     )
 
     kept_ids = q_quality_gate(spark, sf_dir).select("doc_id")
-    grams = _docs_with_gram_rows(spark, sf_dir).join(
-        kept_ids, "doc_id", "left_semi"
-    )
+    grams = _docs_with_gram_rows(
+        spread(load_table(spark, sf_dir, "documents"))
+    ).join(kept_ids, "doc_id", "left_semi")
     pairs = containment_pairs(grams, capped=True).collect()
     expect_dropped = set()
     for r in pairs:
