@@ -9,9 +9,7 @@ Iceberg catalog when the runtime has the jars (import-gated, SURVEY §7.2
 phase 8).
 
 Scale notes: dynamic overwrite only rewrites touched partitions — a daily
-rerun on a 100 TB table costs one day's data, not a table rewrite. Writers
-take an optional ``target_file_partitions`` to coalesce small outputs
-(the classic small-files problem on object stores)."""
+rerun on a 100 TB table costs one day's data, not a table rewrite."""
 
 from __future__ import annotations
 
@@ -23,7 +21,6 @@ def write_partition_overwrite(
     df: DataFrame,
     path: str,
     partition_col: str = "extraction_date",
-    target_file_partitions: int | None = None,
 ) -> None:
     """Dynamic partition overwrite to parquet: replaces only the partitions
     present in ``df`` (requires partitionOverwriteMode=dynamic, set by the
@@ -31,16 +28,13 @@ def write_partition_overwrite(
     instead of silently truncating the table)."""
     spark = df.sparkSession
     prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    out = df
-    if target_file_partitions:
-        out = out.coalesce(target_file_partitions)
     # per-write override, RESTORED afterwards: leaving the session conf
     # flipped would silently change the semantics of later unrelated
     # overwrite-writes on a vanilla session
     try:
         if prior.lower() != "dynamic":
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        out.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
     finally:
         if prior.lower() != "dynamic":
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
@@ -64,24 +58,9 @@ def write_iceberg(
     """Iceberg v2 writer: explicit ``overwritePartitions`` (clearer than the
     config-dependent v1 path the reference uses — SURVEY §4 'dynamic
     partition overwrite' row). Requires iceberg-spark-runtime on the
-    classpath; raises RuntimeError otherwise.
-
-    Sandbox status (2026-08-13): jar resolution was attempted and CANNOT
-    succeed here — no vendored iceberg jar exists on disk (`find / -name
-    'iceberg*runtime*.jar'` → none) and Maven Central is unreachable
-    (DNS: 'Name or service not known'). The attempted command::
-
-        SparkSession.builder
-          .config('spark.jars.packages',
-                  'org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0')
-          .config('spark.sql.catalog.local',
-                  'org.apache.iceberg.spark.SparkCatalog').getOrCreate()
-
-    dies in spark-submit's ivy resolution ([JAVA_GATEWAY_EXITED]). The
-    round-trip branch of tests/test_catalog.py::
-    test_iceberg_write_roundtrip_or_clean_error (overwritePartitions +
-    read-back + snapshot time travel) therefore remains gated on
-    classpath presence and runs wherever the jars exist."""
+    classpath; raises RuntimeError otherwise, and the round-trip branch of
+    tests/test_catalog.py::test_iceberg_write_roundtrip_or_clean_error
+    runs only where the jars are present."""
     spark = df.sparkSession
     try:
         # Class.forName actually resolves the class — plain _jvm attribute

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import re
 import shutil
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1358,39 +1359,52 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TOPK = 20
 
 
+def _bpe_adjacent_pairs(col: str):
+    """The adjacent-pair expansion every BPE count reads: arrays_zip of
+    the token array against its 1-shift, length-guarded for 0/1-token
+    docs."""
+    ln = F.greatest(F.size(col) - 1, F.lit(0))
+    return F.arrays_zip(
+        F.slice(F.col(col), 1, ln).alias("l"),
+        F.slice(F.col(col), 2, ln).alias("r"),
+    )
+
+
+def _bpe_pair_counts(frame: DataFrame) -> DataFrame:
+    """(left_tok, right_tok, pair_count) over the token column ``t``:
+    the pair expansion runs inside the scan stage, and the one exchange
+    is a map-side-combined aggregate, so each mapper ships at most its
+    local pair vocabulary, not its token stream."""
+    return (
+        frame.select(F.explode(_bpe_adjacent_pairs("t")).alias("p"))
+        .groupBy(
+            F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok")
+        )
+        .agg(F.count("*").alias("pair_count"))
+    )
+
+
+def _bpe_top(counts: DataFrame, k: int) -> DataFrame:
+    """The k best merge candidates in winner order (pair_count DESC,
+    left_tok, right_tok). The order is total, so both engines cut the
+    same k-boundary; the plan is a TakeOrderedAndProject, not a sort."""
+    return counts.orderBy(
+        F.col("pair_count").desc(), "left_tok", "right_tok"
+    ).limit(k)
+
+
 def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer-training count step: global
     adjacent-token-pair frequencies, top-BPE_TOPK merge candidates.
     One iteration of the classic corpus-scale BPE trainer (Sennrich et
     al. 2016 "Neural Machine Translation of Rare Words with Subword
-    Units", public) — production loops this count step, merging the
-    winning pair between iterations; the per-iteration plan is
-    identical at every step, so this single step IS the scale shape.
-
-    Plan: the 1→N pair expansion (slice+zip+explode) happens inside
-    the scan stage (whole-stage codegen, no Python); the only exchange
-    is the pair-count hash aggregate WITH map-side partials — each
-    mapper ships at most |local vocab|² pair partials, not its token
-    stream; the global top-K is TakeOrderedAndProject (per-partition
-    top-K, no full sort). The (count DESC, left, right) order is total,
-    so the K-boundary is deterministic on both engines."""
+    Units", public). The per-iteration plan is identical at every step,
+    so this single step is the scale shape: the pair expansion inside
+    the scan stage, one vocabulary-bounded exchange, a per-partition
+    top-K (``_bpe_pair_counts``, ``_bpe_top``)."""
     d = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"), drop_empty=True)
-    base = d.select(toks.alias("t")).withColumn("n", F.size("t"))
-    ln = F.greatest(F.col("n") - 1, F.lit(0))  # n=1 → zero pairs
-    pairs = F.arrays_zip(
-        F.slice(F.col("t"), 1, ln).alias("l"),
-        F.slice(F.col("t"), 2, ln).alias("r"),
-    )
-    return (
-        base.select(F.explode(pairs).alias("p"))
-        .groupBy(
-            F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok")
-        )
-        .agg(F.count("*").alias("pair_count"))
-        .orderBy(F.col("pair_count").desc(), "left_tok", "right_tok")
-        .limit(BPE_TOPK)
-    )
+    return _bpe_top(_bpe_pair_counts(d.select(toks.alias("t"))), BPE_TOPK)
 
 
 def bpe_merge_fold(tokens, left, right):
@@ -1508,23 +1522,13 @@ def bpe_merge_greedy(tokens, left, right):
 
 
 def q_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BPE trainer's APPLY step: take the winning pair from the
-    count step (q_bpe_pair_counts, top-1) and greedily merge its
-    non-overlapping left-to-right occurrences in every document,
-    publishing per-doc token counts before/after. Together with the
-    count step this is one full BPE training iteration — production
-    loops the two, feeding the merged stream back in.
-
-    The merge itself is a real left-to-right fold, executed JVM-side
-    as a JVM-evaluated higher-order ``F.aggregate``: the accumulator array
-    appends each token unless its last element equals LEFT and the
-    token equals RIGHT, in which case the pair collapses into one
-    merged token (joined with a space — impossible inside a
-    whitespace-split token, so a fresh merge can never be mistaken for
-    a bare LEFT and overlapping occurrences — the "a a a" run — merge
-    floor(run/2) times, the standard greedy semantics). The winning
-    pair reaches every row via crossJoin(broadcast(top-1)) — a 1-row
-    scalar broadcast, no driver collect.
+    """The BPE trainer's APPLY step: take the winning pair of the count
+    step (q_bpe_pair_counts, top-1) and greedily merge its
+    non-overlapping left-to-right occurrences in every document
+    (``bpe_merge_greedy``), publishing per-doc token counts
+    before/after. The winner reaches every row via
+    crossJoin(broadcast(top-1)), a 1-row scalar broadcast with no
+    driver collect, so a corpus with no pairs yields no rows.
 
     The oracle does NOT re-run a fold (DuckDB's list_reduce cannot
     carry an array accumulator); it verifies through the closed form:
@@ -1536,21 +1540,7 @@ def q_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select("doc_id", toks.alias("t")).withColumn(
         "n", F.size("t")
     )
-    ln = F.greatest(F.col("n") - 1, F.lit(0))
-    pairs = F.arrays_zip(
-        F.slice(F.col("t"), 1, ln).alias("l"),
-        F.slice(F.col("t"), 2, ln).alias("r"),
-    )
-    top1 = (
-        base.select(F.explode(pairs).alias("p"))
-        .groupBy(
-            F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok")
-        )
-        .agg(F.count("*").alias("pair_count"))
-        .orderBy(F.col("pair_count").desc(), "left_tok", "right_tok")
-        .limit(1)
-        .select("left_tok", "right_tok")
-    )
+    top1 = _bpe_top(_bpe_pair_counts(base), 1).select("left_tok", "right_tok")
     merged = bpe_merge_greedy(
         F.col("t"), F.col("left_tok"), F.col("right_tok")
     )
@@ -1569,29 +1559,53 @@ def q_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_TRAIN_ROUNDS = 4
 
 
-def _bpe_adjacent_pairs(col: str):
-    """The adjacent-pair expansion every BPE count reads: arrays_zip of
-    the token array against its 1-shift, length-guarded for 0/1-token
-    docs — shared so the full round-1 count and the incremental
-    delta pass build pairs with ONE expression."""
-    ln = F.greatest(F.size(col) - 1, F.lit(0))
-    return F.arrays_zip(
-        F.slice(F.col(col), 1, ln).alias("l"),
-        F.slice(F.col(col), 2, ln).alias("r"),
+def _bpe_merge_round(cur: DataFrame, top1: DataFrame) -> DataFrame:
+    """One guarded merge round over a (doc_id, t) frame, eagerly
+    checkpointed as (doc_id, t, t_old). The 1-row winner is broadcast
+    on a constant-key LEFT join: a pair-less round (every doc down to
+    <= 1 token) has an empty winner, which a crossJoin would turn into
+    an empty corpus, while the left join keeps every row and
+    ``bpe_merge_greedy`` treats the NULL pair as the identity. t_old
+    keeps the pre-merge array only where the merge changed it, so the
+    checkpoint carries just the old arrays the delta count reads."""
+    return (
+        cur.withColumn("_k", F.lit(1))
+        .join(
+            F.broadcast(
+                top1.select("left_tok", "right_tok").withColumn(
+                    "_k", F.lit(1)
+                )
+            ),
+            "_k",
+            "left",
+        )
+        .select(
+            "doc_id",
+            F.col("t").alias("t_old"),
+            bpe_merge_greedy(
+                F.col("t"), F.col("left_tok"), F.col("right_tok")
+            ).alias("t"),
+        )
+        .select(
+            "doc_id",
+            "t",
+            F.when(F.size("t") != F.size("t_old"), F.col("t_old")).alias(
+                "t_old"
+            ),
+        )
+        .localCheckpoint()
     )
 
 
 def _bpe_counts_update(counts: DataFrame, merged: DataFrame) -> DataFrame:
-    """counts(k+1) from counts(k) and the round's merged frame — the
-    incremental BPE pair-count maintenance (guide §2.2): rows whose
-    arrays the merge changed (t_old non-NULL by construction upstream)
-    contribute their OLD pairs with weight −1 and NEW pairs with weight
-    +1; one vocabulary-bounded aggregate over
-    state ∪ delta reproduces the full recount exactly (a doc's pair
-    multiset is a pure function of its array; unchanged docs cancel).
-    Zero rows are dropped — a pair count can never go negative, and the
-    full recount never emits a 0 — so the winner scan sees the same
-    table a recount would build."""
+    """counts(k+1) from counts(k) and round k's merge checkpoint: rows
+    whose arrays the merge changed (t_old non-NULL) contribute their
+    OLD pairs with weight −1 and NEW pairs with weight +1; one
+    vocabulary-bounded aggregate over state ∪ delta reproduces the full
+    recount exactly (a doc's pair multiset is a pure function of its
+    array; unchanged docs cancel). Zero rows are dropped — a pair count
+    can never go negative, and the full recount never emits a 0 — so
+    the winner scan sees the same table a recount would build."""
     ch = merged.filter(F.col("t_old").isNotNull())
     delta = ch.select(
         F.explode(_bpe_adjacent_pairs("t_old")).alias("p"),
@@ -1620,255 +1634,106 @@ def _bpe_counts_update(counts: DataFrame, merged: DataFrame) -> DataFrame:
     )
 
 
+def bpe_train_rounds(cur: DataFrame):
+    """The k-round BPE training loop (Sennrich et al. 2016) over a
+    prepared (doc_id, t) token frame, BPE_TRAIN_ROUNDS rounds of
+    count → winner → merge → delta count. Each step has one owner:
+
+    - ``_bpe_pair_counts``: the full pair count, run once (round 1);
+    - ``_bpe_top``: the winner, top-1 in (pair_count DESC, left_tok,
+      right_tok) order;
+    - ``_bpe_merge_round``: the guarded merge of the winner into every
+      doc, checkpointed, so round k+1 scans the merged stream instead
+      of recomputing k folds;
+    - ``_bpe_counts_update``: counts(k+1) from counts(k) and the docs
+      the merge changed, so later rounds shuffle the delta, not the
+      corpus.
+
+    Returns ``(rounds, winners)``: the BPE_TRAIN_ROUNDS merge
+    checkpoints (doc_id, t, t_old), ``rounds[-1]`` holding the final
+    stream, and one (round, left_tok, right_tok, pair_count) frame with
+    a row per round that had a winner."""
+    counts = _bpe_pair_counts(cur).localCheckpoint(eager=False)
+    rounds, winners = [], []
+    for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
+        top1 = _bpe_top(counts, 1).select(
+            F.lit(rnd).cast("int").alias("round"),
+            "left_tok",
+            "right_tok",
+            "pair_count",
+        )
+        winners.append(top1)
+        rounds.append(_bpe_merge_round(cur, top1))
+        if rnd < BPE_TRAIN_ROUNDS:
+            counts = _bpe_counts_update(counts, rounds[-1])
+        cur = rounds[-1].select("doc_id", "t")
+    return rounds, reduce(DataFrame.unionByName, winners)
+
+
 def q_bpe_train_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full k-round BPE TRAINING LOOP: compose the proven count step
-    (q_bpe_pair_counts' plan) and apply step (q_bpe_merge_apply's
-    JVM-side greedy fold) BPE_TRAIN_ROUNDS times, feeding each round's
-    merged token stream into the next round's count — the actual
-    tokenizer-training control flow (Sennrich et al. 2016), not a single
-    iteration. Output: one row per round with the winning pair, its
-    corpus frequency, total merges applied, and the corpus token count
-    after the round — the vocabulary-growth trajectory a trainer logs.
+    """The full k-round BPE TRAINING LOOP (``bpe_train_rounds``) as the
+    vocabulary-growth trajectory a trainer logs: one row per round with
+    the winning pair, its corpus frequency, the merges applied and the
+    corpus token count after the round. A winner-less round (no pair
+    left) merged nothing and has no row.
 
-    Per-round plan (identical every round — this IS the scale shape):
-    pair expansion inside the scan stage (slice+zip+explode, whole-stage
-    codegen), ONE exchange for the pair-count hash aggregate with
-    map-side partials (shuffle rows bounded by |vocab|² partials per
-    mapper, measured vocabulary-bounded in scripts/measure_bpe_scaling
-    .py), top-1 via TakeOrderedAndProject, winner broadcast to every row
-    as a 1-row crossJoin scalar, merge as a JVM higher-order fold. The
-    merged stream is localCheckpoint-ed between rounds — exactly the
-    persist a production trainer does so round k+1 scans the merged
-    stream once instead of recomputing k folds (lineage would otherwise
-    grow multiplicatively); checkpoint size is the token stream, which
-    SHRINKS every round.
-
-    Oracle: the identical loop unrolled BPE_TRAIN_ROUNDS times as a CTE
-    chain (_bpe_round_ctes) — the merge simulated position-wise (match
+    Oracle: the same loop unrolled BPE_TRAIN_ROUNDS times as a CTE
+    chain (_bpe_round_ctes), the merge simulated position-wise (match
     flags → gaps-and-islands → odd-offset positions merge, the closed
-    form of the greedy LTR fold; islands longer than 1 require
-    left = right), sharing no code with the Spark fold, so agreement
-    certifies both the fold and the loop plumbing round by round.
-
-    INCREMENTAL pair counts: only round 1 explodes the full corpus;
-    every later round maintains the (left_tok, right_tok, pair_count)
-    state table from the docs the previous merge actually CHANGED
-    (measured ~7% of docs / ~8% of tokens per round at sf0.1; the table
-    itself is pair-vocabulary-bounded, ~1k rows) — a doc's pair
-    multiset is a pure function of its token array, so
-        counts(round k+1) = counts(round k)
-                            − pairs(changed docs' old arrays)
-                            + pairs(changed docs' new arrays)
-    is EXACT (unchanged arrays contribute identical multisets on both
-    sides), and the winner ordering (count DESC, left, right) reads
-    identical counts. Randomized cross-implementation equivalence is
-    pinned by tests/test_round14_ops.py; the unrolled-CTE oracle pins
-    it end-to-end at every SF (guide §2.2: shuffle the delta, not the
-    corpus — per-round exchange rows drop from O(corpus tokens) to
-    O(changed tokens + |pair vocab|))."""
+    form of the greedy LTR fold). It shares no code with the Spark
+    loop, so agreement certifies the fold, the incremental counts and
+    the loop plumbing round by round."""
     d = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"), drop_empty=True)
-    cur = d.select("doc_id", toks.alias("t"))
-    per_round = []
-    counts = None
-    for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
-        if counts is None:
-            # round 1: the one full-corpus pair expansion (in-scan
-            # slice+zip+explode, ONE vocabulary-bounded exchange)
-            counts = (
-                cur.select(F.explode(_bpe_adjacent_pairs("t")).alias("p"))
-                .groupBy(
-                    F.col("p.l").alias("left_tok"),
-                    F.col("p.r").alias("right_tok"),
-                )
-                .agg(F.count("*").alias("pair_count"))
-                .localCheckpoint(eager=False)
-            )
-        top1 = counts.orderBy(
-            F.col("pair_count").desc(), "left_tok", "right_tok"
-        ).limit(1)
-        # broadcast the 1-row winner on a constant equi-key LEFT join:
-        # a pair-less round (every doc down to <= 1 token) yields an
-        # EMPTY top1 — a crossJoin would silently empty the corpus, the
-        # left join keeps every row and the fold falls back to identity
-        merged = (
-            cur.withColumn("_k", F.lit(1))
-            .join(
-                F.broadcast(top1.withColumn("_k", F.lit(1))), "_k", "left"
-            )
-            .select(
-                "doc_id",
-                "left_tok",
-                "right_tok",
-                "pair_count",
-                F.col("t").alias("t_old"),
-                F.when(F.col("left_tok").isNull(), F.col("t"))
-                .otherwise(
-                    bpe_merge_greedy(
-                        F.col("t"), F.col("left_tok"), F.col("right_tok")
-                    )
-                )
-                .alias("t"),
-            )
-            # nb (pre-merge length) and the changed flag derive from
-            # t_old; unchanged docs null it out so the checkpoint only
-            # carries the ~7% of old arrays the delta pass reads
-            .select(
-                "doc_id",
-                "left_tok",
-                "right_tok",
-                "pair_count",
-                F.size("t_old").alias("nb"),
-                "t",
-                F.when(F.size("t") != F.size("t_old"), F.col("t_old")).alias(
-                    "t_old"
-                ),
-            )
-            .localCheckpoint()
+    rounds, winners = bpe_train_rounds(d.select("doc_id", toks.alias("t")))
+    stats = (
+        reduce(
+            DataFrame.unionByName,
+            [
+                r.select(F.lit(i).cast("int").alias("round"), "t", "t_old")
+                for i, r in enumerate(rounds, 1)
+            ],
         )
-        per_round.append(
-            # a winner-less round contributes no trajectory row (nothing
-            # was merged) — filter before the aggregate
-            merged.filter(F.col("left_tok").isNotNull())
-            .groupBy("left_tok", "right_tok", "pair_count").agg(
-                F.sum(F.col("nb") - F.size("t")).alias("n_merges_total"),
-                F.sum(F.size("t")).alias("n_tokens_after_total"),
-            )
-            .select(
-                F.lit(rnd).alias("round"),
-                "left_tok",
-                "right_tok",
-                "pair_count",
-                "n_merges_total",
-                "n_tokens_after_total",
-            )
+        .groupBy("round")
+        .agg(
+            F.sum(
+                F.when(
+                    F.col("t_old").isNotNull(),
+                    F.size("t_old") - F.size("t"),
+                ).otherwise(0)
+            ).alias("n_merges_total"),
+            F.sum(F.size("t")).alias("n_tokens_after_total"),
         )
-        if rnd < BPE_TRAIN_ROUNDS:
-            counts = _bpe_counts_update(counts, merged)
-        cur = merged.select("doc_id", "t")
-    out = per_round[0]
-    for s in per_round[1:]:
-        out = out.unionByName(s)
-    return out.orderBy("round")
+    )
+    # a sort-merge join of the two <= BPE_TRAIN_ROUNDS-row sides runs
+    # inside the final job; a broadcast would cost a job of its own
+    # without AQE
+    return winners.join(stats.hint("merge"), "round").orderBy("round")
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end BPE ENCODE: train the BPE_TRAIN_ROUNDS-merge
-    table (q_bpe_train_k's count→merge loop verbatim) and then PUBLISH
-    THE FINAL TOKEN STREAMS — one row per surviving token
-    (doc_id, pos, tok), 1-based positions — i.e. what a tokenizer
-    actually hands the training pipeline, not just the per-round
-    trajectory. Merged tokens carry their space-joined surface form
-    ("the brewery"), so the merge lineage is readable and the oracle
-    can compare strings exactly.
+    """The end-to-end BPE ENCODE: run the BPE_TRAIN_ROUNDS-merge
+    training loop (``bpe_train_rounds``) and PUBLISH THE FINAL TOKEN
+    STREAMS — one row per surviving token (doc_id, pos, tok), 1-based
+    positions — i.e. what a tokenizer hands the training pipeline.
+    Merged tokens carry their space-joined surface form ("the
+    brewery"), so the merge lineage is readable and the oracle can
+    compare strings exactly. The final posexplode runs inside the last
+    checkpoint's scan stage, no extra exchange.
 
-    Plan: identical to q_bpe_train_k round for round (pair expansion
-    inside the scan stage, ONE vocabulary-bounded exchange per round
-    for the pair-count aggregate, top-1 via TakeOrderedAndProject,
-    1-row broadcast winner, JVM higher-order greedy fold,
-    localCheckpoint between rounds so round k+1 scans the merged
-    stream instead of recomputing k folds) plus one final posexplode —
-    which runs INSIDE the last checkpoint's scan stage, no extra
-    exchange. Per-merge cost stays scan-bound: the token stream
-    SHRINKS every round and the exchange is pair-vocabulary-bounded
-    (scripts/measure_bpe_train_rounds.py; SURVEY §6).
-
-    Oracle: the identical loop unrolled as the q_bpe_train_k CTE chain
-    (_bpe_round_ctes — the gaps-and-islands closed form of the greedy
-    fold), selecting the FINAL stream instead of the per-round rows;
-    the two computations share no code path, so agreement certifies
-    every merge round AND the final stream assembly.
-
-    The loop body IS ``bpe_train_rounds``, which carries the
-    incremental pair-count state, so the encode trains off delta counts
-    too."""
+    Oracle: the q_bpe_train_k CTE chain (_bpe_round_ctes — the
+    gaps-and-islands closed form of the greedy fold), selecting the
+    FINAL stream instead of the per-round rows; the two computations
+    share no code path, so agreement certifies every merge round AND
+    the final stream assembly."""
     d = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"), drop_empty=True)
-    cur, _winners = bpe_train_rounds(d.select("doc_id", toks.alias("t")))
-    return cur.select(
+    rounds, _ = bpe_train_rounds(d.select("doc_id", toks.alias("t")))
+    return rounds[-1].select(
         "doc_id", F.posexplode(F.col("t")).alias("pos0", "tok")
     ).select(
         "doc_id", (F.col("pos0") + 1).cast("long").alias("pos"), "tok"
     )
-
-
-def bpe_train_rounds(cur: DataFrame):
-    """The q_bpe_train_k count→merge loop over a prepared (doc_id, t)
-    token frame, returning ``(folded_frame, winners)`` where winners is
-    one 1-row (round, left_tok, right_tok) frame per round — factored
-    from q_bpe_vocab_persist so the drift report trains its "old"
-    tokenizer on a sub-corpus with PROVABLY the same loop (one
-    vocabulary-bounded exchange per round, 1-row guarded winner join —
-    the empty-round identity-fold guard included — JVM greedy fold,
-    localCheckpoint between rounds).
-
-    q_bpe_train_k's incremental pair-count state — only round 1
-    explodes the full corpus; later rounds update
-    the vocabulary-bounded counts table from the ~7% of docs the merge
-    changed (``_bpe_counts_update``; exact by the pair-multiset
-    identity documented there)."""
-    winners = []
-    counts = None
-    for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
-        if counts is None:
-            counts = (
-                cur.select(F.explode(_bpe_adjacent_pairs("t")).alias("p"))
-                .groupBy(
-                    F.col("p.l").alias("left_tok"),
-                    F.col("p.r").alias("right_tok"),
-                )
-                .agg(F.count("*").alias("pair_count"))
-                .localCheckpoint(eager=False)
-            )
-        top1 = (
-            counts.orderBy(
-                F.col("pair_count").desc(), "left_tok", "right_tok"
-            )
-            .limit(1)
-            .select(
-                F.lit(rnd).cast("int").alias("round"),
-                "left_tok",
-                "right_tok",
-            )
-        )
-        winners.append(top1)
-        cur = (
-            cur.withColumn("_k", F.lit(1))
-            .join(
-                F.broadcast(
-                    top1.select("left_tok", "right_tok").withColumn(
-                        "_k", F.lit(1)
-                    )
-                ),
-                "_k",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.col("t").alias("t_old"),
-                F.when(F.col("left_tok").isNull(), F.col("t"))
-                .otherwise(
-                    bpe_merge_greedy(
-                        F.col("t"), F.col("left_tok"), F.col("right_tok")
-                    )
-                )
-                .alias("t"),
-            )
-            # unchanged docs null t_old so the checkpoint only carries
-            # the changed old arrays the delta pass reads
-            .select(
-                "doc_id",
-                "t",
-                F.when(F.size("t") != F.size("t_old"), F.col("t_old")).alias(
-                    "t_old"
-                ),
-            )
-            .localCheckpoint()
-        )
-        if rnd < BPE_TRAIN_ROUNDS:
-            counts = _bpe_counts_update(counts, cur)
-        cur = cur.select("doc_id", "t")
-    return cur, winners
 
 
 def q_bpe_vocab_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1877,11 +1742,8 @@ def q_bpe_vocab_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAVE the merge table, then every encode job LOADS the artifact and
     applies the recorded merges (never retrains). Three phases:
 
-    1. **Train**: the q_bpe_train_k count→merge loop (the shared
-       ``bpe_train_rounds`` helper — one vocabulary-bounded exchange
-       per round, 1-row guarded winner join, JVM greedy fold,
-       localCheckpoint between rounds), collecting each round's
-       winning pair.
+    1. **Train**: the ``bpe_train_rounds`` loop, collecting each
+       round's winning pair.
     2. **Persist**: the (round, left_tok, right_tok) merge table —
        BPE_TRAIN_ROUNDS rows — written as a parquet artifact and
        registered through the session catalog (DDL over a LOCATION,
@@ -1912,9 +1774,7 @@ def q_bpe_vocab_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"), drop_empty=True)
     _, winners = bpe_train_rounds(d.select("doc_id", toks.alias("t")))
-    merges = winners[0]
-    for w in winners[1:]:
-        merges = merges.unionByName(w)
+    merges = winners.select("round", "left_tok", "right_tok")
     run_ns = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
     table = f"tokenizer.bpe_merges_{run_ns}"
     path = f"{_staging_dir()}/bpe_merges_{run_ns}"
@@ -2054,9 +1914,9 @@ def q_bpe_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_bpe_compression's absolute ratio and q_bpe_oov_report's OOV
     curve).
 
-    Both trainings run the SHARED ``bpe_train_rounds`` loop (factored
-    from q_bpe_vocab_persist), so the drift numbers describe the real
-    registered tokenizer, not a reimplementation; the old rules are a
+    Both trainings run the ``bpe_train_rounds`` loop, so the drift
+    numbers describe the real registered tokenizer, not a
+    reimplementation; the old rules are a
     k-row collected artifact (exactly what a tokenizer load is) chained
     as literal folds in ONE narrow select. Docs with zero whitespace
     tokens never enter either stream (the q_bpe_compression inner-join
@@ -2078,10 +1938,7 @@ def q_bpe_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "t"
         )
     )
-    merges = old_winners[0]
-    for w in old_winners[1:]:
-        merges = merges.unionByName(w)
-    rules = sorted(merges.collect(), key=lambda r: r["round"])
+    rules = sorted(old_winners.collect(), key=lambda r: r["round"])
     # The frozen rules are applied as ONE
     # chained-regexp pass (bpe_apply_rules_regex — native JVM regex,
     # greedy-LTR semantics identical to the fold, measured 14×) instead
@@ -2093,8 +1950,8 @@ def q_bpe_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("c_old"),
     )
-    new_cur, _ = bpe_train_rounds(base.select("doc_id", "t"))
-    new_counts = new_cur.select(
+    new_rounds, _ = bpe_train_rounds(base.select("doc_id", "t"))
+    new_counts = new_rounds[-1].select(
         "doc_id", F.size("t").cast("long").alias("c_new")
     )
     q6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731

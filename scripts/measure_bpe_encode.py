@@ -1,12 +1,14 @@
 """SURVEY §6 measurement: q_bpe_encode per-merge cost stays scan-bound.
 
-The encode runs the q_bpe_train_k loop and publishes the final stream.
-Claim: wall grows (sub-)linearly with the merge count k — each round
-adds ONE scan of a SHRINKING checkpointed stream plus one
+The encode runs the ``bpe_train_rounds`` loop and publishes the final
+stream. Claim: wall grows (sub-)linearly with the merge count k — each
+round adds ONE scan of a SHRINKING checkpointed stream plus one
 vocabulary-bounded pair-count exchange (measured bounded per round in
 measure_bpe_train_rounds.py), and the final posexplode rides the last
 checkpoint's scan stage. If any round re-derived earlier folds
-(lineage blow-up) the wall would grow super-linearly in k.
+(lineage blow-up) the wall would grow super-linearly in k. The loop
+reads its round count from ``text.BPE_TRAIN_ROUNDS`` at call time, so
+this script patches it per k.
 
 Usage: PYTHONPATH=. python scripts/measure_bpe_encode.py
 """
@@ -15,10 +17,12 @@ from __future__ import annotations
 
 import json
 import time
+from unittest import mock
 
 from pyspark.sql import functions as F
 
-from breweries_case_spark.operators.text import bpe_merge_fold
+from breweries_case_spark.functions import tokens
+from breweries_case_spark.operators import text
 from breweries_case_spark.session import get_session
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -31,42 +35,11 @@ def encode_wall(spark, k: int) -> tuple[float, int]:
     for _ in range(REPEATS):
         t0 = time.perf_counter()
         d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        toks = F.filter(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-            lambda x: x != F.lit(""),
-        )
-        cur = d.select("doc_id", toks.alias("t"))
-        for _r in range(k):
-            ln = F.greatest(F.size("t") - 1, F.lit(0))
-            pairs = F.arrays_zip(
-                F.slice(F.col("t"), 1, ln).alias("l"),
-                F.slice(F.col("t"), 2, ln).alias("r"),
-            )
-            top1 = (
-                cur.select(F.explode(pairs).alias("p"))
-                .groupBy(
-                    F.col("p.l").alias("left_tok"),
-                    F.col("p.r").alias("right_tok"),
-                )
-                .agg(F.count("*").alias("pair_count"))
-                .orderBy(
-                    F.col("pair_count").desc(), "left_tok", "right_tok"
-                )
-                .limit(1)
-                .select("left_tok", "right_tok")
-            )
-            cur = (
-                cur.crossJoin(F.broadcast(top1))
-                .select(
-                    "doc_id",
-                    bpe_merge_fold(
-                        F.col("t"), F.col("left_tok"), F.col("right_tok")
-                    ).alias("t"),
-                )
-                .localCheckpoint()
-            )
+        toks = tokens(F.col("text"), drop_empty=True)
+        with mock.patch.object(text, "BPE_TRAIN_ROUNDS", k):
+            rounds, _ = text.bpe_train_rounds(d.select("doc_id", toks.alias("t")))
         n_final = (
-            cur.select(F.posexplode(F.col("t")).alias("pos0", "tok"))
+            rounds[-1].select(F.posexplode(F.col("t")).alias("pos0", "tok"))
             .count()
         )
         walls.append(time.perf_counter() - t0)

@@ -5,10 +5,10 @@ per-mapper vocabulary for the RAW stream (round 1). The training loop's
 additional claim is that this holds at EVERY round — the merged stream
 feeding round k has one more vocabulary symbol ("L R") and fewer
 tokens, so its pair-partial exchange must stay vocabulary-bounded too.
-Measured here for round 2: apply round 1's winning merge (the same
-bpe_merge_fold the operator runs), then count the distinct
-(mapper partition, left, right) partial rows its count step ships, at
-1× vs 4× corpus replicas (same vocabulary, 4× tokens).
+Measured here for round 2: run round 1 as the loop does (the full
+count, the winner, the guarded merge round), then count the distinct
+(mapper partition, left, right) partial rows the next count step ships,
+at 1× vs 4× corpus replicas (same vocabulary, 4× tokens).
 
 Usage: PYTHONPATH=. python scripts/measure_bpe_train_rounds.py
 """
@@ -20,6 +20,14 @@ import time
 
 from pyspark.sql import functions as F
 
+from breweries_case_spark.functions import tokens
+from breweries_case_spark.operators.text import (
+    BPE_TOPK,
+    _bpe_adjacent_pairs,
+    _bpe_merge_round,
+    _bpe_pair_counts,
+    _bpe_top,
+)
 from breweries_case_spark.session import get_session
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -28,70 +36,28 @@ REPLICAS = 4
 
 
 def build_tokens(spark, replicas: int):
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("text")
+    """(doc_id, t) over the documents corpus, ``replicas`` copies."""
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
     if replicas > 1:
         d = d.withColumn(
             "rep", F.explode(F.sequence(F.lit(1), F.lit(replicas)))
-        ).select("text")
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
-    return d.select(toks.alias("t")).repartition(32).localCheckpoint()
-
-
-def merged_stream(base):
-    """Apply round 1's winning merge — one full loop iteration."""
-    from breweries_case_spark.operators.text import bpe_merge_fold
-
-    ln = F.greatest(F.size("t") - 1, F.lit(0))
-    pairs = F.arrays_zip(
-        F.slice(F.col("t"), 1, ln).alias("l"),
-        F.slice(F.col("t"), 2, ln).alias("r"),
-    )
-    top1 = (
-        base.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok"))
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.col("c").desc(), "left_tok", "right_tok")
-        .limit(1)
-        .select("left_tok", "right_tok")
-    )
-    return (
-        base.crossJoin(F.broadcast(top1))
-        .select(
-            bpe_merge_fold(
-                F.col("t"), F.col("left_tok"), F.col("right_tok")
-            ).alias("t")
-        )
-        .localCheckpoint()
-    )
+        ).select("doc_id", "text")
+    toks = tokens(F.col("text"), drop_empty=True)
+    return d.select("doc_id", toks.alias("t")).repartition(32).localCheckpoint()
 
 
 def count_step(d):
-    ln = F.greatest(F.size("t") - 1, F.lit(0))
-    pairs = F.arrays_zip(
-        F.slice(F.col("t"), 1, ln).alias("l"),
-        F.slice(F.col("t"), 2, ln).alias("r"),
-    )
-    return (
-        d.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.col("c").desc(), "l", "r")
-        .limit(20)
-    )
+    return _bpe_top(_bpe_pair_counts(d), BPE_TOPK)
 
 
-def partial_rows(d) -> int:
-    ln = F.greatest(F.size("t") - 1, F.lit(0))
-    pairs = F.arrays_zip(
-        F.slice(F.col("t"), 1, ln).alias("l"),
-        F.slice(F.col("t"), 2, ln).alias("r"),
-    )
+def shuffled_partial_rows(d) -> int:
+    """Distinct (mapper partition, left, right) partial rows."""
     return (
         d.select(
-            F.spark_partition_id().alias("pid"), F.explode(pairs).alias("p")
+            F.spark_partition_id().alias("pid"),
+            F.explode(_bpe_adjacent_pairs("t")).alias("p"),
         )
         .select("pid", "p.l", "p.r")
         .distinct()
@@ -107,7 +73,8 @@ def main() -> None:
     out = {}
     streams = {}
     for rep in (1, REPLICAS):
-        streams[rep] = merged_stream(build_tokens(spark, rep))
+        base = build_tokens(spark, rep)
+        streams[rep] = _bpe_merge_round(base, _bpe_top(_bpe_pair_counts(base), 1))
     walls = {rep: [] for rep in streams}
     for _ in range(ROUNDS):
         for rep, d in streams.items():
@@ -123,7 +90,7 @@ def main() -> None:
             "round2_tokens": int(
                 d.select(F.sum(F.size("t")).alias("n")).collect()[0]["n"]
             ),
-            "round2_partial_rows_into_exchange": partial_rows(d),
+            "round2_partial_rows_into_exchange": shuffled_partial_rows(d),
             "best_wall_sec": round(min(walls[rep]), 3),
         }
     print(json.dumps(out, indent=1))

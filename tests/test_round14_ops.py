@@ -99,71 +99,133 @@ def test_bpe_incremental_counts_match_full_recount_randomized(spark):
             cur = merged.select("doc_id", "t")
 
 
-def test_bpe_train_rounds_winners_match_full_recount_loop(spark):
+def _reference_loop(base):
+    """Reference: BPE_TRAIN_ROUNDS rounds with a full recount each, no
+    incremental state. Returns the winners (round, left_tok, right_tok),
+    the final (doc_id, t) frame and per round with a winner the row
+    (round, left_tok, right_tok, pair_count, n_merges_total,
+    n_tokens_after_total)."""
+    from breweries_case_spark.operators.text import (
+        BPE_TRAIN_ROUNDS,
+        bpe_merge_greedy,
+    )
+
+    cur = base
+    want_winners, want_rows = [], []
+    for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
+        top1 = (
+            _full_counts(cur)
+            .orderBy(F.col("pair_count").desc(), "left_tok", "right_tok")
+            .limit(1)
+            .select(
+                F.lit(rnd).cast("int").alias("round"),
+                "left_tok",
+                "right_tok",
+                "pair_count",
+            )
+        )
+        won = top1.collect()
+        want_winners.extend(tuple(r)[:3] for r in won)
+        nxt = (
+            cur.withColumn("_k", F.lit(1))
+            .join(
+                F.broadcast(
+                    top1.select("left_tok", "right_tok").withColumn(
+                        "_k", F.lit(1)
+                    )
+                ),
+                "_k",
+                "left",
+            )
+            .select(
+                "doc_id",
+                F.col("t").alias("t_before"),
+                F.when(F.col("left_tok").isNull(), F.col("t"))
+                .otherwise(
+                    bpe_merge_greedy(
+                        F.col("t"), F.col("left_tok"), F.col("right_tok")
+                    )
+                )
+                .alias("t"),
+            )
+            .localCheckpoint()
+        )
+        if won:
+            sizes = nxt.agg(
+                F.sum(F.size("t_before") - F.size("t")),
+                F.sum(F.size("t")),
+            ).first()
+            want_rows.append(tuple(won[0]) + tuple(sizes))
+        cur = nxt.select("doc_id", "t")
+    return want_winners, cur, want_rows
+
+
+def test_bpe_train_rounds_winners_match_full_recount_loop(spark, tmp_path):
     """End-to-end: the shared incremental loop (`bpe_train_rounds`) must
     produce the same winner sequence and the same final token streams as
     an independent full-recount reference loop on randomized corpora —
     including corpora that go winner-less mid-loop (every doc at ≤ 1
-    token), exercising the empty-round identity-fold guard."""
+    token), exercising the empty-round identity-fold guard. The token
+    arrays go in as is, so the pre-merged vocabulary token "b b" shares
+    its surface form with a later (b, b) merge.
+
+    `q_bpe_train_k` reads text, so its per-round rows (winner, pair
+    count, merges, tokens after) are checked on a documents table per
+    corpus, against the reference loop run on that table's tokens. The
+    short corpus goes winner-less after two rounds and so also pins the
+    no-row rule for a round without a winner."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from breweries_case_spark.functions import tokens
     from breweries_case_spark.operators.text import (
         BPE_TRAIN_ROUNDS,
-        bpe_merge_greedy,
         bpe_train_rounds,
+        q_bpe_train_k,
     )
 
-    for seed, n_docs in ((5, 30), (11, 6)):
-        rng = random.Random(seed)
+    corpora = {
+        "seed5": _random_corpus(random.Random(5), 30),
+        "seed11": _random_corpus(random.Random(11), 6),
+    }
+    for name, docs in corpora.items():
         base = spark.createDataFrame(
-            _random_corpus(rng, n_docs), "doc_id long, t array<string>"
+            docs, "doc_id long, t array<string>"
         ).localCheckpoint()
 
-        folded, winners = bpe_train_rounds(base)
+        rounds, winners = bpe_train_rounds(base)
         got_winners = [
             tuple(r)
-            for w in winners
-            for r in w.select("round", "left_tok", "right_tok").collect()
+            for r in winners.orderBy("round")
+            .select("round", "left_tok", "right_tok")
+            .collect()
         ]
+        want_winners, want_final, _ = _reference_loop(base)
 
-        # reference: the verbatim pre-r14 loop (full recount per round)
-        cur = base
-        want_winners = []
-        for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
-            top1 = (
-                _full_counts(cur)
-                .orderBy(F.col("pair_count").desc(), "left_tok", "right_tok")
-                .limit(1)
-                .select(
-                    F.lit(rnd).cast("int").alias("round"),
-                    "left_tok",
-                    "right_tok",
-                )
-            )
-            want_winners.extend(tuple(r) for r in top1.collect())
-            cur = (
-                cur.withColumn("_k", F.lit(1))
-                .join(
-                    F.broadcast(
-                        top1.select("left_tok", "right_tok").withColumn(
-                            "_k", F.lit(1)
-                        )
-                    ),
-                    "_k",
-                    "left",
-                )
-                .select(
-                    "doc_id",
-                    F.when(F.col("left_tok").isNull(), F.col("t"))
-                    .otherwise(
-                        bpe_merge_greedy(
-                            F.col("t"), F.col("left_tok"), F.col("right_tok")
-                        )
-                    )
-                    .alias("t"),
-                )
-                .localCheckpoint()
-            )
+        assert got_winners == want_winners, f"{name}: winners diverged"
+        assert _rows(rounds[-1].select("doc_id", "t")) == _rows(
+            want_final
+        ), f"{name}: final streams diverged"
 
-        assert got_winners == want_winners, f"seed {seed}: winners diverged"
-        assert _rows(folded.select("doc_id", "t")) == _rows(
-            cur.select("doc_id", "t")
-        ), f"seed {seed}: final streams diverged"
+    corpora["short"] = [(0, ["a", "b", "a", "b"]), (1, ["c"]), (2, [])]
+    for name, docs in corpora.items():
+        sf_dir = tmp_path / name
+        sf_dir.mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": [i for i, _ in docs],
+                    "text": [" ".join(t) for _, t in docs],
+                }
+            ),
+            sf_dir / "documents.parquet",
+        )
+        base = (
+            spark.read.parquet(str(sf_dir / "documents.parquet"))
+            .select("doc_id", tokens(F.col("text"), drop_empty=True).alias("t"))
+            .localCheckpoint()
+        )
+        got_rows = [tuple(r) for r in q_bpe_train_k(spark, str(sf_dir)).collect()]
+        _, _, want_rows = _reference_loop(base)
+        assert got_rows == want_rows, f"{name}: per-round rows diverged"
+    assert len(want_rows) == 2 < BPE_TRAIN_ROUNDS  # the short corpus
