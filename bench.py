@@ -2,19 +2,23 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line {"metric", "value", "unit", "queries", "sf"}.
 
-Each query is fully materialized via the noop sink (no driver collect, no
-result serialization) so the measured time is plan execution, not IO to the
-driver — the honest analog of a cluster job.
+Each run of an id goes through ``measure``: the id is fully materialized
+via the noop sink (no driver collect, no result serialization) under a
+Spark job group of its own, and perfbench's status-store counters (jobs,
+stages, tasks, shuffle records and bytes, executor CPU) are read for
+exactly that run's jobs. Counters do not move with host load; wall time
+does, and corroborates them.
 
 Per-query time is BEST OF 2 runs (3 for ids measuring sub-second — see
-EXTRA_RUN_UNDER_SEC; r14, declared in OPTIMIZATION_r14.md): the first
-execution of a novel plan pays 1-2 s of driver-side analysis +
-whole-stage-codegen (Janino) compilation, a fixed local-JVM cost that
-amortizes to zero on any long-lived cluster and otherwise drowns the
-sub-second queries in noise. The total is the sum of the reported
-per-query times. All samples per id are written to BENCH_FULL.json
-(committed) so stall-hit runs are identifiable from the artifact; the
-stdout line is budgeted to the driver's 2000-byte tail."""
+EXTRA_RUN_UNDER_SEC): the first execution of a novel plan pays 1-2 s of
+driver-side analysis + whole-stage-codegen (Janino) compilation, a fixed
+local-JVM cost that amortizes to zero on any long-lived cluster and
+otherwise drowns the sub-second queries in noise. The total is the sum of
+the reported per-query times. All samples per id, the first run's
+counters and its signature (jobs, stages, shuffle_write_records) are
+written to BENCH_FULL.json; scripts/build_bench_minima.py folds that
+artifact into the per-id floors. The stdout line is budgeted to the
+driver's 2000-byte tail."""
 
 from __future__ import annotations
 
@@ -22,10 +26,12 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from breweries_case_spark.session import get_session  # noqa: E402
+from perfbench.counters import StatusStoreCounters  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -319,6 +325,38 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+#: every job and stage a run started must still be in the status store
+#: when ``measure`` reads it: by default Spark keeps 1000 stages and drops
+#: skipped ones (the reused shuffle stages of every AQE job) first
+STATUS_STORE_CONFIGS = {
+    "spark.ui.retainedJobs": "100000",
+    "spark.ui.retainedStages": "100000",
+    "spark.scheduler.listenerbus.eventqueue.appStatus.capacity": "100000",
+}
+#: the counters that identify an id's plan: a floor is re-seeded when
+#: they change (scripts/build_bench_minima.py)
+SIGNATURE = ("jobs", "stages", "shuffle_write_records")
+
+
+def measure(spark, qid: str, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
+    """One run of the id ``fn(spark, sf_dir)`` through the noop sink,
+    under a job group of its own: returns the wall seconds and
+    ``StatusStoreCounters`` of exactly the jobs that run started."""
+    sc = spark.sparkContext
+    group = f"{qid}#{uuid.uuid4().hex}"
+    counters = StatusStoreCounters(sc)
+    sc.setJobGroup(group, qid)
+    try:
+        t0 = time.perf_counter()
+        _materialize(fn(spark, sf_dir))
+        sec = time.perf_counter() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    counters.flush()
+    return sec, counters.collect(group)
+
+
 #: run the stall sentinel after every N benched ids (r14: 10 → 5, so a
 #: host-weather burst is localized to a 5-id bracket instead of 10 —
 #: VERDICT r13 item 8; the sentinel is diagnostics-only, timings are
@@ -422,6 +460,11 @@ FULL_ARTIFACT = os.path.join(
 )
 
 
+#: the widest values the line is budgeted for: an id or a medallion layer
+#: runs in well under 100 s at sf0.1, the suite total in under 10,000 s
+_WORST_SEC, _WORST_TOTAL = 88.888, 8888.888
+
+
 def build_stdout_line(
     names: list[str],
     per_query: dict[str, float],
@@ -434,16 +477,19 @@ def build_stdout_line(
     budget by dropping per-query entries from the END of the priority
     order (HEADLINE block — flagship + TPC-H — survives longest);
     anything dropped is still in BENCH_FULL.json, and ``queries_omitted``
-    says how many to look for there. Module-level so the budget contract
-    is unit-testable at the current registry size."""
+    says how many to look for there.
 
-    def _payload(keep: int) -> str:
-        kept = {k: per_query[k] for k in names[:keep]}
+    How many ids are printed depends on the id list alone: the budget is
+    checked on a worst-case line (every value at ``_WORST_SEC`` width,
+    the total at ``_WORST_TOTAL``, ``stall_suspect_n`` present), so
+    neither a wide value nor a stall count can push an id off the line."""
+
+    def _payload(keep, per_query, total, medallion, stall_suspect_n) -> str:
         doc = {
             "metric": "headline_queries_total_wall",
             "value": total,
             "unit": "sec",
-            "queries": kept,
+            "queries": {k: per_query[k] for k in names[:keep]},
             "sf": sf,
             "medallion_10k_rows_per_layer_sec": medallion,
         }
@@ -451,18 +497,19 @@ def build_stdout_line(
             # how many per-id numbers the sentinel flags as
             # stall-contaminated (details in BENCH_FULL.json)
             doc["stall_suspect_n"] = stall_suspect_n
-        omitted = len(names) - keep
-        if omitted:
-            doc["queries_omitted"] = omitted
+        if keep < len(names):
+            doc["queries_omitted"] = len(names) - keep
             doc["full_artifact"] = "BENCH_FULL.json"
         return json.dumps(doc, separators=(",", ":"))
 
+    worst = dict.fromkeys(names, _WORST_SEC)
+    worst_medallion = dict.fromkeys(medallion, _WORST_SEC)
     keep = len(names)
-    line = _payload(keep)
-    while keep > 0 and len(line) > TAIL_BYTE_BUDGET:
+    while keep > 0 and len(
+        _payload(keep, worst, _WORST_TOTAL, worst_medallion, len(names))
+    ) > TAIL_BYTE_BUDGET:
         keep -= 1
-        line = _payload(keep)
-    return line
+    return _payload(keep, per_query, total, medallion, stall_suspect_n)
 
 
 def main() -> None:
@@ -475,20 +522,18 @@ def main() -> None:
         app_name="bench",
         # keep stdout clean: the \r console-progress spam shares the
         # driver's 2000-byte tail capture with the result JSON
-        extra_configs={"spark.ui.showConsoleProgress": "false"},
+        extra_configs={
+            **STATUS_STORE_CONFIGS,
+            "spark.ui.showConsoleProgress": "false",
+        },
     )
     per_query: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
-    # warm-up: JVM/codegen/parquet-reader startup must not be billed to
-    # the first measured slots. r12 warmed the first TWO ids unmeasured,
-    # which fixed the first-slot JIT skew but benched q_flagship/q_tpch_q1
-    # as hot SECOND runs while every other id measured cold (r12 ADVICE:
-    # an asymmetry that deflates those two floors vs the suite). r13:
-    # NEUTRAL warmup — one full scan+count of every parquet table in the
-    # SF dir (warms the JVM, codegen, and parquet footers for ALL ids
-    # equally) plus one sentinel-shaped range job, so every measured slot
-    # sees the same starting conditions. FLOOR_RESETS re-seeds the two
-    # formerly hot-floored ids at this commit.
+    counters: dict[str, dict[str, int]] = {}  # the first run's, per id
+    # neutral warm-up: one scan+count of every parquet table in the SF dir
+    # (JVM, codegen and parquet footers for all ids alike) plus one
+    # sentinel-shaped range job, so every measured slot, the first one
+    # included, starts from the same conditions
     for fname in sorted(os.listdir(SF_DIR)):
         if fname.endswith(".parquet"):
             spark.read.parquet(os.path.join(SF_DIR, fname)).count()
@@ -501,14 +546,12 @@ def main() -> None:
     for i, name in enumerate(names):
         runs: list[float] = []
         for _ in range(2):
-            t0 = time.perf_counter()
-            _materialize(qs[name](spark, SF_DIR))
-            runs.append(time.perf_counter() - t0)
+            sec, run_counters = measure(spark, name, qs[name], SF_DIR)
+            runs.append(sec)
+            counters.setdefault(name, run_counters)
         if min(runs) < EXTRA_RUN_UNDER_SEC:
             # best-of-3 for sub-second ids (see EXTRA_RUN_UNDER_SEC)
-            t0 = time.perf_counter()
-            _materialize(qs[name](spark, SF_DIR))
-            runs.append(time.perf_counter() - t0)
+            runs.append(measure(spark, name, qs[name], SF_DIR)[0])
         # same 3-dp scale as the samples so the stdout total (sum of
         # per-query minima) reconciles exactly with BENCH_FULL.json's
         # min samples — the two artifacts must sum consistently
@@ -560,6 +603,10 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf,
                 "samples_min_second": samples,
+                "counters": counters,
+                "signatures": {
+                    q: [c[k] for k in SIGNATURE] for q, c in counters.items()
+                },
                 "medallion_10k_rows_per_layer_sec": medallion,
                 "sentinel": {
                     "job": "range(20M,32p).sum via noop",

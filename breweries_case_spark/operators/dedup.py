@@ -2266,12 +2266,16 @@ def bounded_component_assignment(
         .localCheckpoint()
     )
     rep_ids = members.filter(F.col("doc_id") == F.col("rep")).select("doc_id")
+    # one row per representative in the shingle table; observed on the
+    # checkpoint below, it gates the verify join's broadcast
+    n_reps = Observation()
     if feats is not None:
         # reps inherit their precomputed th64/sh — one semi-join off the
         # caller's checkpoint replaces the tokenize+shingle rebuild
         base = (
             feats.join(rep_ids, "doc_id", "left_semi")
             .select("doc_id", "lang", "th64", "sh")
+            .observe(n_reps, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
         sh_docs = base.select("doc_id", "lang", "sh")
@@ -2281,7 +2285,11 @@ def bounded_component_assignment(
         ).localCheckpoint()
         # shingles feed the MinHash signatures AND both sides of the
         # verification join — materialize once
-        sh_docs = _hashed_shingles_from_token_hashes(base).localCheckpoint()
+        sh_docs = (
+            _hashed_shingles_from_token_hashes(base)
+            .observe(n_reps, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
     if sigs is not None:
         # reps inherit their precomputed signatures — one semi-join off
         # the caller's checkpoint replaces the explode+k-min aggregate
@@ -2306,8 +2314,8 @@ def bounded_component_assignment(
     # twice just to pick up its payloads; above the row gate the hint is
     # withheld and the shuffle plan runs, which is the correct shape when
     # the corpus outgrows the executors. Both sides read the SAME table,
-    # so one count job gates both.
-    if sh_docs.count() <= _NEEDS_BROADCAST_MAX:
+    # so its one observed count gates both.
+    if n_reps.get["n"] <= _NEEDS_BROADCAST_MAX:
         sh_docs = F.broadcast(sh_docs)
     pairs = jaccard_verified(cands, sh_docs, sh_docs).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")

@@ -709,7 +709,6 @@ def ivf_topk(
     k: int = TOP_K,
     nprobe: int = IVF_NPROBE,
     cents: list[tuple[int, list[float]]] | None = None,
-    vectorized_assign: bool = True,
 ) -> DataFrame:
     """IVF-Flat ANN top-k: vectors are assigned to their nearest centroid
     (the inverted file); a query scores the centroids driver-side, probes
@@ -720,16 +719,10 @@ def ivf_topk(
     variant but with data-adaptive cells instead of fixed hyperplanes.
 
     The inline assignment (this test-scale stand-in for the precomputed
-    column) defaults to the vectorized pandas GEMM (``_ivf_assign_pandas``);
-    ``vectorized_assign=False`` keeps the interpreted HOF expression for
-    benching the two forms against each other."""
+    column) is the vectorized pandas GEMM (``_ivf_assign_pandas``)."""
     if cents is None:
         cents = _ivf_centroids(emb)
-    assign = (
-        _ivf_assign_pandas(cents)(F.col("v"))
-        if vectorized_assign
-        else _ivf_assign_expr(F.col("v"), cents)
-    )
+    assign = _ivf_assign_pandas(cents)(F.col("v"))
     probes = _ivf_probes(cents, query_vec, nprobe)
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     norm_q = _norm_py(query_vec)

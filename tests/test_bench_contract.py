@@ -2,7 +2,7 @@
 of stdout, so the one JSON result line must fit the tail budget at the
 CURRENT bench suite size — with worst-case-width values, not the values
 of a lucky run (BENCH_r04 lost its head exactly this way when the suite
-grew). No Spark session needed: the line builder is pure."""
+grew). The line builder is pure; only the ``measure`` test runs Spark."""
 
 from __future__ import annotations
 
@@ -46,3 +46,34 @@ def test_stdout_line_keeps_spec_shape_under_truncation():
         assert "q_flagship" in doc["queries"]
     else:
         assert len(doc["queries"]) == n_names
+
+
+def test_printed_id_set_depends_on_the_id_list_alone():
+    """Neither the stall count nor the width of any value decides which
+    ids are printed: the key set is fixed by the id list."""
+    names = bench.HEADLINE + bench.EXTENDED
+    medallion = dict.fromkeys(("bronze", "silver", "gold"), 1.0)
+    keys = set()
+    for value in (0.001, 88.888):
+        per_query = dict.fromkeys(names, value)
+        for stall_n in (0, len(names)):
+            line = bench.build_stdout_line(
+                names, per_query, value * len(names), 0.1, medallion, stall_n
+            )
+            assert len(line) <= bench.TAIL_BYTE_BUDGET
+            doc = json.loads(line)
+            keys.add((tuple(doc["queries"]), doc.get("queries_omitted")))
+    assert len(keys) == 1, keys
+
+
+def test_measure_counters_repeat_exactly(spark, sf_dir):
+    """``bench.measure`` counts exactly one run's jobs: two runs of the
+    same id report identical work counters."""
+    from __spark_entry__ import queries
+
+    fn = queries()["q_fingerprint"]
+    exact = ("jobs", "stages", "tasks", "shuffle_read_records", "shuffle_write_records")
+    first, second = (bench.measure(spark, "q_fingerprint", fn, sf_dir) for _ in range(2))
+    assert first[0] > 0
+    assert first[1]["jobs"] >= 1
+    assert {k: first[1][k] for k in exact} == {k: second[1][k] for k in exact}

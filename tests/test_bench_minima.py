@@ -1,12 +1,12 @@
-"""FLOOR_RESETS semantics of the bench-minima builder (r12): floors are
-per-PLAN — a sample recorded before an id's plan-change commit must not
-seed the floor, while undated (working-tree) samples always count."""
+"""The floor rule of the bench-minima fold: a floor belongs to one plan,
+named by the id's counter signature (jobs, stages, shuffle_write_records).
+While the signature is unchanged the floor keeps the lower sample; a
+changed signature re-seeds it. Pure: no Spark session, no git history."""
 
 from __future__ import annotations
 
 import importlib.util
 import json
-import subprocess
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -18,96 +18,61 @@ bbm = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(bbm)
 
 
-def _doc(queries=None, samples=None, sf=0.1, parsed=False):
-    body = {
-        "sf": sf,
-        "queries": queries or {},
-        "samples_min_second": samples or {},
-    }
-    return {"sf": sf, "parsed": body} if parsed else body
+def _doc(samples, signatures=None, sf=0.1):
+    doc = {"sf": sf, "samples_min_second": samples}
+    if signatures is not None:
+        doc["signatures"] = signatures
+    return doc
+
+
+def test_unchanged_signature_keeps_the_minimum():
+    m = bbm.fold({}, _doc({"q_x": [2.0, 4.0]}, {"q_x": [5, 7, 100]}), "a")
+    assert m["q_x"] == {"min_sec": 2.0, "source": "a", "signature": [5, 7, 100]}
+    # a slower run of the same plan is host load: the floor stays
+    slower = bbm.fold(m, _doc({"q_x": [3.0]}, {"q_x": [5, 7, 100]}), "b")
+    assert slower["q_x"] == m["q_x"]
+    faster = bbm.fold(m, _doc({"q_x": [1.5]}, {"q_x": [5, 7, 100]}), "c")
+    assert faster["q_x"]["min_sec"] == 1.5
+    assert faster["q_x"]["source"] == "c"
 
 
 def test_reset_excludes_old_samples_but_keeps_new_ones():
-    resets = {"q_x": 100.0}
-    docs = [
-        ("old", _doc(queries={"q_x": 1.0, "q_y": 1.0}), 50.0),
-        ("new", _doc(queries={"q_x": 3.0, "q_y": 3.0}), 150.0),
-    ]
-    m = bbm.collect_minima(docs, resets)
-    # q_x's 1.0 predates the reset: floor re-seeds at the new plan's 3.0
-    assert m["q_x"] == {"min_sec": 3.0, "source": "new"}
-    # q_y has no reset: min over history as before
-    assert m["q_y"] == {"min_sec": 1.0, "source": "old"}
+    """A changed signature is a new plan: the floor re-seeds."""
+    m = {"q_x": {"min_sec": 1.0, "source": "old", "signature": [5, 7, 100]}}
+    m2 = bbm.fold(m, _doc({"q_x": [3.0, 3.5]}, {"q_x": [4, 6, 100]}), "new")
+    # a different plan: its slower floor replaces the old plan's
+    assert m2["q_x"] == {"min_sec": 3.0, "source": "new", "signature": [4, 6, 100]}
+    assert m["q_x"]["min_sec"] == 1.0  # the input table is not mutated
 
 
-def test_undated_working_tree_samples_always_count():
-    resets = {"q_x": 100.0}
-    docs = [("wt", _doc(queries={"q_x": 0.5}), None)]
-    m = bbm.collect_minima(docs, resets)
-    assert m["q_x"]["min_sec"] == 0.5
+def test_first_signed_sample_reseeds_an_unsigned_entry():
+    m = {
+        "q_x": {"min_sec": 1.0, "source": "old"},
+        "q_y": {"min_sec": 1.0, "source": "old"},
+    }
+    # an unsigned artifact shares the unsigned entries' signature
+    unsigned = bbm.fold(m, _doc({"q_x": [3.0], "q_y": [0.5]}), "plain")
+    assert unsigned["q_x"] == {"min_sec": 1.0, "source": "old"}
+    assert unsigned["q_y"] == {"min_sec": 0.5, "source": "plain"}
+    signed = bbm.fold(m, _doc({"q_x": [3.0]}, {"q_x": [2, 2, 0]}), "signed")
+    assert signed["q_x"] == {"min_sec": 3.0, "source": "signed", "signature": [2, 2, 0]}
 
 
-def test_samples_list_wrapped_parsed_and_sf_filter():
-    docs = [
-        ("a", _doc(samples={"q_z": [2.0, 4.0]}), None),
-        ("b", _doc(queries={"q_z": 1.5}, parsed=True), None),
-        ("offsf", _doc(queries={"q_z": 0.1}, sf=0.01), None),
-    ]
-    m = bbm.collect_minima(docs, {})
-    # both samples of a list count, parsed wrappers unwrap, off-sf skipped
-    assert m["q_z"] == {"min_sec": 1.5, "source": "b"}
-
-
-def test_live_resets_point_at_real_commits():
-    """Every FLOOR_RESETS timestamp must correspond to a commit that
-    exists in this repo's history (the reset is 'the committer time of
-    the plan-change commit' — a typo'd epoch would silently disable or
-    over-apply the reset)."""
-    log = subprocess.run(
-        ["git", "-C", str(ROOT), "log", "--format=%ct"],
-        capture_output=True,
-        text=True,
-    ).stdout.split()
-    times = {float(t) for t in log}
-    for qid, ts in bbm.FLOOR_RESETS.items():
-        assert ts in times, (qid, ts)
+def test_samples_off_the_bench_sf_are_ignored():
+    m = {"q_x": {"min_sec": 1.0, "source": "old"}}
+    doc = _doc({"q_x": [0.1], "q_new": [0.1]}, {"q_x": [1, 1, 0]}, sf=0.01)
+    assert bbm.fold(m, doc, "small") == m
 
 
 def test_regenerated_minima_match_committed_file():
-    """BENCH_MINIMA.json in the worktree must be reproducible from the
-    builder (guards against hand-edits drifting from the mechanism).
-    Only run when the committed file exists."""
-    path = ROOT / "BENCH_MINIMA.json"
-    committed = json.loads(path.read_text())
-    assert "minima" in committed and committed.get("sf") == bbm.BENCH_SF
-    # every reset id that appears must NOT carry a pre-reset source time
-    for qid in bbm.FLOOR_RESETS:
-        entry = committed["minima"].get(qid)
-        if entry is None:
-            continue
-        src = entry["source"]
-        if src.startswith("BENCH_FULL@"):
-            rev = src.split("@", 1)[1]
-            ct = subprocess.run(
-                ["git", "-C", str(ROOT), "show", "-s", "--format=%ct", rev],
-                capture_output=True,
-                text=True,
-            ).stdout.strip()
-            assert float(ct) >= bbm.FLOOR_RESETS[qid], (qid, src)
-
-
-def test_floor_resets_literal_has_no_duplicate_keys():
-    """A repeated key in the FLOOR_RESETS literal silently drops all but
-    its last value, so a reader of the earlier entry sees a reset that
-    never applies — each id must appear once."""
-    import ast
-
-    tree = ast.parse((ROOT / "scripts" / "build_bench_minima.py").read_text())
-    (literal,) = [
-        node.value
-        for node in tree.body
-        if isinstance(node, ast.Assign)
-        and any(getattr(t, "id", None) == "FLOOR_RESETS" for t in node.targets)
-    ]
-    keys = [k.value for k in literal.keys]
-    assert sorted({k for k in keys if keys.count(k) > 1}) == []
+    """BENCH_MINIMA.json is a fixpoint of the fold of the committed
+    BENCH_FULL.json: folding the artifact in once more changes nothing
+    (a stale table has a floor above a committed sample, or a benched id
+    without a floor)."""
+    table = json.loads(bbm.MINIMA.read_text())
+    full = json.loads(bbm.ARTIFACT.read_text())
+    # the committed artifact is an sf0.1 run; an off-SF one would fold
+    # to nothing and prove nothing
+    assert table["sf"] == full["sf"] == bbm.BENCH_SF
+    assert bbm.fold(table["minima"], full, bbm.ARTIFACT.stem) == table["minima"]
+    assert set(full["samples_min_second"]) <= set(table["minima"])

@@ -1,4 +1,4 @@
-"""Incremental rollup maintenance + partition compaction."""
+"""Incremental rollup maintenance."""
 
 from __future__ import annotations
 
@@ -80,32 +80,3 @@ def test_merge_states_is_order_insensitive(spark):
     assert (ab.row_count, ab.approx_unique_ids) == (3, 2)
     assert (ba.row_count, ba.approx_unique_ids) == (3, 2)
 
-
-def test_compact_partition_reduces_files_preserves_rows(spark, tmp_path):
-    from breweries_case_spark.io.maintenance import (
-        compact_partition,
-        compact_small_partitions,
-        partition_files,
-    )
-
-    root = str(tmp_path / "tbl")
-    df = spark.range(0, 1000).select(
-        F.col("id"),
-        (F.col("id") % 2).cast("string").alias("day"),
-    )
-    # many small files per partition
-    df.repartition(16).write.partitionBy("day").parquet(root)
-    assert len(partition_files(root, "day", "0")) > 4
-    before = sorted(r.id for r in spark.read.parquet(root).collect())
-
-    n = compact_partition(spark, root, "day", "0", target_files=2)
-    assert n == 2
-    assert len(partition_files(root, "day", "0")) == 2
-
-    touched = compact_small_partitions(spark, root, "day", max_files=4)
-    assert touched == {"1": 1}
-
-    after = sorted(r.id for r in spark.read.parquet(root).collect())
-    assert after == before
-    # partition column still readable with correct values
-    assert spark.read.parquet(root).filter("day = '0'").count() == 500
