@@ -23,6 +23,7 @@ driver's 2000-byte tail."""
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -34,6 +35,17 @@ from breweries_case_spark.session import get_session  # noqa: E402
 from perfbench.counters import StatusStoreCounters  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def sf_of(sf_dir: str) -> float | None:
+    """The scale factor an ``sfN`` directory name carries (``sf0.01`` is
+    0.01); None for any other name."""
+    base = os.path.basename(sf_dir.rstrip("/"))
+    try:
+        return float(base[2:]) if base.startswith("sf") else None
+    except ValueError:
+        return None
+
 
 # Headline set: one per operator family (scan, filter, join shapes, agg
 # shapes, windows, top-k, set ops, flagship) plus the extended-op ids;
@@ -97,8 +109,8 @@ EXTENDED = [
     # (lang, length-bin) twin is measured corpus-quadratic (SURVEY §6) and
     # stays out of the headline suite by design
     "q_dedup_levenshtein_bounded",
-    # the production-topology compositions added in round 4: blocker
-    # candidates -> verify -> star CC, and the shard-vs-corpus probe
+    # the production-topology compositions: blocker candidates -> verify
+    # -> star CC, and the shard-vs-corpus probe
     "q_dedup_clusters_bounded",
     "q_dedup_incremental",
     "q_sim_ivf",
@@ -113,8 +125,8 @@ EXTENDED = [
     "q_quality_repetition",
     "q_decontaminate",
     "q_sample_token_budget",
-    # round-4 analytics + LLM additions (trivial narrow ops — unpivot,
-    # map_funcs, posexplode, histogram — and regr_funcs, whose plan is
+    # analytics + LLM ids (trivial narrow ops — unpivot, map_funcs,
+    # posexplode, histogram — and regr_funcs, whose plan is
     # q_stats_moments', stay out to keep the suite lean)
     "q_funnel",
     "q_retention_cohort",
@@ -136,31 +148,31 @@ EXTENDED = [
     "q_variant_json",
     "q_recursive_cte",
     "q_quality_expectations",
-    # round-4 second wave: record linkage (blocked JW verify is the one
-    # pandas-UDF hot path — blocking ratio is what's being measured),
-    # span-level duplication (two gram-hash shuffles), grid spatial
-    # join, and the heavier of the new analytics (two grouped
-    # percentile passes). The narrow ones (weighted/split samplers,
-    # interval merge, Pareto sweep, semi-additive) stay out for leanness.
+    # record linkage (blocked JW verify is the one pandas-UDF hot path —
+    # blocking ratio is what's being measured), span-level duplication
+    # (two gram-hash shuffles), grid spatial join, and the heavier of the
+    # analytics (two grouped percentile passes). The narrow ones
+    # (weighted/split samplers, interval merge, Pareto sweep,
+    # semi-additive) stay out for leanness.
     "q_join_jaro",
     "q_entity_resolution",
     "q_dup_span_fraction",
     "q_geo_join_radius",
     "q_robust_stats",
-    # round-4 third wave: retrieval scoring (explode cut to query-term
-    # postings), triangle counting (degree-ordered wedge join — the
-    # quadratic-risk shape worth watching), reconciliation checksum
-    # (single-pass multi-agg), per-dim embedding stats, and the
-    # distributed-moments + driver-eigensolve PCA (mapInPandas partials).
+    # retrieval scoring (explode cut to query-term postings), triangle
+    # counting (degree-ordered wedge join — the quadratic-risk shape
+    # worth watching), reconciliation checksum (single-pass multi-agg),
+    # per-dim embedding stats, and the distributed-moments +
+    # driver-eigensolve PCA (mapInPandas partials).
     "q_text_bm25",
     "q_graph_triangles",
     "q_table_checksum",
     "q_embed_dim_stats",
     "q_embed_pca",
-    # round-4 fourth wave: attribution (user-keyed temporal join + rank
-    # windows), z-order layout audit (32 codegen interleave terms), the
-    # frame-explicit navigation windows, and the branch lifecycle
-    # (write-shaped: commits + three-way merge + three snapshot reads).
+    # attribution (user-keyed temporal join + rank windows), z-order
+    # layout audit (32 codegen interleave terms), the frame-explicit
+    # navigation windows, and the branch lifecycle (write-shaped:
+    # commits + three-way merge + three snapshot reads).
     "q_attribution",
     "q_zorder_layout",
     "q_window_first_last",
@@ -171,27 +183,26 @@ EXTENDED = [
     # hybrid retrieval: BM25 candidates -> exact-cosine re-rank -> mixed
     # top-K (1.68 s at sf0.1)
     "q_hybrid_search",
-    # round-5 pipeline additions: rate-limited streaming executor-side
-    # ingest (4 micro-batches), real WAV/BMP/IVF decode via mapInPandas,
-    # and the cents-exact arbitrary-state stream. The r5 certificate ids
-    # (blocker recall, ANN recall, pack/PCA invariants) stay out — they
-    # are verification queries composed of already-benched operators.
+    # pipeline ids: rate-limited streaming executor-side ingest (4
+    # micro-batches), real WAV/BMP/IVF decode via mapInPandas, and the
+    # cents-exact arbitrary-state stream. Certificate ids (blocker
+    # recall, ANN recall, pack/PCA invariants) stay out: they are
+    # verification queries composed of already-benched operators, and
+    # every certificate below stays out for the same reason.
     "q_python_datasource_stream",
     "q_multimodal_decode",
     "q_stream_stateful_exact",
-    # late r5: ordered CDC apply (window + full-outer merge), snapshot
+    # ordered CDC apply (window + full-outer merge), snapshot
     # change-data-feed diff (write-shaped, like q_branch_merge), and the
     # point-in-time SCD2 probe-grid lookup
     "q_cdc_apply",
     "q_snapshot_changes",
     "q_scd2_lookup",
     "q_profile_drift",
-    # round-6: the 1→N mapInPandas frame-sampling shape (output
-    # cardinality > input — not covered by q_multimodal_decode's 1→1
-    # decode). The other r6 oracle conversions (ingest payloads,
-    # byte-stat features, cycled resize) add no new plan shape and the
-    # q_sim_ivf_recall certificate follows the r5 keep-certificates-out
-    # convention.
+    # the 1→N mapInPandas frame-sampling shape (output cardinality >
+    # input — not covered by q_multimodal_decode's 1→1 decode). The
+    # ingest-payload, byte-stat-feature and cycled-resize ids add no new
+    # plan shape, and the q_sim_ivf_recall certificate stays out.
     "q_multimodal_frames",
     # map-side Misra-Gries candidates + broadcast-semi exact recount —
     # the two-pass heavy-hitter topology (no full-token-stream shuffle)
@@ -228,74 +239,70 @@ EXTENDED = [
     "q_pack_concat",
     # the UNPRUNED Σdf² inverted-index self-join (containment admits no
     # size-ratio pruning) — the candidate-volume worst case of the
-    # gram-join family; benched as the skew watchdog for that shape
-    # (since r9 the GROUND-TRUTH tier — the blocked form below is the
-    # production default)
+    # gram-join family; benched as the skew watchdog for that shape (the
+    # ground-truth tier — the blocked form below is the production
+    # default)
     "q_dedup_containment",
-    # r9: the df-capped + full-inventory-verify production default —
-    # benched NEXT TO the uncapped watchdog so the cap's candidate cut
-    # and verify-join overhead stay measured as a pair
+    # the df-capped + full-inventory-verify production default — benched
+    # NEXT TO the uncapped watchdog so the cap's candidate cut and
+    # verify-join overhead stay measured as a pair
     "q_dedup_containment_blocked",
     # the second-generation end-to-end curation chain (quantile gate →
-    # containment dedup → epoch mix) — benched like q_training_mix so
-    # the composed-stage cost stays measured alongside the unit ids
-    # (stage 2 runs the capped builder since r9)
+    # containment dedup → epoch mix, stage 2 on the capped builder) —
+    # benched like q_training_mix so the composed-stage cost stays
+    # measured alongside the unit ids
     "q_training_mix_v2",
-    # r9: ExactSubstr span REMOVAL — the only id composing gram-window
+    # ExactSubstr span REMOVAL — the only id composing gram-window
     # duplication marking with an interval-merge gaps-and-islands window
     # chain + complement union + doc-keyed text rebuild join
     "q_dup_span_removal",
-    # r9: banded aHash blocker + XOR/bit_count verify over REAL decoded
-    # BMP payloads — the multimodal near-dup join (96.5k verified pairs
-    # at sf0.1). q_multimodal_image_hash alone reuses the benched
-    # q_multimodal_decode mapInPandas shape and stays out; q_bpe_encode
-    # adds only a final posexplode to the benched q_bpe_train_k loop and
-    # stays out
+    # banded aHash blocker + XOR/bit_count verify over REAL decoded BMP
+    # payloads — the multimodal near-dup join (96.5k verified pairs at
+    # sf0.1), on the two-tier capped core. q_multimodal_image_hash alone
+    # reuses the benched q_multimodal_decode mapInPandas shape and stays
+    # out; q_bpe_encode adds only a final posexplode to the benched
+    # q_bpe_train_k loop and stays out
     "q_dedup_image_near",
-    # the other late-r9 ids reuse already-benched plan shapes and stay
-    # out for leanness: q_repetition_removal/q_decontaminate_spans (the
-    # benched excision chain), q_dedup_rate_by_source (clusters + one
-    # window), q_quality_gate_by_lang (the benched gate topology,
+    # these ids reuse already-benched plan shapes and stay out for
+    # leanness: q_repetition_removal/q_decontaminate_spans (the benched
+    # excision chain), q_dedup_rate_by_source (clusters + one window),
+    # q_quality_gate_by_lang (the benched gate topology,
     # lang-partitioned), q_vocab_coverage / q_curriculum_order /
     # q_dedup_soft_weights (count-rank / gate-histogram / clusters
-    # reuses), and the audio/video hash tiers (the benched image
-    # mapInPandas + banded-join shapes)
-    # r10: the dataloader-facing composite (gate → survivor-staged
-    # curriculum → per-stage two-phase pack) — benched like the other
-    # end-to-end chains; q_dedup_image_near above now measures the r10
-    # two-tier capped core. The other r10 ids reuse benched shapes and
-    # stay out: q_pii_scrub (scan-shaped regex), q_bpe_vocab_persist
-    # (the benched train loop + a fold-only encode),
-    # q_dedup_keeper_priority (clusters + one window),
-    # q_dedup_perceptual_capped (certificate: the near ids' own stages
-    # re-counted)
+    # reuses), the audio/video hash tiers (the benched image mapInPandas
+    # + banded-join shapes), q_pii_scrub (scan-shaped regex),
+    # q_bpe_vocab_persist (the benched train loop + a fold-only encode)
+    # and q_dedup_keeper_priority (clusters + one window);
+    # q_dedup_perceptual_capped is a certificate (the near ids' own
+    # stages re-counted).
+    # The dataloader-facing composite (gate → survivor-staged curriculum
+    # → per-stage two-phase pack) is benched like the other end-to-end
+    # chains.
     "q_curation_pipeline",
-    # r11: the privacy-stage composite (gate → PII scrub → curriculum →
-    # pack) — benched NEXT TO q_curation_pipeline so the scrub stage's
-    # marginal cost stays measured (it should ride the survivor scan);
-    # and the video-tier cluster composition (set collapse → capped
-    # pair plan → CC → bounded output)
+    # the privacy-stage composite (gate → PII scrub → curriculum → pack)
+    # — benched NEXT TO q_curation_pipeline so the scrub stage's marginal
+    # cost stays measured (it should ride the survivor scan); and the
+    # video-tier cluster composition (set collapse → capped pair plan →
+    # CC → bounded output)
     "q_curation_pipeline_pii",
     "q_dedup_video_clusters",
-    # r12 (verdict+ADVICE): every floor-less id gets a floor — the rest
-    # of the r11 wave enters the suite instead of a reuse rationale.
-    # q_bpe_drift_report runs TWO full train loops + a fold-only
-    # re-encode (strictly heavier than the benched single-loop
+    # the BPE-report, incremental, keeper and cross-modal ids get a floor
+    # instead of a reuse rationale. q_bpe_drift_report runs TWO full train loops + a
+    # fold-only re-encode (strictly heavier than the benched single-loop
     # vocab_persist); q_bpe_oov_report adds vocab-bounded aggregates on
     # top of the persist loop; the incremental/keeper/cross-modal ids
-    # each compose benched stages but had no recorded floor. Only
-    # q_dedup_mechanism_cap and q_dedup_lsh_mechanism_cap stay out
-    # (certificates, per the r5 keep-certificates-out rule).
+    # each compose benched stages but had no recorded floor. Only the
+    # certificates q_dedup_mechanism_cap and q_dedup_lsh_mechanism_cap
+    # stay out.
     "q_bpe_oov_report",
     "q_bpe_drift_report",
     "q_dedup_media_clusters",
     "q_dedup_video_incremental",
     "q_dedup_video_keeper",
     "q_dedup_keeper_pii",
-    # r12 wave: the incremental cluster maintainer (probe + O(shard)
-    # CC), the quality-weighted epoch mix (gate + two broadcasts + scan
-    # arithmetic), and the contamination-drift rollup. The r12
-    # certificate (q_dedup_lsh_mechanism_cap) stays out per the r5 rule.
+    # the incremental cluster maintainer (probe + O(shard) CC), the
+    # quality-weighted epoch mix (gate + two broadcasts + scan
+    # arithmetic), and the contamination-drift rollup
     "q_dedup_cluster_incremental",
     "q_dedup_cluster_chain",
     "q_dedup_text_cluster_incremental",
@@ -304,10 +311,10 @@ EXTENDED = [
     "q_decontaminate_drift",
     "q_sample_token_budget_quality",
     "q_contamination_by_source",
-    # r13 wave: the incremental IVF maintainer pair (shard assignment +
-    # balance table) and the snapshot-persisted maintainer chain. The
-    # recall certificate (two Lloyd loops by construction) stays out per
-    # the r5 keep-certificates-out rule.
+    # the incremental IVF maintainer pair (shard assignment + balance
+    # table), the snapshot-persisted maintainer chain and the other
+    # incremental maintainers. The IVF recall certificate (two Lloyd
+    # loops by construction) stays out.
     "q_sim_ivf_incremental",
     "q_sim_ivf_maintain",
     "q_dedup_cluster_chain_persisted",
@@ -357,18 +364,29 @@ def measure(spark, qid: str, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
     return sec, counters.collect(group)
 
 
-#: run the stall sentinel after every N benched ids (r14: 10 → 5, so a
-#: host-weather burst is localized to a 5-id bracket instead of 10 —
-#: VERDICT r13 item 8; the sentinel is diagnostics-only, timings are
-#: untouched)
+def growth(
+    sf_a: float, a: dict[str, float], sf_b: float, b: dict[str, float]
+) -> dict[str, float | None]:
+    """Per field of two measurements of one id at scale factors ``sf_a``
+    and ``sf_b``, the exponent k of x ∝ sf^k: log10(x_b / x_a) /
+    log10(sf_b / sf_a). None where either side is 0."""
+    span = math.log10(sf_b / sf_a)
+    return {
+        k: round(math.log10(b[k] / a[k]) / span, 3) if a[k] and b[k] else None
+        for k in a
+    }
+
+
+#: run the stall sentinel after every N benched ids, so a host-weather
+#: burst is localized to a 5-id bracket (the sentinel is diagnostics-only,
+#: timings are untouched)
 SENTINEL_EVERY = 5
 #: ids whose best sample lands under this get ONE extra run (best-of-3):
-#: best-of-2 on a bursty shared host is why 17 untouched sub-second ids
-#: "regressed" in the r13 driver comparison — a single contaminated
-#: sample IS the reported time when both runs straddle a burst. The
-#: trigger is the id's OWN in-session samples (no history consulted), so
-#: the harness stays self-contained; declared in OPTIMIZATION_r14.md so
-#: the bench_harness_changed hint fires.
+#: best-of-2 on a bursty shared host let 17 untouched sub-second ids
+#: "regress" in one comparison — a single contaminated sample IS the
+#: reported time when both runs straddle a burst. The trigger is the
+#: id's OWN in-session samples (no history consulted), so the harness
+#: stays self-contained.
 EXTRA_RUN_UNDER_SEC = 1.0
 #: a sentinel sample this many times over the session MEDIAN marks the
 #: bracket of ids since the previous sentinel as stall-suspect (median,
@@ -383,8 +401,8 @@ def _sentinel_time(spark) -> float:
     data dependence): its wall time moves ONLY with host weather, so a
     drifting sentinel marks the surrounding per-id samples as
     stall-contaminated instead of leaving round-over-round comparisons
-    hostage to single-run noise (SURVEY §6 variance model; the r7 +6.2%
-    on bit-identical plans is the motivating incident)."""
+    hostage to single-run noise (SURVEY §6 variance model; a +6.2% on
+    bit-identical plans is the motivating incident)."""
     from pyspark.sql import functions as F
 
     t0 = time.perf_counter()
@@ -394,13 +412,26 @@ def _sentinel_time(spark) -> float:
     return time.perf_counter() - t0
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """Neutral warm-up: one scan+count of every parquet table in the SF
+    dir (JVM, codegen and parquet footers for all ids alike) plus one
+    sentinel-shaped range job, so every measured slot, the first one
+    included, starts from the same conditions."""
+    for fname in sorted(os.listdir(sf_dir)):
+        if fname.endswith(".parquet"):
+            spark.read.parquet(os.path.join(sf_dir, fname)).count()
+    _sentinel_time(spark)
+
+
 def _medallion_layer_times(spark) -> dict[str, float]:
     """Per-layer wall time for a 10k-row medallion run — the reference's
     only published envelope is < 30 s/layer at 10k rows
     (tests/integration/test_performance.py:71-73); emitting the measured
     layer times makes that comparison machine-readable round over round.
-    Each layer is timed THROUGH its persisted parquet commit, like the
-    reference times task-to-task."""
+    The day is the pipeline's own (``medallion._run_day``), and each layer
+    is timed THROUGH its persisted parquet commit, like the reference
+    times task-to-task: a layer's time is the gap between the end of its
+    write and the end of the previous one, so bronze includes ingest."""
     import datetime as dt
     import shutil
     import tempfile
@@ -409,41 +440,30 @@ def _medallion_layer_times(spark) -> dict[str, float]:
         fetch_paginated,
         synthetic_page_fetcher,
     )
-    from breweries_case_spark.io.writer import (
-        read_partitioned,
-        write_partition_overwrite,
-    )
-    from breweries_case_spark.pipelines.medallion import (
-        bronze_to_silver,
-        ingest_to_bronze,
-        silver_to_gold,
-    )
+    from breweries_case_spark.pipelines import medallion
 
     day = dt.date(2024, 1, 15)
     records = fetch_paginated(synthetic_page_fetcher(10_000), per_page=200)
     base = tempfile.mkdtemp(prefix="bench_medallion_")
-    times: dict[str, float] = {}
+    schemas = {"bronze": medallion.BRONZE_SCHEMA, "silver": medallion.SILVER_SCHEMA}
+    ends = [time.perf_counter()]
+
+    def persist(df, layer: str) -> int:
+        rows = medallion._persist_layer(df, f"{base}/{layer}", day)  # noqa: SLF001
+        ends.append(time.perf_counter())
+        return rows
+
+    def read(layer: str):
+        return medallion.read_partitioned(spark, f"{base}/{layer}", schemas[layer])
+
     try:
-        t0 = time.perf_counter()
-        write_partition_overwrite(ingest_to_bronze(spark, records, day), f"{base}/bronze")
-        times["bronze"] = round(time.perf_counter() - t0, 3)
-
-        t0 = time.perf_counter()
-        write_partition_overwrite(
-            bronze_to_silver(read_partitioned(spark, f"{base}/bronze"), day),
-            f"{base}/silver",
-        )
-        times["silver"] = round(time.perf_counter() - t0, 3)
-
-        t0 = time.perf_counter()
-        write_partition_overwrite(
-            silver_to_gold(read_partitioned(spark, f"{base}/silver"), day),
-            f"{base}/gold",
-        )
-        times["gold"] = round(time.perf_counter() - t0, 3)
+        medallion._run_day(spark, records, day, persist, read)  # noqa: SLF001
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return times
+    return {
+        layer: round(end - start, 3)
+        for layer, start, end in zip(("bronze", "silver", "gold"), ends, ends[1:])
+    }
 
 
 # The driver records only the LAST ~2000 bytes of stdout; the final JSON
@@ -530,14 +550,7 @@ def main() -> None:
     per_query: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     counters: dict[str, dict[str, int]] = {}  # the first run's, per id
-    # neutral warm-up: one scan+count of every parquet table in the SF dir
-    # (JVM, codegen and parquet footers for all ids alike) plus one
-    # sentinel-shaped range job, so every measured slot, the first one
-    # included, starts from the same conditions
-    for fname in sorted(os.listdir(SF_DIR)):
-        if fname.endswith(".parquet"):
-            spark.read.parquet(os.path.join(SF_DIR, fname)).count()
-    _sentinel_time(spark)
+    warm_up(spark, SF_DIR)
 
     import gc
 
@@ -562,7 +575,7 @@ def main() -> None:
         # the RDD blocks, and the explicit JVM GC forces it now. Without
         # this, 60 queries x 2 runs of checkpoint blocks pile up in the
         # block manager and late queries measure GC pressure, not their
-        # plan (r2 recorded q_dedup_clusters at 37.3 s this way; isolated
+        # plan (one run recorded q_dedup_clusters at 37.3 s this way; isolated
         # it runs in 3.3 s). GC time lands between timing windows, so it
         # is not billed to any query.
         gc.collect()
@@ -585,11 +598,7 @@ def main() -> None:
             stall_suspect.extend(names[prev_mark:mark])
         prev_mark = mark
 
-    base = os.path.basename(SF_DIR.rstrip("/"))
-    try:
-        sf = float(base[2:]) if base.startswith("sf") else None
-    except ValueError:
-        sf = None  # non-sfN dir name: results still printed
+    sf = sf_of(SF_DIR)
     medallion = _medallion_layer_times(spark)
 
     # Full artifact first (committed alongside the code): both samples per

@@ -26,6 +26,13 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_memory(phys_bytes: int) -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's physical memory in whole GiB, at least 1g and at most 48g, so
+    a driver on a shared host cannot grow past the machine."""
+    return f"{min(48, max(1, phys_bytes // 2**31))}g"
+
+
 def get_session(
     app_name: str = "breweries_case_spark",
     master: str | None = None,
@@ -49,7 +56,13 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM",
+                _driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+            ),
+        )
     )
     for k, v in (extra_configs or {}).items():
         builder = builder.config(k, v)

@@ -77,3 +77,32 @@ def test_measure_counters_repeat_exactly(spark, sf_dir):
     assert first[0] > 0
     assert first[1]["jobs"] >= 1
     assert {k: first[1][k] for k in exact} == {k: second[1][k] for k in exact}
+
+
+def test_growth_is_the_exponent_between_two_scale_factors():
+    a = {"sec": 2.0, "jobs": 30, "shuffle_write_records": 100, "rows": 0}
+    b = {"sec": 2.0, "jobs": 30, "shuffle_write_records": 1000, "rows": 50}
+    assert bench.growth(0.01, a, 0.1, b) == {
+        "sec": 0.0,
+        "jobs": 0.0,
+        "shuffle_write_records": 1.0,
+        "rows": None,
+    }
+    assert bench.growth(0.01, b, 0.1, a)["rows"] is None
+
+
+def test_sf_of_reads_the_directory_name():
+    assert bench.sf_of("/data/sf0.01") == 0.01
+    assert bench.sf_of("/data/sf0.1/") == 0.1
+    assert bench.sf_of("/data/fixtures") is None
+    assert bench.sf_of("/data/sfx") is None
+
+
+def test_medallion_layer_times_run_the_day_and_leave_no_files(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    times = bench._medallion_layer_times(spark)
+    assert set(times) == {"bronze", "silver", "gold"}
+    assert all(t > 0 for t in times.values()), times
+    assert not any(tmp_path.iterdir())
